@@ -28,7 +28,7 @@ import org.apache.spark.sql.functions._
   *      the batch answer, no pair may emit twice across batches, and
   *      the emission union must equal batch c159 exactly.
   *
-  * Prints one JSON line per probe (the StreamScale convention); the
+  * Prints one JSON line per probe; the
   * cross-engine 100× hash check runs separately via
   * `scripts/link_oracle.py` (16-way dirty-sharded DuckDB replay of
   * the c159 oracle) against the batch parquet this main writes.

@@ -54,7 +54,7 @@ import org.apache.spark.sql.functions._
   *
   * COST — the input appears ~3× in the plan (bounds aggregate,
   * per-bucket totals, within-bucket window), and round 14 PRICED what
-  * that actually costs (graft.PersistPrice; SCALE.md round 14): for
+  * that actually costs (SCALE.md round 14): for
   * any upstream whose tail is an EXCHANGE (groupBy / join — the
   * "expensive pipeline" class round 12 worried about), Spark reuses
   * the upstream's shuffle stages across all three references inside

@@ -1528,15 +1528,6 @@ object TextAnalysis {
     * into a ≤C(20,2)-row matrix. Output is sources²-bounded at any
     * corpus size.
     */
-  /** Distinct (source, 5-gram) presence — kept for the OptProbe
-    * harness; the query paths consume [[gramSources]] instead. */
-  private[graft] def gramPresence(docs: DataFrame): DataFrame = docs
-    .withColumn("ws", split(col("text"), " "))
-    .where(size(col("ws")) >= 5)
-    .select(col("source"), explode(expr(
-      "transform(sequence(1, size(ws) - 4), i -> concat_ws(' ', slice(ws, i, 5)))")).as("g"))
-    .distinct()
-
   /** Per distinct 5-gram, the sorted set of sources containing it —
     * the ONE heavy pass shared by c196's matrix and c201's plan
     * (round 19). `collect_set` dedups (source, gram) duplicates, so

@@ -69,62 +69,6 @@ object Streams {
     events.withWatermark("ts", lateness)
       .dropDuplicatesWithinWatermark(keyCol)
 
-  /** Arbitrary stateful op: running per-user (count, sum) emitted on
-    * every update — the `flatMapGroupsWithState` extension point
-    * (batch shadow: b26's running sums).
-    */
-  def runningTotals(events: Dataset[(Long, Double)]): DataFrame = {
-    import events.sparkSession.implicits._
-    events.groupByKey(_._1)
-      .flatMapGroupsWithState[(Long, Double), (Long, Long, Double)](
-        OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (user: Long, rows: Iterator[(Long, Double)], state: GroupState[(Long, Double)]) =>
-          val (n0, s0) = state.getOption.getOrElse((0L, 0.0))
-          val batch = rows.toSeq
-          val next = (n0 + batch.size, s0 + batch.map(_._2).sum)
-          state.update(next)
-          Iterator((user, next._1, next._2))
-      }.toDF("user_id", "n_events", "sum_value")
-  }
-
-  /** The `StatefulProcessor` behind [[runningTotalsTws]]: one
-    * `ValueState[(count, sum)]` per user key. Same semantics as the
-    * `flatMapGroupsWithState` version above, on the Spark 4.x state
-    * API (typed named state, TTL support, timers) — the surface new
-    * stateful operators should target.
-    */
-  class RunningTotalsProcessor
-      extends StatefulProcessor[Long, (Long, Double), (Long, Long, Double)] {
-    @transient private var totals: ValueState[(Long, Double)] = _
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      totals = getHandle.getValueState[(Long, Double)](
-        "totals", Encoders.product[(Long, Double)], TTLConfig.NONE)
-    override def handleInputRows(user: Long, rows: Iterator[(Long, Double)],
-        timerValues: TimerValues): Iterator[(Long, Long, Double)] = {
-      val (n0, s0) = if (totals.exists()) totals.get() else (0L, 0.0)
-      val batch = rows.toSeq
-      val next = (n0 + batch.size, s0 + batch.map(_._2).sum)
-      totals.update(next)
-      Iterator((user, next._1, next._2))
-    }
-  }
-
-  /** Running per-user (count, sum) on `transformWithState` — the
-    * Spark 4.x successor to `flatMapGroupsWithState` ([[runningTotals]]
-    * is the legacy twin). Requires the RocksDB state store provider
-    * (`spark.sql.streaming.stateStore.providerClass` →
-    * `...state.RocksDBStateStoreProvider`), which is also the provider
-    * a 100 TB/day stream needs: state spills to disk instead of
-    * living on the executor heap.
-    */
-  def runningTotalsTws(events: Dataset[(Long, Double)]): DataFrame = {
-    import events.sparkSession.implicits._
-    events.groupByKey(_._1)
-      .transformWithState(new RunningTotalsProcessor,
-        TimeMode.None(), OutputMode.Update())
-      .toDF("user_id", "n_events", "sum_value")
-  }
-
   /** Stream-stream inner join: enrich an event stream with a second
     * stream on a shared key, matches accepted only within
     * `horizon` of each other. BOTH watermarks plus the time-range
@@ -189,11 +133,11 @@ object Streams {
     * this). Round-14 finding, pinned by StreamingSpec "state-schema
     * versioning": Spark 4.1's transformWithState treats state-variable
     * ADD and REMOVE between restarts as allowed schema evolution — so
-    * resuming a pre-round-12 checkpoint (state variable `scd2`) under
-    * the current kernel (state variable `scd2_v2`) does NOT fail
-    * schema validation; it silently drops the old variable and starts
-    * the new one EMPTY. That is state LOSS, not an error. This guard
-    * closes the hole: it reads the state-variable names the
+    * resuming a checkpoint written under an older state-variable name
+    * (say `gc`) under the current kernel (state variable `gc_v1`, the
+    * [[TombstoneGcProcessor]]) does NOT fail schema validation; it
+    * silently drops the old variable and starts the new one EMPTY.
+    * That is state LOSS, not an error. This guard closes the hole: it reads the state-variable names the
     * checkpoint's operator metadata records
     * (`state/0/_metadata/v2/<latest>`) and refuses — with an error
     * naming both sides — when the recorded set doesn't cover the
@@ -248,9 +192,9 @@ object Streams {
       throw new IllegalStateException(
         s"checkpoint at $checkpointDir records state variable(s) " +
           s"[${recorded.toSeq.sorted.mkString(", ")}] but this kernel requires " +
-          s"[${required.toSeq.sorted.mkString(", ")}] — an incompatible " +
-          "(pre-v2) checkpoint cannot be resumed: Spark 4.x would silently " +
-          "drop the old variable and start the new one EMPTY (state loss, " +
+          s"[${required.toSeq.sorted.mkString(", ")}] — a checkpoint " +
+          "written under older state-variable names cannot be resumed: " +
+          "Spark 4.x would silently drop the old variable and start the new one EMPTY (state loss, " +
           "not an error). Drain and restart from a fresh checkpoint, or run " +
           "an offline state rewrite.")
   }
@@ -333,12 +277,16 @@ object Streams {
     * Measured at sf0.1: the user-keyed folds (≈1.5k state rows) run
     * best at the floor (c37's four-stores-per-partition join 4.06 s
     * → 2.43 s vs the old 8), while the order-keyed RocksDB fold
-    * (150k state rows, real per-row work) wants its ≈10.
+    * (150k state rows, real per-row work) wants its ≈10. The hint is
+    * clamped BEFORE the ceil-divide: `hint + StateRowsPerPartition - 1`
+    * wraps negative for hints near Long.MaxValue and would land on the
+    * floor instead of the clamp.
     */
   private[graft] val StateRowsPerPartition = 16384L
-  private[graft] def statePartitionsFor(stateRowsHint: Long): Int =
-    math.max(2L, math.min(64L,
-      (stateRowsHint + StateRowsPerPartition - 1) / StateRowsPerPartition)).toInt
+  private[graft] def statePartitionsFor(stateRowsHint: Long): Int = {
+    val hint = math.min(stateRowsHint, 64L * StateRowsPerPartition)
+    math.max(2L, (hint + StateRowsPerPartition - 1) / StateRowsPerPartition).toInt
+  }
 
   /** Hourly-grain window state is CALENDAR-bounded, not data-bounded
     * — a year of hourly windows is 8784 rows however many events land
@@ -975,22 +923,6 @@ object Streams {
     spark.read.parquet(out).drop("batch_id").orderBy("dirty_id")
   }
 
-  /** SCD2 run compaction as a STATEFUL STREAM TRANSFORM: per user,
-    * consecutive identical states collapse to versioned runs; each
-    * CLOSED run emits exactly once (append semantics) and the OPEN
-    * run — the user's current version — lives in the state store,
-    * emitted only when a later state change closes it. Pure
-    * Dataset→DataFrame function so the spec drives it on a
-    * MemoryStream across micro-batches.
-    *
-    * Rows inside a micro-batch sort in memory by (ts_us, event_id)
-    * per user (the c76 canon order) — bounded by the batch, the same
-    * buffer bound every mapGroups consumer has. Across batches the
-    * carry state makes compaction exact when batches arrive in
-    * event-time order (a file stream of date-partitioned input, the
-    * production CDC layout); out-of-order ACROSS batches needs the
-    * watermark-buffered variant this function is the kernel of.
-    */
   /** Event-time ORDER GUARD for the stateful kernels (scd2 / island /
     * ewma / gapBucket / pathTrigram runs): their cross-batch exactness
     * rests on event-time-ordered batch delivery (the date-partitioned
@@ -1000,28 +932,22 @@ object Streams {
     * extent. Each kernel persists the last processed (ts_us, event_id)
     * per key in its state and calls this on every row.
     *
-    * CHECKPOINT-COMPATIBILITY BREAK (round 12 → versioned round 14):
-    * prepending the frontier tuple to each kernel's state type CHANGED
-    * the checkpointed state schema, so the five frontier-carrying
-    * transformWithState kernels now declare VERSIONED state names —
-    * `scd2_v2`, `island_v2`, `ewma_v3`, `last_v2`, `trigram_v2` (v2 =
-    * the frontier-prepended shape; ewma's v3 = the round-15
-    * fixed-width binary re-encoding, see [[EwmaRunsProcessor]]).
-    * MEASURED round-14 caveat: Spark
-    * 4.1 treats state-variable ADD/REMOVE across restarts as allowed
-    * evolution, so the rename alone would make a pre-v2 resume
-    * SILENTLY start the v2 variable empty (state loss) — which is why
-    * [[requireStateVersion]] exists: call it on any durable
-    * checkpoint before start() and an incompatible resume fails with
-    * an error naming both the recorded and the required variables
-    * (StreamingSpec "state-schema versioning" pins both the silent
-    * Spark behavior and the guard's refusal). There is still no
-    * migration path in-engine: a deployment upgrading across that
-    * boundary must either drain + restart from a fresh checkpoint
+    * CHECKPOINT COMPATIBILITY: prepending the frontier tuple to each
+    * kernel's state type (round 12) CHANGED the checkpointed state
+    * schema. The five kernels run on `flatMapGroupsWithState`, whose
+    * state schema Spark validates on every resume: a checkpoint
+    * written with a differently shaped state (scd2's pre-frontier
+    * `(String, Long, Long, Long)`, say) fails to resume on the default
+    * state-store provider with STATE_STORE_VALUE_SCHEMA_NOT_COMPATIBLE
+    * — a loud error before any batch runs, never a silently emptied
+    * store (StreamingSpec "legacy-API checkpoint safety" pins it). So
+    * these kernels need no versioned state names; the silent-loss
+    * hazard [[requireStateVersion]] guards is specific to
+    * `transformWithState`'s named state variables. There is still no
+    * migration path in-engine: a deployment upgrading across a state
+    * change must either drain + restart from a fresh checkpoint
     * (replaying from the source, exact because every kernel's fold is
-    * deterministic) or run an offline state rewrite. Any FUTURE
-    * state-type change to these kernels must bump the version suffix
-    * the same way.
+    * deterministic) or run an offline state rewrite.
     */
   private def advanceFrontier(kernel: String, key: Long,
       frontier: (Long, Long), ts: Long, eid: Long): (Long, Long) = {
@@ -1036,7 +962,7 @@ object Streams {
   /** The pre-first-event frontier (accepts any real event). */
   private val FrontierMin = (Long.MinValue, Long.MinValue)
 
-  /** The pure per-batch SCD2 fold shared by both state APIs (the
+  /** The pure per-batch SCD2 fold behind [[scd2Runs]] (the
     * [[islandFold]] discipline): canon sort, order guard, then runs
     * of identical states collapse — closed runs emit, the open run
     * carries.
@@ -1064,6 +990,22 @@ object Streams {
     (frontier, carry, out.result())
   }
 
+  /** SCD2 run compaction as a STATEFUL STREAM TRANSFORM: per user,
+    * consecutive identical states collapse to versioned runs; each
+    * CLOSED run emits exactly once (append semantics) and the OPEN
+    * run — the user's current version — lives in the state store,
+    * emitted only when a later state change closes it. Pure
+    * Dataset→DataFrame function so the spec drives it on a
+    * MemoryStream across micro-batches.
+    *
+    * Rows inside a micro-batch sort in memory by (ts_us, event_id)
+    * per user (the c76 canon order) — bounded by the batch, the same
+    * buffer bound every mapGroups consumer has. Across batches the
+    * carry state makes compaction exact when batches arrive in
+    * event-time order (a file stream of date-partitioned input, the
+    * production CDC layout); out-of-order ACROSS batches needs the
+    * watermark-buffered variant this function is the kernel of.
+    */
   def scd2Runs(events: Dataset[(Long, Long, String, Long)]): DataFrame = {
     import events.sparkSession.implicits._
     events.groupByKey(_._1)
@@ -1084,39 +1026,6 @@ object Streams {
         "n_events")
   }
 
-  /** [[scd2Runs]] on `transformWithState` (round-12 port — every
-    * production stateful kernel now has a Spark 4.x state-API twin):
-    * one ValueState of (frontier, open run) per user, batches folded
-    * by the SAME [[scd2Fold]] kernel.
-    */
-  class Scd2RunsProcessor extends StatefulProcessor[Long,
-      (Long, Long, String, Long), (Long, Long, String, Long, Long, Long)] {
-    @transient private var st: ValueState[((Long, Long), (String, Long, Long, Long))] = _
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[((Long, Long), (String, Long, Long, Long))](
-        "scd2_v2", Encoders.product[((Long, Long), (String, Long, Long, Long))],
-        TTLConfig.NONE)
-    override def handleInputRows(user: Long,
-        rows: Iterator[(Long, Long, String, Long)],
-        timerValues: TimerValues): Iterator[(Long, Long, String, Long, Long, Long)] = {
-      val prior = if (st.exists()) Some(st.get()) else None
-      val (frontier, carry, out) = scd2Fold(user,
-        prior.map(_._1).getOrElse(FrontierMin), prior.map(_._2), rows.toSeq)
-      carry.foreach(c => st.update((frontier, c)))
-      out.iterator
-    }
-  }
-
-  /** [[Scd2RunsProcessor]] plumbed end to end. */
-  def scd2RunsTws(events: Dataset[(Long, Long, String, Long)]): DataFrame = {
-    import events.sparkSession.implicits._
-    events.groupByKey(_._1)
-      .transformWithState(new Scd2RunsProcessor,
-        TimeMode.None(), OutputMode.Append())
-      .toDF("user_id", "version", "state", "valid_from_us", "valid_to_us",
-        "n_events")
-  }
-
   /** c83 — STREAMING SCD Type-2 compaction, oracle-verified: the c76
     * CDC-log → dimension-history build as a live stateful topology —
     * file source → [[scd2Runs]] (flatMapGroupsWithState) → append
@@ -1132,48 +1041,21 @@ object Streams {
     * topology runs unbounded with the RocksDB provider and
     * date-ordered input.
     */
-  def streamScd2(spark: SparkSession, sfDir: String): DataFrame =
-    scd2Topology(spark, sfDir, scd2Runs, "c83")
-
-  /** [[streamScd2]] through `transformWithState` (same topology, new
-    * state API — round 13 completes the production-twin symmetry the
-    * other four tws kernels already had; StreamingSpec's checkpoint
-    * recovery test drives the same kernel through stop/restart).
-    */
-  private[graft] def streamScd2Tws(spark: SparkSession, sfDir: String): DataFrame =
-    scd2Topology(spark, sfDir, scd2RunsTws, "c83tws", rocksDb = true)
-
-  private def scd2Topology(spark: SparkSession, sfDir: String,
-      kernel: Dataset[(Long, Long, String, Long)] => DataFrame,
-      tag: String, rocksDb: Boolean = false): DataFrame = {
+  def streamScd2(spark: SparkSession, sfDir: String): DataFrame = {
     val s = stateSession(spark, statePartitions = statePartitionsFor(keyCount(spark, sfDir, "events", "user_id")))
-    if (rocksDb)
-      s.conf.set("spark.sql.streaming.stateStore.providerClass", RocksDbProvider)
     import s.implicits._
     val ev = streamTable(s, sfDir, "events")
     val typed = ev
       .select(col("user_id"), col("event_id"), col("event_type"),
         graft.Tables.tsUs(ev).as("ts_us"))
       .as[(Long, Long, String, Long)]
-    runToParquet(kernel(typed), "append", tag)
+    runToParquet(scd2Runs(typed), "append", "c83")
       .orderBy("user_id", "version")
   }
 
-  /** b77's interval coalescing as a STATEFUL STREAM TRANSFORM: per
-    * user, the state is the OPEN island `(istart, iend, n_events)`;
-    * each incoming event interval either extends it (`s ≤ iend` —
-    * running-max end carried across micro-batches) or CLOSES it —
-    * closed islands emit exactly once (append semantics), the open
-    * island lives in the state store. The c83 discipline: exact under
-    * event-time-ordered batches (the date-partitioned production
-    * layout); state is ONE 3-long tuple per user.
-    */
-  /** The pure per-batch island fold shared by BOTH state APIs
-    * ([[islandRuns]] on the legacy flatMapGroupsWithState,
-    * [[IslandRunsProcessor]] on Spark 4.x transformWithState): sorts
-    * the batch by the canon order, applies the order guard, extends
-    * or closes the open island. One kernel, two plumbing layers — the
-    * twin paths cannot drift.
+  /** The pure per-batch island fold behind [[islandRuns]]: sorts the
+    * batch by the canon order, applies the order guard, extends or
+    * closes the open island.
     */
   private[streaming] def islandFold(user: Long, frontier0: (Long, Long),
       carry0: Option[(Long, Long, Long)], rows: Seq[(Long, Long, Long)])
@@ -1197,6 +1079,15 @@ object Streams {
     (frontier, carry, out.result())
   }
 
+  /** b77's interval coalescing as a STATEFUL STREAM TRANSFORM: per
+    * user, the state is the OPEN island `(istart, iend, n_events)`;
+    * each incoming event interval either extends it (`s ≤ iend` —
+    * running-max end carried across micro-batches) or CLOSES it —
+    * closed islands emit exactly once (append semantics), the open
+    * island lives in the state store. The c83 discipline: exact under
+    * event-time-ordered batches (the date-partitioned production
+    * layout); state is ONE 3-long tuple per user.
+    */
   def islandRuns(events: Dataset[(Long, Long, Long)]): DataFrame = {
     import events.sparkSession.implicits._
     events.groupByKey(_._1)
@@ -1213,39 +1104,6 @@ object Streams {
           carry.foreach(c => gs.update((frontier, c)))
           out.iterator
       }
-      .toDF("user_id", "istart_us", "iend_us", "n_events")
-  }
-
-  /** [[islandRuns]] on the Spark 4.x `transformWithState` state API
-    * (round-12 port — the legacy API must not be the only production
-    * path): one ValueState of (frontier, open island) per user,
-    * batches folded by the SAME [[islandFold]] kernel.
-    */
-  class IslandRunsProcessor extends StatefulProcessor[Long,
-      (Long, Long, Long), (Long, Long, Long, Long)] {
-    @transient private var st: ValueState[((Long, Long), (Long, Long, Long))] = _
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[((Long, Long), (Long, Long, Long))](
-        "island_v2", Encoders.product[((Long, Long), (Long, Long, Long))],
-        TTLConfig.NONE)
-    override def handleInputRows(user: Long, rows: Iterator[(Long, Long, Long)],
-        timerValues: TimerValues): Iterator[(Long, Long, Long, Long)] = {
-      val prior = if (st.exists()) Some(st.get()) else None
-      val (frontier, carry, out) = islandFold(user,
-        prior.map(_._1).getOrElse(FrontierMin), prior.map(_._2), rows.toSeq)
-      carry.foreach(c => st.update((frontier, c)))
-      out.iterator
-    }
-  }
-
-  /** [[IslandRunsProcessor]] plumbed end to end (append emissions of
-    * closed islands, open island in RocksDB state).
-    */
-  def islandRunsTws(events: Dataset[(Long, Long, Long)]): DataFrame = {
-    import events.sparkSession.implicits._
-    events.groupByKey(_._1)
-      .transformWithState(new IslandRunsProcessor,
-        TimeMode.None(), OutputMode.Append())
       .toDF("user_id", "istart_us", "iend_us", "n_events")
   }
 
@@ -1275,7 +1133,7 @@ object Streams {
       .toDF("user_id", "event_id", "value", "ewma16")
   }
 
-  /** The pure per-batch EWMA fold shared by both state APIs (the
+  /** The pure per-batch EWMA fold behind [[ewmaRuns]] (the
     * [[islandFold]] discipline): frontier guard, then the 16-tap FIR
     * in c130's exact fold order.
     */
@@ -1300,69 +1158,6 @@ object Streams {
     (frontier, recent, out.result())
   }
 
-  /** [[ewmaRuns]] on `transformWithState` (round-12 port, round-15
-    * re-encoding): ValueState of (frontier, last ≤ 15 values), same
-    * [[ewmaFold]] kernel — emitted doubles stay bit-identical to
-    * batch c130.
-    *
-    * FIXED-WIDTH state encoding (`ewma_v3`): the v2 state was a
-    * product-encoded `((Long, Long), List[Double])`, and the 100×
-    * StreamScale rehearsal priced it — per-batch `List[Double]`
-    * product serialization into RocksDB put the tws twin at 24.2 s vs
-    * the legacy API's 15.5 s, the one streaming kernel outside the
-    * ±35% API band (round-14 verdict item 3). v3 packs the state as
-    * ONE flat 144-byte buffer via `Encoders.BINARY`: frontier ts +
-    * frontier eid + tap count + 15 double slots, big-endian
-    * ByteBuffer puts — no per-element encoder recursion, no cons-cell
-    * walk, one fixed array copy per user per batch. `putDouble` is
-    * raw IEEE-754 bits, so pack → unpack is the identity and the fold
-    * stays bit-exact (spec-pinned round-trip + legacy-twin equality).
-    */
-  private[graft] val EwmaStateBytes = 8 + 8 + 4 + 8 * (graft.ops.Insights.EwmaTaps - 1)
-
-  private[graft] def packEwmaState(
-      frontier: (Long, Long), recent: List[Double]): Array[Byte] = {
-    val buf = java.nio.ByteBuffer.allocate(EwmaStateBytes)
-    buf.putLong(frontier._1).putLong(frontier._2).putInt(recent.size)
-    recent.foreach(buf.putDouble)
-    buf.array()
-  }
-
-  private[graft] def unpackEwmaState(
-      bytes: Array[Byte]): ((Long, Long), List[Double]) = {
-    val buf = java.nio.ByteBuffer.wrap(bytes)
-    val frontier = (buf.getLong(), buf.getLong())
-    val n = buf.getInt()
-    (frontier, List.fill(n)(buf.getDouble()))
-  }
-
-  class EwmaRunsProcessor extends StatefulProcessor[Long,
-      (Long, Long, Double, Long), (Long, Long, Double, Double)] {
-    @transient private var st: ValueState[Array[Byte]] = _
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[Array[Byte]](
-        "ewma_v3", Encoders.BINARY, TTLConfig.NONE)
-    override def handleInputRows(user: Long,
-        rows: Iterator[(Long, Long, Double, Long)],
-        timerValues: TimerValues): Iterator[(Long, Long, Double, Double)] = {
-      val prior = if (st.exists()) Some(unpackEwmaState(st.get())) else None
-      val (frontier, recent, out) = ewmaFold(user,
-        prior.map(_._1).getOrElse(FrontierMin),
-        prior.map(_._2).getOrElse(Nil), rows.toSeq)
-      st.update(packEwmaState(frontier, recent))
-      out.iterator
-    }
-  }
-
-  /** [[EwmaRunsProcessor]] plumbed end to end. */
-  def ewmaRunsTws(events: Dataset[(Long, Long, Double, Long)]): DataFrame = {
-    import events.sparkSession.implicits._
-    events.groupByKey(_._1)
-      .transformWithState(new EwmaRunsProcessor,
-        TimeMode.None(), OutputMode.Append())
-      .toDF("user_id", "event_id", "value", "ewma16")
-  }
-
   /** c136 — STREAMING EWMA, oracle-verified: [[ewmaRuns]] as a live
     * stateful topology (file source → flatMapGroupsWithState → append
     * parquet sink, Trigger.AvailableNow). Emits exactly c130's rows —
@@ -1372,27 +1167,15 @@ object Streams {
     * DuckDB at full double precision. The c83 discipline: exact under
     * event-time-ordered batches; state ≤ 15 doubles per user.
     */
-  def streamEwma(spark: SparkSession, sfDir: String): DataFrame =
-    ewmaTopology(spark, sfDir, ewmaRuns, "c136")
-
-  /** [[streamEwma]] through `transformWithState` (same topology, new
-    * state API — StreamingSpec pins equality). */
-  private[graft] def streamEwmaTws(spark: SparkSession, sfDir: String): DataFrame =
-    ewmaTopology(spark, sfDir, ewmaRunsTws, "c136tws", rocksDb = true)
-
-  private def ewmaTopology(spark: SparkSession, sfDir: String,
-      kernel: Dataset[(Long, Long, Double, Long)] => DataFrame,
-      tag: String, rocksDb: Boolean = false): DataFrame = {
+  def streamEwma(spark: SparkSession, sfDir: String): DataFrame = {
     val s = stateSession(spark, statePartitions = statePartitionsFor(BoundedDomainHint))
-    if (rocksDb)
-      s.conf.set("spark.sql.streaming.stateStore.providerClass", RocksDbProvider)
     import s.implicits._
     val ev = streamTable(s, sfDir, "events")
     val typed = ev
       .select(col("user_id"), col("event_id"), col("value"),
         graft.Tables.tsUs(ev).as("ts_us"))
       .as[(Long, Long, Double, Long)]
-    runToParquet(kernel(typed), "append", tag)
+    runToParquet(ewmaRuns(typed), "append", "c136")
       .orderBy("user_id", "event_id")
   }
 
@@ -1424,16 +1207,8 @@ object Streams {
     runToParquet(bars, "complete", "c143").orderBy("hour")
   }
 
-  /** Per-user gap-bucket emission as a stateful stream transform:
-    * state = the last (ts, event_id) per user; each event emits its
-    * inter-arrival power-of-two bucket (c145's exact integer log2 —
-    * here `63 − numberOfLeadingZeros`, the same value) and becomes
-    * the new state. The histogram assembly (counts + shares) happens
-    * batch-side on the emission log — the c108 discipline: stream the
-    * per-event work, aggregate the bounded summary after.
-    */
-  /** The pure per-batch gap-bucket fold shared by both state APIs
-    * (the [[islandFold]] discipline); the (ts, event_id) state tuple
+  /** The pure per-batch gap-bucket fold behind [[gapBucketRuns]] (the
+    * [[islandFold]] discipline); the (ts, event_id) state tuple
     * doubles as the order-guard frontier.
     */
   private[streaming] def gapBucketFold(user: Long,
@@ -1454,6 +1229,14 @@ object Streams {
     (last, out.result())
   }
 
+  /** Per-user gap-bucket emission as a stateful stream transform:
+    * state = the last (ts, event_id) per user; each event emits its
+    * inter-arrival power-of-two bucket (c145's exact integer log2 —
+    * here `63 − numberOfLeadingZeros`, the same value) and becomes
+    * the new state. The histogram assembly (counts + shares) happens
+    * batch-side on the emission log — the c108 discipline: stream the
+    * per-event work, aggregate the bounded summary after.
+    */
   def gapBucketRuns(events: Dataset[(Long, Long, Long)]): DataFrame = {
     import events.sparkSession.implicits._
     events.groupByKey(_._1)
@@ -1468,60 +1251,21 @@ object Streams {
       .toDF("user_id", "bucket")
   }
 
-  /** [[gapBucketRuns]] on `transformWithState` (round-12 port). */
-  class GapBucketRunsProcessor
-      extends StatefulProcessor[Long, (Long, Long, Long), (Long, Int)] {
-    @transient private var st: ValueState[(Long, Long)] = _
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[(Long, Long)](
-        "last_v2", Encoders.product[(Long, Long)], TTLConfig.NONE)
-    override def handleInputRows(user: Long, rows: Iterator[(Long, Long, Long)],
-        timerValues: TimerValues): Iterator[(Long, Int)] = {
-      val prior = if (st.exists()) Some(st.get()) else None
-      val (last, out) = gapBucketFold(user, prior, rows.toSeq)
-      last.foreach(st.update)
-      out.iterator
-    }
-  }
-
-  /** [[GapBucketRunsProcessor]] plumbed end to end. */
-  def gapBucketRunsTws(events: Dataset[(Long, Long, Long)]): DataFrame = {
-    import events.sparkSession.implicits._
-    events.groupByKey(_._1)
-      .transformWithState(new GapBucketRunsProcessor,
-        TimeMode.None(), OutputMode.Append())
-      .toDF("user_id", "bucket")
-  }
-
   /** c149 — STREAMING gap histogram, oracle-verified: [[gapBucketRuns]]
     * (state = ONE timestamp pair per user) through the file-source
     * topology, bucket counts and shares assembled batch-side from the
     * emission log. Agrees with batch c145 exactly under event-time-
     * ordered batches — same oracle text.
     */
-  def streamGapHistogram(spark: SparkSession, sfDir: String): DataFrame =
-    gapHistogramTopology(spark, sfDir, gapBucketRuns, "c149")
-
-  /** [[streamGapHistogram]] through `transformWithState` (same
-    * topology, new state API — StreamingSpec pins equality). */
-  private[graft] def streamGapHistogramTws(spark: SparkSession,
-      sfDir: String): DataFrame =
-    gapHistogramTopology(spark, sfDir, gapBucketRunsTws, "c149tws",
-      rocksDb = true)
-
-  private def gapHistogramTopology(spark: SparkSession, sfDir: String,
-      kernel: Dataset[(Long, Long, Long)] => DataFrame, tag: String,
-      rocksDb: Boolean = false): DataFrame = {
+  def streamGapHistogram(spark: SparkSession, sfDir: String): DataFrame = {
     val s = stateSession(spark, statePartitions = statePartitionsFor(BoundedDomainHint))
-    if (rocksDb)
-      s.conf.set("spark.sql.streaming.stateStore.providerClass", RocksDbProvider)
     import s.implicits._
     val ev = streamTable(s, sfDir, "events")
     val typed = ev
       .select(col("user_id"), col("event_id"),
         graft.Tables.tsUs(ev).as("ts_us"))
       .as[(Long, Long, Long)]
-    val log = runToParquet(kernel(typed), "append", tag)
+    val log = runToParquet(gapBucketRuns(typed), "append", "c149")
     val bucketed = log.groupBy(col("bucket")).agg(count(lit(1)).as("n"))
     val total = bucketed.agg(sum(col("n")).as("n_total"))
     bucketed.crossJoin(broadcast(total))
@@ -1533,12 +1277,7 @@ object Streams {
       .orderBy("bucket")
   }
 
-  /** Per-user path-trigram emission as a stateful stream transform:
-    * state = the last TWO event types per user; each event completes
-    * (and emits) one trigram once the carry is full, then shifts into
-    * it. Counting happens batch-side on the emission log (c149's
-    * discipline). */
-  /** The pure per-batch trigram fold shared by both state APIs (the
+  /** The pure per-batch trigram fold behind [[pathTrigramRuns]] (the
     * [[islandFold]] discipline): carry = the user's last ≤ 2 event
     * types (oldest first), frontier = the order guard.
     */
@@ -1557,6 +1296,11 @@ object Streams {
     (frontier, carry, out.result())
   }
 
+  /** Per-user path-trigram emission as a stateful stream transform:
+    * state = the last TWO event types per user; each event completes
+    * (and emits) one trigram once the carry is full, then shifts into
+    * it. Counting happens batch-side on the emission log (c149's
+    * discipline). */
   def pathTrigramRuns(events: Dataset[(Long, Long, String, Long)]): DataFrame = {
     import events.sparkSession.implicits._
     events.groupByKey(_._1)
@@ -1573,62 +1317,20 @@ object Streams {
       .toDF("path")
   }
 
-  /** [[pathTrigramRuns]] on `transformWithState` (round-12 port). */
-  class PathTrigramRunsProcessor
-      extends StatefulProcessor[Long, (Long, Long, String, Long), Tuple1[String]] {
-    @transient private var st: ValueState[((Long, Long), List[String])] = _
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[((Long, Long), List[String])](
-        "trigram_v2", Encoders.product[((Long, Long), List[String])], TTLConfig.NONE)
-    override def handleInputRows(user: Long,
-        rows: Iterator[(Long, Long, String, Long)],
-        timerValues: TimerValues): Iterator[Tuple1[String]] = {
-      val prior = if (st.exists()) Some(st.get()) else None
-      val (frontier, carry, out) = pathTrigramFold(user,
-        prior.map(_._1).getOrElse(FrontierMin),
-        prior.map(_._2).getOrElse(Nil), rows.toSeq)
-      st.update((frontier, carry))
-      out.iterator
-    }
-  }
-
-  /** [[PathTrigramRunsProcessor]] plumbed end to end. */
-  def pathTrigramRunsTws(events: Dataset[(Long, Long, String, Long)]): DataFrame = {
-    import events.sparkSession.implicits._
-    events.groupByKey(_._1)
-      .transformWithState(new PathTrigramRunsProcessor,
-        TimeMode.None(), OutputMode.Append())
-      .toDF("path")
-  }
-
   /** c150 — STREAMING session path trigrams, oracle-verified:
     * [[pathTrigramRuns]] (state = two strings per user) through the
     * file-source topology, counts and shares assembled batch-side.
     * Same oracle text as batch c131.
     */
-  def streamSessionPaths(spark: SparkSession, sfDir: String): DataFrame =
-    sessionPathsTopology(spark, sfDir, pathTrigramRuns, "c150")
-
-  /** [[streamSessionPaths]] through `transformWithState` (same
-    * topology, new state API — StreamingSpec pins equality). */
-  private[graft] def streamSessionPathsTws(spark: SparkSession,
-      sfDir: String): DataFrame =
-    sessionPathsTopology(spark, sfDir, pathTrigramRunsTws, "c150tws",
-      rocksDb = true)
-
-  private def sessionPathsTopology(spark: SparkSession, sfDir: String,
-      kernel: Dataset[(Long, Long, String, Long)] => DataFrame,
-      tag: String, rocksDb: Boolean = false): DataFrame = {
+  def streamSessionPaths(spark: SparkSession, sfDir: String): DataFrame = {
     val s = stateSession(spark, statePartitions = statePartitionsFor(keyCount(spark, sfDir, "events", "user_id")))
-    if (rocksDb)
-      s.conf.set("spark.sql.streaming.stateStore.providerClass", RocksDbProvider)
     import s.implicits._
     val ev = streamTable(s, sfDir, "events")
     val typed = ev
       .select(col("user_id"), col("event_id"), col("event_type"),
         graft.Tables.tsUs(ev).as("ts_us"))
       .as[(Long, Long, String, Long)]
-    val log = runToParquet(kernel(typed), "append", tag)
+    val log = runToParquet(pathTrigramRuns(typed), "append", "c150")
     val paths = log.groupBy(col("path")).agg(count(lit(1)).as("n"))
     val total = paths.agg(sum(col("n")).as("n_total"))
     paths.crossJoin(broadcast(total))
@@ -1648,34 +1350,15 @@ object Streams {
     * the same topology runs unbounded: coverage/availability windows
     * close and publish as the stream drains, O(users) state.
     */
-  def streamIntervalCoalesce(spark: SparkSession, sfDir: String): DataFrame =
-    intervalCoalesceTopology(spark, sfDir, islandRuns, "c129")
-
-  /** [[streamIntervalCoalesce]] through the `transformWithState`
-    * kernel — the SAME topology with only the state API swapped, so
-    * the new API is exercised against the same oracle, not a parallel
-    * build (StreamingSpec pins equality).
-    */
-  private[graft] def streamIntervalCoalesceTws(spark: SparkSession,
-      sfDir: String): DataFrame =
-    intervalCoalesceTopology(spark, sfDir, islandRunsTws, "c129tws",
-      rocksDb = true)
-
-  private def intervalCoalesceTopology(spark: SparkSession, sfDir: String,
-      kernel: Dataset[(Long, Long, Long)] => DataFrame, tag: String,
-      rocksDb: Boolean = false): DataFrame = {
+  def streamIntervalCoalesce(spark: SparkSession, sfDir: String): DataFrame = {
     val s = stateSession(spark, statePartitions = statePartitionsFor(keyCount(spark, sfDir, "events", "user_id")))
-    // transformWithState requires the RocksDB provider (the c89
-    // precedent — also the provider a 100 TB/day deployment runs).
-    if (rocksDb)
-      s.conf.set("spark.sql.streaming.stateStore.providerClass", RocksDbProvider)
     import s.implicits._
     val ev = streamTable(s, sfDir, "events")
     val typed = ev
       .select(col("user_id"), col("event_id"),
         graft.Tables.tsUs(ev).as("s"))
       .as[(Long, Long, Long)]
-    runToParquet(kernel(typed), "append", tag)
+    runToParquet(islandRuns(typed), "append", "c129")
       .orderBy("user_id", "istart_us")
   }
 
@@ -1892,7 +1575,8 @@ object Streams {
   /** c89 — STREAMING latest-wins snapshot, oracle-verified on the
     * Spark 4.x `transformWithState` API (RocksDB state store — the
     * provider a 100 TB/day deployment runs, state on disk not heap;
-    * the legacy-API twins B47/c83 use flatMapGroupsWithState): the
+    * the five run kernels c83/c129/c136/c149/c150 use
+    * flatMapGroupsWithState): the
     * A16 upsert-store compaction maintained LIVE. Each micro-batch
     * folds into one ValueState row per user and emits the updated
     * snapshot (Update mode → foreachBatch append log — file sinks

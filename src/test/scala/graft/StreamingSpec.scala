@@ -305,226 +305,158 @@ class StreamingSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
-  test("B47b: transformWithState (Spark 4.x API) keeps running totals across batches") {
-    implicit val sqlCtx = spark.sqlContext
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prior = spark.conf.getOption(providerKey)
-    // transformWithState requires the RocksDB provider (also the one a
-    // large deployment runs: state on disk, not executor heap).
-    spark.conf.set(providerKey, graft.streaming.Streams.RocksDbProvider)
-    val input = MemoryStream[(Long, Double)]
-    val totals = graft.streaming.Streams.runningTotalsTws(input.toDS())
-    val q = totals.writeStream.format("memory").queryName("b47b")
-      .outputMode("update").start()
-    try {
-      input.addData((1L, 1.0), (1L, 2.0), (2L, 5.0))
-      q.processAllAvailable()
-      input.addData((1L, 3.0))
-      q.processAllAvailable()
-      val byKey = spark.table("b47b").as[(Long, Long, Double)].collect()
-        .groupBy(_._1).view.mapValues(_.maxBy(_._2)).toMap
-      assert(byKey(1L)._2 == 3L && byKey(1L)._3 == 6.0)
-      assert(byKey(2L)._2 == 1L && byKey(2L)._3 == 5.0)
-    } finally {
-      // Restore BEFORE stop: a rethrowing stop() must not leak the
-      // provider override into the shared session's later tests.
-      prior match {
-        case Some(v) => spark.conf.set(providerKey, v)
-        case None => spark.conf.unset(providerKey)
-      }
-      q.stop()
-    }
-  }
-
-  /** Runs `body` with the RocksDB state-store provider set (required
-    * by transformWithState), restoring the prior provider after —
-    * the B47b/c89 conf-hygiene discipline factored out for the
-    * round-12 Tws twins.
+  /** Runs `body` with the state-store provider set to `provider`
+    * (None = Spark's default), restoring the prior provider after —
+    * the c89 conf-hygiene discipline factored out.
     */
-  private def withRocksDb[A](body: => A): A = {
+  private def withStateStore[A](provider: Option[String])(body: => A): A = {
     val providerKey = "spark.sql.streaming.stateStore.providerClass"
     val prior = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey, graft.streaming.Streams.RocksDbProvider)
+    provider match {
+      case Some(p) => spark.conf.set(providerKey, p)
+      case None => spark.conf.unset(providerKey)
+    }
     try body finally prior match {
       case Some(v) => spark.conf.set(providerKey, v)
       case None => spark.conf.unset(providerKey)
     }
   }
 
-  /** Drives a stream function over the same 2-batch input on both
-    * state APIs and returns (legacy rows, tws rows) from memory
-    * sinks — the round-12 twin-equality harness.
-    */
-  private def twinRun[I <: Product : org.apache.spark.sql.Encoder](
-      name: String,
-      legacy: org.apache.spark.sql.Dataset[I] => org.apache.spark.sql.DataFrame,
-      tws: org.apache.spark.sql.Dataset[I] => org.apache.spark.sql.DataFrame,
-      batch1: Seq[I], batch2: Seq[I]): (Seq[String], Seq[String]) = withRocksDb {
-    implicit val sqlCtx = spark.sqlContext
-    def drive(fn: org.apache.spark.sql.Dataset[I] => org.apache.spark.sql.DataFrame,
-        qn: String): Seq[String] = {
-      val input = MemoryStream[I]
-      val q = fn(input.toDS()).writeStream.format("memory").queryName(qn)
-        .outputMode("append").start()
-      try {
-        input.addData(batch1: _*); q.processAllAvailable()
-        input.addData(batch2: _*); q.processAllAvailable()
-        spark.table(qn).collect().map(_.mkString("|")).sorted.toSeq
-      } finally q.stop()
-    }
-    (drive(legacy, s"${name}_legacy"), drive(tws, s"${name}_tws"))
-  }
-
-  test("c129 kernel twins: islandRuns === islandRunsTws across batches (round-12 port)") {
-    // (user_id, event_id, ts_us); IntervalUs-wide events — batch 2
-    // extends user 1's open island then breaks it, closing two islands.
-    val w = graft.ops.Insights.IntervalUs
-    val b1 = Seq((1L, 1L, 0L), (1L, 2L, w / 2), (2L, 3L, 0L))
-    val b2 = Seq((1L, 4L, w), (1L, 5L, 10 * w), (2L, 6L, 5 * w))
-    val (legacy, tws) = twinRun("c129", graft.streaming.Streams.islandRuns,
-      graft.streaming.Streams.islandRunsTws, b1, b2)
-    assert(legacy == tws, s"legacy=$legacy tws=$tws")
-    // semantic pin: user 1's first island spans 3 events [0, 2w)
-    assert(tws.contains(s"1|0|${2 * w}|3"), tws)
-  }
-
-  test("c136 kernel twins: ewmaRuns === ewmaRunsTws across batches (round-12 port)") {
-    val taps = graft.ops.Insights.EwmaTaps
-    // (user_id, event_id, value, ts_us): 15 warmup rows in batch 1,
-    // two emitting rows in batch 2 — state (the 15-deep kernel) must
-    // carry across the batch boundary identically on both APIs.
-    val b1 = (1 to taps - 1).map(i => (1L, i.toLong, i.toDouble, i.toLong))
-    val b2 = Seq((1L, 16L, 16.0, 16L), (1L, 17L, 17.0, 17L))
-    val (legacy, tws) = twinRun("c136", graft.streaming.Streams.ewmaRuns,
-      graft.streaming.Streams.ewmaRunsTws, b1, b2)
-    assert(legacy == tws, s"legacy=$legacy tws=$tws")
-    assert(tws.size == 2, s"exactly the two post-warmup rows emit: $tws")
-  }
-
-  test("c149 kernel twins: gapBucketRuns === gapBucketRunsTws across batches (round-12 port)") {
-    // (user_id, event_id, ts_us): gaps of 1s, 3s (batch 1) then 8s
-    // across the batch boundary — buckets 0, 1, 3.
-    val b1 = Seq((1L, 1L, 0L), (1L, 2L, 1000000L), (1L, 3L, 4000000L))
-    val b2 = Seq((1L, 4L, 12000000L))
-    val (legacy, tws) = twinRun("c149", graft.streaming.Streams.gapBucketRuns,
-      graft.streaming.Streams.gapBucketRunsTws, b1, b2)
-    assert(legacy == tws, s"legacy=$legacy tws=$tws")
-    assert(tws == Seq("1|0", "1|1", "1|3"), tws)
-  }
-
-  test("c150 kernel twins: pathTrigramRuns === pathTrigramRunsTws across batches (round-12 port)") {
-    // (user_id, event_id, event_type, ts_us): the carried 2-type state
-    // must complete a trigram from batch-1 types on the batch boundary.
-    val b1 = Seq((1L, 1L, "view", 1L), (1L, 2L, "click", 2L))
-    val b2 = Seq((1L, 3L, "purchase", 3L), (1L, 4L, "view", 4L))
-    val (legacy, tws) = twinRun("c150", graft.streaming.Streams.pathTrigramRuns,
-      graft.streaming.Streams.pathTrigramRunsTws, b1, b2)
-    assert(legacy == tws, s"legacy=$legacy tws=$tws")
-    assert(tws == Seq("click>purchase>view", "view>click>purchase"), tws)
-  }
-
-  test("c83 kernel twins: scd2Runs === scd2RunsTws across batches (round-12 port)") {
-    // (user_id, event_id, event_type, ts_us): the open run carried
-    // from batch 1 must close in batch 2 with the carried count.
-    val b1 = Seq((1L, 1L, "A", 10L), (1L, 2L, "A", 20L))
-    val b2 = Seq((1L, 3L, "B", 30L), (1L, 4L, "A", 40L))
-    val (legacy, tws) = twinRun("c83", graft.streaming.Streams.scd2Runs,
-      graft.streaming.Streams.scd2RunsTws, b1, b2)
-    assert(legacy == tws, s"legacy=$legacy tws=$tws")
-    // v1 (A, from 10, 2 events) closes at 30; v2 (B) closes at 40.
-    assert(tws == Seq("1|1|A|10|30|2", "1|2|B|30|40|1"), tws)
-  }
+  /** [[withStateStore]] on the RocksDB provider (required by
+    * transformWithState). */
+  private def withRocksDb[A](body: => A): A =
+    withStateStore(Some(graft.streaming.Streams.RocksDbProvider))(body)
 
   test("checkpoint recovery: c83 stop/restart resumes exactly — no loss, no double-emit (fMGWS + tws)") {
-    // Round-12 verdict item 5: the production property the twins had
-    // not proven. Drive the scd2 topology against a FILE checkpoint,
-    // stop the query mid-stream (batch 1 committed, batch 2 not yet
-    // ingested), restart from the checkpoint, and require the resumed
-    // run to emit EXACTLY the one-shot answer: the open run carried in
-    // state before the stop must close with its carried count (state
-    // restored, no loss) and batch-1 emissions must not re-emit
-    // through the file sink's manifest (no double-emit). A third
-    // restart with no new data must change nothing (idempotent
-    // recovery). Both state APIs run the same script — the RocksDB
-    // provider is the deployment-realistic store for both.
+    // Round-12 verdict item 5: the production property the stateful
+    // kernels had not proven. Drive the scd2 topology against a FILE
+    // checkpoint, stop the query mid-stream (batch 1 committed, batch
+    // 2 not yet ingested), restart from the checkpoint, and require the
+    // resumed run to emit EXACTLY the one-shot answer: the open run
+    // carried in state before the stop must close with its carried
+    // count (state restored, no loss) and batch-1 emissions must not
+    // re-emit through the file sink's manifest (no double-emit). A
+    // third restart with no new data must change nothing (idempotent
+    // recovery). Runs on the RocksDB provider, the deployment-realistic
+    // store.
     implicit val sqlCtx = spark.sqlContext
-    val paths: Seq[(String,
-        org.apache.spark.sql.Dataset[(Long, Long, String, Long)] =>
-          org.apache.spark.sql.DataFrame)] = Seq(
-      ("fmgws", graft.streaming.Streams.scd2Runs),
-      ("tws", graft.streaming.Streams.scd2RunsTws))
-    paths.foreach { case (tag, fn) =>
-      withRocksDb {
-        val base = java.nio.file.Files.createTempDirectory(s"graft_ckpt_$tag").toFile
-        graft.streaming.Streams.trackTmpDir(base.toString)
-        val ckpt = new java.io.File(base, "ckpt").toString
-        val outDir = new java.io.File(base, "out").toString
-        val input = MemoryStream[(Long, Long, String, Long)]
-        val runs = fn(input.toDS())
-        def start() = runs.writeStream.format("parquet")
-          .option("path", outDir).option("checkpointLocation", ckpt)
-          .outputMode("append").start()
-        // Batch 1: user 1's run (A, 2 events) stays OPEN in state;
-        // user 2's (X) likewise. Nothing emits yet.
-        val q1 = start()
-        input.addData((1L, 1L, "A", 10L), (1L, 2L, "A", 20L), (2L, 10L, "X", 15L))
-        q1.processAllAvailable(); q1.stop()
-        // The kill window: data arrives while the query is DOWN.
-        input.addData((1L, 3L, "B", 30L), (1L, 4L, "C", 40L), (2L, 11L, "Y", 25L))
-        val q2 = start(); q2.processAllAvailable(); q2.stop()
-        val q3 = start(); q3.processAllAvailable(); q3.stop()
-        val got = spark.read.parquet(outDir).collect()
-          .map(_.mkString("|")).sorted.toSeq
-        // The one-shot oracle: closed runs only, each exactly once —
-        // v1 of user 1 carries BOTH batch-1 events (state survived the
-        // stop), closed by batch 2's B; C and Y stay open (unemitted).
-        assert(got == Seq("1|1|A|10|30|2", "1|2|B|30|40|1", "2|1|X|15|25|1"),
-          s"$tag: resumed emissions diverge from the one-shot oracle: $got")
+    withRocksDb {
+      val base = java.nio.file.Files.createTempDirectory("graft_ckpt_fmgws").toFile
+      graft.streaming.Streams.trackTmpDir(base.toString)
+      val ckpt = new java.io.File(base, "ckpt").toString
+      val outDir = new java.io.File(base, "out").toString
+      val input = MemoryStream[(Long, Long, String, Long)]
+      val runs = graft.streaming.Streams.scd2Runs(input.toDS())
+      def start() = runs.writeStream.format("parquet")
+        .option("path", outDir).option("checkpointLocation", ckpt)
+        .outputMode("append").start()
+      // Batch 1: user 1's run (A, 2 events) stays OPEN in state;
+      // user 2's (X) likewise. Nothing emits yet.
+      val q1 = start()
+      input.addData((1L, 1L, "A", 10L), (1L, 2L, "A", 20L), (2L, 10L, "X", 15L))
+      q1.processAllAvailable(); q1.stop()
+      // The kill window: data arrives while the query is DOWN.
+      input.addData((1L, 3L, "B", 30L), (1L, 4L, "C", 40L), (2L, 11L, "Y", 25L))
+      val q2 = start(); q2.processAllAvailable(); q2.stop()
+      val q3 = start(); q3.processAllAvailable(); q3.stop()
+      val got = spark.read.parquet(outDir).collect()
+        .map(_.mkString("|")).sorted.toSeq
+      // The one-shot oracle: closed runs only, each exactly once —
+      // v1 of user 1 carries BOTH batch-1 events (state survived the
+      // stop), closed by batch 2's B; C and Y stay open (unemitted).
+      assert(got == Seq("1|1|A|10|30|2", "1|2|B|30|40|1", "2|1|X|15|25|1"),
+        s"resumed emissions diverge from the one-shot oracle: $got")
+    }
+  }
+
+  test("legacy-API checkpoint safety: a pre-frontier scd2 checkpoint fails to resume under scd2Runs with STATE_STORE_VALUE_SCHEMA_NOT_COMPATIBLE") {
+    // The five run kernels (c83/c129/c136/c149/c150) run on
+    // flatMapGroupsWithState and carry no versioned state names: their
+    // checkpoint safety rests on Spark validating the state schema on
+    // resume. Pinned with scd2: a probe with the pre-frontier state
+    // shape (String, Long, Long, Long) and scd2Runs' output schema
+    // writes a checkpoint; resuming it under Streams.scd2Runs (state
+    // ((Long, Long), (String, Long, Long, Long))) on the default
+    // provider — the one the registered keys run on — must fail
+    // LOUDLY with the schema-incompatibility error class, never start
+    // from an emptied store.
+    implicit val sqlCtx = spark.sqlContext
+    withStateStore(None) {
+      val base = java.nio.file.Files.createTempDirectory("graft_ckpt_legacy").toFile
+      graft.streaming.Streams.trackTmpDir(base.toString)
+      val ckpt = new java.io.File(base, "ckpt").toString
+      val outDir = new java.io.File(base, "out").toString
+      val input = MemoryStream[(Long, Long, String, Long)]
+      def start(df: org.apache.spark.sql.DataFrame) = df.writeStream.format("parquet")
+        .option("path", outDir).option("checkpointLocation", ckpt)
+        .outputMode("append").start()
+      val probe = input.toDS().groupByKey(_._1)
+        .flatMapGroupsWithState[(String, Long, Long, Long),
+          (Long, Long, String, Long, Long, Long)](
+          OutputMode.Append, GroupStateTimeout.NoTimeout) {
+          (_: Long, rows: Iterator[(Long, Long, String, Long)],
+           gs: GroupState[(String, Long, Long, Long)]) =>
+            rows.foreach(r => gs.update((r._3, r._4, 1L, 1L)))
+            Iterator.empty
+        }
+        .toDF("user_id", "version", "state", "valid_from_us", "valid_to_us",
+          "n_events")
+      val q1 = start(probe)
+      input.addData((1L, 1L, "A", 10L))
+      q1.processAllAvailable(); q1.stop()
+      val e = intercept[Exception] {
+        val q2 = start(graft.streaming.Streams.scd2Runs(input.toDS()))
+        try { input.addData((1L, 2L, "B", 20L)); q2.processAllAvailable() }
+        finally q2.stop()
       }
+      val chain = Iterator.iterate[Throwable](e)(_.getCause)
+        .takeWhile(_ != null).map(t => String.valueOf(t.getMessage)).mkString("\n")
+      assert(chain.contains("STATE_STORE_VALUE_SCHEMA_NOT_COMPATIBLE"),
+        s"the resume must fail with the state-schema error class, got:\n$chain")
     }
   }
 
   test("state-schema versioning: a pre-v2 checkpoint resumed under the v2 state name fails LOUDLY, naming the variable") {
-    // The round-12 frontier prepend changed the five stateful kernels'
-    // checkpointed state schema; the stores are now NAMED *_v2
-    // (scd2_v2, island_v2, ewma_v3, last_v2, trigram_v2) so an
-    // incompatible resume is refused at the STORE layer with the
-    // variable's name in the error — not a raw state-schema-validation
-    // dump. Simulated with the scd2 kernel: a v1-SHAPED probe (state
-    // "scd2", the pre-round-12 un-frontiered type, same output schema)
-    // writes a checkpoint; the production Scd2RunsProcessor (state
-    // "scd2_v2") must refuse to resume it, and the error must name the
-    // versioned variable so the operator knows WHICH kernel broke.
+    // transformWithState names its state variables, and the stores of
+    // its versioned kernels say so: c167's TombstoneGcProcessor keeps
+    // `gc_v1`. Simulated with an UNVERSIONED probe (state variable
+    // `gc`, a bare mutation count, same key and row types) that writes
+    // a checkpoint; the production kernel (`gc_v1`) must not resume it
+    // blind. The guard refuses, naming both sides; the bare resume is
+    // pinned as the silent-state-loss hazard the guard exists for.
     implicit val sqlCtx = spark.sqlContext
     import org.apache.spark.sql.streaming.{StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
-    import org.apache.spark.sql.Encoders
-    class V1Scd2 extends StatefulProcessor[Long,
-        (Long, Long, String, Long), (Long, Long, String, Long, Long, Long)] {
-      @transient private var st: ValueState[(String, Long, Long, Long)] = _
+    import org.apache.spark.sql.{Dataset, Encoders, Row}
+    class UnversionedGc extends StatefulProcessor[Long,
+        (Long, Long, String, Double, Long, Boolean),
+        (Long, Long, Long, Boolean, String, Double, Long, Long, Long, Long)] {
+      @transient private var st: ValueState[Long] = _
       override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-        st = getHandle.getValueState[(String, Long, Long, Long)](
-          "scd2", Encoders.product[(String, Long, Long, Long)], TTLConfig.NONE)
+        st = getHandle.getValueState[Long]("gc", Encoders.scalaLong, TTLConfig.NONE)
       override def handleInputRows(user: Long,
-          rows: Iterator[(Long, Long, String, Long)],
-          timerValues: TimerValues): Iterator[(Long, Long, String, Long, Long, Long)] = {
-        rows.foreach(r => st.update((r._3, r._4, r._4, 1L)))
+          rows: Iterator[(Long, Long, String, Double, Long, Boolean)],
+          timerValues: TimerValues)
+        : Iterator[(Long, Long, Long, Boolean, String, Double, Long, Long, Long, Long)] = {
+        st.update((if (st.exists()) st.get() else 0L) + rows.size)
         Iterator.empty
       }
     }
+    def start(emissions: org.apache.spark.sql.DataFrame, ckpt: String, outDir: String) =
+      emissions.writeStream.outputMode("update")
+        .foreachBatch((b: Dataset[Row], _: Long) => b.write.mode("append").parquet(outDir))
+        .option("checkpointLocation", ckpt).start()
     withRocksDb {
       val base = java.nio.file.Files.createTempDirectory("graft_ckpt_vmix").toFile
       graft.streaming.Streams.trackTmpDir(base.toString)
       val ckpt = new java.io.File(base, "ckpt").toString
       val outDir = new java.io.File(base, "out").toString
-      val input = MemoryStream[(Long, Long, String, Long)]
-      val v1 = input.toDS().groupByKey(_._1)
-        .transformWithState(new V1Scd2, TimeMode.None(), OutputMode.Append())
-        .toDF("user_id", "version", "state", "valid_from_us", "valid_to_us",
-          "n_events")
-      val q1 = v1.writeStream.format("parquet")
-        .option("path", outDir).option("checkpointLocation", ckpt)
-        .outputMode("append").start()
-      input.addData((1L, 1L, "A", 10L))
+      val input = MemoryStream[(Long, Long, String, Double, Long, Boolean)]
+      val unversioned = input.toDS().groupByKey(_._1)
+        .transformWithState(new UnversionedGc, TimeMode.None(), OutputMode.Update())
+        .toDF("user_id", "m_ts", "m_eid", "m_del", "m_type", "m_val",
+          "tomb_ts", "n_writes", "n_deletes", "max_ts")
+      val q1 = start(unversioned, ckpt, outDir)
+      input.addData((1L, 1L, "A", 1.0, 10L, false), (1L, 2L, "B", 2.0, 20L, false))
       q1.processAllAvailable(); q1.stop()
       // THE GUARD, run where it belongs — BEFORE start(): the
       // preflight reads the checkpoint's recorded state variables and
@@ -533,44 +465,37 @@ class StreamingSpec extends AnyFunSuite {
       // operator metadata to the new variable set, after which the
       // loss has already happened.)
       val e = intercept[IllegalStateException] {
-        graft.streaming.Streams.requireStateVersion(ckpt, Set("scd2_v2"))
+        graft.streaming.Streams.requireStateVersion(ckpt, Set("gc_v1"))
       }
-      assert(e.getMessage.contains("scd2") && e.getMessage.contains("scd2_v2"),
+      assert(e.getMessage.contains("[gc]") && e.getMessage.contains("[gc_v1]"),
         s"the refusal must name recorded and required variables: ${e.getMessage}")
       // THE HAZARD, pinned: Spark 4.1 treats variable add/remove as
-      // allowed evolution, so a bare resume under the v2 kernel does
-      // NOT fail — it silently starts scd2_v2 empty. If a Spark
+      // allowed evolution, so a bare resume under the versioned kernel
+      // does NOT fail — it silently starts gc_v1 empty. If a Spark
       // upgrade ever makes this throw, the guard above becomes
       // redundant and this pin should be revisited.
-      val v2 = graft.streaming.Streams.scd2RunsTws(input.toDS())
-      val q2 = v2.writeStream.format("parquet")
-        .option("path", outDir).option("checkpointLocation", ckpt)
-        .outputMode("append").start()
-      try { input.addData((1L, 2L, "B", 20L)); q2.processAllAvailable() }
+      val q2 = start(graft.streaming.Streams.gcFoldTws(input.toDS()), ckpt, outDir)
+      try { input.addData((1L, 3L, "C", 3.0, 30L, false)); q2.processAllAvailable() }
       finally q2.stop()
-      // ...and the silent resume DID lose user 1's open (A, from 10)
-      // run: batch 2's B event found empty state, so no closed run
-      // (A, 10 → 20) was emitted. This loss is why the guard exists.
-      val emitted = spark.read.schema(v1.schema).parquet(outDir).collect()
-        .map(_.mkString("|")).toSeq
-      assert(!emitted.exists(_.contains("|A|10|20|")),
-        s"expected the pre-v2 open run to be silently LOST, got: $emitted")
-      // A v2-written checkpoint passes the same preflight, and a fresh
-      // (nonexistent) checkpoint passes trivially.
-      val base2 = java.nio.file.Files.createTempDirectory("graft_ckpt_v2ok").toFile
+      // ...and the silent resume DID lose user 1's two batch-1 writes:
+      // the only fold emitted counts batch 2's single mutation.
+      val folds = spark.read.parquet(outDir).select("n_writes", "n_deletes")
+        .as[(Long, Long)].collect().toSeq
+      assert(folds == Seq((1L, 0L)),
+        s"expected the unversioned state to be silently LOST, got: $folds")
+      // A gc_v1-written checkpoint passes the same preflight, and a
+      // fresh (nonexistent) checkpoint passes trivially.
+      val base2 = java.nio.file.Files.createTempDirectory("graft_ckpt_v1ok").toFile
       graft.streaming.Streams.trackTmpDir(base2.toString)
       val ckpt2 = new java.io.File(base2, "ckpt").toString
-      val input2 = MemoryStream[(Long, Long, String, Long)]
-      val q3 = graft.streaming.Streams.scd2RunsTws(input2.toDS())
-        .writeStream.format("parquet")
-        .option("path", new java.io.File(base2, "out").toString)
-        .option("checkpointLocation", ckpt2)
-        .outputMode("append").start()
-      input2.addData((1L, 1L, "A", 10L))
+      val input2 = MemoryStream[(Long, Long, String, Double, Long, Boolean)]
+      val q3 = start(graft.streaming.Streams.gcFoldTws(input2.toDS()), ckpt2,
+        new java.io.File(base2, "out").toString)
+      input2.addData((1L, 1L, "A", 1.0, 10L, false))
       q3.processAllAvailable(); q3.stop()
-      graft.streaming.Streams.requireStateVersion(ckpt2, Set("scd2_v2"))
+      graft.streaming.Streams.requireStateVersion(ckpt2, Set("gc_v1"))
       graft.streaming.Streams.requireStateVersion(
-        new java.io.File(base2, "never_started").toString, Set("scd2_v2"))
+        new java.io.File(base2, "never_started").toString, Set("gc_v1"))
     }
   }
 
@@ -673,30 +598,6 @@ class StreamingSpec extends AnyFunSuite {
       "a replayed batch write must not change the decision set")
   }
 
-  test("c136 ewma_v3 state: pack → unpack is the identity; the buffer is one fixed-width array") {
-    // The v3 re-encoding replaces List[Double] product encoding with
-    // one flat binary buffer (RocksDB serialization cost, round-14
-    // verdict item 3). Exactness rests on putDouble/getDouble being
-    // raw IEEE-754 bit moves — pinned here over the edge doubles.
-    import graft.streaming.Streams
-    val frontiers = Seq((Long.MinValue, Long.MinValue), (0L, 0L),
-      (123456789012L, 42L))
-    val lists = Seq(Nil, List(1.5),
-      List.fill(graft.ops.Insights.EwmaTaps - 1)(math.Pi),
-      List(-0.0, Double.MinPositiveValue, Double.MaxValue, -1e308, 1e-308))
-    for (f <- frontiers; l <- lists) {
-      val b = Streams.packEwmaState(f, l)
-      assert(b.length == Streams.EwmaStateBytes,
-        s"buffer must be fixed-width: ${b.length} != ${Streams.EwmaStateBytes}")
-      val (f2, l2) = Streams.unpackEwmaState(b)
-      assert(f2 == f)
-      assert(l2.length == l.length && l2.zip(l).forall { case (x, y) =>
-        java.lang.Double.doubleToRawLongBits(x) ==
-          java.lang.Double.doubleToRawLongBits(y) },
-        s"doubles not bit-identical through pack/unpack: $l -> $l2")
-    }
-  }
-
   test("state-version guard FAILS CLOSED on unparseable metadata and reads every operator, not just 0") {
     // ADVICE (r14): the guard used to inspect only state/0 and, if a
     // future Spark changed the metadata layout or the stateName JSON
@@ -742,40 +643,6 @@ class StreamingSpec extends AnyFunSuite {
     val legacy = mkCkpt("legacyop")
     new java.io.File(legacy, "state/0/_metadata").mkdirs()
     graft.streaming.Streams.requireStateVersion(legacy.toString, Set("scd2_v2"))
-  }
-
-  test("c129/c136/c149/c150: the transformWithState PRODUCTION topologies equal the oracle-verified legacy twins") {
-    // Item: "same oracles green through the new API" — each Tws twin
-    // is the identical file-source topology with only the state API
-    // swapped, so equality with the legacy twin (whose output the
-    // driver hash-verifies against DuckDB) IS the oracle through the
-    // new API.
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prior = spark.conf.getOption(providerKey)
-    try {
-      val pairs: Seq[(String,
-          (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame,
-          (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame)] = Seq(
-        ("c129", graft.streaming.Streams.streamIntervalCoalesce,
-          graft.streaming.Streams.streamIntervalCoalesceTws),
-        ("c136", graft.streaming.Streams.streamEwma,
-          graft.streaming.Streams.streamEwmaTws),
-        ("c149", graft.streaming.Streams.streamGapHistogram,
-          graft.streaming.Streams.streamGapHistogramTws),
-        ("c150", graft.streaming.Streams.streamSessionPaths,
-          graft.streaming.Streams.streamSessionPathsTws))
-      pairs.foreach { case (tag, legacy, tws) =>
-        val a = legacy(spark, TestSpark.sf0001).collect()
-          .map(_.mkString("|")).sorted.toSeq
-        val b = tws(spark, TestSpark.sf0001).collect()
-          .map(_.mkString("|")).sorted.toSeq
-        assert(a.nonEmpty, s"$tag legacy twin emitted nothing")
-        assert(a == b, s"$tag: tws topology diverged from the legacy twin")
-      }
-    } finally prior match {
-      case Some(v) => spark.conf.set(providerKey, v)
-      case None => spark.conf.unset(providerKey)
-    }
   }
 
   test("checkpoint recovery: c167 stop/restart resumes the GC fold exactly — no loss, no double-count") {

@@ -235,6 +235,32 @@ class StreamsApiSpec extends AnyFunSuite {
     assert(offenders.isEmpty, s"memory sinks in the query surface: $offenders")
   }
 
+  test("no scratch mains in the main tree: def main( only in the allowlisted tools") {
+    // One-shot pricing and A/B mains accumulate in src/main once their
+    // numbers are recorded (SCALE.md / OPTIMIZATION_*.md keep the
+    // results). Each allowlisted main is the only tool for its job:
+    // the Verify/Bench entry points, the keyspace-copy CLI, the plan audit
+    // and plan snapshots, ANN recall and the 100x linkage check.
+    import scala.jdk.CollectionConverters._
+    val allow = Set("Verify", "Bench", "CopyKeyspaceCli", "Plans", "PlanDump",
+      "Recall", "LinkScale")
+    val mains = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main"))
+      .iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .flatMap { p =>
+        val src = java.nio.file.Files.readString(p)
+        // a main belongs to the last `object` declared before it
+        "def main\\(".r.findAllMatchIn(src).map { m =>
+          val owner = "object\\s+(\\w+)".r.findAllMatchIn(src.substring(0, m.start))
+            .map(_.group(1)).toSeq.lastOption.getOrElse("<no object>")
+          (owner, p.toString)
+        }
+      }.toList
+    assert(mains.nonEmpty, "scan found no mains: wrong working directory?")
+    val offenders = mains.filterNot { case (owner, _) => allow(owner) }
+    assert(offenders.isEmpty, s"mains outside the allowlist: $offenders")
+  }
+
   test("runToParquet reads an empty result back as an empty frame, not an inference error") {
     // A dup-free corpus makes c51's verified-collision stream empty for
     // every micro-batch: zero part files land in the sink, and a bare
@@ -291,23 +317,10 @@ class StreamsApiSpec extends AnyFunSuite {
     assert(Streams.statePartitionsFor(Streams.HourlyWindowYearHint) == 2)
     assert(Streams.statePartitionsFor(150000L) == 10)
     assert(Streams.statePartitionsFor(Long.MaxValue / 4) == 64)
+    // the ceil-divide must not wrap: a hint at the Long edge is the clamp
+    assert(Streams.statePartitionsFor(Long.MaxValue) == 64)
     // monotone: more state never means fewer partitions
     val xs = Seq(1L, 100L, 20000L, 100000L, 1000000L, 10000000L)
     assert(xs.map(Streams.statePartitionsFor).sliding(2).forall(p => p(0) <= p(1)))
-  }
-
-  test("runningTotals accumulates state across batches") {
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[(Long, Double)]
-    val q = Streams.runningTotals(input.toDS())
-      .writeStream.format("memory").queryName("s_running")
-      .outputMode("update").start()
-    try {
-      input.addData((1L, 1.5)); q.processAllAvailable()
-      input.addData((1L, 2.5)); q.processAllAvailable()
-      val last = spark.table("s_running").as[(Long, Long, Double)].collect()
-        .filter(_._1 == 1L).maxBy(_._2)
-      assert(last._2 == 2 && last._3 == 4.0)
-    } finally q.stop()
   }
 }
