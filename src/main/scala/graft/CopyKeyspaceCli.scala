@@ -32,7 +32,7 @@ object CopyKeyspaceCli {
     val Array(srcDir, dstDir, manifestDir) = rest.take(3)
     val nRanges = if (rest.length > 3) rest(3).toInt else 16
     val rangeParallelism = if (rest.length > 4) rest(4).toInt else 4
-    val spark = Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    val spark = Sessions.local(Sessions.cpus)
       .appName("graft-copy-keyspace").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import graft.sources._

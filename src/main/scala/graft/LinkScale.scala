@@ -41,29 +41,14 @@ object LinkScale {
       .orElse(sys.env.get("SPARK_GRAFT_SF_DIR"))
       .getOrElse("/tmp/graft_tpch100")
     val outDir = sys.env.getOrElse("SPARK_GRAFT_LINK_OUT", "/tmp/graft_link100")
-    val spark = Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    val spark = Sessions.local(Sessions.cpus)
       .appName("graft-link-scale").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import graft.ops.Llm
 
-    // Task metrics listener (the Bench discipline): spill and task
-    // counts are measured, not argued.
-    val spillBytes = new java.util.concurrent.atomic.AtomicLong(0L)
-    val taskCount = new java.util.concurrent.atomic.AtomicLong(0L)
-    val cpuNs = new java.util.concurrent.atomic.AtomicLong(0L)
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val m = te.taskMetrics
-        taskCount.incrementAndGet()
-        if (m != null) {
-          cpuNs.addAndGet(m.executorCpuTime)
-          spillBytes.addAndGet(m.memoryBytesSpilled + m.diskBytesSpilled)
-          ()
-        }
-      }
-    })
-    def counters(): (Long, Long, Long) =
-      (cpuNs.get(), spillBytes.get(), taskCount.get())
+    // Task counters (the Bench discipline): spill and task counts are
+    // measured, not argued.
+    val counters = new TaskCounters(spark.sparkContext)
 
     val cust = Tables.t(spark, sfDir, "customer")
     val nCust = cust.count()
@@ -102,12 +87,11 @@ object LinkScale {
     // result persisted once for the independent checks + the DuckDB
     // sharded oracle.
     def timeOnce(f: => Unit): (Double, Double, Long, Long) = {
-      val (c0, s0, k0) = counters()
+      val (c0, s0, k0) = counters.drained()
       val t0 = System.nanoTime()
       f
       val wall = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(300) // listener drain
-      val (c1, s1, k1) = counters()
+      val (c1, s1, k1) = counters.drained()
       (wall, (c1 - c0) / 1e9, s1 - s0, k1 - k0)
     }
     val runs = (1 to 2).map(_ => timeOnce {

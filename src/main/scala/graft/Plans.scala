@@ -1,28 +1,47 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.FormattedMode
 import java.nio.file.{Files, Paths}
-/** Plan-audit dump: writes `explain("formatted")` output for the
-  * scale-critical queries to PLANS.md — the artifact backing the
-  * PlanSpec assertions (pushdown, pruning, broadcast, top-k fusion,
-  * no cartesian products).
+/** Physical-plan dumps: `explain("formatted")` output from a session
+  * built like every main's ([[Sessions.local]]), so the dumps show the
+  * plans the graded posture runs. Two forms:
+  *
+  *  - `Plans [sfDir] [out]` — the plan audit: the scale-critical
+  *    queries to PLANS.md (default sf0.001), the artifact backing the
+  *    PlanSpec assertions (pushdown, pruning, broadcast, top-k fusion,
+  *    no cartesian products);
+  *  - `Plans <keys> <outDir> <tag> <sfDir>` — per-key snapshots of a
+  *    comma-separated key list to `<outDir>/<key>_<tag>.txt`, so
+  *    before/after plan claims in OPTIMIZATION_r*.md are checkable
+  *    artifacts (plans/r18/) rather than prose.
   */
 object Plans {
   def main(args: Array[String]): Unit = {
+    require(args.length <= 2 || args.length == 4,
+      "usage: Plans [sfDir] [out] | Plans <keys> <outDir> <tag> <sfDir>")
+    val spark = Sessions.local(Sessions.cpus).getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    if (args.length == 4) snapshot(spark, args) else audit(spark, args)
+    spark.stop()
+  }
+
+  private def formatted(df: DataFrame): String =
+    df.queryExecution.explainString(FormattedMode)
+
+  private def snapshot(spark: SparkSession, args: Array[String]): Unit = {
+    val Array(keyList, outDir, tag, sfDir) = args
+    val keys = keyList.split(",").map(_.trim).filter(_.nonEmpty)
+    Files.createDirectories(Paths.get(outDir))
+    keys.foreach { k =>
+      val plan = formatted(SparkEntry.queries(k)(spark, sfDir))
+      Files.writeString(Paths.get(outDir, s"${k}_$tag.txt"), plan)
+      println(s"[plans] wrote $outDir/${k}_$tag.txt (${plan.length} chars)")
+    }
+  }
+
+  private def audit(spark: SparkSession, args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val out = if (args.length > 1) args(1) else "PLANS.md"
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      // Static conf — must be set on EVERY entry point's builder, or
-      // the c88 bucketed-table write lands in ./spark-warehouse
-      // inside the repo (exactly what happened on first regen).
-      .config("spark.sql.warehouse.dir", Sessions.warehouseDir)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     val audited = Seq(
       "b16_q1_pricing_summary" ->
         "Scan should read 6 columns only; two-phase HashAggregate; 6-group shuffle.",
@@ -441,15 +460,12 @@ object Plans {
           "plan-shape defect."))
     val sb = new StringBuilder
     sb.append("# PLANS — physical-plan audit (generated by `graft.Plans` on ")
-      .append(sfDir).append(")\n\n")
+      .append(sfDir).append(s" at local[${spark.sparkContext.defaultParallelism}])\n\n")
     sb.append("Each plan is `explain(\"formatted\")` output; the stated property is\n")
       .append("asserted programmatically in PlanSpec so regressions fail CI.\n")
     audited.foreach { case (key, expectation) =>
-      val df = SparkEntry.queries(key)(spark, sfDir)
-      val formatted = df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode)
       sb.append(s"\n## $key\n\n**Expected shape:** $expectation\n\n```\n")
-        .append(formatted).append("```\n")
+        .append(formatted(SparkEntry.queries(key)(spark, sfDir))).append("```\n")
     }
     // The streaming serving/ingest keys are audited through their
     // per-micro-batch KERNELS (running the stream here would audit
@@ -483,14 +499,11 @@ object Plans {
                 org.apache.spark.sql.functions.lit(1)).as("n_new"))
           }))
       kernelAudits.foreach { case (title, expectation, mk) =>
-        val formatted = mk().queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode)
         sb.append(s"\n## $title\n\n**Expected shape:** $expectation\n\n```\n")
-          .append(formatted).append("```\n")
+          .append(formatted(mk())).append("```\n")
       }
     }
     Files.writeString(Paths.get(out), sb.toString)
     println(s"wrote ${audited.size} plans to $out")
-    spark.stop()
   }
 }

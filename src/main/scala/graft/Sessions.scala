@@ -1,9 +1,11 @@
 package graft
+import org.apache.logging.log4j.Level
+import org.apache.logging.log4j.core.config.Configurator
 import org.apache.spark.sql.SparkSession
 
-/** The engine's local session posture, shared by the three entry
-  * points (Verify / Bench / Recall) so the scale-critical settings
-  * cannot drift between them:
+/** The engine's local session posture. Every session — each main's and
+  * the tests' — comes from [[local]], so answers, plan pins and timings
+  * share the scale-critical settings:
   *
   *  - `shuffle.partitions = cpus` as the non-AQE floor;
   *  - AQE ON, planning every exchange WIDE
@@ -16,7 +18,8 @@ import org.apache.spark.sql.SparkSession
   *  - `advisoryPartitionSizeInBytes = 16m`, because the advisory is
   *    measured on COMPRESSED shuffle bytes and embedding-array rows
   *    decompress ~5-10× worse than scalars (c47's 4g OOM);
-  *  - UTC + ns-as-long (events.parquet carries ns timestamps) + no UI.
+  *  - UTC + ns-as-long (events.parquet carries ns timestamps) + no UI;
+  *  - `WindowExec` logs at ERROR (see [[quietLoggers]]).
   */
 object Sessions {
 
@@ -44,11 +47,10 @@ object Sessions {
     */
   private[graft] def initialPartitions(cpus: Int): Int = math.max(cpus, 256)
 
-  /** The posture as data: the builder consumes exactly this map and
-    * SessionsSpec asserts against exactly this map, so the pinned
-    * values and the running session cannot drift apart (round-9
-    * ADVICE: the old spec asserted a constant, not the posture).
-    */
+  /** The mains' width: `SPARK_GRAFT_CPUS`, else the core count. */
+  lazy val cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+    Runtime.getRuntime.availableProcessors.toString)
+
   /** Catalog warehouse under the system tmpdir (one per JVM): the
     * bucketed-table seam (c88) writes managed tables, which must
     * never land in the default `./spark-warehouse` inside the repo.
@@ -56,6 +58,9 @@ object Sessions {
   private[graft] lazy val warehouseDir: String =
     java.nio.file.Files.createTempDirectory("graft_warehouse").toString
 
+  /** The posture as data: [[local]] folds in exactly this map and
+    * SessionsSpec asserts it on the live test session.
+    */
   private[graft] def posture(cpus: Int): Map[String, String] = Map(
     "spark.sql.warehouse.dir" -> warehouseDir,
     "spark.sql.shuffle.partitions" -> cpus.toString,
@@ -117,20 +122,35 @@ object Sessions {
     "spark.sql.streaming.stateStore.maintenanceInterval" -> "600s",
     "spark.ui.enabled" -> "false")
 
-  /** Dev-only experiment knob: `SPARK_GRAFT_CONF=k=v;k=v` overlays
-    * extra session confs on the posture (applied last, so it can
-    * also override posture values in an A/B run). The driver never
-    * sets it; the graded posture is [[posture]] alone.
+  /** The one dev override: `SPARK_GRAFT_CONF=k=v;k=v` overlays extra
+    * session confs (`spark.graft.*` knobs included) on the posture,
+    * applied last so an A/B run can also override posture values.
+    * Verify and Bench runs leave it unset: their posture is [[posture]].
     */
-  private def envOverlay: Map[String, String] =
+  private[graft] def envOverlay: Map[String, String] =
     sys.env.get("SPARK_GRAFT_CONF").map(_.split(";").toSeq
       .map(_.trim).filter(_.contains("="))
       .map { kv => val i = kv.indexOf('='); kv.take(i) -> kv.drop(i + 1) }
       .toMap).getOrElse(Map.empty)
 
-  def local(cpus: String): SparkSession.Builder =
-    (posture(cpus.toInt) ++ envOverlay).foldLeft(
+  /** `WindowExec` at ERROR: its "No Partition Defined" warning fires on
+    * the engine's whitelisted, bounded global windows and buried real
+    * warnings. Spark's logging init (re)installs its default log4j2
+    * config, which would drop the level, so it runs first.
+    */
+  private lazy val quietLoggers: Unit = {
+    new org.apache.spark.internal.Logging { initializeLogIfNecessary(false) }
+    Configurator.setLevel("org.apache.spark.sql.execution.window.WindowExec", Level.ERROR)
+  }
+
+  def local(cpus: String): SparkSession.Builder = {
+    quietLoggers
+    val overlay = envOverlay
+    if (overlay.nonEmpty)
+      System.err.println(s"[sessions] SPARK_GRAFT_CONF overrides: ${overlay.keys.mkString(", ")}")
+    (posture(cpus.toInt) ++ overlay).foldLeft(
       SparkSession.builder().master(s"local[$cpus]")) {
       case (b, (k, v)) => b.config(k, v)
     }
+  }
 }

@@ -13,6 +13,14 @@ class StreamsApiSpec extends AnyFunSuite {
   private val spark = TestSpark.spark
   import spark.implicits._
 
+  /** Every Scala source under `root`, with its text. */
+  private def sources(root: String): List[(java.nio.file.Path, String)] = {
+    import scala.jdk.CollectionConverters._
+    java.nio.file.Files.walk(java.nio.file.Paths.get(root)).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .map(p => p -> java.nio.file.Files.readString(p)).toList
+  }
+
   private def ts(hhmm: String): Timestamp =
     Timestamp.valueOf(s"2024-01-01 $hhmm:00")
 
@@ -226,12 +234,9 @@ class StreamsApiSpec extends AnyFunSuite {
     // memory sink dies at driver.maxResultSize exactly where the
     // parquet harness keeps flowing. Pin the whole main tree, not just
     // Streams.scala, so the pattern cannot reappear elsewhere.
-    import scala.jdk.CollectionConverters._
-    val offenders = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main"))
-      .iterator().asScala
-      .filter(_.toString.endsWith(".scala"))
-      .filter(p => java.nio.file.Files.readString(p).contains("format(\"memory\")"))
-      .toList
+    val offenders = sources("src/main").collect {
+      case (p, src) if src.contains("format(\"memory\")") => p
+    }
     assert(offenders.isEmpty, s"memory sinks in the query surface: $offenders")
   }
 
@@ -239,26 +244,38 @@ class StreamsApiSpec extends AnyFunSuite {
     // One-shot pricing and A/B mains accumulate in src/main once their
     // numbers are recorded (SCALE.md / OPTIMIZATION_*.md keep the
     // results). Each allowlisted main is the only tool for its job:
-    // the Verify/Bench entry points, the keyspace-copy CLI, the plan audit
-    // and plan snapshots, ANN recall and the 100x linkage check.
-    import scala.jdk.CollectionConverters._
-    val allow = Set("Verify", "Bench", "CopyKeyspaceCli", "Plans", "PlanDump",
-      "Recall", "LinkScale")
-    val mains = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main"))
-      .iterator().asScala
-      .filter(_.toString.endsWith(".scala"))
-      .flatMap { p =>
-        val src = java.nio.file.Files.readString(p)
-        // a main belongs to the last `object` declared before it
-        "def main\\(".r.findAllMatchIn(src).map { m =>
-          val owner = "object\\s+(\\w+)".r.findAllMatchIn(src.substring(0, m.start))
-            .map(_.group(1)).toSeq.lastOption.getOrElse("<no object>")
-          (owner, p.toString)
-        }
-      }.toList
+    // the Verify/Bench entry points, the keyspace-copy CLI, the plan dumps
+    // (audit and per-key snapshots), ANN recall and the 100x linkage
+    // check.
+    val allow = Set("Verify", "Bench", "CopyKeyspaceCli", "Plans", "Recall",
+      "LinkScale")
+    val mains = sources("src/main").flatMap { case (p, src) =>
+      // a main belongs to the last `object` declared before it
+      "def main\\(".r.findAllMatchIn(src).map { m =>
+        val owner = "object\\s+(\\w+)".r.findAllMatchIn(src.substring(0, m.start))
+          .map(_.group(1)).toSeq.lastOption.getOrElse("<no object>")
+        (owner, p.toString)
+      }
+    }
     assert(mains.nonEmpty, "scan found no mains: wrong working directory?")
     val offenders = mains.filterNot { case (owner, _) => allow(owner) }
     assert(offenders.isEmpty, s"mains outside the allowlist: $offenders")
+  }
+
+  test("one session builder: only Sessions builds sessions and reads the width") {
+    // Every session, tests included, comes from Sessions.local, and the
+    // local width is read once (Sessions.cpus): a hand-built builder
+    // drifts off the posture, and a second width read drifts off its
+    // default. This spec names the needles, so it is skipped too.
+    val needles = Seq("SparkSession.builder()", "\"SPARK_GRAFT_CPUS\"")
+    val skip = Set("Sessions.scala", "StreamsApiSpec.scala")
+    val srcs = sources("src")
+    assert(srcs.exists(_._1.endsWith("Sessions.scala")), "scan found no Sessions.scala")
+    val offenders = for {
+      (p, src) <- srcs if !skip(p.getFileName.toString)
+      n <- needles if src.contains(n)
+    } yield s"$p: $n"
+    assert(offenders.isEmpty, s"session built or width read outside Sessions: $offenders")
   }
 
   test("runToParquet reads an empty result back as an empty frame, not an inference error") {

@@ -2,20 +2,13 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One shared session for the whole forked test JVM (same conf shape
-  * as Verify/Bench, SURVEY §0 environment).
+/** One shared session for the whole forked test JVM, built by
+  * [[Sessions.local]] like every main's. The width stays fixed at 4 so
+  * the plan pins do not depend on the host.
   */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.warehouse.dir", Sessions.warehouseDir)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = Sessions.local("4").getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }
