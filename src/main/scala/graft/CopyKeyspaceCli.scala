@@ -10,14 +10,17 @@ package graft
   *
   * Usage:
   *   sbt "runMain graft.CopyKeyspaceCli <srcDir> <dstDir> <manifestDir> [nRanges] [rangeParallelism]"
-  *   sbt "runMain graft.CopyKeyspaceCli --repair <srcDir> <dstDir> <manifestDir> [nRanges]"
+  *   sbt "runMain graft.CopyKeyspaceCli --repair <srcDir> <dstDir> <manifestDir> [nRanges] [rangeParallelism]"
   *
   * Re-running with the same manifestDir RESUMES: completed
   * (table, range) units are skipped. Exit 0 iff every table passes
   * the post-copy count + content-checksum verification.
-  * `rangeParallelism` (default 4) is the number of range units in
-  * flight at once — the live-migrator posture that hides per-job
-  * scheduling latency; 1 reproduces the strictly sequential walk.
+  * `rangeParallelism` (default 4, both modes) is the number of range
+  * units in flight at once, across tables — the live-migrator posture
+  * that hides per-job scheduling latency; tables overlap, at most
+  * that many at once; 1 reproduces the strictly sequential walk.
+  * The stderr summary includes a throughput line: rows moved (units
+  * written by this invocation), wall seconds and rows/s.
   * `--repair` runs the anti-entropy verify-and-heal instead
   * ([[graft.ops.KeyspaceCopy.repair]]): every destination range unit
   * audits against a one-pass source truth and exactly the diverged
@@ -28,7 +31,8 @@ object CopyKeyspaceCli {
     val repairMode = args.headOption.contains("--repair")
     val rest = if (repairMode) args.drop(1) else args
     require(rest.length >= 3,
-      "usage: CopyKeyspaceCli [--repair] <srcDir> <dstDir> <manifestDir> [nRanges] [rangeParallelism]")
+      "usage: CopyKeyspaceCli [--repair] <srcDir> <dstDir> <manifestDir> " +
+        "[nRanges] [rangeParallelism] (both modes take both)")
     val Array(srcDir, dstDir, manifestDir) = rest.take(3)
     val nRanges = if (rest.length > 3) rest(3).toInt else 16
     val rangeParallelism = if (rest.length > 4) rest(4).toInt else 4
@@ -36,6 +40,7 @@ object CopyKeyspaceCli {
       .appName("graft-copy-keyspace").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import graft.sources._
+    val t0 = System.nanoTime()
     val report = if (repairMode)
       ops.Migration.repairKeyspace(
         spark,
@@ -55,11 +60,18 @@ object CopyKeyspaceCli {
       manifestDir,
       nRanges,
       rangeParallelism)
+    val wallS = (System.nanoTime() - t0) / 1e9
     val copied = report.ranges.count(!_.skipped)
     val skipped = report.ranges.count(_.skipped)
+    val mode = if (repairMode) "repair" else "copy"
     System.err.println(
-      s"[${if (repairMode) "repair" else "copy"}] ranges: $copied copied, " +
+      s"[$mode] ranges: $copied copied, " +
         s"$skipped ${if (repairMode) "audited-healthy" else "resumed-as-complete"}")
+    // Rows this invocation moved: the units it wrote, not the ones it
+    // skipped (resumed or audited healthy).
+    val moved = report.ranges.filter(!_.skipped).map(_.rows).sum
+    System.err.println(f"[$mode] moved $moved rows in $wallS%.2f s " +
+      f"(${if (wallS > 0) moved / wallS else 0.0}%.0f rows/s)")
     report.verify.foreach { v =>
       System.err.println(s"[verify] ${v.table}: rows ${v.srcRows}=${v.dstRows} " +
         s"checksum ${if (v.srcChecksum == v.dstChecksum) "MATCH" else "MISMATCH"} " +

@@ -1,8 +1,13 @@
 package graft
 
+import java.nio.file.{Files, FileVisitOption, Paths}
+import java.nio.file.attribute.BasicFileAttributes
+import java.util.concurrent.TimeUnit
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.LongType
+import org.apache.spark.sql.types.{LongType, StructType}
 
 /** Fixture table access (SURVEY §1.3).
   *
@@ -11,6 +16,21 @@ import org.apache.spark.sql.types.LongType
   * `spark.read.parquet` scans are split by file/rowgroup, filters and
   * projections are pushed into the vectorized reader, and partition
   * count scales with input size — nothing here assumes a single file.
+  *
+  * Schema memo: a plain `spark.read.parquet` launches a schema-inference
+  * job (a footer read) on every call, and one copy reads each table
+  * several times. [[t]] therefore infers a table's schema on its first
+  * read and hands it to later reads as `spark.read.schema(memo)`, which
+  * launches no job. The memo key is the table's file [[fingerprint]]
+  * (every data file's relative path, size, mtime and inode) plus every
+  * set session conf under `spark.sql.parquet.*` and
+  * `spark.sql.legacy.parquet.*` (they change what inference returns),
+  * so a rewrite, a rename-replace, a new file or a flipped conf misses
+  * and re-infers. It holds metadata only, one entry per path. The
+  * schema is memoized, not declared: a declared schema would break the
+  * fixtures' second `events.ts` vintage (LongType nanos, VintageSpec),
+  * while an inferred one follows whatever the files hold — the catalog
+  * a 100 TB deployment reads, built lazily.
   */
 object Tables {
 
@@ -36,7 +56,63 @@ object Tables {
     // session happens to be thread-active at Column-construction time.
     graft.functions.ArrayDot.ensureRegistered(spark)
     graft.functions.EditDistance.ensureRegistered(spark)
-    spark.read.parquet(s"$sfDir/$name.parquet")
+    parquet(spark, s"$sfDir/$name.parquet")
+  }
+
+  /** Path → (memo key, inferred schema); see the object scaladoc. */
+  private val schemaMemo =
+    scala.collection.concurrent.TrieMap.empty[String, (String, StructType)]
+
+  /** A parquet read whose schema inference runs once per unchanged
+    * table. A path that does not exist is never memoized, so Spark's
+    * own error surfaces; a walk that fails (files vanishing mid-walk)
+    * falls back to the plain read.
+    */
+  private def parquet(spark: SparkSession, path: String): DataFrame =
+    fingerprint(path) match {
+      case None => spark.read.parquet(path)
+      case Some(files) =>
+        val key = files + "|" + spark.conf.getAll.toSeq
+          .filter { case (k, _) =>
+            k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.") }
+          .sorted.mkString(";")
+        schemaMemo.get(path) match {
+          case Some((k, schema)) if k == key => spark.read.schema(schema).parquet(path)
+          case _ =>
+            val df = spark.read.parquet(path)
+            schemaMemo.put(path, (key, df.schema))
+            df
+        }
+    }
+
+  /** SHA-256 over the files Spark would read under `path`: each one's
+    * relative path, size, mtime (ns) and `fileKey` (device + inode).
+    * Names Spark skips are skipped at every level (`_`/`.` prefixes,
+    * `._COPYING_`), except the `_metadata`/`_common_metadata` summaries
+    * parquet inference may read. Symlinks are followed. `None` when
+    * the path does not exist or cannot be walked.
+    */
+  private[graft] def fingerprint(path: String): Option[String] = {
+    def hidden(name: String) =
+      ((name.startsWith("_") && !name.contains("=")) || name.startsWith(".") ||
+        name.endsWith("._COPYING_")) &&
+        !name.startsWith("_metadata") && !name.startsWith("_common_metadata")
+    def entry(root: java.nio.file.Path, p: java.nio.file.Path): Option[String] = {
+      val rel = root.relativize(p)
+      val a = Files.readAttributes(p, classOf[BasicFileAttributes])
+      if (!a.isRegularFile || rel.iterator().asScala.exists(c => hidden(c.toString))) None
+      else Some(s"$rel\t${a.size}\t${a.lastModifiedTime.to(TimeUnit.NANOSECONDS)}\t${a.fileKey}")
+    }
+    scala.util.Try(Paths.get(path)).toOption.filter(Files.exists(_)).flatMap { root =>
+      scala.util.Try {
+        val walk = Files.walk(root, FileVisitOption.FOLLOW_LINKS)
+        val lines = try walk.iterator().asScala.flatMap(entry(root, _)).toVector.sorted
+          finally walk.close()
+        val md = java.security.MessageDigest.getInstance("SHA-256")
+        lines.foreach(l => md.update(s"$l\n".getBytes(java.nio.charset.StandardCharsets.UTF_8)))
+        md.digest().map(b => f"$b%02x").mkString
+      }.toOption
+    }
   }
 
   /** `events.ts` normalized to a session-TZ TIMESTAMP at µs

@@ -1,6 +1,8 @@
 package graft.ops
 
 import java.io.{File, FileWriter}
+import java.util.concurrent.{Callable, Executors, ExecutorService}
+import java.util.concurrent.atomic.AtomicReference
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -61,6 +63,17 @@ import graft.sources.{ConfiguredSink, TableSink, TableSource, WriteConf}
   * recorded complete without launching a write job. Everything
   * driver-side is metadata-sized: the manifest holds one line per
   * (table, range), and the only collects are 1-row audit scalars.
+  *
+  * Overlap: `rangeParallelism` bounds everything. Tables proceed
+  * concurrently on `rangeParallelism` table lanes, so at most
+  * `rangeParallelism` tables are persisted at once; their range units,
+  * repair audits and verification checksums share `rangeParallelism`
+  * unit lanes, so at most that many units are in flight across all
+  * tables, and threads stay O(`rangeParallelism`). At 1 the walk is
+  * strictly sequential, table by table and unit by unit. One lock
+  * serializes every manifest append. The Report is ordered the same
+  * at any width: tables in discovery order; within a table, skipped
+  * units, then empty units, then copied units by range.
   */
 object KeyspaceCopy {
 
@@ -245,6 +258,77 @@ object KeyspaceCopy {
     finally w.close()
   }
 
+  /** The `nRanges=` arity an existing `copy.conf` pins, if it holds one. */
+  private def pinnedRanges(confFile: File): Option[Int] = {
+    val src = scala.io.Source.fromFile(confFile, "UTF-8")
+    try src.getLines().collectFirst { case l if l.startsWith("nRanges=") =>
+      l.stripPrefix("nRanges=").trim.toInt }
+    finally src.close()
+  }
+
+  /** Thrown in place of a task that had not started when another task
+    * failed; it never escapes [[Lanes]]. */
+  private object Abandoned
+      extends RuntimeException("abandoned after an earlier failure", null, false, false)
+
+  /** The copy's bounded concurrency: `width` table lanes and `width`
+    * unit lanes, two fixed pools, so threads stay O(width). A table
+    * task runs on a table lane and hands its range units, audits and
+    * checksums to the unit lanes, which run leaves only — a table lane
+    * may block on unit lanes, never the reverse, so the pools cannot
+    * deadlock. At width 1 both are single threads and the walk is
+    * strictly sequential. [[settle]] waits for every task it submitted
+    * to settle, then rethrows the first failure; once any task has
+    * failed, tasks that have not started are abandoned, so a dead sink
+    * stops the copy instead of failing every remaining unit.
+    * `manifestLock` is the one lock every manifest append takes, across
+    * all tables, so two units can never interleave a line.
+    */
+  private final class Lanes(width: Int, nTables: Int) {
+    private val tablePool = Executors.newFixedThreadPool(math.min(width, nTables))
+    private val unitPool = Executors.newFixedThreadPool(width)
+    private val failure = new AtomicReference[Throwable]()
+    val manifestLock = new Object
+    def tables[A](work: Seq[() => A]): Seq[A] = settle(tablePool, work)
+    def units[A](work: Seq[() => A]): Seq[A] = settle(unitPool, work)
+    private def settle[A](pool: ExecutorService, work: Seq[() => A]): Seq[A] = {
+      val futures = work.map(w => pool.submit(new Callable[A] {
+        def call(): A = {
+          if (failure.get != null) throw Abandoned
+          try w() catch { case e: Throwable => failure.compareAndSet(null, e); throw e }
+        }
+      }))
+      val outcomes = futures.map(f => scala.util.Try(f.get()))
+      outcomes.collectFirst { case scala.util.Failure(e) =>
+        throw Option(failure.get).getOrElse(e)
+      }
+      outcomes.map(_.get)
+    }
+    def close(): Unit = { unitPool.shutdown(); tablePool.shutdown() }
+  }
+
+  /** Write one range unit of `cached` through `sink`, audit what
+    * LANDED through the destination's own read path, and append the
+    * unit's manifest line once `accept` passes the audit.
+    */
+  private def landUnit(
+      spark: SparkSession, sink: ConfiguredSink, dstRead: TableSource,
+      cached: DataFrame, table: String, r: Int, manifestDir: String, lanes: Lanes)(
+      accept: (Long, String) => Unit): RangeResult = {
+    sink.write(cached.where(col("__graft_range") === r).drop("__graft_range"),
+      rangeTable(table, r))
+    val (n, cs) = countAndChecksum(dstRead.read(spark, rangeTable(table, r)))
+    accept(n, cs)
+    lanes.manifestLock.synchronized { appendManifest(manifestDir, table, r, n, cs) }
+    RangeResult(table, r, n, cs, skipped = false)
+  }
+
+  /** Per-table DDL from each table's schema on the source's read path. */
+  private def discoverDdl(spark: SparkSession, src: TableSource,
+      tables: Seq[String], lanes: Lanes): Map[String, String] =
+    tables.zip(lanes.tables(tables.map(t => () =>
+      Migration.createTableDdl(t, src.read(spark, t).schema)))).toMap
+
   /** Run (or resume) a full keyspace copy. See the object scaladoc for
     * the pipeline; throws when a range write exhausts the
     * [[WriteConf]] retries — the manifest then holds every unit that
@@ -278,9 +362,7 @@ object KeyspaceCopy {
       val w = new FileWriter(confFile)
       try w.write(s"nRanges=$nRanges\n") finally w.close()
     } else {
-      val pinned = scala.io.Source.fromFile(confFile, "UTF-8").getLines()
-        .collectFirst { case l if l.startsWith("nRanges=") =>
-          l.stripPrefix("nRanges=").trim.toInt }
+      val pinned = pinnedRanges(confFile)
       require(pinned.contains(nRanges),
         s"manifest at $manifestDir was written with nRanges=${pinned.orNull}; " +
           s"resuming with nRanges=$nRanges would mis-map completed ranges — " +
@@ -292,155 +374,127 @@ object KeyspaceCopy {
     require(tables.nonEmpty,
       s"keyspace copy: source $src discovered zero tables — nothing to copy")
     val sink = new ConfiguredSink(dst, conf)
-
-    // 1+2 — discover + DDL bootstrap artifact (write-once: a resumed
-    // run must not clobber the statement the target was created from).
-    val ddl = tables.map(t =>
-      t -> Migration.createTableDdl(t, src.read(spark, t).schema)).toMap
-    val ddlText = tables.map(ddl).mkString("", ";\n\n", ";\n")
-    val ddlFile = new File(manifestDir, "keyspace.ddl")
-    if (!ddlFile.exists()) {
-      val w = new FileWriter(ddlFile)
-      try w.write(ddlText) finally w.close()
-    } else {
-      // Schema drift guard (same refuse-to-resume discipline as the
-      // nRanges pin): keyspace.ddl is write-once, so if the SOURCE
-      // schema changed between the killed run and this resume, the
-      // regenerated DDL would silently disagree with the bootstrap
-      // artifact the target was created from — and ranges copied
-      // under the old schema would not union with ranges copied under
-      // the new one. Fail loudly instead.
-      //
-      // 100 TB RUNBOOK (the mid-copy schema-evolution drill,
-      // MigrationSpec "v2 vintage APPEARING mid-copy"): when a new
-      // file vintage lands in the source WHILE a copy is down, REJECT
-      // is the only safe resume — [[rangeCol]] hashes the row-render
-      // over the schema's FIELDS, so v1-completed ranges and
-      // merged-schema ranges are different partitions of the table;
-      // resuming would interleave two incompatible partitionings
-      // under one manifest. Operator options, in order: (a) quarantine
-      // the new vintage files and finish under the original schema —
-      // the manifest stays trustworthy (the refused resume touches
-      // neither it nor the destination) — then copy the quarantined
-      // files as their own delta; or (b) start a fresh manifest dir
-      // and re-copy the affected table under the merged schema
-      // (proven a18-green in the drill). Never hand-edit keyspace.ddl
-      // to force a resume.
-      val pinned = new String(
-        java.nio.file.Files.readAllBytes(ddlFile.toPath),
-        java.nio.charset.StandardCharsets.UTF_8)
-      require(pinned == ddlText,
-        s"source schema drifted since the manifest at $manifestDir was " +
-          "started: regenerated DDL does not match keyspace.ddl — finish " +
-          "under the original schema or start a fresh manifest dir")
-    }
-
-    // 3+4 — per-range copy with read-back audit and durable cursor.
-    val done = readManifest(manifestDir)
-    val results = scala.collection.mutable.ArrayBuffer.empty[RangeResult]
-    tables.foreach { table =>
-      val pending = (0 until nRanges).filter(r => !done.contains((table, r)))
-      (0 until nRanges).filter(r => done.contains((table, r))).foreach { r =>
-        val (n, cs) = done((table, r))
-        results += RangeResult(table, r, n, cs, skipped = true)
+    val lanes = new Lanes(rangeParallelism, tables.size)
+    try {
+      // 1+2 — discover + DDL bootstrap artifact (write-once: a resumed
+      // run must not clobber the statement the target was created from).
+      val ddl = discoverDdl(spark, src, tables, lanes)
+      val ddlText = tables.map(ddl).mkString("", ";\n\n", ";\n")
+      val ddlFile = new File(manifestDir, "keyspace.ddl")
+      if (!ddlFile.exists()) {
+        val w = new FileWriter(ddlFile)
+        try w.write(ddlText) finally w.close()
+      } else {
+        // Schema drift guard (same refuse-to-resume discipline as the
+        // nRanges pin): keyspace.ddl is write-once, so if the SOURCE
+        // schema changed between the killed run and this resume, the
+        // regenerated DDL would silently disagree with the bootstrap
+        // artifact the target was created from — and ranges copied
+        // under the old schema would not union with ranges copied under
+        // the new one. Fail loudly instead.
+        //
+        // 100 TB RUNBOOK (the mid-copy schema-evolution drill,
+        // MigrationSpec "v2 vintage APPEARING mid-copy"): when a new
+        // file vintage lands in the source WHILE a copy is down, REJECT
+        // is the only safe resume — [[rangeCol]] hashes the row-render
+        // over the schema's FIELDS, so v1-completed ranges and
+        // merged-schema ranges are different partitions of the table;
+        // resuming would interleave two incompatible partitionings
+        // under one manifest. Operator options, in order: (a) quarantine
+        // the new vintage files and finish under the original schema —
+        // the manifest stays trustworthy (the refused resume touches
+        // neither it nor the destination) — then copy the quarantined
+        // files as their own delta; or (b) start a fresh manifest dir
+        // and re-copy the affected table under the merged schema
+        // (proven a18-green in the drill). Never hand-edit keyspace.ddl
+        // to force a resume.
+        val pinned = new String(
+          java.nio.file.Files.readAllBytes(ddlFile.toPath),
+          java.nio.charset.StandardCharsets.UTF_8)
+        require(pinned == ddlText,
+          s"source schema drifted since the manifest at $manifestDir was " +
+            "started: regenerated DDL does not match keyspace.ddl — finish " +
+            "under the original schema or start a fresh manifest dir")
       }
-      if (pending.nonEmpty) {
-        val base = src.read(spark, table)
-        val withRange = base.withColumn("__graft_range",
-          rangeCol(base.schema, nRanges))
-        // One source scan per table, not one per range: recomputable
-        // MEMORY_AND_DISK lineage (an executor loss recomputes, the
-        // localCheckpoint failure mode ADVICE flagged elsewhere). A
-        // live token-range source reads ring slices instead and skips
-        // this (object scaladoc).
-        val cached = if (pending.size > 1)
-          withRange.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        else withRange
-        try {
-          // a15's planning aggregate: per-range row counts in one pass,
-          // so empty ranges complete without a write job.
-          val counts = cached.groupBy(col("__graft_range")).count()
-            .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-          val (emptyRs, liveRs) = pending.partition(r => counts.getOrElse(r, 0L) == 0L)
-          emptyRs.foreach { r =>
-            appendManifest(manifestDir, table, r, 0L, "0")
-            results += RangeResult(table, r, 0L, "0", skipped = false)
-          }
-          // `rangeParallelism` units in flight: a live migrator
-          // overlaps range copies to hide per-job scheduling latency
-          // and the sink's write/ack round-trips (Spark's scheduler
-          // accepts jobs from many threads). The manifest append is
-          // the only shared mutable state — serialized under `lock`
-          // so two units can never interleave a line. Every in-flight
-          // unit SETTLES (success or failure) before the first error
-          // propagates, so the manifest records each unit that truly
-          // completed and `cached` is never unpersisted under a
-          // running job.
-          val lock = new Object
-          val doneUnits = new java.util.concurrent.ConcurrentLinkedQueue[RangeResult]()
-          if (liveRs.nonEmpty) {
-            val pool = java.util.concurrent.Executors.newFixedThreadPool(
-              math.min(rangeParallelism, liveRs.size))
-            try {
-              val outcomes = liveRs.map { r =>
-                pool.submit(new java.util.concurrent.Callable[Unit] {
-                  def call(): Unit = {
-                    val expected = counts(r)
-                    val part = cached.where(col("__graft_range") === r)
-                      .drop("__graft_range")
-                    sink.write(part, rangeTable(table, r))
-                    // Read-back audit: count+checksum of what LANDED,
-                    // via the destination's own read path.
-                    val (n, cs) =
-                      countAndChecksum(dstRead.read(spark, rangeTable(table, r)))
-                    require(n == expected,
-                      s"$table range $r landed $n rows, source holds $expected — " +
-                        "refusing to mark complete")
-                    lock.synchronized {
-                      appendManifest(manifestDir, table, r, n, cs)
-                    }
-                    doneUnits.add(RangeResult(table, r, n, cs, skipped = false))
-                    ()
-                  }
-                })
-              }
-              val errs = outcomes.flatMap(f => scala.util.Try(f.get()).failed.toOption)
-              errs.headOption.foreach {
-                case e: java.util.concurrent.ExecutionException => throw e.getCause
-                case e => throw e
-              }
-            } finally { pool.shutdown(); () }
-          }
-          // Completion order is nondeterministic under concurrency;
-          // the Report is range-ordered regardless.
-          val completed = scala.collection.mutable.ArrayBuffer.empty[RangeResult]
-          doneUnits.forEach(u => completed += u)
-          results ++= completed.sortBy(_.range)
-        } finally { cached.unpersist(); () }
-      }
-    }
 
-    // 5 — independent full-table verification (a7 count parity + a18
-    // content parity). The destination table is the union of its
-    // non-empty range units.
-    Report(ddl, results.toSeq,
-      verifyTables(spark, src, dstRead, tables, results.toSeq))
+      // 3+4 — per-range copy with read-back audit and durable cursor,
+      // tables overlapping on the table lanes.
+      val done = readManifest(manifestDir)
+      val ranges = lanes.tables(tables.map { table => () =>
+        val skipped = (0 until nRanges).filter(r => done.contains((table, r))).map { r =>
+          val (n, cs) = done((table, r))
+          RangeResult(table, r, n, cs, skipped = true)
+        }
+        val pending = (0 until nRanges).filter(r => !done.contains((table, r)))
+        if (pending.isEmpty) skipped
+        else {
+          val base = src.read(spark, table)
+          val withRange = base.withColumn("__graft_range",
+            rangeCol(base.schema, nRanges))
+          // One source scan per table, not one per range: recomputable
+          // MEMORY_AND_DISK lineage (an executor loss recomputes, the
+          // localCheckpoint failure mode ADVICE flagged elsewhere). A
+          // live token-range source reads ring slices instead and skips
+          // this (object scaladoc).
+          val cached = if (pending.size > 1)
+            withRange.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          else withRange
+          try {
+            // a15's planning aggregate: per-range row counts in one pass,
+            // so empty ranges complete without a write job.
+            val counts = cached.groupBy(col("__graft_range")).count()
+              .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+            val (emptyRs, liveRs) = pending.partition(r => counts.getOrElse(r, 0L) == 0L)
+            val empties = emptyRs.map { r =>
+              lanes.manifestLock.synchronized { appendManifest(manifestDir, table, r, 0L, "0") }
+              RangeResult(table, r, 0L, "0", skipped = false)
+            }
+            // `rangeParallelism` units in flight: a live migrator
+            // overlaps range copies to hide per-job scheduling latency
+            // and the sink's write/ack round-trips (Spark's scheduler
+            // accepts jobs from many threads). Every in-flight unit
+            // SETTLES before the first error propagates, so the
+            // manifest records each unit that truly completed and
+            // `cached` is never unpersisted under a running job. The
+            // Report is range-ordered whatever the completion order.
+            val copied = lanes.units(liveRs.map { r => () =>
+              landUnit(spark, sink, dstRead, cached, table, r, manifestDir, lanes) { (n, _) =>
+                require(n == counts(r),
+                  s"$table range $r landed $n rows, source holds ${counts(r)} — " +
+                    "refusing to mark complete")
+              }
+            })
+            skipped ++ empties ++ copied
+          } finally { cached.unpersist(); () }
+        }
+      }).flatten
+
+      // 5 — independent full-table verification (a7 count parity + a18
+      // content parity). The destination table is the union of its
+      // non-empty range units.
+      Report(ddl, ranges, verifyTables(spark, src, dstRead, tables, ranges, lanes))
+    } finally lanes.close()
   }
 
+  /** Each table's source and destination (count, checksum), computed
+    * concurrently: tables on the table lanes, the two sides of a table
+    * on the unit lanes.
+    */
   private def verifyTables(
       spark: SparkSession, src: TableSource, dstRead: TableSource,
-      tables: Seq[String], results: Seq[RangeResult]): Seq[TableVerify] = {
+      tables: Seq[String], results: Seq[RangeResult], lanes: Lanes): Seq[TableVerify] = {
     val byTable = results.groupBy(_.table)
-    tables.map { table =>
-      val (srcN, srcCs) = countAndChecksum(src.read(spark, table))
+    lanes.tables(tables.map { table => () =>
       val live = byTable(table).filter(_.rows > 0L).map(_.range).sorted
-      val (dstN, dstCs) =
-        if (live.isEmpty) (0L, "0")
-        else countAndChecksum(
-          live.map(r => dstRead.read(spark, rangeTable(table, r)))
-            .reduce(_ unionByName _))
+      val Seq((srcN, srcCs), (dstN, dstCs)) = lanes.units(Seq(
+        () => countAndChecksum(src.read(spark, table)),
+        () =>
+          if (live.isEmpty) (0L, "0")
+          else countAndChecksum(
+            live.map(r => dstRead.read(spark, rangeTable(table, r)))
+              .reduce(_ unionByName _))))
       TableVerify(table, srcN, dstN, srcCs, dstCs)
-    }
+    })
   }
 
   /** ANTI-ENTROPY REPAIR (round 15) — verify-and-heal an EXISTING
@@ -467,13 +521,14 @@ object KeyspaceCopy {
     *      performs.
     *
     * Healthy units cost one metadata-sized audit read each and report
-    * `skipped = true`; only diverged units move data — and they heal
-    * CONCURRENTLY through the same bounded pool run() uses
-    * (`rangeParallelism` units in flight; round-16: a badly-rotted
-    * destination at nRanges=4096 must not heal one unit at a time).
-    * The manifest append stays serialized; last-line-wins makes
-    * append ORDER immaterial. The source scan
-    * is persisted once per table while >1 unit may need healing.
+    * `skipped = true`; only diverged units move data. Tables, audits
+    * and heals overlap on the same bounded lanes run() uses (object
+    * scaladoc: `rangeParallelism` units in flight, at most that many
+    * tables persisted; round-16: a badly-rotted destination at
+    * nRanges=4096 must not heal one unit at a time). The manifest
+    * append stays serialized; last-line-wins makes append ORDER
+    * immaterial. The source scan is persisted once per table while
+    * >1 unit may need healing.
     * Refuses to run against a manifest written under a different
     * nRanges (the same arity pin as run — a repair under the wrong
     * range function would "heal" every unit into a different
@@ -493,9 +548,7 @@ object KeyspaceCopy {
       s"rangeParallelism out of range: $rangeParallelism")
     val confFile = new File(manifestDir, "copy.conf")
     if (confFile.exists()) {
-      val pinned = scala.io.Source.fromFile(confFile, "UTF-8").getLines()
-        .collectFirst { case l if l.startsWith("nRanges=") =>
-          l.stripPrefix("nRanges=").trim.toInt }
+      val pinned = pinnedRanges(confFile)
       require(pinned.contains(nRanges),
         s"manifest at $manifestDir was written with nRanges=${pinned.orNull}; " +
           s"repairing with nRanges=$nRanges would re-partition the key space — " +
@@ -505,90 +558,60 @@ object KeyspaceCopy {
     require(tables.nonEmpty,
       s"keyspace repair: source $src discovered zero tables — nothing to repair")
     val sink = new ConfiguredSink(dst, conf)
-    val ddl = tables.map(t =>
-      t -> Migration.createTableDdl(t, src.read(spark, t).schema)).toMap
-    val results = scala.collection.mutable.ArrayBuffer.empty[RangeResult]
-    tables.foreach { table =>
-      val base = src.read(spark, table)
-      val withRange = base.withColumn("__graft_range",
-        rangeCol(base.schema, nRanges))
-      val cached = if (nRanges > 1)
-        withRange.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else withRange
-      try {
-        // Source truth per range: ONE grouped pass (count + a18 sum).
-        val h = conv(substring(md5(rowRender(base.schema)), 1, 8), 16, 10)
-          .cast("bigint").cast(DecimalType(38, 0))
-        val truth = cached.groupBy(col("__graft_range"))
-          .agg(count(lit(1)).as("n"),
-            coalesce(sum(h), lit(0).cast(DecimalType(38, 0)))
-              .cast(DecimalType(38, 0)).cast("string").as("cs"))
-          .collect().map(r => r.getInt(0) -> ((r.getLong(1), r.getString(2)))).toMap
-        // Audit every unit first (metadata-cheap), then heal the
-        // diverged set through the SAME bounded-concurrency pool
-        // run() uses (round-15 verdict item 6: a badly-rotted
-        // destination at nRanges=4096 must not heal one unit at a
-        // time). The per-unit read-back audit is unchanged; the
-        // manifest append is the only shared mutable state and stays
-        // serialized under `lock` (last-line-wins makes append ORDER
-        // immaterial — interleaved LINES are what the lock prevents).
-        // Every in-flight heal settles before the first error
-        // propagates, so `cached` is never unpersisted under a
-        // running job and the manifest records each unit that truly
-        // completed.
-        val diverged = scala.collection.mutable.ArrayBuffer.empty[(Int, Long, String)]
-        (0 until nRanges).foreach { r =>
-          val (en, ecs) = truth.getOrElse(r, (0L, "0"))
-          // Audit through the dst read path; a missing/unreadable unit
-          // audits as absent (healthy ONLY for a source-empty range —
-          // run() never writes empty units).
-          val audit = scala.util.Try(
-            countAndChecksum(dstRead.read(spark, rangeTable(table, r)))).toOption
-          val healthy = audit match {
-            case Some((dn, dcs)) => dn == en && dcs == ecs
-            case None => en == 0L
-          }
-          if (healthy) results += RangeResult(table, r, en, ecs, skipped = true)
-          else diverged += ((r, en, ecs))
-        }
-        if (diverged.nonEmpty) {
-          val lock = new Object
-          val healed = new java.util.concurrent.ConcurrentLinkedQueue[RangeResult]()
-          val pool = java.util.concurrent.Executors.newFixedThreadPool(
-            math.min(rangeParallelism, diverged.size))
-          try {
-            val outcomes = diverged.toSeq.map { case (r, en, ecs) =>
-              pool.submit(new java.util.concurrent.Callable[Unit] {
-                def call(): Unit = {
-                  val part = cached.where(col("__graft_range") === r)
-                    .drop("__graft_range")
-                  sink.write(part, rangeTable(table, r))
-                  val (n, cs) =
-                    countAndChecksum(dstRead.read(spark, rangeTable(table, r)))
-                  require(n == en && cs == ecs,
-                    s"$table range $r landed ($n, $cs), source truth is ($en, $ecs) — " +
-                      "refusing to mark repaired")
-                  lock.synchronized {
-                    appendManifest(manifestDir, table, r, n, cs)
-                  }
-                  healed.add(RangeResult(table, r, n, cs, skipped = false))
-                  ()
-                }
-              })
+    val lanes = new Lanes(rangeParallelism, tables.size)
+    try {
+      val ddl = discoverDdl(spark, src, tables, lanes)
+      val ranges = lanes.tables(tables.map { table => () =>
+        val base = src.read(spark, table)
+        val withRange = base.withColumn("__graft_range",
+          rangeCol(base.schema, nRanges))
+        val cached = if (nRanges > 1)
+          withRange.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        else withRange
+        try {
+          // Source truth per range: ONE grouped pass (count + a18 sum).
+          val h = conv(substring(md5(rowRender(base.schema)), 1, 8), 16, 10)
+            .cast("bigint").cast(DecimalType(38, 0))
+          val truth = cached.groupBy(col("__graft_range"))
+            .agg(count(lit(1)).as("n"),
+              coalesce(sum(h), lit(0).cast(DecimalType(38, 0)))
+                .cast(DecimalType(38, 0)).cast("string").as("cs"))
+            .collect().map(r => r.getInt(0) -> ((r.getLong(1), r.getString(2)))).toMap
+          // Audit every unit on the unit lanes, then heal the diverged
+          // set on the same lanes (round-15 verdict item 6: a
+          // badly-rotted destination at nRanges=4096 must not heal one
+          // unit at a time). Last-line-wins makes manifest append ORDER
+          // immaterial — interleaved LINES are what the lock prevents.
+          // Every in-flight heal settles before the first error
+          // propagates, so `cached` is never unpersisted under a
+          // running job and the manifest records each unit that truly
+          // completed.
+          val audits = lanes.units((0 until nRanges).map { r => () =>
+            val (en, ecs) = truth.getOrElse(r, (0L, "0"))
+            // Audit through the dst read path; a missing/unreadable unit
+            // audits as absent (healthy ONLY for a source-empty range —
+            // run() never writes empty units).
+            val audit = scala.util.Try(
+              countAndChecksum(dstRead.read(spark, rangeTable(table, r)))).toOption
+            val healthy = audit match {
+              case Some((dn, dcs)) => dn == en && dcs == ecs
+              case None => en == 0L
             }
-            val errs = outcomes.flatMap(f => scala.util.Try(f.get()).failed.toOption)
-            errs.headOption.foreach {
-              case e: java.util.concurrent.ExecutionException => throw e.getCause
-              case e => throw e
+            (r, en, ecs, healthy)
+          })
+          val (healthy, diverged) = audits.partition(_._4)
+          val healed = lanes.units(diverged.map { case (r, en, ecs, _) => () =>
+            landUnit(spark, sink, dstRead, cached, table, r, manifestDir, lanes) { (n, cs) =>
+              require(n == en && cs == ecs,
+                s"$table range $r landed ($n, $cs), source truth is ($en, $ecs) — " +
+                  "refusing to mark repaired")
             }
-          } finally { pool.shutdown(); () }
-          val completed = scala.collection.mutable.ArrayBuffer.empty[RangeResult]
-          healed.forEach(u => completed += u)
-          results ++= completed.sortBy(_.range)
-        }
-      } finally { cached.unpersist(); () }
-    }
-    Report(ddl, results.toSeq,
-      verifyTables(spark, src, dstRead, tables, results.toSeq))
+          })
+          healthy.map { case (r, en, ecs, _) => RangeResult(table, r, en, ecs, skipped = true) } ++
+            healed
+        } finally { cached.unpersist(); () }
+      }).flatten
+      Report(ddl, ranges, verifyTables(spark, src, dstRead, tables, ranges, lanes))
+    } finally lanes.close()
   }
 }

@@ -40,7 +40,12 @@ trait TableSink {
   * footer read per file at plan time — enable it per-TABLE on the
   * vintage'd ones only, or skip the discovery pass entirely by
   * pinning the merged schema from A2's manifest (the schema-manifest
-  * artifact is exactly the discovered union, recorded once).
+  * artifact is exactly the discovered union, recorded once). The
+  * default read goes through [[graft.Tables.t]], whose schema memo
+  * infers once per unchanged table, so a copy's repeated reads of one
+  * table pay one footer read, not one per read; a `mergeSchema` read
+  * keeps Spark's own path and pays the per-file footer reads on every
+  * read.
   */
 final class ParquetSource(dir: String,
     mergeSchema: Boolean = false) extends TableSource {

@@ -1147,4 +1147,120 @@ class MigrationSpec extends AnyFunSuite {
       s"every leaf of range 'a' diverged - leaf pruning vacuous: ${out("a")}")
     assert(out("a")._2 < out("a")._1, "dropped rows must show in the target count")
   }
+
+  /** A source that exposes only `names` of the fixture keyspace. */
+  private final class FixtureSubset(names: Seq[String]) extends graft.sources.TableSource {
+    private val under = new graft.sources.ParquetSource(TestSpark.sf0001)
+    def tableNames(spark: org.apache.spark.sql.SparkSession): Seq[String] = names
+    def read(spark: org.apache.spark.sql.SparkSession, t: String) = under.read(spark, t)
+  }
+
+  /** A sink that records each unit it wrote, safely across lanes. */
+  private final class Landed(underlying: graft.sources.TableSink)
+      extends graft.sources.TableSink {
+    val written = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    def write(df: org.apache.spark.sql.DataFrame, t: String, o: Map[String, String]): Unit = {
+      underlying.write(df, t, o); written.add(t); ()
+    }
+    def units: Set[String] = written.toArray.map(_.toString).toSet
+  }
+
+  private def freshDirs(tag: String): (String, String) = {
+    val base = java.nio.file.Files.createTempDirectory(s"graft_$tag").toFile
+    graft.streaming.Streams.trackTmpDir(base.toString)
+    (new java.io.File(base, "dst").toString, new java.io.File(base, "man").toString)
+  }
+
+  /** Every raw manifest line is a CRC-valid 5-field line, one per unit. */
+  private def assertCleanManifest(manDir: String, units: Set[(String, Int)]): Unit = {
+    val raw = scala.io.Source.fromFile(s"$manDir/manifest.tsv", "UTF-8")
+    val lines = try raw.getLines().toList finally raw.close()
+    val parsed = graft.ops.KeyspaceCopy.readManifest(manDir)
+    assert(lines.forall(_.split("\t", -1).length == 5), "a manifest line lacks its CRC")
+    assert(lines.size == parsed.size, "a manifest line failed its CRC or repeats a unit")
+    assert(parsed.keySet == units, s"manifest units ${parsed.keySet} != $units")
+  }
+
+  test("cross-table overlap: rangeParallelism=4 and =1 give the identical Report; a healthy repair skips every unit") {
+    import graft.sources._
+    val names = Seq("customer", "orders", "region", "supplier")
+    val nRanges = 8
+    val src = new FixtureSubset(names)
+    val reports = Seq(4, 1).map { par =>
+      val (dst, man) = freshDirs(s"overlap_p$par")
+      val r = Migration.copyKeyspace(spark, src, new ParquetSink(dst),
+        new ParquetSource(dst), WriteConf(), man, nRanges, rangeParallelism = par)
+      assert(r.ok, s"parity at rangeParallelism=$par: ${r.verify}")
+      assertCleanManifest(man,
+        (for (t <- names; u <- 0 until nRanges) yield (t, u)).toSet)
+      (r, dst, man)
+    }
+    val (p4, dst4, man4) = reports.head
+    val p1 = reports(1)._1
+    // region (5 rows) leaves empty ranges at nRanges=8, so the order of
+    // skipped, empty and copied units within a table is exercised.
+    assert(p4.ranges.exists(u => u.table == "region" && u.rows == 0L))
+    assert(p4.ranges == p1.ranges, "the Report's range order depends on the width")
+    assert(p4.verify == p1.verify && p4.ddl == p1.ddl)
+    val rec = new Landed(new ParquetSink(dst4))
+    val healthy = Migration.repairKeyspace(spark, src, rec, new ParquetSource(dst4),
+      WriteConf(), man4, nRanges, rangeParallelism = 4)
+    assert(healthy.ok && rec.units.isEmpty)
+    assert(healthy.ranges.size == names.size * nRanges && healthy.ranges.forall(_.skipped))
+    assert(healthy.ranges.map(u => (u.table, u.range)) ==
+      (for (t <- names; r <- 0 until nRanges) yield (t, r)))
+  }
+
+  test("cross-table overlap: a unit failing while another table's unit is in flight leaves exactly the settled units; resume is ok") {
+    import graft.sources._
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    val names = Seq("customer", "lineitem", "orders")
+    val nRanges = 4
+    val bad = graft.ops.KeyspaceCopy.rangeTable("orders", 1)
+    val (dstDir, manDir) = freshDirs("overlap_fail")
+    // `bad` throws only once a unit of another table has started, and
+    // that unit's write waits until `bad` has thrown, so the failure
+    // surely lands while a second table's unit is in flight.
+    final class FailsOne(underlying: Landed) extends TableSink {
+      val otherStarted, failed = new CountDownLatch(1)
+      private val held = new java.util.concurrent.atomic.AtomicBoolean(false)
+      @volatile var heldUnit = ""
+      def write(df: org.apache.spark.sql.DataFrame, t: String, o: Map[String, String]): Unit = {
+        if (t == bad) {
+          assert(otherStarted.await(120, TimeUnit.SECONDS), "no other table's unit started")
+          failed.countDown()
+          throw new RuntimeException(s"sink rejects $t")
+        }
+        if (!t.startsWith("orders/") && held.compareAndSet(false, true)) {
+          heldUnit = t
+          otherStarted.countDown()
+          assert(failed.await(120, TimeUnit.SECONDS), s"$bad never failed")
+        }
+        underlying.write(df, t, o)
+      }
+    }
+    val landed = new Landed(new ParquetSink(dstDir))
+    val sink = new FailsOne(landed)
+    val boom = intercept[RuntimeException] {
+      Migration.copyKeyspace(spark, new FixtureSubset(names), sink,
+        new ParquetSource(dstDir), WriteConf(maxRetries = 0), manDir, nRanges,
+        rangeParallelism = 4)
+    }
+    assert(boom.getMessage.contains(s"sink rejects $bad"), boom.getMessage)
+    val afterFail = graft.ops.KeyspaceCopy.readManifest(manDir)
+    val held = sink.heldUnit.split("/range_") match { case Array(t, r) => (t, r.toInt) }
+    // The held unit was in flight at the failure and settled before the
+    // error propagated; the manifest holds exactly the units that landed.
+    assert(afterFail.contains(held), s"in-flight unit $held did not settle")
+    assert(!afterFail.contains(("orders", 1)))
+    assert(afterFail.filter(_._2._1 > 0L).keySet.map(u =>
+      graft.ops.KeyspaceCopy.rangeTable(u._1, u._2)) == landed.units)
+    val rec = new Landed(new ParquetSink(dstDir))
+    val resumed = Migration.copyKeyspace(spark, new FixtureSubset(names), rec,
+      new ParquetSource(dstDir), WriteConf(), manDir, nRanges, rangeParallelism = 4)
+    assert(resumed.ok, s"parity after resume: ${resumed.verify}")
+    assert(rec.units.contains(bad))
+    assert((rec.units & landed.units).isEmpty, "resume re-copied a settled unit")
+    assertCleanManifest(manDir, (for (t <- names; u <- 0 until nRanges) yield (t, u)).toSet)
+  }
 }

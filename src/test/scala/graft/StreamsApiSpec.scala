@@ -340,4 +340,15 @@ class StreamsApiSpec extends AnyFunSuite {
     val xs = Seq(1L, 100L, 20000L, 100000L, 1000000L, 10000000L)
     assert(xs.map(Streams.statePartitionsFor).sliding(2).forall(p => p(0) <= p(1)))
   }
+
+  test("keyCount re-counts a table rewritten at the same path with more distinct keys") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_keycount").toString
+    Streams.trackTmpDir(dir)
+    spark.range(3).toDF("k").write.parquet(s"$dir/t.parquet")
+    assert(Streams.keyCount(spark, dir, "t", "k") == 3L)
+    assert(Streams.keyCount(spark, dir, "t", "k") == 3L)
+    spark.range(7).toDF("k").write.mode("overwrite").parquet(s"$dir/t.parquet")
+    assert(Streams.keyCount(spark, dir, "t", "k") == 7L,
+      "the regenerated table reused the stale NDV")
+  }
 }

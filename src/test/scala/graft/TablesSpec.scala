@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The events.ts vintage branch (round 10): the fixtures have shipped
@@ -51,5 +53,96 @@ class TablesSpec extends AnyFunSuite {
         .where(col("ts").isNotNull).count()
       assert(n > 0, s"no events at $sf")
     }
+  }
+
+  /** A fresh directory for tables written by one test. */
+  private def tmpDir(tag: String): String = {
+    val d = java.nio.file.Files.createTempDirectory(s"graft_tables_$tag").toString
+    graft.streaming.Streams.trackTmpDir(d)
+    d
+  }
+
+  /** Spark jobs `body` launches from this thread, counted by job group.
+    * The listener bus is asynchronous, so a sentinel job in a second
+    * group runs after `body`; its start event arrives after every job
+    * `body` launched, and the count is read once it has arrived.
+    */
+  private def jobsLaunched(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"tables-spec-${java.util.UUID.randomUUID}"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .foreach(seen.add)
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "counted")
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup(s"$group-sentinel", "flush")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!seen.contains(s"$group-sentinel") && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      assert(seen.contains(s"$group-sentinel"), "listener bus never delivered the sentinel")
+      seen.toArray.count(_ == group)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("schema memo: a second read of an unchanged table launches no Spark job") {
+    val dir = tmpDir("memo")
+    spark.range(10).toDF("k").write.parquet(s"$dir/m.parquet")
+    val first = jobsLaunched { Tables.t(spark, dir, "m").schema; () }
+    assert(first >= 1, "the first read infers the schema with a Spark job")
+    val second = jobsLaunched { Tables.t(spark, dir, "m").schema; () }
+    assert(second == 0, s"an unchanged table re-inferred its schema ($second jobs)")
+    assert(Tables.t(spark, dir, "m").count() == 10)
+  }
+
+  test("schema memo: a table rewritten in place with another ts type reads its new schema") {
+    val dir = tmpDir("rewrite")
+    val path = s"$dir/v.parquet"
+    def ts = Tables.t(spark, dir, "v").schema("ts").dataType
+    Seq((1L, nanos)).toDF("event_id", "ts").write.parquet(path)
+    assert(ts == LongType)
+    assert(ts == LongType) // a memo hit
+    usFrame.write.mode("overwrite").parquet(path)
+    assert(ts == TimestampNTZType, "the rewrite kept the memoized LongType")
+    val u = Tables.t(spark, dir, "v").select(unix_micros(col("ts").cast("timestamp")))
+      .as[Long].head()
+    assert(u == micros)
+    Seq((1L, nanos)).toDF("event_id", "ts").write.mode("overwrite").parquet(path)
+    assert(ts == LongType, "the rewrite back kept the memoized TIMESTAMP_NTZ")
+  }
+
+  test("schema memo: flipping a spark.sql.parquet.* conf that changes inference misses the memo") {
+    // The fixture's ts is TIMESTAMP(MICROS, isAdjustedToUTC=false) with
+    // no Spark schema in its footer, so inferTimestampNTZ decides its
+    // type. A child session keeps the flip off the shared test session.
+    val child = spark.newSession()
+    def ts = Tables.t(child, TestSpark.sf0001, "events").schema("ts").dataType
+    assert(ts == TimestampNTZType)
+    child.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+    assert(ts == TimestampType, "the flipped conf read the memoized TIMESTAMP_NTZ")
+    child.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "true")
+    assert(ts == TimestampNTZType)
+  }
+
+  test("fingerprint: skips the names Spark skips, follows content changes, None when missing") {
+    val dir = tmpDir("fp")
+    val path = s"$dir/f.parquet"
+    assert(Tables.fingerprint(path).isEmpty)
+    spark.range(5).toDF("k").write.parquet(path)
+    val fp = Tables.fingerprint(path)
+    assert(fp.isDefined)
+    // _SUCCESS is written by Spark and skipped by its listing; so are
+    // these, so they must not move the fingerprint either.
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(path, ".hidden"), "x")
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(path, "_temporary"))
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(path, "_temporary", "part"), "x")
+    assert(Tables.fingerprint(path) == fp)
+    spark.range(5).toDF("k").write.mode("append").parquet(path)
+    assert(Tables.fingerprint(path) != fp, "a new data file must change the fingerprint")
   }
 }
