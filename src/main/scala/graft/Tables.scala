@@ -5,7 +5,7 @@ import java.nio.file.attribute.BasicFileAttributes
 import java.util.concurrent.TimeUnit
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{AnalysisException, Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructType}
 
@@ -56,20 +56,28 @@ object Tables {
     // session happens to be thread-active at Column-construction time.
     graft.functions.ArrayDot.ensureRegistered(spark)
     graft.functions.EditDistance.ensureRegistered(spark)
-    parquet(spark, s"$sfDir/$name.parquet")
+    parquet(spark, path(sfDir, name))
   }
+
+  /** The file path of fixture table `name` under `sfDir`. */
+  def path(sfDir: String, name: String): String = s"$sfDir/$name.parquet"
 
   /** Path → (memo key, inferred schema); see the object scaladoc. */
   private val schemaMemo =
     scala.collection.concurrent.TrieMap.empty[String, (String, StructType)]
 
   /** A parquet read whose schema inference runs once per unchanged
-    * table. A path that does not exist is never memoized, so Spark's
-    * own error surfaces; a walk that fails (files vanishing mid-walk)
-    * falls back to the plain read.
+    * table. A local path that does not exist raises Spark's own
+    * `PATH_NOT_FOUND` without a read (whose metadata probe would log a
+    * WARN with a stack trace first); a walk that fails (files vanishing
+    * mid-walk) or a non-local URI falls back to the plain read.
     */
   private def parquet(spark: SparkSession, path: String): DataFrame =
     fingerprint(path) match {
+      case None if Option(new org.apache.hadoop.fs.Path(path).toUri.getScheme).isEmpty &&
+          !Files.exists(Paths.get(path)) =>
+        throw new AnalysisException("PATH_NOT_FOUND",
+          Map("path" -> s"file:${Paths.get(path).toAbsolutePath.normalize}"))
       case None => spark.read.parquet(path)
       case Some(files) =>
         val key = files + "|" + spark.conf.getAll.toSeq
@@ -106,13 +114,17 @@ object Tables {
     scala.util.Try(Paths.get(path)).toOption.filter(Files.exists(_)).flatMap { root =>
       scala.util.Try {
         val walk = Files.walk(root, FileVisitOption.FOLLOW_LINKS)
-        val lines = try walk.iterator().asScala.flatMap(entry(root, _)).toVector.sorted
+        try sha256(walk.iterator().asScala.flatMap(entry(root, _)).toVector.sorted)
           finally walk.close()
-        val md = java.security.MessageDigest.getInstance("SHA-256")
-        lines.foreach(l => md.update(s"$l\n".getBytes(java.nio.charset.StandardCharsets.UTF_8)))
-        md.digest().map(b => f"$b%02x").mkString
       }.toOption
     }
+  }
+
+  /** Hex SHA-256 over `lines`, each newline-terminated. */
+  private[graft] def sha256(lines: Seq[String]): String = {
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    lines.foreach(l => md.update(s"$l\n".getBytes(java.nio.charset.StandardCharsets.UTF_8)))
+    md.digest().map(b => f"$b%02x").mkString
   }
 
   /** `events.ts` normalized to a session-TZ TIMESTAMP at µs

@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
-import graft.Tables
+import graft.{Memo, Tables}
 
 /** c199 — the composed end-to-end CURATION RUN: the LLM-side analog
   * of A22's `KeyspaceCopy` (the r17 verdict's top item). The pieces
@@ -20,7 +20,7 @@ import graft.Tables
   * for a staged dataflow):
   *
   *   - Each stage writes its surviving doc set as a parquet artifact
-  *     `stage<i>_<name>.parquet` through [[NearDup.atomicArtifact]]
+  *     `stage<i>_<name>.parquet` through [[graft.Memo.atomicArtifact]]
   *     (temp-dir + ATOMIC_MOVE publish): a reader — including a
   *     resumed run — sees a COMPLETE artifact or nothing.
   *   - A stage whose artifact is already published is SKIPPED on
@@ -76,27 +76,17 @@ object CurationRun {
 
   private[graft] val RunDirConf = "spark.graft.curationRunDir"
 
-  /** Stable-across-process run directory for a corpus — hashed from
-    * the documents fingerprint (name/size/mtime per part) and the
+  /** Stable-across-process run directory for a corpus: a
+    * [[graft.Memo.storeDir]] keyed on the documents fingerprint and the
     * kernel constants every stage bakes into its artifact.
     */
-  private[graft] def runDir(spark: SparkSession, sfDir: String): String = {
-    val root = spark.conf.getOption(RunDirConf)
-      .getOrElse(sys.props("java.io.tmpdir") + "/graft-curation")
-    val src = new java.io.File(sfDir, "documents.parquet")
-    val files =
-      if (src.isDirectory) src.listFiles().toSeq.sortBy(_.getName) else Seq(src)
-    val fp = files.map(f => s"${f.getName}:${f.length}:${f.lastModified}")
-      .mkString("|")
-    val kfp = s"cap=${NearDup.MedoidCap};candk=${NearDup.MedoidCandK};" +
-      s"q=${TextAnalysis.CurateQuality};pack=${TextAnalysis.PackBudget};" +
-      s"seeds=${Llm.MinhashSeeds};bands=${Llm.Bands}"
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest((new java.io.File(sfDir).getCanonicalPath + "|" + fp + "|" + kfp)
-        .getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString.take(16)
-    new java.io.File(root, s"run1-$key").toString
-  }
+  private[graft] def runDir(spark: SparkSession, sfDir: String): String =
+    Memo.storeDir(
+      spark.conf.getOption(RunDirConf).getOrElse(sys.props("java.io.tmpdir") + "/graft-curation"),
+      "run1", Tables.path(sfDir, "documents"),
+      s"cap=${NearDup.MedoidCap};candk=${NearDup.MedoidCandK};" +
+        s"q=${TextAnalysis.CurateQuality};pack=${TextAnalysis.PackBudget};" +
+        s"seeds=${Llm.MinhashSeeds};bands=${Llm.Bands}")
 
   // ---- manifest (KeyspaceCopy's CRC-per-line torn-write discipline) ----
 
@@ -148,12 +138,6 @@ object CurationRun {
       Option(r.get(1)).map(_.toString).getOrElse("0"))
   }
 
-  private def rmTree(f: java.io.File): Unit = {
-    if (f.isDirectory)
-      Option(f.listFiles()).getOrElse(Array.empty[java.io.File]).foreach(rmTree)
-    f.delete(); ()
-  }
-
   /** Build-or-resume one stage: atomic publish on build; on resume,
     * verify the served artifact against its manifest line (count +
     * order-free checksum) — heal a missing line, THROW on a
@@ -164,8 +148,9 @@ object CurationRun {
     val name = stageFile(i)
     val target = new java.io.File(dir, name)
     val resumed = new java.io.File(target, "_SUCCESS").exists()
-    if (target.exists() && !resumed) rmTree(target) // torn foreign artifact
-    NearDup.atomicArtifact(dir, name) { scratch =>
+    if (target.exists() && !resumed) // torn foreign artifact
+      graft.streaming.Streams.deleteRecursively(target.toString)
+    Memo.atomicArtifact(dir, name) { scratch =>
       build.write.parquet(new java.io.File(scratch, name).toString)
     }
     val df = spark.read.parquet(target.toString)

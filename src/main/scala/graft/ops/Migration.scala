@@ -671,9 +671,9 @@ object Migration {
     * history. Demonstrated end-to-end with real files: the orders
     * table splits deterministically (md5 nibble) into a v1 vintage
     * WITHOUT o_orderstatus and a v2 vintage WITH it, both written to
-    * a per-(session, sfDir) temp dir once (tableExists-style memo via
-    * the marker file; reaped at JVM exit through the shared tmp-dir
-    * tracker), then read back in one `mergeSchema=true` scan — v1
+    * a temp dir named from [[graft.Memo.key]] over orders once
+    * (tableExists-style memo via the marker file; reaped at JVM exit
+    * through the shared tmp-dir tracker), then read back in one `mergeSchema=true` scan — v1
     * rows surface the missing column as NULL, the evolution contract.
     * The audit reports per vintage: rows, status-bearing cells, and
     * the decimal price checksum — proving no row or cell was lost or
@@ -685,8 +685,7 @@ object Migration {
     * exactly that artifact).
     */
   def schemaEvolution(spark: SparkSession, sfDir: String): DataFrame = {
-    val tag = java.security.MessageDigest.getInstance("MD5")
-      .digest(sfDir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
+    val tag = graft.Memo.key(Seq(Tables.path(sfDir, "orders")))
     val base = new java.io.File(
       System.getProperty("java.io.tmpdir"), s"graft_evo_$tag")
     val (v1, v2) = (new java.io.File(base, "v1"), new java.io.File(base, "v2"))

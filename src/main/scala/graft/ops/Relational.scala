@@ -1115,16 +1115,15 @@ object Relational {
     * the bucket key — the layout a 100 TB fact table that is joined
     * daily should be stored in.
     *
-    * The bucketed tables are session-catalog artifacts memoized per
-    * (session, sfDir) — `tableExists` gates the one-time write (the
-    * c2 band-store discipline), and the warehouse lives under the
-    * system tmpdir ([[graft.Sessions.warehouseDir]]), never the
-    * repo. The oracle is the plain join aggregate: like c87, the
+    * The bucketed tables are session-catalog artifacts named from
+    * [[graft.Memo.key]] over both input tables, so a regenerated corpus
+    * gets fresh tables — `tableExists` gates the one-time write, and
+    * the warehouse lives under the system tmpdir
+    * ([[graft.Sessions.warehouseDir]]), never the repo. The oracle is the plain join aggregate: like c87, the
     * layout must change the plan, never the answer.
     */
   def bucketedJoin(spark: SparkSession, sfDir: String): DataFrame = {
-    val tag = java.security.MessageDigest.getInstance("MD5")
-      .digest(sfDir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
+    val tag = graft.Memo.key(Seq("orders", "lineitem").map(Tables.path(sfDir, _)))
     val (to, tl) = (s"graft_bkt_orders_$tag", s"graft_bkt_lineitem_$tag")
     if (!spark.catalog.tableExists(to)) {
       Tables.t(spark, sfDir, "orders")

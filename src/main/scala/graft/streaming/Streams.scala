@@ -297,26 +297,15 @@ object Streams {
     * bins, event types): ≤ a few hundred rows at any corpus size. */
   private[graft] val BoundedDomainHint = 256L
 
-  /** Memoized distinct-key count for a fixture table column — the NDV
-    * a production deployment reads from catalog statistics; here one
-    * counted job per (application, corpus, table, column, file
-    * fingerprint), shared by every key-keyed stateful topology on the
-    * corpus. The [[graft.Tables.fingerprint]] part makes a corpus
-    * regenerated at the same path under a live session count afresh
-    * instead of reusing a stale NDV. Within-run only (the memo dies
-    * with the JVM — nothing persists across runs). */
-  private val keyCountCache =
-    scala.collection.concurrent.TrieMap[String, Long]()
+  /** Distinct-key count for a fixture table column — the NDV a
+    * production deployment reads from catalog statistics; here one
+    * counted job per corpus table and column ([[graft.Memo]]: a table
+    * regenerated at the same path counts afresh), shared by every
+    * key-keyed stateful topology on the corpus. */
   private[graft] def keyCount(spark: SparkSession, sfDir: String,
-      table: String, keyCol: String): Long = {
-    def count() = graft.Tables.t(spark, sfDir, table)
-      .select(col(keyCol)).distinct().count()
-    graft.Tables.fingerprint(s"$sfDir/$table.parquet") match {
-      case Some(fp) => keyCountCache.getOrElseUpdate(
-        s"${spark.sparkContext.applicationId}:$sfDir:$table:$keyCol:$fp", count())
-      case None => count()
-    }
-  }
+      table: String, keyCol: String): Long =
+    graft.Memo.count(spark, s"ndv:$keyCol", graft.Tables.path(sfDir, table))(
+      graft.Tables.t(spark, sfDir, table).select(col(keyCol)).distinct().count())
 
   /** c25 — the streaming flagship, oracle-verified: the b42 tumbling
     * aggregation executed through the STREAMING engine — file source →

@@ -1263,4 +1263,47 @@ class MigrationSpec extends AnyFunSuite {
     assert((rec.units & landed.units).isEmpty, "resume re-copied a settled unit")
     assertCleanManifest(manDir, (for (t <- names; u <- 0 until nRanges) yield (t, u)).toSet)
   }
+
+  test("repair: auditing source-empty units logs no metadata-probe warning; a spurious empty unit still heals") {
+    import graft.sources._
+    import org.apache.logging.log4j.LogManager
+    import org.apache.logging.log4j.core.{LogEvent, Logger => CoreLogger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val names = Seq("nation", "region")
+    val nRanges = 8
+    val src = new FixtureSubset(names)
+    val (dst, man) = freshDirs("repair_quiet")
+    val copy = Migration.copyKeyspace(spark, src, new ParquetSink(dst),
+      new ParquetSource(dst), WriteConf(), man, nRanges)
+    assert(copy.ok)
+    val empty = copy.ranges.filter(u => u.table == "region" && u.rows == 0L).map(_.range)
+    assert(empty.nonEmpty, "region leaves no empty range at this nRanges - test vacuous")
+    // A missing table path raises Spark's own error.
+    val missing = intercept[org.apache.spark.sql.AnalysisException](
+      Tables.t(spark, dst, graft.ops.KeyspaceCopy.rangeTable("region", empty.head)))
+    assert(missing.getCondition == "PATH_NOT_FOUND", missing.getMessage)
+    val warned = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val probe = new AbstractAppender("repair-probe", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = { warned.add(e.getMessage.getFormattedMessage); () }
+    }
+    probe.start()
+    val root = LogManager.getRootLogger.asInstanceOf[CoreLogger]
+    root.addAppender(probe)
+    val healthy = try Migration.repairKeyspace(spark, src, new ParquetSink(dst),
+      new ParquetSource(dst), WriteConf(), man, nRanges)
+    finally { root.removeAppender(probe); probe.stop() }
+    assert(healthy.ok && healthy.ranges.forall(_.skipped))
+    val noisy = warned.toArray.map(_.toString).filter(_.contains("Assume no metadata directory"))
+    assert(noisy.isEmpty, s"${noisy.length} metadata-probe warnings, e.g. ${noisy.headOption}")
+    // A source-empty unit holding spurious destination rows is still
+    // read by the audit and healed.
+    val spurious = graft.ops.KeyspaceCopy.rangeTable("region", empty.head)
+    new ParquetSink(dst).write(Tables.t(spark, TestSpark.sf0001, "region"), spurious, Map.empty)
+    val rec = new Landed(new ParquetSink(dst))
+    val healed = Migration.repairKeyspace(spark, src, rec, new ParquetSource(dst),
+      WriteConf(), man, nRanges)
+    assert(healed.ok && rec.units == Set(spurious), s"healed ${rec.units}")
+    assert(Tables.t(spark, dst, spurious).count() == 0L)
+  }
 }

@@ -319,22 +319,19 @@ class OperatorPropertiesSpec extends AnyFunSuite {
 
   test("bandCache drops a stopped application's entries (listener eviction)") {
     val df = Seq((1L, 0, "x")).toDF("doc_id", "band_idx", "band_val")
-    ops.Llm.bandCache.put("deadapp:/tmp/corpusA", df)
-    ops.Llm.bandCache.put("deadapp:/tmp/corpusB", df)
-    ops.Llm.bandCache.put("liveapp:/tmp/corpusA", df)
-    ops.Llm.pairCache.put("deadapp:/tmp/corpusA", df)
-    ops.Llm.pairCache.put("liveapp:/tmp/corpusA", df)
-    new ops.Llm.BandEvictionListener("deadapp")
+    val names = Seq("bands", "pairs", "tokens", "rows", "ndv:k")
+    for (app <- Seq("deadapp", "liveapp"); n <- names; c <- Seq("/tmp/corpusA", "/tmp/corpusB"))
+      Memo.entries.put((app, n, c),
+        Memo.Entry("fp", if (n == "rows" || n.startsWith("ndv")) None else Some(df), 1L))
+    new Memo.EvictionListener("deadapp")
       .onApplicationEnd(org.apache.spark.scheduler.SparkListenerApplicationEnd(0L))
-    assert(!ops.Llm.bandCache.keys.exists(_.startsWith("deadapp:")),
-      "stopped app's band tables must be evicted")
-    assert(!ops.Llm.pairCache.keys.exists(_.startsWith("deadapp:")),
-      "stopped app's pair tables must be evicted")
-    assert(ops.Llm.bandCache.keys.exists(_.startsWith("liveapp:")),
-      "other apps' band tables must survive")
-    assert(ops.Llm.pairCache.keys.exists(_.startsWith("liveapp:")),
-      "other apps' pair tables must survive")
-    ops.Llm.evictBands("liveapp")
+    for (n <- names) {
+      assert(!Memo.entries.keys.exists(k => k._1 == "deadapp" && k._2 == n),
+        s"stopped app's $n entries must be evicted")
+      assert(Memo.entries.keys.count(k => k._1 == "liveapp" && k._2 == n) == 2,
+        s"other apps' $n entries must survive")
+    }
+    Memo.evict("liveapp")
   }
 
   test("IVF sign-plane sizing keeps cell occupancy bounded as the corpus grows") {
@@ -1018,19 +1015,18 @@ class OperatorPropertiesSpec extends AnyFunSuite {
 
   test("labelCache drops a stopped application's entries (listener eviction)") {
     val df = Seq((1L, 1L)).toDF("doc_id", "cluster_id")
-    ops.NearDup.labelCache.put("deadapp:/tmp/corpusA", df)
-    ops.NearDup.labelCache.put("deadapp:/tmp/corpusB", df)
-    ops.NearDup.labelCache.put("liveapp:/tmp/corpusA", df)
-    ops.NearDup.gramCache.put("deadapp:/tmp/corpusA", df)
-    new ops.NearDup.LabelEvictionListener("deadapp")
+    val names = Seq("labels", "grams", "simhash")
+    for (n <- names; c <- Seq("/tmp/corpusA", "/tmp/corpusB"))
+      Memo.entries.put(("deadapp", n, c), Memo.Entry("fp", Some(df), 1L))
+    Memo.entries.put(("liveapp", "labels", "/tmp/corpusA"), Memo.Entry("fp", Some(df), 1L))
+    new Memo.EvictionListener("deadapp")
       .onApplicationEnd(org.apache.spark.scheduler.SparkListenerApplicationEnd(0L))
-    assert(!ops.NearDup.labelCache.keys.exists(_.startsWith("deadapp:")),
-      "stopped app's label tables must be evicted")
-    assert(!ops.NearDup.gramCache.keys.exists(_.startsWith("deadapp:")),
-      "stopped app's gram tables must ride the same eviction")
-    assert(ops.NearDup.labelCache.keys.exists(_.startsWith("liveapp:")),
+    for (n <- names)
+      assert(!Memo.entries.keys.exists(k => k._1 == "deadapp" && k._2 == n),
+        s"stopped app's $n tables must ride the same eviction")
+    assert(Memo.entries.contains(("liveapp", "labels", "/tmp/corpusA")),
       "other apps' label tables must survive")
-    ops.NearDup.evictLabels("liveapp")
+    Memo.evict("liveapp")
   }
 
   test("c96: the rational τ boundary includes J = 4/5 exactly and excludes just below") {
@@ -1594,7 +1590,7 @@ class OperatorPropertiesSpec extends AnyFunSuite {
     import spark.implicits._
     var writes = 0
     def build(v: Int): Unit =
-      ops.NearDup.atomicArtifact(root, "art.parquet") { scratch =>
+      Memo.atomicArtifact(root, "art.parquet") { scratch =>
         writes += 1
         Seq(v).toDF("x").write.parquet(s"$scratch/art.parquet")
       }
@@ -1609,7 +1605,7 @@ class OperatorPropertiesSpec extends AnyFunSuite {
     // this builder's rename (simulated inside the writer). The loser
     // must neither throw nor clobber the winner, and its scratch must
     // be cleaned up.
-    ops.NearDup.atomicArtifact(root, "race.parquet") { scratch =>
+    Memo.atomicArtifact(root, "race.parquet") { scratch =>
       Seq(10).toDF("x").write.parquet(s"$root/race.parquet") // the winner
       Seq(20).toDF("x").write.parquet(s"$scratch/race.parquet") // the loser
     }

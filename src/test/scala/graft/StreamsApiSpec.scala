@@ -121,7 +121,7 @@ class StreamsApiSpec extends AnyFunSuite {
     // _SUCCESS gate skips the write; the frame is a parquet scan of
     // the store path, visible in the plan), not recompute from
     // documents.
-    Llm.evictBands(spark.sparkContext.applicationId)
+    Memo.evict(spark.sparkContext.applicationId)
     val fromDisk = Llm.bandStore(spark, sfd)
     val leaves = fromDisk.queryExecution.executedPlan.collectLeaves()
       .map(_.toString).mkString("\n")
