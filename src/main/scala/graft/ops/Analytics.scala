@@ -846,6 +846,15 @@ object Analytics {
     * c105 Pearson dag) are IDENTICAL to the window and join forms,
     * so the oracle is unchanged. The (type × lag) spine keeps the
     * n = 0 rows the conditional-sum form emitted.
+    *
+    * PRECONDITION: `events.value` is non-null (every fixture vintage
+    * writes it). The slot fan keeps a pair only when both x and y are
+    * non-null, because a slot's gathered value is NULL both when the
+    * slot is empty and when its row holds a NULL value; the join
+    * forms paired rows by position whatever their values. With a
+    * nullable value column `n` would drop the NULL-valued pairs, so
+    * the pair multiset equality above holds only under this
+    * precondition.
     */
   def autocorrelation(spark: SparkSession, sfDir: String): DataFrame = {
     def d(c: Column) = c.cast(org.apache.spark.sql.types.DecimalType(38, 6))

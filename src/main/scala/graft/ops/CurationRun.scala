@@ -2,7 +2,6 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 import graft.{Memo, Tables}
 
 /** c199 — the composed end-to-end CURATION RUN: the LLM-side analog
@@ -27,13 +26,14 @@ import graft.{Memo, Tables}
   *     resume (the `_SUCCESS` gate); a torn target (directory without
   *     `_SUCCESS` — only an external writer can produce one, the
   *     atomic publish never does) is wiped and rebuilt.
-  *   - A CRC-guarded manifest (`manifest.tsv`, KeyspaceCopy's
-  *     torn-line discipline: each line carries its own CRC32, a torn
-  *     tail line is dropped on read) records (rows, order-free
-  *     content checksum) per published stage. On resume each reused
-  *     artifact is re-counted and re-checksummed against its
-  *     manifest line — a served artifact is VERIFIED, not trusted;
-  *     a mismatch throws rather than curating from corrupt state.
+  *   - The [[RunLedger]] manifest KeyspaceCopy writes too (each line
+  *     carries its own CRC, a torn tail is dropped on read and
+  *     truncated before the next append) records stage i as unit
+  *     (StageNames(i), i) with its (rows, order-free a18 content
+  *     checksum). On resume each reused artifact is re-counted and
+  *     re-checksummed against its manifest line — a served artifact
+  *     is VERIFIED, not trusted; a mismatch throws rather than
+  *     curating from corrupt state.
   *     A missing line (killed between publish and append) is
   *     re-derived from the artifact and healed.
   *
@@ -77,8 +77,11 @@ object CurationRun {
   private[graft] val RunDirConf = "spark.graft.curationRunDir"
 
   /** Stable-across-process run directory for a corpus: a
-    * [[graft.Memo.storeDir]] keyed on the documents fingerprint and the
-    * kernel constants every stage bakes into its artifact.
+    * [[graft.Memo.storeDir]] keyed on the documents fingerprint, the
+    * kernel constants every stage bakes into its artifact, and the
+    * manifest canon (`ledger=2`: [[RunLedger]]'s line format and a18
+    * checksum), so a dir whose manifest was written in another canon
+    * is never resumed.
     */
   private[graft] def runDir(spark: SparkSession, sfDir: String): String =
     Memo.storeDir(
@@ -86,57 +89,7 @@ object CurationRun {
       "run1", Tables.path(sfDir, "documents"),
       s"cap=${NearDup.MedoidCap};candk=${NearDup.MedoidCandK};" +
         s"q=${TextAnalysis.CurateQuality};pack=${TextAnalysis.PackBudget};" +
-        s"seeds=${Llm.MinhashSeeds};bands=${Llm.Bands}")
-
-  // ---- manifest (KeyspaceCopy's CRC-per-line torn-write discipline) ----
-
-  private def manifestFile(dir: String) = new java.io.File(dir, "manifest.tsv")
-
-  private[graft] def lineCrc(payload: String): String = {
-    val crc = new java.util.zip.CRC32
-    crc.update(payload.getBytes("UTF-8"))
-    java.lang.Long.toHexString(crc.getValue)
-  }
-
-  /** stage → (rows, checksum); CRC-failing or torn lines are dropped
-    * (they can only be the torn tail of a killed append — the stage
-    * then re-derives and heals).
-    */
-  private[graft] def readManifest(dir: String): Map[Int, (Long, String)] = {
-    val f = manifestFile(dir)
-    if (!f.exists()) return Map.empty
-    val raw = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
-    raw.split("\n").toSeq.flatMap { line =>
-      line.split("\t") match {
-        case Array(i, rows, cs, crc)
-            if lineCrc(s"$i\t$rows\t$cs") == crc &&
-              i.forall(_.isDigit) && rows.forall(_.isDigit) =>
-          Some(i.toInt -> (rows.toLong, cs))
-        case _ => None
-      }
-    }.toMap
-  }
-
-  private[graft] def appendManifest(dir: String, stage: Int, rows: Long,
-      checksum: String): Unit = {
-    val payload = s"$stage\t$rows\t$checksum"
-    val w = new java.io.FileWriter(manifestFile(dir), true)
-    try w.write(payload + "\t" + lineCrc(payload) + "\n") finally w.close()
-  }
-
-  /** Order-free content checksum + row count of a stage artifact:
-    * exact DECIMAL(38,0) sum of per-row md5 prefixes over every
-    * column (the A18 canon — associative, so partitioning cannot
-    * change it).
-    */
-  private def countAndChecksum(df: DataFrame): (Long, String) = {
-    val rendered = concat_ws("|",
-      df.schema.fields.sortBy(_.name).map(f => col(f.name).cast("string")): _*)
-    val h = conv(substring(md5(rendered), 1, 8), 16, 10).cast(DecimalType(38, 0))
-    val r = df.agg(count(lit(1)).as("n"), sum(h).as("cs")).head()
-    (r.getLong(0),
-      Option(r.get(1)).map(_.toString).getOrElse("0"))
-  }
+        s"seeds=${Llm.MinhashSeeds};bands=${Llm.Bands};ledger=2")
 
   /** Build-or-resume one stage: atomic publish on build; on resume,
     * verify the served artifact against its manifest line (count +
@@ -154,15 +107,15 @@ object CurationRun {
       build.write.parquet(new java.io.File(scratch, name).toString)
     }
     val df = spark.read.parquet(target.toString)
-    val (rows, cs) = countAndChecksum(df)
-    readManifest(dir).get(i) match {
+    val (rows, cs) = RunLedger.countAndChecksum(df)
+    RunLedger.readManifest(dir).get((StageNames(i), i)) match {
       case Some((mRows, mCs)) =>
         if (resumed && (mRows != rows || mCs != cs))
           throw new IllegalStateException(
             s"curation stage $i artifact diverged from its manifest: " +
               s"($rows, $cs) vs recorded ($mRows, $mCs) — refusing to resume " +
               "from corrupt state")
-      case None => appendManifest(dir, i, rows, cs)
+      case None => RunLedger.appendManifest(dir, StageNames(i), i, rows, cs)
     }
     df
   }

@@ -5,7 +5,7 @@ import java.util.concurrent.{Callable, Executors, ExecutorService}
 import java.util.concurrent.atomic.AtomicReference
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.types.StructType
 import graft.sources.{ConfiguredSink, TableSink, TableSource, WriteConf}
 
 /** The COMPOSED end-to-end keyspace copy — the reference tool's actual
@@ -31,7 +31,8 @@ import graft.sources.{ConfiguredSink, TableSink, TableSource, WriteConf}
   *      range scope: re-overwriting range 7 cannot clobber ranges 0–6.
   *   4. AUDIT per range: the landed rows are read BACK through the
   *      destination's read channel and (count, checksum) appended to
-  *      `manifestDir/manifest.tsv` — the durable resume cursor. A
+  *      `manifestDir/manifest.tsv` through [[RunLedger]] (the ledger
+  *      the c199 curation run shares) — the durable resume cursor. A
   *      killed JVM can tear at most the last line; only
   *      NEWLINE-TERMINATED lines are trusted (a tear inside the
   *      checksum field still splits into 4 plausible fields, so the
@@ -108,27 +109,6 @@ object KeyspaceCopy {
     */
   def rangeTable(table: String, range: Int): String = s"$table/range_$range"
 
-  /** Canonical row rendering for hashing: NAME-ordered columns joined
-    * by '|', each null-coalesced to '' — the a18 discipline (doubles
-    * via DECIMAL(38,6), timestamps via epoch-µs integers, binary via
-    * hex) so the rendering never depends on an engine's float or
-    * timestamp formatter.
-    */
-  private def rowRender(schema: StructType): Column = {
-    val frags = schema.fields.sortBy(_.name).map { f =>
-      val c = col(f.name)
-      val r = f.dataType match {
-        case DoubleType | FloatType => c.cast("decimal(38,6)").cast("string")
-        case TimestampType | TimestampNTZType =>
-          unix_micros(c.cast("timestamp")).cast("string")
-        case BinaryType => hex(c)
-        case _ => c.cast("string")
-      }
-      coalesce(r, lit(""))
-    }
-    concat_ws("|", frags.toIndexedSeq: _*)
-  }
-
   /** Deterministic token range of a row: first 4 hex nibbles of the
     * salted content md5, mod nRanges — a pure function of row CONTENT,
     * so the range partition is stable across runs, engines, and source
@@ -137,126 +117,9 @@ object KeyspaceCopy {
     */
   private def rangeCol(schema: StructType, nRanges: Int): Column =
     pmod(
-      conv(substring(md5(concat(lit("rng:"), rowRender(schema))), 1, 4), 16, 10)
+      conv(substring(md5(concat(lit("rng:"), RunLedger.rowRender(schema))), 1, 4), 16, 10)
         .cast("int"),
       lit(nRanges))
-
-  /** (row count, content checksum) of a frame — one scan, map-side
-    * combined to a single row. The checksum is the a18 algebra: each
-    * row's 32-bit md5 prefix cast to DECIMAL(38,0) BEFORE the sum
-    * (SUM(BIGINT) wraps at 1e12 rows × 2^32; decimal does not).
-    */
-  private def countAndChecksum(df: DataFrame): (Long, String) = {
-    val h = conv(substring(md5(rowRender(df.schema)), 1, 8), 16, 10)
-      .cast("bigint").cast(DecimalType(38, 0))
-    val row = df.agg(
-      count(lit(1)).as("n"),
-      coalesce(sum(h), lit(0).cast(DecimalType(38, 0)))
-        .cast(DecimalType(38, 0)).cast("string").as("cs")).head()
-    (row.getLong(0), row.getString(1))
-  }
-
-  private def manifestFile(dir: String) = new File(dir, "manifest.tsv")
-
-  /** CRC32 (lowercase hex) of a manifest line's payload fields — the
-    * in-line corruption guard: the newline rule below proves an append
-    * COMPLETED, but a bit flip INSIDE a completed line (disk rot, a
-    * partial sector rewrite) still splits into plausible fields and
-    * would read as trusted state. The CRC covers exactly the four
-    * payload fields as written, so any single-byte change in table,
-    * range, rows or checksum mismatches and the line demotes to
-    * incomplete — the safe direction (the unit re-copies).
-    */
-  private def lineCrc(payload: String): String = {
-    val crc = new java.util.zip.CRC32
-    crc.update(payload.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    java.lang.Long.toHexString(crc.getValue)
-  }
-
-  /** Completed units from the manifest: NEWLINE-TERMINATED lines that
-    * parse as exactly (table, range, rows, checksum, crc) with the CRC
-    * matching the first four fields. The terminator check matters: a
-    * killed JVM can tear the final append anywhere — including INSIDE
-    * the checksum field, where the surviving prefix still splits into
-    * plausible fields — so field count alone cannot prove the append
-    * completed; only the trailing '\n' (the last byte the writer
-    * emits) can. The per-line CRC then proves the line's CONTENT is
-    * the content the writer emitted (a bit flip inside an otherwise
-    * complete line fails it). An untrusted line is treated as
-    * incomplete — the safe direction, because re-copying a range is
-    * idempotent. Numeric fields are bounded ASCII digit runs
-    * (`isDigit` accepts Unicode digits `toInt` rejects, and an
-    * overlong run overflows Long) and the parses ride in Try, so a
-    * corrupted line SKIPS instead of aborting the resume. Version
-    * branch by field count: pre-CRC manifests wrote 4 fields and
-    * still parse (their lines carry no CRC to check) — a manifest
-    * written by an older build resumes under this one.
-    */
-  private[graft] def readManifest(dir: String): Map[(String, Int), (Long, String)] = {
-    val f = manifestFile(dir)
-    if (!f.exists()) Map.empty
-    else {
-      val raw = new String(
-        java.nio.file.Files.readAllBytes(f.toPath),
-        java.nio.charset.StandardCharsets.UTF_8)
-      val complete = raw.substring(0, raw.lastIndexOf('\n') + 1)
-      def asciiDigits(s: String, maxLen: Int): Boolean =
-        s.nonEmpty && s.length <= maxLen && s.forall(c => c >= '0' && c <= '9')
-      complete.split("\n").iterator.flatMap { line =>
-        line.split("\t", -1) match {
-          // range ≤ 4 digits (nRanges ≤ 4096); rows ≤ 18 digits
-          // (< Long.MaxValue's 19) so toLong cannot overflow.
-          case Array(t, r, n, cs, crc)
-              if asciiDigits(r, 4) && asciiDigits(n, 18) && cs.nonEmpty &&
-                crc == lineCrc(s"$t\t$r\t$n\t$cs") =>
-            scala.util.Try((t, r.toInt) -> (n.toLong, cs)).toOption
-          case Array(t, r, n, cs) // legacy pre-CRC line
-              if asciiDigits(r, 4) && asciiDigits(n, 18) && cs.nonEmpty =>
-            scala.util.Try((t, r.toInt) -> (n.toLong, cs)).toOption
-          case _ => None
-        }
-      }.toMap
-    }
-  }
-
-  /** Durable append of one completed unit: open → write → flush →
-    * close per line, so the cursor survives the very next kill. If a
-    * previous kill left a torn (newline-less) fragment at the tail,
-    * the fragment is TRUNCATED first — appending straight after it
-    * would concatenate this line into garbage, and merely terminating
-    * it with '\n' would LEGITIMIZE a tear that happens to split into
-    * 4 plausible fields (a truncated checksum would then read as
-    * trusted — the exact failure readManifest's newline rule exists
-    * to prevent). The fragment's unit was never recorded complete, so
-    * dropping the bytes loses nothing: the unit re-copies.
-    *
-    * The tear probe is O(1) per append: one seek to the final byte.
-    * A torn tail exists only immediately after a kill, so the
-    * whole-file backward scan for the last newline runs at most once
-    * per resume, never on the hot append path — the old
-    * readAllBytes-per-append probe made the copy loop O(n²) in
-    * completed units (~40k appends at nRanges=4096).
-    */
-  private[graft] def appendManifest(
-      dir: String, table: String, range: Int, rows: Long, checksum: String): Unit = {
-    val f = manifestFile(dir)
-    if (f.exists() && f.length() > 0) {
-      val raf = new java.io.RandomAccessFile(f, "rw")
-      try {
-        raf.seek(raf.length() - 1)
-        if (raf.read() != '\n') {
-          // Rare path (post-kill only): find the last complete line.
-          val bytes = java.nio.file.Files.readAllBytes(f.toPath)
-          val keep = bytes.lastIndexOf('\n'.toByte) + 1
-          raf.setLength(keep.toLong)
-        }
-      } finally raf.close()
-    }
-    val payload = s"$table\t$range\t$rows\t$checksum"
-    val w = new FileWriter(f, true)
-    try { w.write(s"$payload\t${lineCrc(payload)}\n"); w.flush() }
-    finally w.close()
-  }
 
   /** The `nRanges=` arity an existing `copy.conf` pins, if it holds one. */
   private def pinnedRanges(confFile: File): Option[Int] = {
@@ -317,9 +180,9 @@ object KeyspaceCopy {
       accept: (Long, String) => Unit): RangeResult = {
     sink.write(cached.where(col("__graft_range") === r).drop("__graft_range"),
       rangeTable(table, r))
-    val (n, cs) = countAndChecksum(dstRead.read(spark, rangeTable(table, r)))
+    val (n, cs) = RunLedger.countAndChecksum(dstRead.read(spark, rangeTable(table, r)))
     accept(n, cs)
-    lanes.manifestLock.synchronized { appendManifest(manifestDir, table, r, n, cs) }
+    lanes.manifestLock.synchronized { RunLedger.appendManifest(manifestDir, table, r, n, cs) }
     RangeResult(table, r, n, cs, skipped = false)
   }
 
@@ -419,7 +282,7 @@ object KeyspaceCopy {
 
       // 3+4 — per-range copy with read-back audit and durable cursor,
       // tables overlapping on the table lanes.
-      val done = readManifest(manifestDir)
+      val done = RunLedger.readManifest(manifestDir)
       val ranges = lanes.tables(tables.map { table => () =>
         val skipped = (0 until nRanges).filter(r => done.contains((table, r))).map { r =>
           val (n, cs) = done((table, r))
@@ -446,7 +309,9 @@ object KeyspaceCopy {
               .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
             val (emptyRs, liveRs) = pending.partition(r => counts.getOrElse(r, 0L) == 0L)
             val empties = emptyRs.map { r =>
-              lanes.manifestLock.synchronized { appendManifest(manifestDir, table, r, 0L, "0") }
+              lanes.manifestLock.synchronized {
+                RunLedger.appendManifest(manifestDir, table, r, 0L, "0")
+              }
               RangeResult(table, r, 0L, "0", skipped = false)
             }
             // `rangeParallelism` units in flight: a live migrator
@@ -487,10 +352,10 @@ object KeyspaceCopy {
     lanes.tables(tables.map { table => () =>
       val live = byTable(table).filter(_.rows > 0L).map(_.range).sorted
       val Seq((srcN, srcCs), (dstN, dstCs)) = lanes.units(Seq(
-        () => countAndChecksum(src.read(spark, table)),
+        () => RunLedger.countAndChecksum(src.read(spark, table)),
         () =>
           if (live.isEmpty) (0L, "0")
-          else countAndChecksum(
+          else RunLedger.countAndChecksum(
             live.map(r => dstRead.read(spark, rangeTable(table, r)))
               .reduce(_ unionByName _))))
       TableVerify(table, srcN, dstN, srcCs, dstCs)
@@ -569,13 +434,10 @@ object KeyspaceCopy {
           withRange.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         else withRange
         try {
-          // Source truth per range: ONE grouped pass (count + a18 sum).
-          val h = conv(substring(md5(rowRender(base.schema)), 1, 8), 16, 10)
-            .cast("bigint").cast(DecimalType(38, 0))
+          // Source truth per range: ONE grouped pass (count + a18 sum
+          // of RunLedger.rowHash — the checksum every audit computes).
           val truth = cached.groupBy(col("__graft_range"))
-            .agg(count(lit(1)).as("n"),
-              coalesce(sum(h), lit(0).cast(DecimalType(38, 0)))
-                .cast(DecimalType(38, 0)).cast("string").as("cs"))
+            .agg(count(lit(1)).as("n"), RunLedger.checksum(base.schema).as("cs"))
             .collect().map(r => r.getInt(0) -> ((r.getLong(1), r.getString(2)))).toMap
           // Audit every unit on the unit lanes, then heal the diverged
           // set on the same lanes (round-15 verdict item 6: a
@@ -592,7 +454,7 @@ object KeyspaceCopy {
             // audits as absent (healthy ONLY for a source-empty range —
             // run() never writes empty units).
             val audit = scala.util.Try(
-              countAndChecksum(dstRead.read(spark, rangeTable(table, r)))).toOption
+              RunLedger.countAndChecksum(dstRead.read(spark, rangeTable(table, r)))).toOption
             val healthy = audit match {
               case Some((dn, dcs)) => dn == en && dcs == ecs
               case None => en == 0L

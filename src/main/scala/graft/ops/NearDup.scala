@@ -1094,6 +1094,25 @@ object NearDup {
   private[graft] def pqCodebookStore(spark: SparkSession, sfDir: String): DataFrame =
     spark.read.parquet(s"${writePqCodebookStore(spark, sfDir)}/pq_codebook.parquet")
 
+  /** The one cell-list layout every IVF list, PQ code table and
+    * ingest segment uses: `df` (carrying `cluster`) written
+    * CLUSTER-PARTITIONED, so a cell predicate is a partition filter
+    * (dynamic partition pruning reads only the probed cells' files),
+    * with files capped at 4M rows.
+    */
+  private[graft] def writeCellLists(df: DataFrame, path: String): Unit =
+    df.write.mode("overwrite")
+      .option("maxRecordsPerFile", (1 << 22).toString)
+      .partitionBy("cluster")
+      .parquet(path)
+
+  /** A [[writeCellLists]] artifact as a frame. Partition-column type
+    * inference narrows long→int; the read pins the written type so
+    * consumers' schemas are store-independent.
+    */
+  private[graft] def readCellLists(spark: SparkSession, path: String): DataFrame =
+    spark.read.parquet(path).withColumn("cluster", col("cluster").cast("long"))
+
   /** Ensure the IVF INVERTED-LIST artifact exists: the corpus written
     * CLUSTER-PARTITIONED (`partitionBy(cluster)`) under its refined-
     * centroid assignment — the actual index layout of every
@@ -1124,12 +1143,10 @@ object NearDup {
       // the Milvus/FAISS-with-metadata posture: filtered search reads
       // attribute + vector together from the probed cells, never a
       // corpus join at query time (c174).
-      emb.join(asg, "vec_id")
-        .select(col("cluster"), col("vec_id"), col("embedding"), col("label"))
-        .write.mode("overwrite")
-        .option("maxRecordsPerFile", (1 << 22).toString)
-        .partitionBy("cluster")
-        .parquet(s"$scratch/ivf.parquet")
+      writeCellLists(
+        emb.join(asg, "vec_id")
+          .select(col("cluster"), col("vec_id"), col("embedding"), col("label")),
+        s"$scratch/ivf.parquet")
     }
     dir
   }
@@ -1139,10 +1156,7 @@ object NearDup {
     * predicate prunes files, not rows).
     */
   private[graft] def ivfIndexStore(spark: SparkSession, sfDir: String): DataFrame =
-    spark.read.parquet(s"${writeIvfIndexStore(spark, sfDir)}/ivf.parquet")
-      // Partition-column type inference narrows long→int; pin the
-      // written type so consumers' schemas are store-independent.
-      .withColumn("cluster", col("cluster").cast("long"))
+    readCellLists(spark, s"${writeIvfIndexStore(spark, sfDir)}/ivf.parquet")
 
   /** Ensure the PQ CODE table exists: every vector's [[PqM]]
     * sub-codebook ids (the c56 encode, same [[pqCodes]] kernel),
@@ -1172,13 +1186,11 @@ object NearDup {
       // codes artifact).
       val asg = ivfIndexStore(spark, sfDir)
         .select(col("vec_id"), col("cluster"))
-      pqCodes((subs, pqCodebookStore(spark, sfDir)))
-        .join(asg, "vec_id")
-        .select(col("cluster"), col("vec_id"), col("j"), col("code"))
-        .write.mode("overwrite")
-        .option("maxRecordsPerFile", (1 << 22).toString)
-        .partitionBy("cluster")
-        .parquet(s"$scratch/pq_codes.parquet")
+      writeCellLists(
+        pqCodes((subs, pqCodebookStore(spark, sfDir)))
+          .join(asg, "vec_id")
+          .select(col("cluster"), col("vec_id"), col("j"), col("code")),
+        s"$scratch/pq_codes.parquet")
     }
     dir
   }
@@ -1187,8 +1199,7 @@ object NearDup {
     * predicates prune files).
     */
   private[graft] def pqCodesStore(spark: SparkSession, sfDir: String): DataFrame =
-    spark.read.parquet(s"${writePqCodesStore(spark, sfDir)}/pq_codes.parquet")
-      .withColumn("cluster", col("cluster").cast("long"))
+    readCellLists(spark, s"${writePqCodesStore(spark, sfDir)}/pq_codes.parquet")
 
   def annIvfAdaptive(spark: SparkSession, sfDir: String): DataFrame = {
     val emb = Tables.t(spark, sfDir, "embeddings").select(col("vec_id"), col("embedding"))
@@ -2460,12 +2471,10 @@ object NearDup {
         .select(col("vec_id"), col("embedding"), col("label")).where(!ingestIsNew)
       val asg = kmAssign(base.select(col("vec_id"), col("embedding")),
         ingestCentroids(spark, sfDir)).select(col("vec_id"), col("cluster"))
-      base.join(asg, "vec_id")
-        .select(col("cluster"), col("vec_id"), col("embedding"), col("label"))
-        .write.mode("overwrite")
-        .option("maxRecordsPerFile", (1 << 22).toString)
-        .partitionBy("cluster")
-        .parquet(s"$scratch/seg0.parquet")
+      writeCellLists(
+        base.join(asg, "vec_id")
+          .select(col("cluster"), col("vec_id"), col("embedding"), col("label")),
+        s"$scratch/seg0.parquet")
     }
     dir
   }
@@ -2483,12 +2492,10 @@ object NearDup {
         .select(col("vec_id"), col("embedding"), col("label")).where(ingestIsNew)
       val asg = kmAssign(fresh.select(col("vec_id"), col("embedding")),
         ingestCentroids(spark, sfDir)).select(col("vec_id"), col("cluster"))
-      fresh.join(asg, "vec_id")
-        .select(col("cluster"), col("vec_id"), col("embedding"), col("label"))
-        .write.mode("overwrite")
-        .option("maxRecordsPerFile", (1 << 22).toString)
-        .partitionBy("cluster")
-        .parquet(s"$scratch/seg1.parquet")
+      writeCellLists(
+        fresh.join(asg, "vec_id")
+          .select(col("cluster"), col("vec_id"), col("embedding"), col("label")),
+        s"$scratch/seg1.parquet")
     }
     dir
   }
@@ -2502,8 +2509,7 @@ object NearDup {
   private[graft] def ingestSegStore(spark: SparkSession, sfDir: String): DataFrame = {
     val dir = writeIngestSegment(spark, sfDir)
     def seg(name: String, id: Int) =
-      spark.read.parquet(s"$dir/$name.parquet")
-        .withColumn("cluster", col("cluster").cast("long"))
+      readCellLists(spark, s"$dir/$name.parquet")
         .withColumn("segment", lit(id))
     seg("seg0", 0).unionByName(seg("seg1", 1))
   }
@@ -2543,8 +2549,7 @@ object NearDup {
     val (cents, lists) =
       if (gen == 2)
         (spark.read.parquet(s"$dir/centroids_g2.parquet"),
-          spark.read.parquet(s"$dir/lists_g2.parquet")
-            .withColumn("cluster", col("cluster").cast("long")))
+          readCellLists(spark, s"$dir/lists_g2.parquet"))
       else
         (ingestCentroids(spark, sfDir),
           ingestSegStore(spark, sfDir).drop("segment"))
@@ -2612,12 +2617,10 @@ object NearDup {
       val cents2 = spark.read.parquet(s"$dir/centroids_g2.parquet")
       val asg = kmAssign(emb.select(col("vec_id"), col("embedding")), cents2)
         .select(col("vec_id"), col("cluster"))
-      emb.join(asg, "vec_id")
-        .select(col("cluster"), col("vec_id"), col("embedding"), col("label"))
-        .write.mode("overwrite")
-        .option("maxRecordsPerFile", (1 << 22).toString)
-        .partitionBy("cluster")
-        .parquet(s"$scratch/lists_g2.parquet")
+      writeCellLists(
+        emb.join(asg, "vec_id")
+          .select(col("cluster"), col("vec_id"), col("embedding"), col("label")),
+        s"$scratch/lists_g2.parquet")
     }
     dir
   }
@@ -2636,8 +2639,7 @@ object NearDup {
     val dir = writeRebuiltIndexStore(spark, sfDir)
     require(ingestStoreGeneration(dir) == 2,
       s"indexRebuildSwap: generation-2 artifacts incomplete under $dir")
-    spark.read.parquet(s"$dir/lists_g2.parquet")
-      .withColumn("cluster", col("cluster").cast("long"))
+    readCellLists(spark, s"$dir/lists_g2.parquet")
       .groupBy(col("cluster")).agg(count(lit(1)).as("n_vecs"))
       .orderBy("cluster")
   }

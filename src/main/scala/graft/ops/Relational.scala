@@ -165,6 +165,15 @@ object Relational {
     * oracle. The HLL still runs in the same aggregate; at 100 TB the
     * exact side is the expensive verification pass you run on an
     * audit sample, the sketch is the production estimator.
+    *
+    * PRECONDITION: `l_partkey` and `l_orderkey` are non-null (TPC-H
+    * declares both NOT NULL). The (cid, v) dedup aggregate keeps a
+    * NULL key as one group, so on a nullable key `exact_parts` /
+    * `exact_orders` would read one above COUNT(DISTINCT) (which skips
+    * NULLs). `total_rows` is read off `l_partkey`'s groups (the cid-0
+    * duplicate-count sum), so a corpus with nullable keys needs both
+    * `v IS NOT NULL` before the dedup and a row count taken before
+    * that filter.
     */
   def approxDistinct(spark: SparkSession, sfDir: String): DataFrame = {
     // Round 19 (r18 verdict item 6): the one-agg form planned the two

@@ -169,17 +169,17 @@ final class OrcSource(dir: String) extends TableSource {
   *    retries. Writes here are whole-table overwrites (per-row
   *    upserts on the live sink), so a retry is idempotent; the seam
   *    retries the write closure and then rethrows.
-  *  - `throughputMBPerSec` — connector-side token-bucket
-  *    (`spark.cassandra.output.throughputMBPerSec`); no file-sink
-  *    analog (HDFS/S3 absorb full write bandwidth), so the seam
-  *    carries the value for the live sink and applies nothing.
+  *
+  * Rate capping has no knob here: it is the live connector's own
+  * token bucket (`spark.cassandra.output.throughputMBPerSec`), set on
+  * the session that writes to Cassandra; a file sink has no analog
+  * (HDFS/S3 absorb full write bandwidth).
   */
 final case class WriteConf(
     batchRows: Int = 1024,
     timestampCol: Option[String] = None,
     ttlCol: Option[String] = None,
-    maxRetries: Int = 3,
-    throughputMBPerSec: Option[Int] = None)
+    maxRetries: Int = 3)
 
 final class ConfiguredSink(underlying: TableSink, conf: WriteConf) extends TableSink {
   private def requireBigint(df: DataFrame, role: String, name: String): Unit = {

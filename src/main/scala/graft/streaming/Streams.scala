@@ -773,9 +773,8 @@ object Streams {
     q.awaitTermination()
     val nNew = spark.read.parquet(out).drop("batch_id")
       .groupBy(col("cluster")).agg(sum(col("n_new")).as("n_new"))
-    val nBase = spark.read
-      .parquet(s"${NearDup.ingestStoreDir(spark, sfDir)}/seg0.parquet")
-      .withColumn("cluster", col("cluster").cast("long"))
+    val nBase = NearDup.readCellLists(spark,
+        s"${NearDup.ingestStoreDir(spark, sfDir)}/seg0.parquet")
       .groupBy(col("cluster")).agg(count(lit(1)).as("n_base"))
     NearDup.ingestLedgerFrom(nBase, nNew)
   }

@@ -1,7 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.ops.CurationRun
+import graft.ops.{CurationRun, RunLedger}
 
 /** c199 orchestration contract: stage artifacts are atomic,
   * `_SUCCESS`-gated resume units; a killed run resumes without
@@ -27,14 +27,17 @@ class CurationRunSpec extends AnyFunSuite {
     d
   }
 
+  /** Each stage's run-ledger unit: (stage name, stage number). */
+  private val allStages = (0 to 5).map(i => (CurationRun.StageNames(i), i)).toSet
+
   private lazy val funnelA =
     CurationRun.funnel(spark, dirA).collect().map(_.toSeq).toSeq
 
   test("full run publishes six gated stage artifacts, a CRC manifest, and a non-trivial funnel") {
     (0 to 5).foreach(i => assert(successOf(dirA, i).exists(),
       s"stage $i artifact not published"))
-    val m = CurationRun.readManifest(dirA)
-    assert(m.keySet == (0 to 5).toSet, s"manifest incomplete: ${m.keySet}")
+    val m = RunLedger.readManifest(dirA)
+    assert(m.keySet == allStages, s"manifest incomplete: ${m.keySet}")
     assert(funnelA.nonEmpty)
     // the funnel is a genuine funnel: per-stage total docs never grow
     val totals = funnelA.groupBy(_.head.asInstanceOf[Long])
@@ -81,16 +84,16 @@ class CurationRunSpec extends AnyFunSuite {
     val lines = scala.io.Source.fromFile(mf, "UTF-8").getLines().toVector
     // torn tail: a partial append (no CRC) must be dropped on read,
     // then healed by the next run
-    val w0 = new java.io.FileWriter(mf, true); w0.write("5\t99"); w0.close()
-    assert(CurationRun.readManifest(d).keySet == (0 to 5).toSet)
+    val w0 = new java.io.FileWriter(mf, true); w0.write("pack\t5\t99"); w0.close()
+    assert(RunLedger.readManifest(d).keySet == allStages)
     CurationRun.ensureRun(spark, sf, d) // must not throw
     // now a VALID-CRC line whose rows contradict the artifact: resume
     // must refuse rather than curate from corrupt state
     val tampered = lines.map { l =>
       val f = l.split("\t")
-      if (f(0) == "3") {
-        val payload = s"3\t${f(1).toLong + 7}\t${f(2)}"
-        payload + "\t" + CurationRun.lineCrc(payload)
+      if (f(1) == "3") {
+        val payload = s"${f(0)}\t3\t${f(2).toLong + 7}\t${f(3)}"
+        payload + "\t" + RunLedger.lineCrc(payload)
       } else l
     }
     val w = new java.io.FileWriter(mf, false)
@@ -99,5 +102,27 @@ class CurationRunSpec extends AnyFunSuite {
       CurationRun.ensureRun(spark, sf, d)
     }
     assert(e.getMessage.contains("refusing to resume"))
+  }
+
+  test("a torn manifest tail is truncated before the next append, so the healed line is trusted") {
+    // A kill mid-append leaves a newline-less fragment. The next
+    // append must drop it first: glued onto the fragment, the healed
+    // line would fail its CRC and the stage would stay unrecorded.
+    val d = freshDir()
+    CurationRun.ensureRun(spark, sf, d)
+    val mf = new java.io.File(d, "manifest.tsv")
+    val lines = scala.io.Source.fromFile(mf, "UTF-8").getLines().toVector
+    val (stage3, others) = lines.partition(_.split("\t")(1) == "3")
+    assert(stage3.size == 1, s"expected one stage-3 line: $lines")
+    val w = new java.io.FileWriter(mf, false)
+    w.write(others.mkString("", "\n", "\n") + stage3.head.take(stage3.head.length / 2))
+    w.close()
+    assert(!RunLedger.readManifest(d).contains(("quality", 3)))
+    CurationRun.ensureRun(spark, sf, d)
+    val artifact = spark.read.parquet(new java.io.File(d, CurationRun.stageFile(3)).toString)
+    assert(RunLedger.readManifest(d).get(("quality", 3)) ==
+      Some(RunLedger.countAndChecksum(artifact)),
+      "stage 3's healed line was not recorded with the artifact's (rows, checksum)")
+    assert(RunLedger.readManifest(d).keySet == allStages)
   }
 }

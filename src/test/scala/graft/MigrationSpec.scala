@@ -1,7 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.ops.Migration
+import graft.ops.{Migration, RunLedger}
 
 /** Migration-core units: DDL generation (A11) and the parallel-read
   * contract (A3 — scans split into >1 partition so token-range-style
@@ -320,7 +320,7 @@ class MigrationSpec extends AnyFunSuite {
         WriteConf(maxRetries = 1), manDir, nRanges)
     }
     assert(boom.getMessage.contains("sink lost"), boom.getMessage)
-    val afterKill = KeyspaceCopy.readManifest(manDir)
+    val afterKill = RunLedger.readManifest(manDir)
     assert(afterKill.size >= 6,
       s"manifest should hold the completed units, got ${afterKill.size}")
     assert(afterKill.size < 10 * nRanges, "the kill must leave work pending")
@@ -332,7 +332,7 @@ class MigrationSpec extends AnyFunSuite {
     // incomplete, never as trusted state.
     val w = new java.io.FileWriter(s"$manDir/manifest.tsv", true)
     w.write("lineitem\t3\t17"); w.close() // no checksum field, no newline
-    assert(KeyspaceCopy.readManifest(manDir) == afterKill,
+    assert(RunLedger.readManifest(manDir) == afterKill,
       "torn manifest line must be ignored")
 
     // Run 2: resume with a healthy sink that records what it writes.
@@ -427,7 +427,7 @@ class MigrationSpec extends AnyFunSuite {
     assert(new java.io.File(s"$dstDir/$tornUnit.parquet").exists(),
       "the torn write must have left partial files")
     // ...but the manifest does not trust it.
-    val done = KeyspaceCopy.readManifest(manDir)
+    val done = RunLedger.readManifest(manDir)
     val tornKey = {
       val Array(table, r) = tornUnit.split("/range_")
       (table, r.toInt)
@@ -472,7 +472,7 @@ class MigrationSpec extends AnyFunSuite {
     assert(report.ranges.forall(!_.skipped))
     // Every manifest line parses (no interleaving under the append
     // lock) and the unit set is exactly the full (table, range) grid.
-    val manifest = KeyspaceCopy.readManifest(manDir)
+    val manifest = RunLedger.readManifest(manDir)
     assert(manifest.size == Tables.names.size * nRanges,
       s"manifest holds ${manifest.size} units")
     val rawLines = scala.io.Source.fromFile(s"$manDir/manifest.tsv", "UTF-8")
@@ -519,13 +519,13 @@ class MigrationSpec extends AnyFunSuite {
     w.write("lineitem\t2\t99999999999999999999999\tcs\n") // > Long.MaxValue
     w.write("orders\t4\t100\t12") // torn checksum, no '\n'
     w.close()
-    val done = KeyspaceCopy.readManifest(manDir)
+    val done = RunLedger.readManifest(manDir)
     assert(done == Map(("orders", 3) -> ((100L, "987654321"))),
       s"torn/corrupt lines must be untrusted, got $done")
     // The next append must DROP the fragment, not terminate it into a
     // trusted-looking line with a truncated checksum.
-    KeyspaceCopy.appendManifest(manDir, "orders", 5, 7L, "42")
-    val healed = KeyspaceCopy.readManifest(manDir)
+    RunLedger.appendManifest(manDir, "orders", 5, 7L, "42")
+    val healed = RunLedger.readManifest(manDir)
     assert(healed == done + (("orders", 5) -> ((7L, "42")))
       && !healed.contains(("orders", 4)),
       s"append over a torn tail must truncate the fragment, got $healed")
@@ -552,7 +552,7 @@ class MigrationSpec extends AnyFunSuite {
     val r1 = graft.ops.Migration.copyKeyspace(spark, src,
       new ParquetSink(dstDir), dstRead, WriteConf(), manDir, nRanges)
     assert(r1.ok)
-    val before = KeyspaceCopy.readManifest(manDir)
+    val before = RunLedger.readManifest(manDir)
     assert(before.size == Tables.names.size * nRanges)
     // Flip one digit in the middle of a non-empty unit's checksum
     // field — the line stays newline-terminated and splits into the
@@ -574,7 +574,7 @@ class MigrationSpec extends AnyFunSuite {
       Seq(vf(0), vf(1), vf(2), new String(cs), vf(4)).mkString("\t"))
     java.nio.file.Files.write(manPath,
       corrupted.mkString("", "\n", "\n").getBytes("UTF-8"))
-    val after = KeyspaceCopy.readManifest(manDir)
+    val after = RunLedger.readManifest(manDir)
     assert(after == before - victimKey,
       s"CRC must reject exactly the corrupted unit $victimKey")
     // Resume: exactly the corrupted unit re-copies, everything else
@@ -600,7 +600,7 @@ class MigrationSpec extends AnyFunSuite {
     new java.io.File(legacyDir).mkdirs()
     val w = new java.io.FileWriter(s"$legacyDir/manifest.tsv")
     w.write("orders\t3\t100\t987654321\n"); w.close()
-    assert(KeyspaceCopy.readManifest(legacyDir) ==
+    assert(RunLedger.readManifest(legacyDir) ==
       Map(("orders", 3) -> ((100L, "987654321"))))
   }
 
@@ -783,7 +783,7 @@ class MigrationSpec extends AnyFunSuite {
         new KillAfter(new ParquetSink(dstDir), allow = 2),
         new ParquetSource(dstDir), WriteConf(), manDir, nRanges = 4)
     }
-    val afterKill = graft.ops.KeyspaceCopy.readManifest(manDir)
+    val afterKill = RunLedger.readManifest(manDir)
     assert(afterKill.nonEmpty && afterKill.size < 4,
       s"the kill must leave work pending: ${afterKill.size}")
     // The v2 vintage lands while the copy is down.
@@ -808,7 +808,7 @@ class MigrationSpec extends AnyFunSuite {
     }
     assert(e.getMessage.contains("schema drifted"), e.getMessage)
     assert(rec.written.isEmpty, "refused resume must write nothing")
-    assert(graft.ops.KeyspaceCopy.readManifest(manDir) == afterKill,
+    assert(RunLedger.readManifest(manDir) == afterKill,
       "refused resume must not touch the manifest")
     // The runbook verdict applied: fresh manifest + fresh destination,
     // full re-copy under the merged schema — parity green, v1 rows
@@ -1175,7 +1175,7 @@ class MigrationSpec extends AnyFunSuite {
   private def assertCleanManifest(manDir: String, units: Set[(String, Int)]): Unit = {
     val raw = scala.io.Source.fromFile(s"$manDir/manifest.tsv", "UTF-8")
     val lines = try raw.getLines().toList finally raw.close()
-    val parsed = graft.ops.KeyspaceCopy.readManifest(manDir)
+    val parsed = RunLedger.readManifest(manDir)
     assert(lines.forall(_.split("\t", -1).length == 5), "a manifest line lacks its CRC")
     assert(lines.size == parsed.size, "a manifest line failed its CRC or repeats a unit")
     assert(parsed.keySet == units, s"manifest units ${parsed.keySet} != $units")
@@ -1247,7 +1247,7 @@ class MigrationSpec extends AnyFunSuite {
         rangeParallelism = 4)
     }
     assert(boom.getMessage.contains(s"sink rejects $bad"), boom.getMessage)
-    val afterFail = graft.ops.KeyspaceCopy.readManifest(manDir)
+    val afterFail = RunLedger.readManifest(manDir)
     val held = sink.heldUnit.split("/range_") match { case Array(t, r) => (t, r.toInt) }
     // The held unit was in flight at the failure and settled before the
     // error propagated; the manifest holds exactly the units that landed.

@@ -278,6 +278,20 @@ class StreamsApiSpec extends AnyFunSuite {
     assert(offenders.isEmpty, s"session built or width read outside Sessions: $offenders")
   }
 
+  test("one run ledger: only RunLedger names the manifest file and computes line CRCs") {
+    // The keyspace copy and the curation run record finished units in
+    // one ledger; a second manifest writer drifts off its torn-tail and
+    // CRC rules. These needles are the ledger's file name and checksum.
+    val needles = Seq("java.util.zip.CRC32", "\"manifest.tsv\"")
+    val srcs = sources("src/main")
+    val offenders = for {
+      (p, src) <- srcs if p.getFileName.toString != "RunLedger.scala"
+      n <- needles if src.contains(n)
+    } yield s"$p: $n"
+    assert(offenders.isEmpty, s"manifest or CRC code outside RunLedger: $offenders")
+    assert(srcs.exists(_._1.endsWith("RunLedger.scala")), "scan found no RunLedger.scala")
+  }
+
   test("runToParquet reads an empty result back as an empty frame, not an inference error") {
     // A dup-free corpus makes c51's verified-collision stream empty for
     // every micro-batch: zero part files land in the sink, and a bare
