@@ -3,28 +3,33 @@ package graft
 /** The composed keyspace copy as a runnable CLI — the reference
   * tool's invocation shape ("migrate this keyspace from that cluster"
   * is one command, not a library call). Wraps
-  * [[graft.ops.Migration.copyKeyspace]] over the parquet connectors;
-  * a live deployment swaps the source/sink constructions for the
-  * Cassandra connector pair (README "Production Cassandra migration
-  * knobs") and nothing else changes.
+  * [[graft.ops.Migration.copyKeyspace]] (and, with `--repair`,
+  * [[graft.ops.Migration.repairKeyspace]]) over the parquet
+  * connectors; a live deployment swaps the source/sink constructions
+  * for the Cassandra connector pair (README "Production Cassandra
+  * migration knobs") and nothing else changes.
   *
   * Usage:
   *   sbt "runMain graft.CopyKeyspaceCli <srcDir> <dstDir> <manifestDir> [nRanges] [rangeParallelism]"
   *   sbt "runMain graft.CopyKeyspaceCli --repair <srcDir> <dstDir> <manifestDir> [nRanges] [rangeParallelism]"
   *
-  * Re-running with the same manifestDir RESUMES: completed
-  * (table, range) units are skipped. Exit 0 iff every table passes
-  * the post-copy count + content-checksum verification.
+  * Both modes are the one walk of [[graft.ops.KeyspaceCopy]]: a
+  * (table, range) unit is settled when its evidence equals the
+  * source's (rows, checksum) truth, and anything else is re-copied
+  * and must read back as exactly that truth. A copy takes the
+  * manifest as evidence first, so re-running with the same
+  * manifestDir RESUMES: recorded units are skipped. `--repair`
+  * trusts no manifest line and audits every destination unit, so
+  * exactly the diverged units re-copy. Both modes refuse a manifestDir
+  * pinned to another nRanges or to a drifted source schema. Exit 0
+  * iff every table passes the post-copy count + content-checksum
+  * verification.
   * `rangeParallelism` (default 4, both modes) is the number of range
   * units in flight at once, across tables — the live-migrator posture
   * that hides per-job scheduling latency; tables overlap, at most
   * that many at once; 1 reproduces the strictly sequential walk.
   * The stderr summary includes a throughput line: rows moved (units
-  * written by this invocation), wall seconds and rows/s.
-  * `--repair` runs the anti-entropy verify-and-heal instead
-  * ([[graft.ops.KeyspaceCopy.repair]]): every destination range unit
-  * audits against a one-pass source truth and exactly the diverged
-  * units re-copy.
+  * written or recorded by this invocation), wall seconds and rows/s.
   */
 object CopyKeyspaceCli {
   def main(args: Array[String]): Unit = {
@@ -41,25 +46,10 @@ object CopyKeyspaceCli {
     spark.sparkContext.setLogLevel("WARN")
     import graft.sources._
     val t0 = System.nanoTime()
-    val report = if (repairMode)
-      ops.Migration.repairKeyspace(
-        spark,
-        new ParquetSource(srcDir),
-        new ParquetSink(dstDir),
-        new ParquetSource(dstDir),
-        WriteConf(),
-        manifestDir,
-        nRanges,
-        rangeParallelism)
-    else ops.Migration.copyKeyspace(
-      spark,
-      new ParquetSource(srcDir),
-      new ParquetSink(dstDir),
-      new ParquetSource(dstDir),
-      WriteConf(),
-      manifestDir,
-      nRanges,
-      rangeParallelism)
+    val keyspaceRun =
+      if (repairMode) ops.Migration.repairKeyspace _ else ops.Migration.copyKeyspace _
+    val report = keyspaceRun(spark, new ParquetSource(srcDir), new ParquetSink(dstDir),
+      new ParquetSource(dstDir), WriteConf(), manifestDir, nRanges, rangeParallelism)
     val wallS = (System.nanoTime() - t0) / 1e9
     val copied = report.ranges.count(!_.skipped)
     val skipped = report.ranges.count(_.skipped)
@@ -67,8 +57,8 @@ object CopyKeyspaceCli {
     System.err.println(
       s"[$mode] ranges: $copied copied, " +
         s"$skipped ${if (repairMode) "audited-healthy" else "resumed-as-complete"}")
-    // Rows this invocation moved: the units it wrote, not the ones it
-    // skipped (resumed or audited healthy).
+    // Rows this invocation moved: the units it wrote or newly recorded,
+    // not the ones it skipped (resumed or audited healthy).
     val moved = report.ranges.filter(!_.skipped).map(_.rows).sum
     System.err.println(f"[$mode] moved $moved rows in $wallS%.2f s " +
       f"(${if (wallS > 0) moved / wallS else 0.0}%.0f rows/s)")

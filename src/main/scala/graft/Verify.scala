@@ -79,6 +79,10 @@ object Verify {
     spark.stop()
   }
 
+  /** A JSON number: integral values without a fraction, else 6 places. */
+  private def jNum(d: Double): String = if (d == d.floor && !d.isInfinite) d.toLong.toString
+    else f"$d%.6f"
+
   /** Measured error of the sketch-based keys against exact answers on
     * `sfDir` — one JSON object keyed like the queries map.
     *
@@ -179,8 +183,6 @@ object Verify {
     val b50Bound = 1.0 / accParam
 
 
-    def jNum(d: Double): String = if (d == d.floor && !d.isInfinite) d.toLong.toString
-      else f"$d%.6f"
     val b18Json = b18Metrics.map { case (c, ap, ex, rel) =>
       s"""{"column":"$c","approx":$ap,"exact":$ex,"rel_err":${jNum(rel)}}"""
     }.mkString("[", ",", "]")
@@ -387,8 +389,6 @@ object Verify {
       (name, bf.size, hit, if (bf.isEmpty) 1.0 else hit.toDouble / bf.size)
     }
     val (_, nearN, nearHit, nearRecall) = c12Bands.head
-    def jNum(d: Double): String = if (d == d.floor && !d.isInfinite) d.toLong.toString
-      else f"$d%.6f"
     val topKTarget = 0.8
     val pairTarget = 0.9
     // The replica-corpus rehearsal row (graft.Recall on

@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodeGenerator, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.functions.{call_function, sqrt}
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
 
 /** Codegen'd dot product over two numeric arrays — the hot kernel of
@@ -131,4 +131,11 @@ object ArrayDot {
     ensureRegistered(SparkSession.active)
     call_function(Name, a, b)
   }
+
+  /** Cosine similarity of two numeric-array columns over [[adot]]
+    * (float elements cast to double first — §5.3 rule 7; callers
+    * round).
+    */
+  def cosine(a: Column, b: Column): Column =
+    adot(a, b) / (sqrt(adot(a, a)) * sqrt(adot(b, b)))
 }

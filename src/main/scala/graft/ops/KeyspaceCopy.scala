@@ -3,83 +3,96 @@ package graft.ops
 import java.io.{File, FileWriter}
 import java.util.concurrent.{Callable, Executors, ExecutorService}
 import java.util.concurrent.atomic.AtomicReference
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import graft.sources.{ConfiguredSink, TableSink, TableSource, WriteConf}
 
 /** The COMPOSED end-to-end keyspace copy — the reference tool's actual
   * deliverable (a "migrate keyspace from cluster" CLI is one
-  * orchestrated run, not a menu of verified pieces). This chains the
-  * operators that each carry their own oracle key into one resumable
-  * pipeline over the [[graft.sources.TableSource]]/[[graft.sources.TableSink]]
-  * seam:
+  * orchestrated run, not a menu of verified pieces) — and its
+  * anti-entropy repair, as ONE walk over the
+  * [[graft.sources.TableSource]]/[[graft.sources.TableSink]] seam:
   *
-  *   1. DISCOVER (a2): `src.tableNames` + per-table schema from the
-  *      source's own read path.
-  *   2. DDL (a11): [[Migration.createTableDdl]] per table, written once
-  *      to `manifestDir/keyspace.ddl` — the target-side bootstrap
-  *      artifact a resumed run must never clobber.
-  *   3. COPY (A6/A10): per (table, token-range) unit through
-  *      [[graft.sources.ConfiguredSink]], so every write gets the
-  *      retry/batch/writetime knobs. Ranges are the a15 unit: the
-  *      first hex nibbles of a row-content md5, so two independent
-  *      runs (or engines) derive the SAME partition of the key space —
-  *      the property that lets a resumed run trust a manifest someone
-  *      else wrote. Each range lands as its OWN output unit
-  *      (`table/range_R`), which is what makes a retry idempotent at
-  *      range scope: re-overwriting range 7 cannot clobber ranges 0–6.
-  *   4. AUDIT per range: the landed rows are read BACK through the
-  *      destination's read channel and (count, checksum) appended to
-  *      `manifestDir/manifest.tsv` through [[RunLedger]] (the ledger
-  *      the c199 curation run shares) — the durable resume cursor. A
-  *      killed JVM can tear at most the last line; only
-  *      NEWLINE-TERMINATED lines are trusted (a tear inside the
-  *      checksum field still splits into 4 plausible fields, so the
-  *      terminator — the writer's last byte — is the only reliable
-  *      completion marker), and an untrusted line reads as
-  *      "incomplete", so the range re-copies (idempotent, see 3)
-  *      rather than being trusted.
-  *   5. VERIFY (a7 + a18): after all ranges complete, every table gets
-  *      an INDEPENDENT full re-read on both sides — count parity plus
-  *      the order-insensitive content checksum (sum of per-row 32-bit
-  *      md5 prefixes in DECIMAL(38,0), the a18 algebra that cannot
-  *      overflow at 1e12 rows).
+  *   1. PIN: `manifestDir/copy.conf` pins `nRanges` and
+  *      `manifestDir/keyspace.ddl` pins the DDL (a11,
+  *      [[Migration.createTableDdl]] over each table's schema from the
+  *      source's own read path, a2). Both are write-once, in both
+  *      modes: a (table, range) unit means the same rows only under
+  *      the range arity AND the schema it was cut with, so a run
+  *      under either drifted refuses before it touches anything.
+  *   2. UNITS (A6/A10): the unit of work, retry, resume and repair is
+  *      a (table, token range). Ranges are the a15 unit: the first hex
+  *      nibbles of a row-content md5, so two independent runs (or
+  *      engines) derive the SAME partition of the key space — the
+  *      property that lets a run trust a manifest someone else wrote.
+  *      Each range lands as its OWN output unit (`table/range_R`)
+  *      through [[graft.sources.ConfiguredSink]] (retry/batch/writetime
+  *      knobs), so re-overwriting range 7 cannot clobber ranges 0–6.
+  *   3. SETTLE, the one per-unit rule: a unit is settled when its
+  *      evidence equals the source truth (rows, a18 checksum). A copy
+  *      (`trustLedger`) first takes a `manifestDir/manifest.tsv` line
+  *      ([[RunLedger]], the ledger the c199 curation run shares) as
+  *      that evidence, so a fully recorded table reads no source. Every
+  *      other unit gets its truth from ONE grouped aggregate per table
+  *      (a15's planning pass) and is audited through the destination's
+  *      own read path (a missing unit audits as (0, "0")). An audit
+  *      equal to the truth settles the unit without a write — an empty
+  *      range is just such a unit — and records a ledger line unless
+  *      an equal one is there. Anything else lands again and must read
+  *      back as exactly the truth, rows AND checksum, before its line
+  *      is appended — a unit whose count is right but whose content is
+  *      not is never recorded complete.
+  *   4. VERIFY (a7 + a18): every table then gets an INDEPENDENT full
+  *      re-read on both sides — count parity plus the order-insensitive
+  *      content checksum (sum of per-row 32-bit md5 prefixes in
+  *      DECIMAL(38,0), the a18 algebra that cannot overflow at 1e12
+  *      rows).
   *
-  * RESUME: re-invoking with the same `manifestDir` skips every
-  * (table, range) the manifest marks complete and re-runs only the
-  * rest — kill-mid-copy → resume → verify is the tested path
-  * (MigrationSpec "composed copyKeyspace").
+  * COPY vs REPAIR differ only in the evidence consulted first. A copy
+  * RESUMES: re-invoking with the same `manifestDir` skips every unit
+  * the ledger records and settles only the rest — kill-mid-copy →
+  * resume → verify is the tested path (MigrationSpec "composed
+  * copyKeyspace"). A repair (round 15, the `nodetool repair` analog
+  * and the execution half of a23's planning) trusts no ledger line:
+  * every unit is audited against the truth, so a target that rotted
+  * AFTER the copy (a deleted unit, a partial restore, flipped values)
+  * heals by re-landing exactly the diverged units instead of
+  * re-moving 100 TB. The ledger keeps the LAST line per unit, so it
+  * heals too.
   *
-  * Scale posture (100 TB): the unit of work, retry, and resume is the
-  * token range, never the table — a lost executor or a dead sink costs
-  * one range, not a re-copy. On a live token-range source (Cassandra
+  * The ledger's trust rules live in [[RunLedger]]: only
+  * NEWLINE-TERMINATED, CRC-valid lines count, and an untrusted line
+  * reads as "no evidence", so the unit is audited and, if needed,
+  * re-landed (idempotent, see 2) rather than trusted.
+  *
+  * Scale posture (100 TB): a lost executor or a dead sink costs one
+  * range, not a re-copy. On a live token-range source (Cassandra
   * connector), each range read is a ring slice — no scan
   * amplification and no persist needed. On a FILE source a range
   * filter would otherwise rescan the table per range, so the source is
   * persisted (MEMORY_AND_DISK, recomputable lineage) once per table
-  * while >1 range is pending and unpersisted when the table completes;
-  * the per-range manifest counts come from ONE grouped aggregate over
-  * that same cached frame (a15's planning step), and empty ranges are
-  * recorded complete without launching a write job. Everything
-  * driver-side is metadata-sized: the manifest holds one line per
-  * (table, range), and the only collects are 1-row audit scalars.
+  * while >1 unit is pending and unpersisted when the table completes.
+  * Everything driver-side is metadata-sized: the manifest holds one
+  * line per (table, range), and the only collects are the per-range
+  * truth rows and 1-row audit scalars.
   *
   * Overlap: `rangeParallelism` bounds everything. Tables proceed
   * concurrently on `rangeParallelism` table lanes, so at most
-  * `rangeParallelism` tables are persisted at once; their range units,
-  * repair audits and verification checksums share `rangeParallelism`
-  * unit lanes, so at most that many units are in flight across all
-  * tables, and threads stay O(`rangeParallelism`). At 1 the walk is
-  * strictly sequential, table by table and unit by unit. One lock
-  * serializes every manifest append. The Report is ordered the same
-  * at any width: tables in discovery order; within a table, skipped
-  * units, then empty units, then copied units by range.
+  * `rangeParallelism` tables are persisted at once; their units
+  * (audits and landings) and verification checksums share
+  * `rangeParallelism` unit lanes, so at most that many units are in
+  * flight across all tables, and threads stay O(`rangeParallelism`).
+  * At 1 the walk is strictly sequential, table by table and unit by
+  * unit. One lock serializes every manifest append. The Report is
+  * ordered the same at any width: tables in discovery order; within a
+  * table, skipped units, then units recorded without a write, then
+  * written units, each by range.
   */
 object KeyspaceCopy {
 
-  /** One (table, range) unit's outcome. `skipped` = the manifest
-    * already held it, so this run did no work for the unit.
+  /** One (table, range) unit's outcome. `skipped` = this run neither
+    * wrote the unit nor appended a ledger line for it.
     */
   final case class RangeResult(
       table: String, range: Int, rows: Long, checksum: String, skipped: Boolean)
@@ -121,13 +134,21 @@ object KeyspaceCopy {
         .cast("int"),
       lit(nRanges))
 
-  /** The `nRanges=` arity an existing `copy.conf` pins, if it holds one. */
-  private def pinnedRanges(confFile: File): Option[Int] = {
-    val src = scala.io.Source.fromFile(confFile, "UTF-8")
-    try src.getLines().collectFirst { case l if l.startsWith("nRanges=") =>
+  /** The content of a write-once manifest file: `text`, written now if
+    * the file is absent, else whatever an earlier run wrote there.
+    */
+  private def writeOnce(file: File, text: String): String =
+    if (!file.exists()) {
+      val w = new FileWriter(file)
+      try w.write(text) finally w.close()
+      text
+    } else new String(java.nio.file.Files.readAllBytes(file.toPath),
+      java.nio.charset.StandardCharsets.UTF_8)
+
+  /** The `nRanges=` arity a `copy.conf` text pins, if it holds one. */
+  private def pinnedRanges(conf: String): Option[Int] =
+    conf.linesIterator.collectFirst { case l if l.startsWith("nRanges=") =>
       l.stripPrefix("nRanges=").trim.toInt }
-    finally src.close()
-  }
 
   /** Thrown in place of a task that had not started when another task
     * failed; it never escapes [[Lanes]]. */
@@ -136,7 +157,7 @@ object KeyspaceCopy {
 
   /** The copy's bounded concurrency: `width` table lanes and `width`
     * unit lanes, two fixed pools, so threads stay O(width). A table
-    * task runs on a table lane and hands its range units, audits and
+    * task runs on a table lane and hands its range units and
     * checksums to the unit lanes, which run leaves only — a table lane
     * may block on unit lanes, never the reverse, so the pools cannot
     * deadlock. At width 1 both are single threads and the walk is
@@ -170,37 +191,16 @@ object KeyspaceCopy {
     def close(): Unit = { unitPool.shutdown(); tablePool.shutdown() }
   }
 
-  /** Write one range unit of `cached` through `sink`, audit what
-    * LANDED through the destination's own read path, and append the
-    * unit's manifest line once `accept` passes the audit.
-    */
-  private def landUnit(
-      spark: SparkSession, sink: ConfiguredSink, dstRead: TableSource,
-      cached: DataFrame, table: String, r: Int, manifestDir: String, lanes: Lanes)(
-      accept: (Long, String) => Unit): RangeResult = {
-    sink.write(cached.where(col("__graft_range") === r).drop("__graft_range"),
-      rangeTable(table, r))
-    val (n, cs) = RunLedger.countAndChecksum(dstRead.read(spark, rangeTable(table, r)))
-    accept(n, cs)
-    lanes.manifestLock.synchronized { RunLedger.appendManifest(manifestDir, table, r, n, cs) }
-    RangeResult(table, r, n, cs, skipped = false)
-  }
-
-  /** Per-table DDL from each table's schema on the source's read path. */
-  private def discoverDdl(spark: SparkSession, src: TableSource,
-      tables: Seq[String], lanes: Lanes): Map[String, String] =
-    tables.zip(lanes.tables(tables.map(t => () =>
-      Migration.createTableDdl(t, src.read(spark, t).schema)))).toMap
-
-  /** Run (or resume) a full keyspace copy. See the object scaladoc for
-    * the pipeline; throws when a range write exhausts the
-    * [[WriteConf]] retries — the manifest then holds every unit that
-    * completed, and re-invoking with the same `manifestDir` resumes.
+  /** Run (or resume) a keyspace copy (`trustLedger`), or repair an
+    * existing one (`!trustLedger`): the walk of the object scaladoc.
+    * Throws when a unit write exhausts the [[WriteConf]] retries or
+    * lands something other than its source truth — the manifest then
+    * holds every unit that settled, and re-invoking with the same
+    * `manifestDir` resumes.
     *
-    * `dstRead` is the destination's READ channel: migration
-    * verification (steps 4–5) must observe what actually landed
-    * through the same path future readers will use, not trust the
-    * writer's word.
+    * `dstRead` is the destination's READ channel: every audit must
+    * observe what actually landed through the same path future
+    * readers will use, not trust the writer's word.
     */
   def run(
       spark: SparkSession,
@@ -209,8 +209,9 @@ object KeyspaceCopy {
       dstRead: TableSource,
       conf: WriteConf,
       manifestDir: String,
-      nRanges: Int = 16,
-      rangeParallelism: Int = 1): Report = {
+      nRanges: Int,
+      rangeParallelism: Int,
+      trustLedger: Boolean): Report = {
     require(nRanges >= 1 && nRanges <= 4096, s"nRanges out of range: $nRanges")
     require(rangeParallelism >= 1 && rangeParallelism <= 64,
       s"rangeParallelism out of range: $rangeParallelism")
@@ -218,19 +219,13 @@ object KeyspaceCopy {
     // Pin the range-function arity to the manifest: a (table, range)
     // cursor is only meaningful under the nRanges it was written at —
     // resuming 16-range state at nRanges=4 would skip range 3 while
-    // range 3's CONTENT is a different row set (pmod 4 vs 16), i.e.
-    // silent data loss. Written once, required equal ever after.
-    val confFile = new File(manifestDir, "copy.conf")
-    if (!confFile.exists()) {
-      val w = new FileWriter(confFile)
-      try w.write(s"nRanges=$nRanges\n") finally w.close()
-    } else {
-      val pinned = pinnedRanges(confFile)
-      require(pinned.contains(nRanges),
-        s"manifest at $manifestDir was written with nRanges=${pinned.orNull}; " +
-          s"resuming with nRanges=$nRanges would mis-map completed ranges — " +
-          "use the original value or a fresh manifest dir")
-    }
+    // range 3's CONTENT is a different row set (pmod 4 vs 16), and a
+    // repair would "heal" every unit into a different partition.
+    val pinned = pinnedRanges(writeOnce(new File(manifestDir, "copy.conf"), s"nRanges=$nRanges\n"))
+    require(pinned.contains(nRanges),
+      s"manifest at $manifestDir was written with nRanges=${pinned.orNull}; " +
+        s"running with nRanges=$nRanges would mis-map its ranges — " +
+        "use the original value or a fresh manifest dir")
     val tables = src.tableNames(spark)
     // Discovery backstop for sources that can't validate their own
     // location: a copy over zero tables would "succeed" vacuously.
@@ -239,61 +234,42 @@ object KeyspaceCopy {
     val sink = new ConfiguredSink(dst, conf)
     val lanes = new Lanes(rangeParallelism, tables.size)
     try {
-      // 1+2 — discover + DDL bootstrap artifact (write-once: a resumed
-      // run must not clobber the statement the target was created from).
-      val ddl = discoverDdl(spark, src, tables, lanes)
+      val ddl = tables.zip(lanes.tables(tables.map(t => () =>
+        Migration.createTableDdl(t, src.read(spark, t).schema)))).toMap
       val ddlText = tables.map(ddl).mkString("", ";\n\n", ";\n")
-      val ddlFile = new File(manifestDir, "keyspace.ddl")
-      if (!ddlFile.exists()) {
-        val w = new FileWriter(ddlFile)
-        try w.write(ddlText) finally w.close()
-      } else {
-        // Schema drift guard (same refuse-to-resume discipline as the
-        // nRanges pin): keyspace.ddl is write-once, so if the SOURCE
-        // schema changed between the killed run and this resume, the
-        // regenerated DDL would silently disagree with the bootstrap
-        // artifact the target was created from — and ranges copied
-        // under the old schema would not union with ranges copied under
-        // the new one. Fail loudly instead.
-        //
-        // 100 TB RUNBOOK (the mid-copy schema-evolution drill,
-        // MigrationSpec "v2 vintage APPEARING mid-copy"): when a new
-        // file vintage lands in the source WHILE a copy is down, REJECT
-        // is the only safe resume — [[rangeCol]] hashes the row-render
-        // over the schema's FIELDS, so v1-completed ranges and
-        // merged-schema ranges are different partitions of the table;
-        // resuming would interleave two incompatible partitionings
-        // under one manifest. Operator options, in order: (a) quarantine
-        // the new vintage files and finish under the original schema —
-        // the manifest stays trustworthy (the refused resume touches
-        // neither it nor the destination) — then copy the quarantined
-        // files as their own delta; or (b) start a fresh manifest dir
-        // and re-copy the affected table under the merged schema
-        // (proven a18-green in the drill). Never hand-edit keyspace.ddl
-        // to force a resume.
-        val pinned = new String(
-          java.nio.file.Files.readAllBytes(ddlFile.toPath),
-          java.nio.charset.StandardCharsets.UTF_8)
-        require(pinned == ddlText,
-          s"source schema drifted since the manifest at $manifestDir was " +
-            "started: regenerated DDL does not match keyspace.ddl — finish " +
-            "under the original schema or start a fresh manifest dir")
-      }
+      // Schema drift guard (the same refusal as the nRanges pin):
+      // keyspace.ddl is the statement the target was created from, and
+      // [[rangeCol]] hashes the row-render over the schema's FIELDS, so
+      // units cut under the old schema and units cut under the new one
+      // are different partitions of the table — neither a resume nor a
+      // repair may mix them.
+      //
+      // 100 TB RUNBOOK (the mid-copy schema-evolution drill,
+      // MigrationSpec "v2 vintage APPEARING mid-copy"): when a new file
+      // vintage lands in the source WHILE a copy is down, REJECT is the
+      // only safe resume. Operator options, in order: (a) quarantine
+      // the new vintage files and finish under the original schema —
+      // the manifest stays trustworthy (the refused run touches neither
+      // it nor the destination) — then copy the quarantined files as
+      // their own delta; or (b) start a fresh manifest dir and re-copy
+      // the affected table under the merged schema (proven a18-green in
+      // the drill). Never hand-edit keyspace.ddl to force a resume.
+      require(writeOnce(new File(manifestDir, "keyspace.ddl"), ddlText) == ddlText,
+        s"source schema drifted since the manifest at $manifestDir was " +
+          "started: regenerated DDL does not match keyspace.ddl — finish " +
+          "under the original schema or start a fresh manifest dir")
 
-      // 3+4 — per-range copy with read-back audit and durable cursor,
-      // tables overlapping on the table lanes.
-      val done = RunLedger.readManifest(manifestDir)
+      val ledger = RunLedger.readManifest(manifestDir)
       val ranges = lanes.tables(tables.map { table => () =>
-        val skipped = (0 until nRanges).filter(r => done.contains((table, r))).map { r =>
-          val (n, cs) = done((table, r))
-          RangeResult(table, r, n, cs, skipped = true)
+        val (recorded, pending) = (0 until nRanges)
+          .partition(r => trustLedger && ledger.contains((table, r)))
+        val fromLedger = recorded.map { r =>
+          val (n, cs) = ledger((table, r))
+          (RangeResult(table, r, n, cs, skipped = true), false)
         }
-        val pending = (0 until nRanges).filter(r => !done.contains((table, r)))
-        if (pending.isEmpty) skipped
-        else {
+        val settled = if (pending.isEmpty) Nil else {
           val base = src.read(spark, table)
-          val withRange = base.withColumn("__graft_range",
-            rangeCol(base.schema, nRanges))
+          val withRange = base.withColumn("__graft_range", rangeCol(base.schema, nRanges))
           // One source scan per table, not one per range: recomputable
           // MEMORY_AND_DISK lineage (an executor loss recomputes, the
           // localCheckpoint failure mode ADVICE flagged elsewhere). A
@@ -303,47 +279,55 @@ object KeyspaceCopy {
             withRange.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
           else withRange
           try {
-            // a15's planning aggregate: per-range row counts in one pass,
-            // so empty ranges complete without a write job.
-            val counts = cached.groupBy(col("__graft_range")).count()
-              .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-            val (emptyRs, liveRs) = pending.partition(r => counts.getOrElse(r, 0L) == 0L)
-            val empties = emptyRs.map { r =>
-              lanes.manifestLock.synchronized {
-                RunLedger.appendManifest(manifestDir, table, r, 0L, "0")
-              }
-              RangeResult(table, r, 0L, "0", skipped = false)
-            }
+            // Source truth per range in ONE grouped pass (a15's
+            // planning aggregate): count + the a18 sum of
+            // RunLedger.rowHash, the checksum every audit computes.
+            val truth = cached.groupBy(col("__graft_range"))
+              .agg(count(lit(1)), RunLedger.checksum(base.schema))
+              .collect().map(r => r.getInt(0) -> ((r.getLong(1), r.getString(2)))).toMap
             // `rangeParallelism` units in flight: a live migrator
-            // overlaps range copies to hide per-job scheduling latency
-            // and the sink's write/ack round-trips (Spark's scheduler
-            // accepts jobs from many threads). Every in-flight unit
-            // SETTLES before the first error propagates, so the
-            // manifest records each unit that truly completed and
-            // `cached` is never unpersisted under a running job. The
-            // Report is range-ordered whatever the completion order.
-            val copied = lanes.units(liveRs.map { r => () =>
-              landUnit(spark, sink, dstRead, cached, table, r, manifestDir, lanes) { (n, _) =>
-                require(n == counts(r),
-                  s"$table range $r landed $n rows, source holds ${counts(r)} — " +
+            // overlaps units to hide per-job scheduling latency and the
+            // sink's write/ack round-trips (Spark's scheduler accepts
+            // jobs from many threads). Every in-flight unit SETTLES
+            // before the first error propagates, so the manifest
+            // records each unit that truly completed and `cached` is
+            // never unpersisted under a running job. Last-line-wins
+            // makes manifest append ORDER immaterial — interleaved
+            // LINES are what the lock prevents.
+            lanes.units(pending.map { r => () =>
+              val want = truth.getOrElse(r, (0L, "0"))
+              val audit = scala.util.Try(RunLedger.countAndChecksum(
+                dstRead.read(spark, rangeTable(table, r)))).getOrElse((0L, "0"))
+              val wrote = audit != want
+              if (wrote) {
+                sink.write(cached.where(col("__graft_range") === r).drop("__graft_range"),
+                  rangeTable(table, r))
+                val landed = RunLedger.countAndChecksum(dstRead.read(spark, rangeTable(table, r)))
+                require(landed == want,
+                  s"$table range $r landed $landed, source truth is $want — " +
                     "refusing to mark complete")
               }
+              val known = !wrote && ledger.get((table, r)).contains(want)
+              if (!known) lanes.manifestLock.synchronized {
+                RunLedger.appendManifest(manifestDir, table, r, want._1, want._2)
+              }
+              (RangeResult(table, r, want._1, want._2, skipped = known), wrote)
             })
-            skipped ++ empties ++ copied
           } finally { cached.unpersist(); () }
         }
+        (fromLedger ++ settled).sortBy { case (u, wrote) =>
+          (if (u.skipped) 0 else if (wrote) 2 else 1, u.range)
+        }.map(_._1)
       }).flatten
 
-      // 5 — independent full-table verification (a7 count parity + a18
-      // content parity). The destination table is the union of its
-      // non-empty range units.
       Report(ddl, ranges, verifyTables(spark, src, dstRead, tables, ranges, lanes))
     } finally lanes.close()
   }
 
   /** Each table's source and destination (count, checksum), computed
     * concurrently: tables on the table lanes, the two sides of a table
-    * on the unit lanes.
+    * on the unit lanes. The destination table is the union of its
+    * non-empty range units.
     */
   private def verifyTables(
       spark: SparkSession, src: TableSource, dstRead: TableSource,
@@ -360,120 +344,5 @@ object KeyspaceCopy {
               .reduce(_ unionByName _))))
       TableVerify(table, srcN, dstN, srcCs, dstCs)
     })
-  }
-
-  /** ANTI-ENTROPY REPAIR (round 15) — verify-and-heal an EXISTING
-    * copy at range granularity, the `nodetool repair` analog and the
-    * execution half of a23's targeted-repair planning: a completed
-    * migration's target can rot AFTER the copy (bit flips, a partial
-    * restore, an operator deleting the wrong directory, drift from a
-    * write that slipped in), and re-running the full copy to fix 0.1%
-    * re-moves 100 TB. `repair` instead:
-    *
-    *   1. Recomputes the SOURCE's per-range (count, checksum) truth in
-    *      ONE grouped aggregate per table (the a15 planning pass — no
-    *      per-range rescans).
-    *   2. Audits every destination range unit through the
-    *      destination's own read path (the A22 trust discipline: never
-    *      the writer's word), including units the manifest never
-    *      recorded.
-    *   3. Re-copies EXACTLY the units whose audit disagrees with the
-    *      source truth — a missing unit, a torn/partial unit, a
-    *      corrupted or drifted one — with the standard read-back audit
-    *      and a corrected manifest line appended (readManifest keeps
-    *      the LAST line per unit, so the manifest heals too).
-    *   4. Finishes with the independent full-table verification run()
-    *      performs.
-    *
-    * Healthy units cost one metadata-sized audit read each and report
-    * `skipped = true`; only diverged units move data. Tables, audits
-    * and heals overlap on the same bounded lanes run() uses (object
-    * scaladoc: `rangeParallelism` units in flight, at most that many
-    * tables persisted; round-16: a badly-rotted destination at
-    * nRanges=4096 must not heal one unit at a time). The manifest
-    * append stays serialized; last-line-wins makes append ORDER
-    * immaterial. The source scan is persisted once per table while
-    * >1 unit may need healing.
-    * Refuses to run against a manifest written under a different
-    * nRanges (the same arity pin as run — a repair under the wrong
-    * range function would "heal" every unit into a different
-    * partition of the key space).
-    */
-  def repair(
-      spark: SparkSession,
-      src: TableSource,
-      dst: TableSink,
-      dstRead: TableSource,
-      conf: WriteConf,
-      manifestDir: String,
-      nRanges: Int = 16,
-      rangeParallelism: Int = 1): Report = {
-    require(nRanges >= 1 && nRanges <= 4096, s"nRanges out of range: $nRanges")
-    require(rangeParallelism >= 1 && rangeParallelism <= 64,
-      s"rangeParallelism out of range: $rangeParallelism")
-    val confFile = new File(manifestDir, "copy.conf")
-    if (confFile.exists()) {
-      val pinned = pinnedRanges(confFile)
-      require(pinned.contains(nRanges),
-        s"manifest at $manifestDir was written with nRanges=${pinned.orNull}; " +
-          s"repairing with nRanges=$nRanges would re-partition the key space — " +
-          "use the original value")
-    }
-    val tables = src.tableNames(spark)
-    require(tables.nonEmpty,
-      s"keyspace repair: source $src discovered zero tables — nothing to repair")
-    val sink = new ConfiguredSink(dst, conf)
-    val lanes = new Lanes(rangeParallelism, tables.size)
-    try {
-      val ddl = discoverDdl(spark, src, tables, lanes)
-      val ranges = lanes.tables(tables.map { table => () =>
-        val base = src.read(spark, table)
-        val withRange = base.withColumn("__graft_range",
-          rangeCol(base.schema, nRanges))
-        val cached = if (nRanges > 1)
-          withRange.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        else withRange
-        try {
-          // Source truth per range: ONE grouped pass (count + a18 sum
-          // of RunLedger.rowHash — the checksum every audit computes).
-          val truth = cached.groupBy(col("__graft_range"))
-            .agg(count(lit(1)).as("n"), RunLedger.checksum(base.schema).as("cs"))
-            .collect().map(r => r.getInt(0) -> ((r.getLong(1), r.getString(2)))).toMap
-          // Audit every unit on the unit lanes, then heal the diverged
-          // set on the same lanes (round-15 verdict item 6: a
-          // badly-rotted destination at nRanges=4096 must not heal one
-          // unit at a time). Last-line-wins makes manifest append ORDER
-          // immaterial — interleaved LINES are what the lock prevents.
-          // Every in-flight heal settles before the first error
-          // propagates, so `cached` is never unpersisted under a
-          // running job and the manifest records each unit that truly
-          // completed.
-          val audits = lanes.units((0 until nRanges).map { r => () =>
-            val (en, ecs) = truth.getOrElse(r, (0L, "0"))
-            // Audit through the dst read path; a missing/unreadable unit
-            // audits as absent (healthy ONLY for a source-empty range —
-            // run() never writes empty units).
-            val audit = scala.util.Try(
-              RunLedger.countAndChecksum(dstRead.read(spark, rangeTable(table, r)))).toOption
-            val healthy = audit match {
-              case Some((dn, dcs)) => dn == en && dcs == ecs
-              case None => en == 0L
-            }
-            (r, en, ecs, healthy)
-          })
-          val (healthy, diverged) = audits.partition(_._4)
-          val healed = lanes.units(diverged.map { case (r, en, ecs, _) => () =>
-            landUnit(spark, sink, dstRead, cached, table, r, manifestDir, lanes) { (n, cs) =>
-              require(n == en && cs == ecs,
-                s"$table range $r landed ($n, $cs), source truth is ($en, $ecs) — " +
-                  "refusing to mark repaired")
-            }
-          })
-          healthy.map { case (r, en, ecs, _) => RangeResult(table, r, en, ecs, skipped = true) } ++
-            healed
-        } finally { cached.unpersist(); () }
-      }).flatten
-      Report(ddl, ranges, verifyTables(spark, src, dstRead, tables, ranges, lanes))
-    } finally lanes.close()
   }
 }

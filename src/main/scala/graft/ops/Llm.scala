@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import org.apache.spark.storage.StorageLevel
 import graft.{Canon, Memo, Tables}
+import graft.functions.ArrayDot.cosine
 
 /** LLM-data-pipeline operators (SURVEY §2 group C, mandated by the
   * north star): dedup (exact + MinHash/LSH), similarity search, text
@@ -1235,16 +1236,6 @@ object Llm {
         when(col("best_jaccard") >= IncTau, lit("drop")).otherwise(lit("keep"))
           .as("verdict"))
       .orderBy("doc_id")
-  }
-
-  /** Cosine similarity of two double-array columns (float elements
-    * cast to double first — §5.3 rule 7; caller rounds).
-    */
-  private def cosine(a: Column, b: Column): Column = {
-    // Codegen'd dot kernel — bit-identical to the zip_with/aggregate
-    // fold it replaces (graft.functions.ArrayDot).
-    val dot = graft.functions.ArrayDot.adot _
-    dot(a, b) / (sqrt(dot(a, a)) * sqrt(dot(b, b)))
   }
 
   /** c4 — similarity search: brute-force cosine top-10 against a probe

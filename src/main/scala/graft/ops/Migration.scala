@@ -212,7 +212,19 @@ object Migration {
     * columns, never via stringified row hashes (double→string
     * formatting is not cross-engine-stable).
     */
-  def migrationDiff(spark: SparkSession, sfDir: String): DataFrame = {
+  def migrationDiff(spark: SparkSession, sfDir: String): DataFrame =
+    driftedOrders(spark, sfDir)
+      .groupBy(col("status")).agg(count(lit(1)).as("n_rows"))
+      .orderBy("status")
+
+  /** A13/A23's drift classification: every source `orders` row
+    * left-joined on the key to the simulated drifted target (drift
+    * nibble '0' → row dropped, 'f' → o_totalprice shifted), projected
+    * to `keep` followed by its `status` — same / changed /
+    * missing_in_target.
+    */
+  private def driftedOrders(spark: SparkSession, sfDir: String,
+      keep: org.apache.spark.sql.Column*): DataFrame = {
     def nib(c: org.apache.spark.sql.Column) =
       substring(md5(concat(lit("drift:"), c.cast("string"))), 1, 1)
     val src = Tables.t(spark, sfDir, "orders")
@@ -223,11 +235,9 @@ object Migration {
       .withColumn("t_price",
         when(nib(col("t_key")) === "f", col("t_price") + 1.0).otherwise(col("t_price")))
     src.join(tgt, col("o_orderkey") === col("t_key"), "left")
-      .select(when(col("t_key").isNull, "missing_in_target")
+      .select(keep :+ when(col("t_key").isNull, "missing_in_target")
         .when(col("o_totalprice") =!= col("t_price"), "changed")
-        .otherwise("same").as("status"))
-      .groupBy(col("status")).agg(count(lit(1)).as("n_rows"))
-      .orderBy("status")
+        .otherwise("same").as("status"): _*)
   }
 
   /** A28 — MERKLE token-range diff (round 17; Merkle 1987 — public —
@@ -322,23 +332,10 @@ object Migration {
     * the planner knob: finer ranges → smaller re-copy units → less
     * redundant repair I/O, at the cost of more manifest rows.
     */
-  def driftRanges(spark: SparkSession, sfDir: String): DataFrame = {
-    def nib(c: org.apache.spark.sql.Column) =
-      substring(md5(concat(lit("drift:"), c.cast("string"))), 1, 1)
-    val src = Tables.t(spark, sfDir, "orders")
-      .select(col("o_orderkey"), col("o_totalprice"))
-    val tgt = Tables.t(spark, sfDir, "orders")
-      .select(col("o_orderkey").as("t_key"), col("o_totalprice").as("t_price"))
-      .where(nib(col("t_key")) =!= "0")
-      .withColumn("t_price",
-        when(nib(col("t_key")) === "f", col("t_price") + 1.0).otherwise(col("t_price")))
-    src.join(tgt, col("o_orderkey") === col("t_key"), "left")
-      .select(
+  def driftRanges(spark: SparkSession, sfDir: String): DataFrame =
+    driftedOrders(spark, sfDir,
         substring(md5(concat(lit("tok:"), col("o_orderkey").cast("string"))), 1, 2)
-          .as("token_range"),
-        when(col("t_key").isNull, "missing_in_target")
-          .when(col("o_totalprice") =!= col("t_price"), "changed")
-          .otherwise("same").as("status"))
+          .as("token_range"))
       .groupBy(col("token_range"))
       .agg(count(lit(1)).as("n_rows"),
         sum(when(col("status") === "changed", 1L).otherwise(0L)).as("n_changed"),
@@ -346,7 +343,6 @@ object Migration {
           .as("n_missing"))
       .withColumn("needs_recopy", col("n_changed") + col("n_missing") > 0)
       .orderBy("token_range")
-  }
 
   /** A14 — UNSET-vs-NULL write merge: CQL distinguishes three write
     * intents per cell — SET a value (overwrite), write NULL (a
@@ -975,12 +971,13 @@ object Migration {
       nRanges: Int = 16,
       rangeParallelism: Int = 1): KeyspaceCopy.Report =
     KeyspaceCopy.run(spark, src, dst, dstRead, conf, manifestDir, nRanges,
-      rangeParallelism)
+      rangeParallelism, trustLedger = true)
 
-  /** Anti-entropy verify-and-heal of an EXISTING copy — audits every
-    * destination range unit against a one-pass per-range source truth
-    * and re-copies exactly the diverged units (A23's planning turned
-    * into execution). See [[KeyspaceCopy.repair]].
+  /** Anti-entropy verify-and-heal of an EXISTING copy — the same walk
+    * as [[copyKeyspace]] trusting no ledger line: every destination
+    * range unit audits against a one-pass per-range source truth and
+    * exactly the diverged units re-copy (A23's planning turned into
+    * execution). See [[KeyspaceCopy]].
     */
   def repairKeyspace(
       spark: SparkSession,
@@ -991,8 +988,8 @@ object Migration {
       manifestDir: String,
       nRanges: Int = 16,
       rangeParallelism: Int = 1): KeyspaceCopy.Report =
-    KeyspaceCopy.repair(spark, src, dst, dstRead, conf, manifestDir, nRanges,
-      rangeParallelism)
+    KeyspaceCopy.run(spark, src, dst, dstRead, conf, manifestDir, nRanges,
+      rangeParallelism, trustLedger = false)
 
   /** Shard counts for the a27 reshard drill: the cluster grows from
     * [[ReshardOld]] to [[ReshardNew]] shards.

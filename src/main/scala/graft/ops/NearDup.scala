@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import graft.{Canon, Memo, Sessions, Tables}
+import graft.functions.ArrayDot.cosine
 
 /** Near-duplicate detection beyond MinHash, plus the ANN scale path
   * (north-star dedup/similarity families: SimHash, n-gram Jaccard,
@@ -353,13 +354,6 @@ object NearDup {
         round(size(array_intersect(col("ga"), col("gb"))).cast("double") /
           size(array_union(col("ga"), col("gb"))), 4).as("char3_jaccard"))
       .transform(graft.Canon.barrierSort(_, "doc_a", "doc_b"))
-  }
-
-  private def cosine(a: Column, b: Column): Column = {
-    // Codegen'd dot kernel — bit-identical to the zip_with/aggregate
-    // fold it replaces (graft.functions.ArrayDot).
-    val dot = graft.functions.ArrayDot.adot _
-    dot(a, b) / (sqrt(dot(a, a)) * sqrt(dot(b, b)))
   }
 
   /** c12 — embedding-cosine near-duplicates: pairs above threshold,

@@ -95,8 +95,8 @@ object RunLedger {
     * proves the line's CONTENT is the content the writer emitted (a
     * bit flip inside an otherwise complete line fails it). An
     * untrusted line is treated as incomplete — the safe direction,
-    * because re-running a unit is idempotent. Numeric fields are
-    * bounded ASCII digit runs (`isDigit` accepts Unicode digits
+    * because re-running a unit is idempotent. Numeric fields (the
+    * checksum too) are bounded ASCII digit runs (`isDigit` accepts Unicode digits
     * `toInt` rejects, and an overlong run overflows Long) and the
     * parses ride in Try, so a corrupted line SKIPS instead of aborting
     * the resume. Version branch by field count: pre-CRC keyspace
@@ -117,13 +117,18 @@ object RunLedger {
       complete.split("\n").iterator.flatMap { line =>
         line.split("\t", -1) match {
           // index ≤ 4 digits (nRanges ≤ 4096); rows ≤ 18 digits
-          // (< Long.MaxValue's 19) so toLong cannot overflow.
+          // (< Long.MaxValue's 19) so toLong cannot overflow; checksum
+          // ≤ 38 digits, the a18 canon (a DECIMAL(38,0) sum of
+          // non-negative hashes, "0" over no rows).
           case Array(t, r, n, cs, crc)
-              if asciiDigits(r, 4) && asciiDigits(n, 18) && cs.nonEmpty &&
+              if asciiDigits(r, 4) && asciiDigits(n, 18) && asciiDigits(cs, 38) &&
                 crc == lineCrc(s"$t\t$r\t$n\t$cs") =>
             scala.util.Try((t, r.toInt) -> (n.toLong, cs)).toOption
-          case Array(t, r, n, cs) // legacy pre-CRC line
-              if asciiDigits(r, 4) && asciiDigits(n, 18) && cs.nonEmpty =>
+          // Legacy pre-CRC line. The checksum's digit rule is its only
+          // content guard: a CRC line whose last tab is corrupted also
+          // splits into 4 fields, with the CRC glued onto the checksum.
+          case Array(t, r, n, cs)
+              if asciiDigits(r, 4) && asciiDigits(n, 18) && asciiDigits(cs, 38) =>
             scala.util.Try((t, r.toInt) -> (n.toLong, cs)).toOption
           case _ => None
         }

@@ -221,34 +221,79 @@ object Streams {
     * AnalysisException where an empty frame is the right answer.
     */
   private[graft] def runToParquet(df: DataFrame, mode: String, tag: String): DataFrame = {
-    val s = df.sparkSession
+    val out = drain(tag) { (dir, ckpt) =>
+      mode match {
+        case "complete" =>
+          df.writeStream.outputMode("complete")
+            .foreachBatch((batch: Dataset[Row], _: Long) =>
+              batch.write.mode("overwrite").parquet(dir))
+            .option("checkpointLocation", ckpt)
+        case "append" => toParquetSink(df, dir, ckpt)
+        // Update-mode queries (transformWithState emissions) cannot use
+        // the file sink directly (file sinks are append-only); each
+        // micro-batch's emissions append via foreachBatch — a
+        // DISTRIBUTED write, never a driver-side memory sink. The sink
+        // is then an emission LOG; readers compact it (the A16 rule).
+        case "update_log" =>
+          df.writeStream.outputMode("update")
+            .foreachBatch((batch: Dataset[Row], _: Long) =>
+              batch.write.mode("append").parquet(dir))
+            .option("checkpointLocation", ckpt)
+        case other => throw new IllegalArgumentException(s"unsupported sink mode: $other")
+      }
+    }
+    df.sparkSession.read.schema(df.schema).parquet(out)
+  }
+
+  /** Run a bounded streaming query whose every micro-batch is a batch
+    * transform `perBatch` a pure append plan can't express (an
+    * argmax, a top-k, a join against a static artifact), and read the
+    * union of the per-batch results back (`batch_id` dropped) — the
+    * `foreachBatch` sink of the stateless micro-batch keys (c162,
+    * c176, c180, c191, c193, c195). Each batch's result is a
+    * distributed parquet write, never a driver-side collect.
+    *
+    * IDEMPOTENT per-batch writes: foreachBatch is AT-LEAST-ONCE — a
+    * query killed after the write job but before the checkpoint
+    * commit RE-EXECUTES that batch on restart, and a plain
+    * `mode("append")` sink would then hold the replayed batch's
+    * result TWICE (the file sink avoids this with its own
+    * transaction log; foreachBatch has none). The standard recipe
+    * (Spark's foreachBatch guide): make the write a deterministic
+    * function of the batch id — each batch OVERWRITES its own
+    * `batch_id=<id>` directory, so a replay lands byte-identical in
+    * the same place and exactly-once holds end-to-end. StreamingSpec
+    * replays a batch write and pins no duplication.
+    *
+    * Every caller's source yields >= 1 micro-batch, so partition
+    * discovery over the `batch_id=N` subdirectories always sees data.
+    */
+  private def runPerBatch(stream: DataFrame, tag: String)(
+      perBatch: DataFrame => DataFrame): DataFrame = {
+    val out = drain(tag) { (dir, ckpt) =>
+      stream.writeStream
+        .foreachBatch((batch: Dataset[Row], id: Long) =>
+          perBatch(batch).write.mode("overwrite").parquet(s"$dir/batch_id=$id"))
+        .option("checkpointLocation", ckpt)
+    }
+    stream.sparkSession.read.parquet(out).drop("batch_id")
+  }
+
+  /** The bounded-query lifecycle [[runToParquet]] and [[runPerBatch]]
+    * share: fresh tracked output and checkpoint dirs, the writer
+    * `sink` builds over them run to completion under
+    * `Trigger.AvailableNow`; returns the output dir.
+    */
+  private def drain(tag: String)(
+      sink: (String, String) => DataStreamWriter[Row]): String = {
     val out = java.nio.file.Files.createTempDirectory(s"graft_${tag}_out").toString
     val ckpt = java.nio.file.Files.createTempDirectory(s"graft_${tag}_ckpt").toString
     trackTmpDir(out); trackTmpDir(ckpt)
-    val writer = mode match {
-      case "complete" =>
-        df.writeStream.outputMode("complete")
-          .foreachBatch((batch: Dataset[Row], _: Long) =>
-            batch.write.mode("overwrite").parquet(out))
-          .option("checkpointLocation", ckpt)
-      case "append" => toParquetSink(df, out, ckpt)
-      // Update-mode queries (transformWithState emissions) cannot use
-      // the file sink directly (file sinks are append-only); each
-      // micro-batch's emissions append via foreachBatch — a
-      // DISTRIBUTED write, never a driver-side memory sink. The sink
-      // is then an emission LOG; readers compact it (the A16 rule).
-      case "update_log" =>
-        df.writeStream.outputMode("update")
-          .foreachBatch((batch: Dataset[Row], _: Long) =>
-            batch.write.mode("append").parquet(out))
-          .option("checkpointLocation", ckpt)
-      case other => throw new IllegalArgumentException(s"unsupported sink mode: $other")
-    }
-    val q = writer
+    sink(out, ckpt)
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
-    q.awaitTermination()
-    s.read.schema(df.schema).parquet(out)
+      .awaitTermination()
+    out
   }
 
   /** An isolated child session for stateful streaming queries: shares
@@ -676,33 +721,6 @@ object Streams {
       .orderBy("doc_id", "frame_idx")
   }
 
-  /** c162 — STREAMING linkage RESOLUTION: c161's decision step as
-    * live ingest, via the `foreachBatch` micro-batch pattern (the
-    * documented Structured Streaming recipe for per-batch batch
-    * transforms a pure append plan can't express — the argmax is an
-    * aggregation, and append mode without a watermark rejects it).
-    * EXACT per micro-batch, no state: each dirty record arrives in
-    * exactly one micro-batch and the clean side is STATIC, so the
-    * batch-local candidate set — and hence the batch-local
-    * [[graft.ops.Llm.resolveFrom]] argmax and its unmatched rows —
-    * IS the global answer for that record; the per-batch emission
-    * union is therefore c161 verbatim (the oracle is c161's SQL) and
-    * every dirty record decides exactly once across any batching
-    * (StreamingSpec pins it across a 3-file feed). The foreachBatch
-    * write is a distributed parquet job, never a driver-side collect.
-    *
-    * IDEMPOTENT per-batch writes: foreachBatch is AT-LEAST-ONCE — a
-    * query killed after the write job but before the checkpoint
-    * commit RE-EXECUTES that batch on restart, and a plain
-    * `mode("append")` sink would then hold the replayed batch's
-    * decisions TWICE (the file sink avoids this with its own
-    * transaction log; foreachBatch has none). The standard recipe
-    * (Spark's foreachBatch guide): make the write a deterministic
-    * function of the batch id — each batch OVERWRITES its own
-    * `batch_id=<id>` directory, so a replay lands byte-identical in
-    * the same place and exactly-once holds end-to-end. StreamingSpec
-    * replays a batch write and pins no duplication.
-    */
   /** c176 — STREAMING ANN probes against the PERSISTED index: the
     * production serving loop — queries arrive as a stream, the index
     * (centroids + cluster-partitioned inverted lists, built once by
@@ -717,23 +735,12 @@ object Streams {
     * SQL verbatim — the streamed union must equal the batch answer
     * exactly.
     */
-  def streamAnnProbe(spark: SparkSession, sfDir: String): DataFrame = {
-    val stream = streamTable(spark, sfDir, "embeddings")
-      .where(col("vec_id") < 10)
-    val out = java.nio.file.Files.createTempDirectory("graft_c176_out").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_c176_ckpt").toString
-    trackTmpDir(out); trackTmpDir(ckpt)
-    val q = stream.writeStream
-      .foreachBatch((batch: Dataset[Row], id: Long) =>
+  def streamAnnProbe(spark: SparkSession, sfDir: String): DataFrame =
+    runPerBatch(streamTable(spark, sfDir, "embeddings").where(col("vec_id") < 10), "c176") {
+      batch =>
         graft.ops.NearDup.batchAnnIvfOf(batch.sparkSession, sfDir,
           batch.select(col("vec_id").as("probe_id"), col("embedding").as("pe")))
-          .write.mode("overwrite").parquet(s"$out/batch_id=$id"))
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.read.parquet(out).drop("batch_id").orderBy("probe_id", "rn")
-  }
+    }.orderBy("probe_id", "rn")
 
   /** c180 — STREAMING index ingest: the WRITE side of the serving
     * loop c176 reads (round-16 verdict item 5) — arrivals stream in
@@ -758,21 +765,11 @@ object Streams {
     val stream = streamTable(spark, sfDir, "embeddings")
       .where(NearDup.ingestIsNew)
       .select(col("vec_id"), col("embedding"))
-    val out = java.nio.file.Files.createTempDirectory("graft_c180_out").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_c180_ckpt").toString
-    trackTmpDir(out); trackTmpDir(ckpt)
-    val q = stream.writeStream
-      .foreachBatch((batch: Dataset[Row], id: Long) =>
-        NearDup.kmAssign(batch.select(col("vec_id"), col("embedding")),
-            NearDup.ingestCentroids(batch.sparkSession, sfDir))
-          .groupBy(col("cluster")).agg(count(lit(1)).as("n_new"))
-          .write.mode("overwrite").parquet(s"$out/batch_id=$id"))
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val nNew = spark.read.parquet(out).drop("batch_id")
-      .groupBy(col("cluster")).agg(sum(col("n_new")).as("n_new"))
+    val nNew = runPerBatch(stream, "c180") { batch =>
+      NearDup.kmAssign(batch.select(col("vec_id"), col("embedding")),
+          NearDup.ingestCentroids(batch.sparkSession, sfDir))
+        .groupBy(col("cluster")).agg(count(lit(1)).as("n_new"))
+    }.groupBy(col("cluster")).agg(sum(col("n_new")).as("n_new"))
     val nBase = NearDup.readCellLists(spark,
         s"${NearDup.ingestStoreDir(spark, sfDir)}/seg0.parquet")
       .groupBy(col("cluster")).agg(count(lit(1)).as("n_base"))
@@ -801,19 +798,10 @@ object Streams {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     trainG.count() // materialize: the standing artifact is built ONCE
     val stream = streamTable(spark, sfDir, "documents")
-    val out = java.nio.file.Files.createTempDirectory("graft_c191_out").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_c191_ckpt").toString
-    trackTmpDir(out); trackTmpDir(ckpt)
-    val q = stream.writeStream
-      .foreachBatch((batch: Dataset[Row], id: Long) =>
-        TextAnalysis.noveltyOf(
-            TextAnalysis.gramSplit(batch).where(col("split") === "test"), trainG)
-          .write.mode("overwrite").parquet(s"$out/batch_id=$id"))
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val res = spark.read.parquet(out).drop("batch_id").orderBy("doc_id")
+    val res = runPerBatch(stream, "c191") { batch =>
+      TextAnalysis.noveltyOf(
+        TextAnalysis.gramSplit(batch).where(col("split") === "test"), trainG)
+    }.orderBy("doc_id")
     trainG.unpersist()
     res
   }
@@ -843,19 +831,10 @@ object Streams {
     persisted.foreach(_.count())
     val mp = TextAnalysis.KnModel(persisted(0), persisted(1), persisted(2), persisted(3))
     val stream = streamTable(spark, sfDir, "documents")
-    val out = java.nio.file.Files.createTempDirectory("graft_c193_out").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_c193_ckpt").toString
-    trackTmpDir(out); trackTmpDir(ckpt)
-    val q = stream.writeStream
-      .foreachBatch((batch: Dataset[Row], id: Long) =>
-        TextAnalysis.knScoreOf(
-            TextAnalysis.knSplitDocs(batch).where(col("split") === "test"), mp)
-          .write.mode("overwrite").parquet(s"$out/batch_id=$id"))
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val res = spark.read.parquet(out).drop("batch_id").orderBy("doc_id")
+    val res = runPerBatch(stream, "c193") { batch =>
+      TextAnalysis.knScoreOf(
+        TextAnalysis.knSplitDocs(batch).where(col("split") === "test"), mp)
+    }.orderBy("doc_id")
     persisted.foreach(_.unpersist())
     res
   }
@@ -880,42 +859,34 @@ object Streams {
     store.count()
     val stream = streamTable(spark, sfDir, "documents")
       .where(Llm.isIncoming(col("doc_id")))
-    val out = java.nio.file.Files.createTempDirectory("graft_c195_out").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_c195_ckpt").toString
-    trackTmpDir(out); trackTmpDir(ckpt)
-    val q = stream.writeStream
-      .foreachBatch((batch: Dataset[Row], id: Long) =>
-        NearDup.cdcGateOf(batch, store)
-          .write.mode("overwrite").parquet(s"$out/batch_id=$id"))
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val res = spark.read.parquet(out).drop("batch_id").orderBy("doc_id")
+    val res = runPerBatch(stream, "c195")(NearDup.cdcGateOf(_, store)).orderBy("doc_id")
     store.unpersist()
     res
   }
 
+  /** c162 — STREAMING linkage RESOLUTION: c161's decision step as
+    * live ingest, via the `foreachBatch` micro-batch pattern (the
+    * documented Structured Streaming recipe for per-batch batch
+    * transforms a pure append plan can't express — the argmax is an
+    * aggregation, and append mode without a watermark rejects it).
+    * EXACT per micro-batch, no state: each dirty record arrives in
+    * exactly one micro-batch and the clean side is STATIC, so the
+    * batch-local candidate set — and hence the batch-local
+    * [[graft.ops.Llm.resolveFrom]] argmax and its unmatched rows —
+    * IS the global answer for that record; the per-batch emission
+    * union is therefore c161 verbatim (the oracle is c161's SQL) and
+    * every dirty record decides exactly once across any batching
+    * (StreamingSpec pins it across a 3-file feed). The foreachBatch
+    * write is a distributed parquet job, never a driver-side collect.
+    * Exactly-once via the batch-id-keyed overwrite of
+    * [[runPerBatch]].
+    */
   def streamLinkageResolution(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.ops.Llm
-    val cust = graft.Tables.t(spark, sfDir, "customer")
-    val clean = Llm.linkClean(cust)
-    val stream = streamTable(spark, sfDir, "customer")
-    val out = java.nio.file.Files.createTempDirectory("graft_c162_out").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_c162_ckpt").toString
-    trackTmpDir(out); trackTmpDir(ckpt)
-    val q = stream.writeStream
-      .foreachBatch((batch: Dataset[Row], id: Long) =>
-        Llm.resolveFrom(clean, Llm.linkDirty(batch))
-          .write.mode("overwrite").parquet(s"$out/batch_id=$id"))
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    // The customer source always yields >= 1 micro-batch, so partition
-    // discovery over the batch_id=N subdirectories always sees data;
-    // the discovered batch_id partition column is dropped.
-    spark.read.parquet(out).drop("batch_id").orderBy("dirty_id")
+    val clean = Llm.linkClean(graft.Tables.t(spark, sfDir, "customer"))
+    runPerBatch(streamTable(spark, sfDir, "customer"), "c162") { batch =>
+      Llm.resolveFrom(clean, Llm.linkDirty(batch))
+    }.orderBy("dirty_id")
   }
 
   /** Event-time ORDER GUARD for the stateful kernels (scd2 / island /

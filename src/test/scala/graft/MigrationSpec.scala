@@ -577,8 +577,6 @@ class MigrationSpec extends AnyFunSuite {
     val after = RunLedger.readManifest(manDir)
     assert(after == before - victimKey,
       s"CRC must reject exactly the corrupted unit $victimKey")
-    // Resume: exactly the corrupted unit re-copies, everything else
-    // skips, parity green.
     final class Recording(underlying: TableSink) extends TableSink {
       val written = scala.collection.mutable.ArrayBuffer.empty[String]
       def write(df: org.apache.spark.sql.DataFrame, t: String,
@@ -586,6 +584,22 @@ class MigrationSpec extends AnyFunSuite {
         written += t; underlying.write(df, t, o)
       }
     }
+    // Resume over an intact destination: the victim's audit equals its
+    // source truth, so exactly that unit is re-recorded WITHOUT a
+    // write; everything else skips, parity green.
+    val rec0 = new Recording(new ParquetSink(dstDir))
+    val r1b = graft.ops.Migration.copyKeyspace(spark, src, rec0, dstRead,
+      WriteConf(), manDir, nRanges)
+    assert(rec0.written.isEmpty, s"an intact unit was rewritten: ${rec0.written}")
+    assert(r1b.ranges.filterNot(_.skipped).map(u => (u.table, u.range)) == Seq(victimKey))
+    assert(RunLedger.readManifest(manDir) == before, "the victim's line was not restored")
+    assert(r1b.ok, s"parity after CRC-driven re-record: ${r1b.verify}")
+    // The same corruption over a destination that also lost the unit:
+    // exactly the corrupted unit re-copies, everything else skips.
+    java.nio.file.Files.write(manPath,
+      corrupted.mkString("", "\n", "\n").getBytes("UTF-8"))
+    rm(new java.io.File(
+      s"$dstDir/${KeyspaceCopy.rangeTable(victimKey._1, victimKey._2)}.parquet"))
     val rec = new Recording(new ParquetSink(dstDir))
     val r2 = graft.ops.Migration.copyKeyspace(spark, src, rec, dstRead,
       WriteConf(), manDir, nRanges)
@@ -602,6 +616,30 @@ class MigrationSpec extends AnyFunSuite {
     w.write("orders\t3\t100\t987654321\n"); w.close()
     assert(RunLedger.readManifest(legacyDir) ==
       Map(("orders", 3) -> ((100L, "987654321"))))
+  }
+
+  test("copy manifest: a CRC line whose last tab is corrupted is untrusted, not read as a legacy line") {
+    // One byte flipped on the tab before the CRC glues the CRC onto the
+    // checksum, and the line splits into 4 plausible fields. Only the
+    // checksum's a18 form (an ASCII digit run) tells it from a legacy
+    // line; corrupted, it must read as incomplete so the unit re-runs.
+    val manDir = "/tmp/graft_manifest_crc_tab"
+    def rm(p: java.io.File): Unit = {
+      if (p.isDirectory) p.listFiles().foreach(rm)
+      p.delete(); ()
+    }
+    rm(new java.io.File(manDir))
+    new java.io.File(manDir).mkdirs()
+    RunLedger.appendManifest(manDir, "orders", 3, 100L, "987654321")
+    RunLedger.appendManifest(manDir, "orders", 5, 100L, "12345")
+    val manPath = java.nio.file.Paths.get(s"$manDir/manifest.tsv")
+    val lines = new String(java.nio.file.Files.readAllBytes(manPath), "UTF-8").split("\n")
+    val lastTab = lines(1).lastIndexOf('\t')
+    val torn = lines(1).substring(0, lastTab) + "x" + lines(1).substring(lastTab + 1)
+    java.nio.file.Files.write(manPath, s"${lines(0)}\n$torn\n".getBytes("UTF-8"))
+    assert(torn.split("\t", -1).length == 4, s"the corruption must leave 4 fields: $torn")
+    assert(RunLedger.readManifest(manDir) == Map(("orders", 3) -> ((100L, "987654321"))),
+      s"a corrupted CRC line must be untrusted, got ${RunLedger.readManifest(manDir)}")
   }
 
   test("composed repairKeyspace: verify-and-heal re-copies exactly the rotted/missing units, parity green") {
@@ -1305,5 +1343,66 @@ class MigrationSpec extends AnyFunSuite {
       WriteConf(), man, nRanges)
     assert(healed.ok && rec.units == Set(spurious), s"healed ${rec.units}")
     assert(Tables.t(spark, dst, spurious).count() == 0L)
+  }
+
+  test("copy: a landed unit whose count is right but whose content is not is never recorded complete") {
+    import graft.sources._
+    import org.apache.spark.sql.functions.{col, min, when}
+    val names = Seq("orders", "region")
+    val nRanges = 2
+    val src = new FixtureSubset(names)
+    val (dst, man) = freshDirs("copy_content")
+    // Shifts one price on its first write of an orders unit: the unit
+    // lands with the source's row count and the wrong content.
+    final class PerturbsOnce(underlying: TableSink) extends TableSink {
+      @volatile var perturbed = ""
+      def write(df: org.apache.spark.sql.DataFrame, t: String, o: Map[String, String]): Unit =
+        if (perturbed.isEmpty && t.startsWith("orders/")) {
+          perturbed = t
+          val key = df.agg(min(col("o_orderkey"))).head().get(0)
+          underlying.write(df.withColumn("o_totalprice",
+            when(col("o_orderkey") === key, col("o_totalprice") + 1.0)
+              .otherwise(col("o_totalprice"))), t, o)
+        } else underlying.write(df, t, o)
+    }
+    val sink = new PerturbsOnce(new ParquetSink(dst))
+    val e = intercept[IllegalArgumentException] {
+      Migration.copyKeyspace(spark, src, sink, new ParquetSource(dst), WriteConf(), man, nRanges)
+    }
+    assert(e.getMessage.contains("refusing to mark complete"), e.getMessage)
+    val bad = sink.perturbed.split("/range_") match { case Array(t, r) => (t, r.toInt) }
+    assert(!RunLedger.readManifest(man).contains(bad), s"$bad recorded complete")
+    val landedRows = Tables.t(spark, dst, sink.perturbed).count()
+    val rec = new Landed(new ParquetSink(dst))
+    val resumed = Migration.copyKeyspace(spark, src, rec, new ParquetSource(dst),
+      WriteConf(), man, nRanges)
+    assert(rec.units.contains(sink.perturbed), s"resume did not re-land ${sink.perturbed}")
+    assert(resumed.ranges.exists(u => (u.table, u.range) == bad && u.rows == landedRows),
+      "the perturbed landing must have kept the unit's row count")
+    assert(resumed.ok, s"parity after re-landing: ${resumed.verify}")
+    assertCleanManifest(man, (for (t <- names; u <- 0 until nRanges) yield (t, u)).toSet)
+  }
+
+  test("repair: refuses a source schema that drifted from keyspace.ddl, writing nothing") {
+    import graft.sources._
+    val src = new FixtureSubset(Seq("nation", "region"))
+    val (dst, man) = freshDirs("repair_drift")
+    assert(Migration.copyKeyspace(spark, src, new ParquetSink(dst), new ParquetSource(dst),
+      WriteConf(), man, nRanges = 2).ok)
+    // The drift spec's edit: the pinned DDL no longer matches the source.
+    val ddlPath = java.nio.file.Paths.get(s"$man/keyspace.ddl")
+    val pinned = new String(java.nio.file.Files.readAllBytes(ddlPath), "UTF-8")
+    java.nio.file.Files.write(ddlPath,
+      pinned.replaceFirst("CREATE TABLE region \\(",
+        "CREATE TABLE region (legacy_col TEXT, ").getBytes("UTF-8"))
+    val before = RunLedger.readManifest(man)
+    val rec = new Landed(new ParquetSink(dst))
+    val e = intercept[IllegalArgumentException] {
+      Migration.repairKeyspace(spark, src, rec, new ParquetSource(dst), WriteConf(), man,
+        nRanges = 2)
+    }
+    assert(e.getMessage.contains("schema drifted"), e.getMessage)
+    assert(rec.units.isEmpty && RunLedger.readManifest(man) == before,
+      "a refused repair must touch neither the destination nor the manifest")
   }
 }
