@@ -1,8 +1,10 @@
 package graft
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
+
+import graft.functions.{ExactSum6, Kernels, Md5Prefix}
 
 /** Determinism canon (SURVEY §5.3): helpers that make Spark results
   * hash-match an independent DuckDB run of the equivalent SQL.
@@ -14,6 +16,12 @@ import org.apache.spark.sql.types.DecimalType
   * partition counts are 1000×. Sums therefore go through exact
   * DECIMAL(38,6) arithmetic and only then back to double; ratios are
   * rounded to a tolerance far above accumulated FP noise.
+  *
+  * Both canon primitives run on native longs, with values identical to
+  * their Spark SQL definitions: every DECIMAL(38,6) sum is
+  * [[exactSum]] (the `graft.functions.ExactSum6` kernel) and every md5
+  * hex-prefix integer is [[md5Prefix]] (`graft.functions.Md5Prefix`).
+  * No operator spells either one out.
   */
 object Canon {
 
@@ -39,19 +47,35 @@ object Canon {
       : org.apache.spark.sql.DataFrame =
     df.repartition(col(keys.head)).orderBy(keys.map(col): _*)
 
+  /** `sum(CAST(c AS DECIMAL(38,6)))`, value for value: the exact
+    * DECIMAL(38,6) sum, NULL when no input is non-null. Oracle mirror:
+    * `SUM(CAST(x AS DECIMAL(38,6)))`.
+    */
+  def exactSum(c: Column): Column = {
+    Kernels.ensureRegistered(SparkSession.active)
+    call_function(ExactSum6.Name, c)
+  }
+
+  /** `CAST(conv(substring(md5(c), start, len), 16, 10) AS BIGINT)`:
+    * hex digits `[start, start + len)` of md5(c) as a BIGINT (len ≤ 15).
+    * SQL strings call the same kernel as `graft_md5_prefix(c, start, len)`.
+    */
+  def md5Prefix(c: Column, start: Int, len: Int): Column = {
+    Kernels.ensureRegistered(SparkSession.active)
+    call_function(Md5Prefix.Name, c, lit(start), lit(len))
+  }
+
   /** Exact sum: cast each element to DECIMAL(38,6) (identical
     * nearest-rounding in both engines), sum exactly, emit double.
     * Oracle mirror: `CAST(SUM(CAST(x AS DECIMAL(38,6))) AS DOUBLE)`.
     */
-  def dsum(c: Column): Column =
-    sum(c.cast(DecimalType(38, 6))).cast("double")
+  def dsum(c: Column): Column = exactSum(c).cast("double")
 
   /** Order-insensitive average: exact decimal sum ÷ non-null count in
     * double, rounded to 4. Oracle mirror:
     * `ROUND(CAST(SUM(CAST(x AS DECIMAL(38,6))) AS DOUBLE)/COUNT(x), 4)`.
     */
-  def davg(c: Column): Column =
-    round(sum(c.cast(DecimalType(38, 6))).cast("double") / count(c), 4)
+  def davg(c: Column): Column = round(dsum(c) / count(c), 4)
 
   /** Tolerance-round for intrinsically FP quantities (stddev, corr,
     * cosine): accumulated error ~1e-12 relative, rounded at 1e-4.
@@ -82,7 +106,7 @@ object Canon {
     * double in both engines. Mirror: [[oDavgFloor6]].
     */
   def davgFloor6(c: Column, n: Column): Column =
-    floor((sum(c.cast(DecimalType(38, 6))) * 1000000).cast("long")
+    floor((exactSum(c) * 1000000).cast("long")
       .cast("double") / n) / 1000000.0
 
   /** Identity-safe rounding for a 1e-6-exact PURE SUM: round at the

@@ -50,12 +50,7 @@ object Tables {
     */
   def t(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // Register the codegen'd dot kernel on the session that will own
-    // the plans built from this scan (idempotent) — the one seam every
-    // operator passes through, so `adot` never depends on which
-    // session happens to be thread-active at Column-construction time.
-    graft.functions.ArrayDot.ensureRegistered(spark)
-    graft.functions.EditDistance.ensureRegistered(spark)
+    graft.functions.Kernels.ensureRegistered(spark)
     parquet(spark, path(sfDir, name))
   }
 

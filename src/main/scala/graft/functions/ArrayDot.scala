@@ -1,7 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodeGenerator, ExprCode}
@@ -107,28 +106,14 @@ case class ArrayDot(left: Expression, right: Expression)
 }
 
 object ArrayDot {
-  private val Name = "graft_array_dot"
-
-  /** Registers the expression on the session's function registry
-    * (idempotent; temp function, so it never leaks into a catalog).
-    * The registry route keeps us on the public Column surface —
-    * `call_function` resolves the name at analysis — instead of the
-    * `private[sql]` Column↔Expression converters.
-    */
-  def ensureRegistered(spark: SparkSession): Unit = {
-    val fr = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry
-    if (!fr.functionExists(FunctionIdentifier(Name)))
-      fr.createOrReplaceTempFunction(Name,
-        args => ArrayDot(args.head, args(1)), "built-in")
-  }
+  private[functions] val Name = "graft_array_dot"
 
   /** Column-API entry point: `adot(a, b)` — drop-in for the
     * `aggregate(zip_with(...))` fold it replaces. Registers on the
     * active session on first use.
     */
   def adot(a: Column, b: Column): Column = {
-    ensureRegistered(SparkSession.active)
+    Kernels.ensureRegistered(SparkSession.active)
     call_function(Name, a, b)
   }
 

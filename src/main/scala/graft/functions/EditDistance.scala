@@ -1,7 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -170,22 +169,11 @@ case class EditDistance(left: Expression, right: Expression)
 }
 
 object EditDistance {
-  private val Name = "graft_edit_distance"
-
-  /** Idempotent temp-function registration (the [[ArrayDot]] route:
-    * public Column surface via `call_function`).
-    */
-  def ensureRegistered(spark: SparkSession): Unit = {
-    val fr = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry
-    if (!fr.functionExists(FunctionIdentifier(Name)))
-      fr.createOrReplaceTempFunction(Name,
-        args => EditDistance(args.head, args(1)), "built-in")
-  }
+  private[functions] val Name = "graft_edit_distance"
 
   /** Column-API entry point: exact Levenshtein distance (INT). */
   def edist(a: Column, b: Column): Column = {
-    ensureRegistered(SparkSession.active)
+    Kernels.ensureRegistered(SparkSession.active)
     org.apache.spark.sql.functions.call_function(Name, a, b)
   }
 }

@@ -354,8 +354,7 @@ object Analytics {
     val ev = Tables.t(spark, sfDir, "events")
     val isA = substring(md5(concat(lit("arm:"), col("event_id").cast("string"))), 1, 1) < "8"
     def dsumIf(cond: Column, c: Column) =
-      sum(when(cond, c).otherwise(lit(0.0))
-        .cast(org.apache.spark.sql.types.DecimalType(38, 6))).cast("double")
+      graft.Canon.dsum(when(cond, c).otherwise(lit(0.0)))
     val m = ev
       .select(col("event_type"), col("value"), isA.as("a"))
       .groupBy(col("event_type"))
@@ -401,17 +400,16 @@ object Analytics {
     */
   def olsTrend(spark: SparkSession, sfDir: String): DataFrame = {
     val ev = Tables.t(spark, sfDir, "events")
-    def d(c: Column) = c.cast(org.apache.spark.sql.types.DecimalType(38, 6))
     val m = ev
       .select(col("event_type"),
         (Tables.tsUs(ev) / lit(86400000000.0)).as("x"), col("value").as("y"))
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"),
-        sum(d(col("x"))).cast("double").as("sx"),
-        sum(d(col("y"))).cast("double").as("sy"),
-        sum(d(col("x") * col("y"))).cast("double").as("sxy"),
-        sum(d(col("x") * col("x"))).cast("double").as("sxx"),
-        sum(d(col("y") * col("y"))).cast("double").as("syy"))
+        graft.Canon.dsum(col("x")).as("sx"),
+        graft.Canon.dsum(col("y")).as("sy"),
+        graft.Canon.dsum(col("x") * col("y")).as("sxy"),
+        graft.Canon.dsum(col("x") * col("x")).as("sxx"),
+        graft.Canon.dsum(col("y") * col("y")).as("syy"))
     m.select(col("event_type"), col("n"),
         (col("n") * col("sxy") - col("sx") * col("sy")).as("num"),
         (col("n") * col("sxx") - col("sx") * col("sx")).as("den"),
@@ -542,8 +540,7 @@ object Analytics {
       .groupBy(col("user_id"))
       .agg(expr(s"max(ts_us) div $DayUs").as("lastday"),
         count(lit(1)).as("frequency"),
-        sum(col("value").cast(org.apache.spark.sql.types.DecimalType(38, 6)))
-          .cast("double").as("monetary"))
+        graft.Canon.dsum(col("value")).as("monetary"))
     val withR = users
       .crossJoin(broadcast(users.agg(max(col("lastday")).as("refday"))))
       .select(col("user_id"), (col("refday") - col("lastday")).as("recency_days"),
@@ -622,7 +619,6 @@ object Analytics {
     * ulp, exactly what the canon bans (the c39/stddev precedent).
     */
   def corrMatrix(spark: SparkSession, sfDir: String): DataFrame = {
-    def d(c: Column) = c.cast(org.apache.spark.sql.types.DecimalType(38, 6))
     val vals = Tables.t(spark, sfDir, "embeddings")
       .select(col("vec_id"), posexplode(col("embedding")).as(Seq("i", "v")))
       .where(col("i") < CorrDims)
@@ -635,11 +631,11 @@ object Analytics {
         col("a.v").as("x"), col("b.v").as("y"))
     pairs.groupBy(col("dim_i"), col("dim_j"))
       .agg(count(lit(1)).as("n"),
-        sum(d(col("x"))).cast("double").as("sx"),
-        sum(d(col("y"))).cast("double").as("sy"),
-        sum(d(col("x") * col("x"))).cast("double").as("sxx"),
-        sum(d(col("y") * col("y"))).cast("double").as("syy"),
-        sum(d(col("x") * col("y"))).cast("double").as("sxy"))
+        graft.Canon.dsum(col("x")).as("sx"),
+        graft.Canon.dsum(col("y")).as("sy"),
+        graft.Canon.dsum(col("x") * col("x")).as("sxx"),
+        graft.Canon.dsum(col("y") * col("y")).as("syy"),
+        graft.Canon.dsum(col("x") * col("y")).as("sxy"))
       .select(col("dim_i"), col("dim_j"), col("n"),
         round((col("n") * col("sxy") - col("sx") * col("sy")) /
           sqrt((col("n") * col("sxx") - col("sx") * col("sx")) *
@@ -800,7 +796,6 @@ object Analytics {
     * is the exact fit (the c84-vs-b50 positioning).
     */
   def giniConcentration(spark: SparkSession, sfDir: String): DataFrame = {
-    def d(c: Column) = c.cast(org.apache.spark.sql.types.DecimalType(38, 6))
     val ranked = graft.ops.OrderStats.cumLe(
         Tables.t(spark, sfDir, "events")
           .select(col("event_type"), col("value"), col("event_id"),
@@ -809,8 +804,8 @@ object Analytics {
       .withColumn("i", col("cum_le"))
     ranked.groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"),
-        sum(d(col("value"))).cast("double").as("sx"),
-        sum(d(col("i") * col("value"))).cast("double").as("six"))
+        graft.Canon.dsum(col("value")).as("sx"),
+        graft.Canon.dsum(col("i") * col("value")).as("six"))
       .select(col("event_type"), col("n"),
         round(col("sx") / col("n"), 4).as("mean_value"),
         round((lit(2.0) * col("six") - (col("n") + 1) * col("sx")) /
@@ -857,7 +852,6 @@ object Analytics {
     * precondition.
     */
   def autocorrelation(spark: SparkSession, sfDir: String): DataFrame = {
-    def d(c: Column) = c.cast(org.apache.spark.sql.types.DecimalType(38, 6))
     val ev = Tables.t(spark, sfDir, "events")
     val ordered = ev.select(col("event_type"), col("value"),
       Tables.tsUs(ev).as("ts_us"), col("event_id"))
@@ -891,11 +885,11 @@ object Analytics {
         col("p.x").as("x"), col("p.y").as("y"))
     val moments = pairs.groupBy(col("event_type"), col("lag"))
       .agg(count(lit(1)).as("n"),
-        sum(d(col("x"))).cast("double").as("sx"),
-        sum(d(col("y"))).cast("double").as("sy"),
-        sum(d(col("x") * col("x"))).cast("double").as("sxx"),
-        sum(d(col("y") * col("y"))).cast("double").as("syy"),
-        sum(d(col("x") * col("y"))).cast("double").as("sxy"))
+        graft.Canon.dsum(col("x")).as("sx"),
+        graft.Canon.dsum(col("y")).as("sy"),
+        graft.Canon.dsum(col("x") * col("x")).as("sxx"),
+        graft.Canon.dsum(col("y") * col("y")).as("syy"),
+        graft.Canon.dsum(col("x") * col("y")).as("sxy"))
     val spine = ordered.select(col("event_type")).distinct()
       .crossJoin(broadcast(ordered.sparkSession.range(1, AcfLags + 1)
         .select(col("id").as("lag"))))
@@ -998,7 +992,7 @@ object Analytics {
       .select(col("event_type"), col("value"), col("event_id"),
         explode(expr(s"sequence(0, ${BootReps - 1})")).as("rep"))
       .withColumn("u", expr(
-        "(CAST(conv(substring(md5(concat('boot:', CAST(rep AS STRING), ':', CAST(event_id AS STRING))), 1, 8), 16, 10) AS BIGINT) + 0.5) / 4294967296.0"))
+        "(CAST(graft_md5_prefix(concat('boot:', CAST(rep AS STRING), ':', CAST(event_id AS STRING)), 1, 8) AS BIGINT) + 0.5) / 4294967296.0"))
       .withColumn("m", expr(cdfCase))
     val repMeans = reps.groupBy(col("event_type"), col("rep"))
       .agg((graft.Canon.dsum(col("m") * col("value")) /
@@ -1047,8 +1041,7 @@ object Analytics {
       .agg(count(lit(1)).as("n_events"))
     seg.groupBy(col("user_id"))
       .agg(sum(col("dt")).as("span_us"),
-        sum(col("contrib").cast(org.apache.spark.sql.types.DecimalType(38, 6)))
-          .cast("double").as("csum"))
+        graft.Canon.dsum(col("contrib")).as("csum"))
       .join(base, Seq("user_id"), "right")
       .select(col("user_id"), col("n_events"), col("span_us"),
         when(col("span_us") > 0, round(col("csum") / col("span_us"), 4))
@@ -1071,7 +1064,6 @@ object Analytics {
     * sqrt's irrational output makes the 1e-4 rounding tie-free.
     */
   def burstiness(spark: SparkSession, sfDir: String): DataFrame = {
-    def d(c: Column) = c.cast(org.apache.spark.sql.types.DecimalType(38, 6))
     val ev = Tables.t(spark, sfDir, "events")
     val ordered = ev.select(col("user_id"),
       Tables.tsUs(ev).as("ts_us"), col("event_id"))
@@ -1087,9 +1079,8 @@ object Analytics {
     // engines (exact below 2^53, identically rounded above).
     gaps.groupBy(col("user_id"))
       .agg(count(lit(1)).as("n_gaps"),
-        sum(d(col("g"))).cast("double").as("s1"),
-        sum(d(col("g").cast("double") * col("g").cast("double")))
-          .cast("double").as("s2"))
+        graft.Canon.dsum(col("g")).as("s1"),
+        graft.Canon.dsum(col("g").cast("double") * col("g").cast("double")).as("s2"))
       .where(col("n_gaps") >= 2)
       .select(col("user_id"), col("n_gaps"),
         round(col("s1") / col("n_gaps") / 1000000.0, 4).as("mean_gap_s"),

@@ -72,7 +72,11 @@ object CurationRun {
   private[graft] val StageNames =
     Vector("corpus", "dedup", "decontaminate", "quality", "mix", "pack")
 
-  private[graft] def stageFile(i: Int) = s"stage${i}_${StageNames(i)}.parquet"
+  /** Stage `i`'s artifact table name under the run dir ([[Tables.t]]
+    * reads it through the schema memo); [[stageFile]] is its file.
+    */
+  private def stageTable(i: Int) = s"stage${i}_${StageNames(i)}"
+  private[graft] def stageFile(i: Int) = stageTable(i) + ".parquet"
 
   private[graft] val RunDirConf = "spark.graft.curationRunDir"
 
@@ -106,7 +110,7 @@ object CurationRun {
     Memo.atomicArtifact(dir, name) { scratch =>
       build.write.parquet(new java.io.File(scratch, name).toString)
     }
-    val df = spark.read.parquet(target.toString)
+    val df = Tables.t(spark, dir, stageTable(i))
     val (rows, cs) = RunLedger.countAndChecksum(df)
     RunLedger.readManifest(dir).get((StageNames(i), i)) match {
       case Some((mRows, mCs)) =>
@@ -193,7 +197,7 @@ object CurationRun {
     */
   private[graft] def funnel(spark: SparkSession, dir: String): DataFrame = {
     val perStage = (0 to 5).map { i =>
-      val df = spark.read.parquet(new java.io.File(dir, stageFile(i)).toString)
+      val df = Tables.t(spark, dir, stageTable(i))
       val nBins =
         if (i == 5)
           countDistinct(concat_ws(":", col("lang"), col("bin"))).as("n_bins")

@@ -131,7 +131,7 @@ object Insights {
   /** The md5 dyadic hash shared with c101's KMV (Relational.scala):
     * first 8 hex digits → uniform u ∈ (0,1). */
   private def mdU(c: Column): Column =
-    (conv(substring(md5(c), 1, 8), 16, 10).cast("double") + lit(0.5)) /
+    (Canon.md5Prefix(c, 1, 8).cast("double") + lit(0.5)) /
       lit(4294967296.0)
 
   /** Distinct (source, trigram-shingle) stream over `documents` —
@@ -845,8 +845,8 @@ object Insights {
   def shardedTopkBounds(spark: SparkSession, sfDir: String): DataFrame = {
     val toks = Tables.t(spark, sfDir, "documents")
       .select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
-      .select(pmod(conv(substring(md5(concat(lit("shard:"),
-        col("doc_id").cast("string"))), 1, 2), 16, 10).cast("long"),
+      .select(pmod(Canon.md5Prefix(concat(lit("shard:"),
+        col("doc_id").cast("string")), 1, 2).cast("long"),
         lit(TopkShards.toLong)).as("shard"), col("w"))
     val counts = toks.groupBy(col("shard"), col("w"))
       .agg(count(lit(1)).as("cnt"))
@@ -1022,7 +1022,7 @@ object Insights {
       .withColumn("day", expr(s"ts_us div $DayUs"))
       .withColumn("hod", expr("(ts_us div 3600000000) % 24"))
     val dh = b.groupBy(col("day"), col("hod"))
-      .agg(sum(col("value").cast(DecimalType(38, 6))).as("s"))
+      .agg(Canon.exactSum(col("value")).as("s"))
       .select(col("day"), col("hod"), col("s"),
         (col("s") * col("s")).as("s2"))
     val prof = dh.groupBy(col("hod"))
@@ -1071,8 +1071,8 @@ object Insights {
       .join(broadcast(part.select(col("p_partkey"), col("p_brand"))),
         col("l_partkey") === col("p_partkey"))
       .groupBy(col("p_brand"))
-      .agg(sum((col("l_extendedprice") * (lit(1.0) - col("l_discount")))
-        .cast(DecimalType(38, 6))).as("rev_d"))
+      .agg(Canon.exactSum(col("l_extendedprice") * (lit(1.0) - col("l_discount")))
+        .as("rev_d"))
     val w = Window.orderBy(col("rev_d").desc, col("p_brand").asc)
       .rowsBetween(Window.unboundedPreceding, 0)
     val wAll = Window.partitionBy()
@@ -1137,7 +1137,7 @@ object Insights {
     val (_, _, vcp) = funnelStages(spark, sfDir)
     val lat = vcp.select((col("p1") - col("vts")).as("lat_us"))
     val n = lat.agg(count(lit(1)).as("n"),
-      sum(col("lat_us").cast(DecimalType(38, 6))).cast("double").as("s"))
+      Canon.dsum(col("lat_us")).as("s"))
     val tallies = lat.groupBy(col("lat_us").as("v"))
       .agg(count(lit(1)).as("cnt"))
     OrderStats.cumLe(tallies, Nil, Nil)
@@ -1282,10 +1282,8 @@ object Insights {
     val halves = e.crossJoin(broadcast(bounds))
       .groupBy(col("event_type"))
       .agg(
-        sum(when(col("day") < col("mid"),
-          col("value").cast(DecimalType(38, 6)))).cast("double").as("v1"),
-        sum(when(col("day") >= col("mid"),
-          col("value").cast(DecimalType(38, 6)))).cast("double").as("v2"),
+        Canon.dsum(when(col("day") < col("mid"), col("value"))).as("v1"),
+        Canon.dsum(when(col("day") >= col("mid"), col("value"))).as("v2"),
         sum(when(col("day") < col("mid"), 1L).otherwise(0L)).as("n1"),
         sum(when(col("day") >= col("mid"), 1L).otherwise(0L)).as("n2"))
     halves.select(col("event_type"), col("n1"), col("n2"),
@@ -1402,7 +1400,7 @@ object Insights {
       .agg(count(lit(1)).as("n_users"))
     val curve = e.join(firstDay, Seq("user_id"))
       .groupBy(col("cohort"), (col("day") - col("cohort")).as("age"))
-      .agg(sum(col("value").cast(DecimalType(38, 6))).as("pv_d"))
+      .agg(Canon.exactSum(col("value")).as("pv_d"))
     val w = Window.partitionBy(col("cohort")).orderBy(col("age").asc)
       .rowsBetween(Window.unboundedPreceding, 0)
     curve
@@ -1475,11 +1473,9 @@ object Insights {
     val perUser = e.crossJoin(broadcast(bounds))
       .groupBy(col("user_id"))
       .agg(
-        coalesce(sum(when(col("day") < col("mid"),
-          col("value").cast(DecimalType(38, 6)))),
+        coalesce(Canon.exactSum(when(col("day") < col("mid"), col("value"))),
           lit(0).cast(DecimalType(38, 6))).as("x"),
-        coalesce(sum(when(col("day") >= col("mid"),
-          col("value").cast(DecimalType(38, 6)))),
+        coalesce(Canon.exactSum(when(col("day") >= col("mid"), col("value"))),
           lit(0).cast(DecimalType(38, 6))).as("y"))
       .withColumn("a", userArmA(col("user_id")))
     val m = perUser.agg(
@@ -1537,8 +1533,7 @@ object Insights {
     def cell(arm: Column, post: Boolean) = {
       val inPeriod = if (post) col("day") >= col("mid")
         else col("day") < col("mid")
-      (sum(when(arm && inPeriod, col("value").cast(DecimalType(38, 6))))
-        .cast("double"),
+      (Canon.dsum(when(arm && inPeriod, col("value"))),
         sum(when(arm && inPeriod, 1L).otherwise(0L)))
     }
     val (saPre, naPre) = cell(col("a"), post = false)
@@ -1679,7 +1674,7 @@ object Insights {
     val ev = Tables.t(spark, sfDir, "events")
     val perUser = ev.select(col("user_id"), col("value"))
       .groupBy(col("user_id"))
-      .agg(sum(col("value").cast(DecimalType(38, 6))).as("v"))
+      .agg(Canon.exactSum(col("value")).as("v"))
     val nTot = perUser.agg(count(lit(1)).as("n"),
       sum(col("v")).as("tot"))
     val ranked = OrderStats.cumLe(perUser.withColumn("cnt", lit(1L)),

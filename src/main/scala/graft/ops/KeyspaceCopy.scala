@@ -130,7 +130,7 @@ object KeyspaceCopy {
     */
   private def rangeCol(schema: StructType, nRanges: Int): Column =
     pmod(
-      conv(substring(md5(concat(lit("rng:"), RunLedger.rowRender(schema))), 1, 4), 16, 10)
+      graft.Canon.md5Prefix(concat(lit("rng:"), RunLedger.rowRender(schema)), 1, 4)
         .cast("int"),
       lit(nRanges))
 

@@ -55,7 +55,7 @@ object Llm {
     * 8-column row per (partition, doc) before the shuffle.
     *
     * The min-hash value is the first 60 bits of `md5("<seed>:" ++
-    * shingle)` as a BIGINT (`conv(substr(hex,1,15),16,10)` here;
+    * shingle)` as a BIGINT (`Canon.md5Prefix(.., 1, 15)` here;
     * `CAST('0x'||substr(md5(..),1,15) AS BIGINT)` in DuckDB — verified
     * bit-identical). Numeric min over a 60-bit prefix is the same
     * min-hash family as lexicographic min over the hex digest, but the
@@ -84,7 +84,7 @@ object Llm {
         "transform(sequence(0, size(ws) - 3), i -> concat_ws(' ', ws[i], ws[i+1], ws[i+2]))"))
         .as("shingle"))
     val minCols = (0 until MinhashSeeds).map(s =>
-      min(conv(substring(md5(concat(lit(s"$s:"), col("shingle"))), 1, 15), 16, 10)
+      min(md5Prefix(concat(lit(s"$s:"), col("shingle")), 1, 15)
         .cast("long")).as(s"mh$s"))
     shingles.groupBy(col("doc_id"))
       .agg(minCols.head, minCols.tail: _*)
@@ -479,7 +479,7 @@ object Llm {
     val dirty = docs
       .where(substring(md5(concat(lit("typo:"), col("doc_id").cast("string"))), 1, 1) < "8")
       .select(col("doc_id").as("dirty_id"),
-        expr("CAST(conv(substring(md5(concat('pos:', CAST(doc_id AS STRING))), 1, 4), 16, 10) AS INT) % length(text)").as("pos"),
+        expr("CAST(graft_md5_prefix(concat('pos:', CAST(doc_id AS STRING)), 1, 4) AS INT) % length(text)").as("pos"),
         col("text"))
       .select(col("dirty_id"),
         expr("concat(substring(text, 1, pos), substring(text, pos + 2))").as("t"))
@@ -637,7 +637,7 @@ object Llm {
         when(substring(md5(concat(lit("link:"), col("c_custkey").cast("string"))), 2, 1) < "8", 0)
           .otherwise(1))
       .withColumn("npos",
-        expr("CAST(conv(substring(md5(concat('lpos:', CAST(c_custkey AS STRING))), 1, 4), 16, 10) AS INT) % length(c_name)"))
+        expr("CAST(graft_md5_prefix(concat('lpos:', CAST(c_custkey AS STRING)), 1, 4) AS INT) % length(c_name)"))
       .select(
         col("c_custkey").as("dirty_id"),
         expr("CASE WHEN cls = 0 THEN concat(substring(c_name, 1, npos), substring(c_name, npos + 2)) ELSE c_name END").as("name_d"),
@@ -1123,8 +1123,8 @@ object Llm {
   def minhashCalibration(spark: SparkSession, sfDir: String): DataFrame = {
     val pairs = minhashPairs(spark, sfDir)
     val tot = pairs.agg(count(lit(1)).as("npairs"))
-    val u = conv(substring(md5(concat(lit("cal:"), col("doc_a").cast("string"),
-      lit(":"), col("doc_b").cast("string"))), 1, 15), 16, 10)
+    val u = md5Prefix(concat(lit("cal:"), col("doc_a").cast("string"),
+      lit(":"), col("doc_b").cast("string")), 1, 15)
       .cast("double") / lit(math.pow(2, 60))
     val samp = pairs.crossJoin(broadcast(tot))
       .where(u < lit(CalBudget.toDouble) / col("npairs"))
@@ -1170,7 +1170,7 @@ object Llm {
   private[graft] val IncMod = 5L
   private[graft] val IncTau = 0.5
   private[graft] def isIncoming(id: Column): Column =
-    conv(substring(md5(concat(lit("inc:"), id.cast("string"))), 1, 15), 16, 10)
+    md5Prefix(concat(lit("inc:"), id.cast("string")), 1, 15)
       .cast("long") % IncMod === 0L
 
   /** c50 — incremental dedup: gate an incoming batch against the
@@ -1336,7 +1336,7 @@ object Llm {
     // corpus size, so eval cost stays linear in n.
     val t = (KnnEvalPanel.toLong << 32) / NearDup.embCount(spark, sfDir)
     val probes = emb
-      .where(expr("CAST(conv(substring(md5(concat('knn:', CAST(vec_id AS STRING))), 1, 8), 16, 10) AS BIGINT)") < t)
+      .where(expr("CAST(graft_md5_prefix(concat('knn:', CAST(vec_id AS STRING)), 1, 8) AS BIGINT)") < t)
       .select(col("vec_id").as("pid"), col("embedding").as("pe"),
         col("label").as("plabel"))
     val scored = emb.join(broadcast(probes), col("vec_id") =!= col("pid"))

@@ -282,8 +282,8 @@ object Migration {
       substring(md5(concat(lit("tok:"), c.cast("string"))), 1, n)
     def cents(p: org.apache.spark.sql.Column) = round(p * 100).cast("long")
     def fp(key: org.apache.spark.sql.Column, cts: org.apache.spark.sql.Column) =
-      conv(substring(md5(concat(key.cast("string"), lit(":"), cts.cast("string"))), 1, 15),
-        16, 10).cast(org.apache.spark.sql.types.DecimalType(38, 0))
+      md5Prefix(concat(key.cast("string"), lit(":"), cts.cast("string")), 1, 15)
+        .cast(org.apache.spark.sql.types.DecimalType(38, 0))
     val o = Tables.t(spark, sfDir, "orders")
     val src = o.select(col("o_orderkey").as("key"), cents(col("o_totalprice")).as("cts"))
     val tgt = o
@@ -780,7 +780,7 @@ object Migration {
         case (c, _) => s"coalesce(CAST($c AS STRING), '')"
       }
       val rowHash =
-        s"CAST(conv(substring(md5(concat_ws('|', ${frags.mkString(", ")})), 1, 8), 16, 10) AS BIGINT)"
+        s"CAST(graft_md5_prefix(concat_ws('|', ${frags.mkString(", ")}), 1, 8) AS BIGINT)"
       Tables.canonical(spark, sfDir, tname)
         .select(expr(rowHash).cast(org.apache.spark.sql.types.DecimalType(38, 0)).as("h"))
         .agg(count(lit(1)).as("n_rows"),

@@ -718,7 +718,7 @@ object NearDup {
       .select(col("doc_id"), col("source"), col("text").cast("binary").as("tb"))
       .withColumn("bnd", expr(
         s"""filter(sequence($CdcWindow, greatest(length(tb), $CdcWindow)),
-           |  i -> conv(substring(md5(substring(tb, i - ${CdcWindow - 1}, $CdcWindow)), 31, 2), 16, 10) % $CdcDiv = 0)""".stripMargin))
+           |  i -> graft_md5_prefix(substring(tb, i - ${CdcWindow - 1}, $CdcWindow), 31, 2) % $CdcDiv = 0)""".stripMargin))
       .withColumn("cuts", expr(
         "concat(array(0), filter(bnd, x -> x < length(tb)), array(length(tb)))"))
       .select(col("doc_id"), col("source"), explode(expr(

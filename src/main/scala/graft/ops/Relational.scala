@@ -521,13 +521,12 @@ object Relational {
     def partials(rows: DataFrame): DataFrame = rows
       .groupBy(col("l_returnflag"), col("l_linestatus"), isDelta.as("is_delta"))
       .agg(
-        sum(col("l_quantity").cast(org.apache.spark.sql.types.DecimalType(38, 6))).as("p_qty"),
-        sum(col("l_extendedprice").cast(org.apache.spark.sql.types.DecimalType(38, 6))).as("p_base"),
-        sum((col("l_extendedprice") * (lit(1) - col("l_discount")))
-          .cast(org.apache.spark.sql.types.DecimalType(38, 6))).as("p_disc"),
-        sum((col("l_extendedprice") * (lit(1) - col("l_discount")) * (lit(1) + col("l_tax")))
-          .cast(org.apache.spark.sql.types.DecimalType(38, 6))).as("p_charge"),
-        sum(col("l_discount").cast(org.apache.spark.sql.types.DecimalType(38, 6))).as("p_discsum"),
+        exactSum(col("l_quantity")).as("p_qty"),
+        exactSum(col("l_extendedprice")).as("p_base"),
+        exactSum(col("l_extendedprice") * (lit(1) - col("l_discount"))).as("p_disc"),
+        exactSum(col("l_extendedprice") * (lit(1) - col("l_discount")) * (lit(1) + col("l_tax")))
+          .as("p_charge"),
+        exactSum(col("l_discount")).as("p_discsum"),
         count(lit(1)).as("p_n"))
     partials(li)
       .groupBy(col("l_returnflag"), col("l_linestatus"))
@@ -750,7 +749,7 @@ object Relational {
     docs
       .select(col("lang"), explode(split(col("text"), " ")).as("w"))
       .select(col("lang"), col("w"),
-        ((conv(substring(md5(col("w")), 1, 8), 16, 10).cast("double") + lit(0.5)) /
+        ((md5Prefix(col("w"), 1, 8).cast("double") + lit(0.5)) /
           lit(4294967296.0)).as("u"))
       .groupBy(col("lang"), col("u")).agg(count(lit(1)).as("dummy"))
       .select(col("lang"), col("u"))
@@ -795,7 +794,7 @@ object Relational {
     */
   def countMinSketch(spark: SparkSession, sfDir: String): DataFrame = {
     def bucket(j: Int, c: String) =
-      s"CAST(conv(substring(md5(concat('cms$j:', $c)), 1, 8), 16, 10) AS BIGINT) % $CmsWidth"
+      s"CAST(graft_md5_prefix(concat('cms$j:', $c), 1, 8) AS BIGINT) % $CmsWidth"
     val toks = Tables.t(spark, sfDir, "documents")
       .select(explode(split(col("text"), " ")).as("w"))
     val cells = toks
@@ -860,7 +859,7 @@ object Relational {
     val cap = HllSuffixBits + 1
     items
       .select(keys.map(col) :+
-        expr("CAST(conv(substring(md5(item), 1, 8), 16, 10) AS BIGINT)").as("v"): _*)
+        expr("CAST(graft_md5_prefix(item, 1, 8) AS BIGINT)").as("v"): _*)
       .select(keys.map(col) :+
         expr(s"v div ${1L << HllSuffixBits}").as("bkt") :+
         expr(s"v % ${1L << HllSuffixBits}").as("sfx"): _*)

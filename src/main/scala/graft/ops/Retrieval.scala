@@ -226,7 +226,7 @@ object Retrieval {
     val ranked = rrfFusionFrom(Tables.t(spark, sfDir, "documents"))
       .select(col("q"), col("qrank"), col("rn"), col("doc_id"))
       .withColumn("rel", expr(
-        "CAST(conv(substring(md5(concat('rel:', q, ':', CAST(doc_id AS STRING))), 1, 2), 16, 10) AS BIGINT) % 3"))
+        "CAST(graft_md5_prefix(concat('rel:', q, ':', CAST(doc_id AS STRING)), 1, 2) AS BIGINT) % 3"))
       .withColumn("gain", expr("CAST(shiftleft(1L, CAST(rel AS INT)) - 1 AS DOUBLE)"))
     val ideal = ranked.withColumn("irank", row_number().over(
       Window.partitionBy(col("q"))
@@ -266,7 +266,7 @@ object Retrieval {
     val rel = rrfFusionFrom(Tables.t(spark, sfDir, "documents"))
       .select(col("q"), col("qrank"), col("rn"), col("doc_id"))
       .withColumn("rel", expr(
-        "CAST(conv(substring(md5(concat('rel:', q, ':', CAST(doc_id AS STRING))), 1, 2), 16, 10) AS BIGINT) % 3"))
+        "CAST(graft_md5_prefix(concat('rel:', q, ':', CAST(doc_id AS STRING)), 1, 2) AS BIGINT) % 3"))
     val perQ = rel.groupBy(col("q"), col("qrank"))
       .agg(min(when(col("rel") > 0, col("rn"))).as("first_rel"))
       .select(col("q"), col("qrank"),
@@ -310,7 +310,7 @@ object Retrieval {
 
   /** Kernel of [[weightedSample]] over any (doc_id, lang, n_chars) frame. */
   private[graft] def weightedSampleFrom(docs: DataFrame): DataFrame = {
-    val u = (conv(substring(md5(concat(lit("wsamp:"), col("doc_id").cast("string"))), 1, 8), 16, 10)
+    val u = (Canon.md5Prefix(concat(lit("wsamp:"), col("doc_id").cast("string")), 1, 8)
       .cast("double") + lit(0.5)) / lit(4294967296.0)
     docs
       .select(col("doc_id"), col("lang"), col("n_chars").as("weight"),

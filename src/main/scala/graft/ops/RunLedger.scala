@@ -48,7 +48,7 @@ object RunLedger {
     * would at 1e12 × 2^32).
     */
   private[graft] def rowHash(schema: StructType): Column =
-    conv(substring(md5(rowRender(schema)), 1, 8), 16, 10)
+    graft.Canon.md5Prefix(rowRender(schema), 1, 8)
       .cast("bigint").cast(DecimalType(38, 0))
 
   /** The order-free content checksum aggregate over `schema`'s rows:

@@ -740,7 +740,7 @@ object TextAnalysis {
     val target = counts.agg(min(col("n_lang")).as("target"))
     val rates = counts.crossJoin(broadcast(target))
       .select(col("slang"), (col("target").cast("double") / col("n_lang")).as("rate"))
-    val u = conv(substring(md5(concat(lit("strat:"), col("doc_id").cast("string"))), 1, 8), 16, 10)
+    val u = md5Prefix(concat(lit("strat:"), col("doc_id").cast("string")), 1, 8)
       .cast("double") / lit(4294967296.0)
     docs.join(broadcast(rates), col("lang") === col("slang"))
       .select(col("lang"), col("rate"), (u < col("rate")).as("keep"))
@@ -968,8 +968,8 @@ object TextAnalysis {
   private[graft] def lqScores(spark: SparkSession, sfDir: String): DataFrame = {
     val toks = Tables.t(spark, sfDir, "documents")
       .select(col("doc_id"), col("lang"), explode(split(col("text"), " ")).as("w"))
-    val bucket = expr(s"CAST(conv(substring(md5(concat('feat:', w)), 1, 4), 16, 10) AS BIGINT) % $LqBuckets")
-    val weight = expr("(CAST(conv(substring(md5(concat('wgt:', CAST(b AS STRING))), 1, 8), 16, 10) AS BIGINT) / 4294967296.0) - 0.5")
+    val bucket = expr(s"CAST(graft_md5_prefix(concat('feat:', w), 1, 4) AS BIGINT) % $LqBuckets")
+    val weight = expr("(CAST(graft_md5_prefix(concat('wgt:', CAST(b AS STRING)), 1, 8) AS BIGINT) / 4294967296.0) - 0.5")
     toks
       .withColumn("b", bucket)
       .withColumn("wt", weight)
@@ -1302,14 +1302,12 @@ object TextAnalysis {
     * DuckDB mirror over a CTE named `pts`.
     */
   private def olsOf(pts: DataFrame): DataFrame = {
-    def d(c: org.apache.spark.sql.Column) =
-      c.cast(org.apache.spark.sql.types.DecimalType(38, 6))
     pts.agg(count(lit(1)).as("n"),
-        sum(d(col("x"))).cast("double").as("sx"),
-        sum(d(col("y"))).cast("double").as("sy"),
-        sum(d(col("x") * col("y"))).cast("double").as("sxy"),
-        sum(d(col("x") * col("x"))).cast("double").as("sxx"),
-        sum(d(col("y") * col("y"))).cast("double").as("syy"))
+        dsum(col("x")).as("sx"),
+        dsum(col("y")).as("sy"),
+        dsum(col("x") * col("y")).as("sxy"),
+        dsum(col("x") * col("x")).as("sxx"),
+        dsum(col("y") * col("y")).as("syy"))
       .select(col("n"),
         (col("n") * col("sxy") - col("sx") * col("sy")).as("num"),
         (col("n") * col("sxx") - col("sx") * col("sx")).as("den"),
@@ -1669,8 +1667,8 @@ object TextAnalysis {
         ((col("src_num") % 4) + 1).cast("double") / 8.0)
       .withColumn("eff_rate", col("target_rate") * col("weight"))
       .withColumn("kept",
-        conv(substring(md5(concat(lit("mix:"), col("doc_id").cast("string"))), 1, 2),
-          16, 10).cast("int") < floor(col("eff_rate") * 256).cast("int"))
+        md5Prefix(concat(lit("mix:"), col("doc_id").cast("string")), 1, 2)
+          .cast("int") < floor(col("eff_rate") * 256).cast("int"))
       .groupBy(col("source"))
       .agg(count(lit(1)).as("n_total"),
         count(when(col("kept"), 1)).as("n_kept"),

@@ -199,8 +199,7 @@ object TpchSuite {
       .agg(dsum(col("l_extendedprice")).as("value"))
       .localCheckpoint(true)
     val thr = grouped.agg(
-      (lit(2.0) * sum(col("value").cast(org.apache.spark.sql.types.DecimalType(38, 6)))
-        .cast("double") / count(lit(1))).as("thr"))
+      (lit(2.0) * dsum(col("value")) / count(lit(1))).as("thr"))
     grouped.crossJoin(broadcast(thr))
       .where(col("value") > col("thr"))
       .select(col("p_partkey"), col("value"))
@@ -330,8 +329,7 @@ object TpchSuite {
       .join(broadcast(parts), col("l_partkey") === col("p_partkey"))
     val avgQty = li.groupBy(col("p_partkey").as("apk"))
       .agg((lit(0.2) *
-        (sum(col("l_quantity").cast(org.apache.spark.sql.types.DecimalType(38, 6)))
-          .cast("double") / count(lit(1)))).as("qty_cut"))
+        (dsum(col("l_quantity")) / count(lit(1)))).as("qty_cut"))
     li.join(avgQty, col("p_partkey") === col("apk"))
       .where(col("l_quantity") < col("qty_cut"))
       .agg((dsum(col("l_extendedprice")) / lit(7.0)).as("avg_yearly"),
@@ -391,13 +389,10 @@ object TpchSuite {
       .join(broadcast(blueParts), col("l_partkey") === col("p_partkey"))
       .groupBy(col("l_suppkey"))
       .agg(
-        sum(when(col("l_shipdate") >= lit("1997-01-01") &&
-          col("l_shipdate") < lit("1998-01-01"),
-          col("l_quantity").cast(org.apache.spark.sql.types.DecimalType(38, 6)))
-          .otherwise(lit(0).cast(org.apache.spark.sql.types.DecimalType(38, 6))))
-          .cast("double").as("qty_1997"),
-        sum(col("l_quantity").cast(org.apache.spark.sql.types.DecimalType(38, 6)))
-          .cast("double").as("qty_all"))
+        dsum(when(col("l_shipdate") >= lit("1997-01-01") &&
+          col("l_shipdate") < lit("1998-01-01"), col("l_quantity"))
+          .otherwise(lit(0))).as("qty_1997"),
+        dsum(col("l_quantity")).as("qty_all"))
       .where(col("qty_1997") > lit(0.2) * col("qty_all"))
     flows.join(Tables.t(spark, sfDir, "supplier"),
         col("l_suppkey") === col("s_suppkey"))

@@ -3,7 +3,6 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 import graft.{Canon, Tables}
 
 /** Window functions + time-windowed (streaming-shaped) operators +
@@ -80,7 +79,7 @@ object Windows {
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     Tables.t(spark, sfDir, "orders")
       .withColumn("running_total",
-        sum(col("o_totalprice").cast(DecimalType(38, 6))).over(w).cast("double"))
+        exactSum(col("o_totalprice")).over(w).cast("double"))
       .select(col("o_custkey"), col("o_orderkey"), col("o_orderdate"),
         col("o_totalprice"), col("running_total"))
       .orderBy("o_custkey", "o_orderdate", "o_orderkey")
@@ -120,8 +119,7 @@ object Windows {
         col("o_totalprice"))
       .withColumn("n_30d", count(lit(1)).over(w))
       .withColumn("spend_30d",
-        sum(col("o_totalprice").cast(org.apache.spark.sql.types.DecimalType(38, 6)))
-          .over(w).cast("double"))
+        exactSum(col("o_totalprice")).over(w).cast("double"))
       .select(col("o_custkey"), col("o_orderkey"), col("day"),
         col("n_30d"), col("spend_30d"))
       .orderBy("o_custkey", "day", "o_orderkey")

@@ -635,7 +635,7 @@ object Streams {
       .withColumn("sh", expr(
         "transform(sequence(0, size(ws) - 3), i -> concat_ws(' ', ws[i], ws[i+1], ws[i+2]))"))
     val mhCols = (0 until Llm.MinhashSeeds).map(s => expr(
-      s"array_min(transform(sh, x -> CAST(conv(substring(md5(concat('$s:', x)), 1, 15), 16, 10) AS BIGINT)))")
+      s"array_min(transform(sh, x -> CAST(graft_md5_prefix(concat('$s:', x), 1, 15) AS BIGINT)))")
       .as(s"mh$s"))
     withSh.select((col("doc_id") +: mhCols): _*)
       .select(col("doc_id"), posexplode(expr(

@@ -471,7 +471,7 @@ class PlanSpec extends AnyFunSuite {
   test("b16 agg is two-phase (map-side partial + final) hash aggregation") {
     val p = plan(Relational.q1PricingSummary(spark, sf))
     assert(p.contains("HashAggregate"), p)
-    assert(p.contains("partial_sum"), s"no map-side partial aggregation: $p")
+    assert(p.contains("partial_exact_sum6"), s"no map-side partial aggregation: $p")
   }
 
   test("c62: prefix shortlist fuses to TakeOrderedAndProject; probe broadcasts; no cartesian blowup") {
