@@ -44,12 +44,18 @@ object Bench {
     // JVM/codegen warmup outside any query's timing (one trivial job),
     // plus a footer/first-touch pass over every fixture table so the
     // alphabetically-first queries don't absorb the one-time parquet
-    // footer reads and file-listing costs for all 10 tables.
+    // footer reads and file-listing costs for all 10 tables. The pass
+    // reads through Tables.t, so it also fills the schema memo: no key
+    // pays a table's one inference job. It is charged to
+    // setup_sec_total as `setup_first_touch`. A table the corpus lacks
+    // is skipped here; the keys that read it fail loudly.
     spark.range(100).count()
+    val touch0 = System.nanoTime()
     Tables.names.foreach { n =>
-      try spark.read.parquet(s"$sfDir/$n.parquet").limit(1).count()
+      try Tables.t(spark, sfDir, n).limit(1).count()
       catch { case _: Throwable => () }
     }
+    val setupTouch = (System.nanoTime() - touch0) / 1e9
     // Pre-materialize the per-corpus one-time passes consumed by the
     // whole dedup family: the LSH band table, the candidate-pair table
     // (c2/c3/c11/c21/c22/c31/c43) and the CC cluster-label table
@@ -145,11 +151,11 @@ object Bench {
         if (name == "c199_curation_run")
           spark.conf.set(ops.CurationRun.RunDirConf,
             s"$scratchRoot/curation-pass${c199Pass.incrementAndGet()}")
-        val (c0, s0, k0) = counters.drained()
+        val (c0, s0, k0, _) = counters.drained()
         val t0 = System.nanoTime()
         fn(spark, sfDir).queryExecution.toRdd.count()
         val wall = (System.nanoTime() - t0) / 1e9
-        val (c1, s1, k1) = counters.drained()
+        val (c1, s1, k1, _) = counters.drained()
         (wall, (c1 - c0) / 1e9, s1 - s0, k1 - k0)
       } catch { case e: Throwable =>
         System.err.println(s"[bench] $name failed: ${e.getMessage}")
@@ -213,12 +219,12 @@ object Bench {
     // are never a place to hide per-query work — each one is a
     // memoized artifact consumed by 2+ keys, and moving single-key
     // work there would still be visible right here.
-    val setupSecs = Seq(setupBands, setupPairs, setupLabels, setupGrams,
+    val setupSecs = Seq(setupTouch, setupBands, setupPairs, setupLabels, setupGrams,
       setupToks, setupSimhash, setupVec, setupIngest, setupNdv)
       .filter(_ != Double.MaxValue)
     val json =
       s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"cpu_sec":$cpuJson,""" +
-        s""""spilled_bytes":$spillJson,"spilled_bytes_total":${counters.drained()._2},"tasks":$tasksJson,"setup_lsh_bands":${setupVal(setupBands)},"setup_lsh_pairs":${setupVal(setupPairs)},"setup_cc_labels":${setupVal(setupLabels)},"setup_substr_grams":${setupVal(setupGrams)},"setup_token_sets":${setupVal(setupToks)},"setup_simhash_prints":${setupVal(setupSimhash)},"setup_vec_index":${setupVal(setupVec)},"setup_ingest_index":${setupVal(setupIngest)},"setup_state_ndv":${setupVal(setupNdv)},""" +
+        s""""spilled_bytes":$spillJson,"spilled_bytes_total":${counters.drained()._2},"tasks":$tasksJson,"setup_first_touch":$setupTouch,"setup_lsh_bands":${setupVal(setupBands)},"setup_lsh_pairs":${setupVal(setupPairs)},"setup_cc_labels":${setupVal(setupLabels)},"setup_substr_grams":${setupVal(setupGrams)},"setup_token_sets":${setupVal(setupToks)},"setup_simhash_prints":${setupVal(setupSimhash)},"setup_vec_index":${setupVal(setupVec)},"setup_ingest_index":${setupVal(setupIngest)},"setup_state_ndv":${setupVal(setupNdv)},""" +
         s""""setup_sec_total":${setupSecs.sum},"grading_note":"end-to-end cost = value + setup_sec_total; setups are one-time per-corpus artifacts shared by 2+ keys (BASELINE.md: Reading setup_*); artifact stores are rebuilt in a fresh per-run scratch - nothing persists across JVM runs, and c199 rebuilds its pipeline on every timed invocation",""" +
         s""""failed":$failedJson,"sf":"$sfDir"}"""
     Files.writeString(Paths.get(outFile), json + "\n")

@@ -29,7 +29,10 @@ package graft
   * that hides per-job scheduling latency; tables overlap, at most
   * that many at once; 1 reproduces the strictly sequential walk.
   * The stderr summary includes a throughput line: rows moved (units
-  * written or recorded by this invocation), wall seconds and rows/s.
+  * written or recorded by this invocation), wall seconds, rows/s and
+  * the number of Spark jobs the walk ran (per table one truth, one
+  * audit, one read-back and one source re-read, plus a write per
+  * landed unit and a schema inference per unit read).
   */
 object CopyKeyspaceCli {
   def main(args: Array[String]): Unit = {
@@ -45,6 +48,7 @@ object CopyKeyspaceCli {
       .appName("graft-copy-keyspace").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import graft.sources._
+    val counters = new TaskCounters(spark.sparkContext)
     val t0 = System.nanoTime()
     val keyspaceRun =
       if (repairMode) ops.Migration.repairKeyspace _ else ops.Migration.copyKeyspace _
@@ -60,8 +64,9 @@ object CopyKeyspaceCli {
     // Rows this invocation moved: the units it wrote or newly recorded,
     // not the ones it skipped (resumed or audited healthy).
     val moved = report.ranges.filter(!_.skipped).map(_.rows).sum
+    val jobs = counters.drained()._4
     System.err.println(f"[$mode] moved $moved rows in $wallS%.2f s " +
-      f"(${if (wallS > 0) moved / wallS else 0.0}%.0f rows/s)")
+      f"(${if (wallS > 0) moved / wallS else 0.0}%.0f rows/s, $jobs Spark jobs)")
     report.verify.foreach { v =>
       System.err.println(s"[verify] ${v.table}: rows ${v.srcRows}=${v.dstRows} " +
         s"checksum ${if (v.srcChecksum == v.dstChecksum) "MATCH" else "MISMATCH"} " +

@@ -87,11 +87,11 @@ object LinkScale {
     // result persisted once for the independent checks + the DuckDB
     // sharded oracle.
     def timeOnce(f: => Unit): (Double, Double, Long, Long) = {
-      val (c0, s0, k0) = counters.drained()
+      val (c0, s0, k0, _) = counters.drained()
       val t0 = System.nanoTime()
       f
       val wall = (System.nanoTime() - t0) / 1e9
-      val (c1, s1, k1) = counters.drained()
+      val (c1, s1, k1, _) = counters.drained()
       (wall, (c1 - c0) / 1e9, s1 - s0, k1 - k0)
     }
     val runs = (1 to 2).map(_ => timeOnce {

@@ -3,6 +3,7 @@ package graft.ops
 import java.io.{File, FileWriter}
 import java.util.concurrent.{Callable, Executors, ExecutorService}
 import java.util.concurrent.atomic.AtomicReference
+import scala.util.{Failure, Success, Try}
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -34,20 +35,32 @@ import graft.sources.{ConfiguredSink, TableSink, TableSource, WriteConf}
   *      (`trustLedger`) first takes a `manifestDir/manifest.tsv` line
   *      ([[RunLedger]], the ledger the c199 curation run shares) as
   *      that evidence, so a fully recorded table reads no source. Every
-  *      other unit gets its truth from ONE grouped aggregate per table
-  *      (a15's planning pass) and is audited through the destination's
-  *      own read path (a missing unit audits as (0, "0")). An audit
-  *      equal to the truth settles the unit without a write — an empty
-  *      range is just such a unit — and records a ledger line unless
-  *      an equal one is there. Anything else lands again and must read
-  *      back as exactly the truth, rows AND checksum, before its line
-  *      is appended — a unit whose count is right but whose content is
-  *      not is never recorded complete.
-  *   4. VERIFY (a7 + a18): every table then gets an INDEPENDENT full
-  *      re-read on both sides — count parity plus the order-insensitive
-  *      content checksum (sum of per-row 32-bit md5 prefixes in
-  *      DECIMAL(38,0), the a18 algebra that cannot overflow at 1e12
-  *      rows).
+  *      other unit gets its truth from ONE grouped pass per table
+  *      (a15's planning pass); beside it, ONE grouped audit job reads
+  *      every pending unit through the destination's own read path,
+  *      each read tagged with its literal range number (a unit whose
+  *      read cannot be built audits as (0, "0"); if the audit job
+  *      fails, every unit in it differs). An audit equal to the truth
+  *      settles the unit without a write — an empty range is just such
+  *      a unit — and records a ledger line unless an equal one is
+  *      there. Anything else lands again; then ONE grouped read-back
+  *      over every live unit of the table checks each landed unit,
+  *      which must read back as exactly the truth, rows AND checksum,
+  *      before its line is appended — a unit whose count is right but
+  *      whose content is not is never recorded complete.
+  *   4. VERIFY (a7 + a18): count parity plus the order-insensitive
+  *      content checksum (sum of per-row 32-bit md5 prefixes, exact,
+  *      the a18 algebra that cannot overflow at 1e12 rows) per table.
+  *      The destination side is the read-back of 3, a fresh full read;
+  *      the source side is an independent re-read once the table has
+  *      settled.
+  *
+  * Truth, audit, read-back and source re-read are one Spark job each
+  * ([[RunLedger.tally]]), so at nRanges 4096 a repair of a healthy
+  * table runs one audit job where the per-unit walk ran 8192 (two per
+  * unit). What still grows with the units is a write per landed unit
+  * and one schema-inference job per unit the JVM has not read before
+  * ([[graft.Tables]]' schema memo serves the rest).
   *
   * COPY vs REPAIR differ only in the evidence consulted first. A copy
   * RESUMES: re-invoking with the same `manifestDir` skips every unit
@@ -74,17 +87,20 @@ import graft.sources.{ConfiguredSink, TableSink, TableSource, WriteConf}
   * persisted (MEMORY_AND_DISK, recomputable lineage) once per table
   * while >1 unit is pending and unpersisted when the table completes.
   * Everything driver-side is metadata-sized: the manifest holds one
-  * line per (table, range), and the only collects are the per-range
-  * truth rows and 1-row audit scalars.
+  * line per (table, range), and every job returns per-range
+  * (rows, checksum) arrays, merged in a tree before the driver.
   *
   * Overlap: `rangeParallelism` bounds everything. Tables proceed
   * concurrently on `rangeParallelism` table lanes, so at most
-  * `rangeParallelism` tables are persisted at once; their units
-  * (audits and landings) and verification checksums share
-  * `rangeParallelism` unit lanes, so at most that many units are in
-  * flight across all tables, and threads stay O(`rangeParallelism`).
-  * At 1 the walk is strictly sequential, table by table and unit by
-  * unit. One lock serializes every manifest append. The Report is
+  * `rangeParallelism` tables are persisted at once; their jobs
+  * (truth, audit, unit writes, read-back and source re-read) share
+  * `rangeParallelism` unit lanes, so at most that many are in flight
+  * across all tables, and threads stay O(`rangeParallelism`). A
+  * table's truth and audit run side by side. At 1 the walk is
+  * strictly sequential, table by table and job by job. Every started
+  * write settles — read back and, if it equals the truth, recorded —
+  * before the first error propagates. One lock serializes every
+  * manifest append. The Report is
   * ordered the same at any width: tables in discovery order; within a
   * table, skipped units, then units recorded without a write, then
   * written units, each by range.
@@ -157,14 +173,15 @@ object KeyspaceCopy {
 
   /** The copy's bounded concurrency: `width` table lanes and `width`
     * unit lanes, two fixed pools, so threads stay O(width). A table
-    * task runs on a table lane and hands its range units and
-    * checksums to the unit lanes, which run leaves only — a table lane
-    * may block on unit lanes, never the reverse, so the pools cannot
-    * deadlock. At width 1 both are single threads and the walk is
-    * strictly sequential. [[settle]] waits for every task it submitted
-    * to settle, then rethrows the first failure; once any task has
-    * failed, tasks that have not started are abandoned, so a dead sink
-    * stops the copy instead of failing every remaining unit.
+    * task runs on a table lane and hands its jobs (truth, audit, unit
+    * writes, read-back, verification) to the unit lanes, which run
+    * leaves only — a table lane may block on unit lanes, never the
+    * reverse, so the pools cannot deadlock. At width 1 both are single
+    * threads and the walk is strictly sequential. Every batch waits
+    * for each task it submitted to settle; once any task has failed,
+    * tasks that have not started are abandoned, so a dead sink stops
+    * the copy instead of failing every remaining unit — except a
+    * [[settling]] task, which finishes units that already landed.
     * `manifestLock` is the one lock every manifest append takes, across
     * all tables, so two units can never interleave a line.
     */
@@ -173,22 +190,56 @@ object KeyspaceCopy {
     private val unitPool = Executors.newFixedThreadPool(width)
     private val failure = new AtomicReference[Throwable]()
     val manifestLock = new Object
-    def tables[A](work: Seq[() => A]): Seq[A] = settle(tablePool, work)
-    def units[A](work: Seq[() => A]): Seq[A] = settle(unitPool, work)
-    private def settle[A](pool: ExecutorService, work: Seq[() => A]): Seq[A] = {
-      val futures = work.map(w => pool.submit(new Callable[A] {
-        def call(): A = {
-          if (failure.get != null) throw Abandoned
-          try w() catch { case e: Throwable => failure.compareAndSet(null, e); throw e }
-        }
-      }))
-      val outcomes = futures.map(f => scala.util.Try(f.get()))
-      outcomes.collectFirst { case scala.util.Failure(e) =>
-        throw Option(failure.get).getOrElse(e)
+    def tables[A](work: Seq[() => A]): Seq[A] = rethrow(submit(tablePool, work, abandon = true))
+    /** Two unit jobs side by side; the first failure rethrown. */
+    def pair[A, B](a: () => A, b: () => B): (A, B) =
+      rethrow(submit(unitPool, Seq[() => Any](a, b), abandon = true)) match {
+        case Seq(x, y) => (x.asInstanceOf[A], y.asInstanceOf[B])
       }
+    /** Unit jobs whose outcomes are returned, failures included. */
+    def attempt[A](work: Seq[() => A]): Seq[Try[A]] = submit(unitPool, work, abandon = true)
+    /** One unit job. */
+    def job[A](work: () => A): A = rethrow(attempt(Seq(work))).head
+    /** One unit job that runs even after a failure elsewhere. */
+    def settling[A](work: () => A): A = rethrow(submit(unitPool, Seq(work), abandon = false)).head
+    /** The first failure's exception, in place of any later outcome's. */
+    def rethrow[A](outcomes: Seq[Try[A]]): Seq[A] = {
+      outcomes.collectFirst { case Failure(e) => throw Option(failure.get).getOrElse(e) }
       outcomes.map(_.get)
     }
+    private def submit[A](pool: ExecutorService, work: Seq[() => A], abandon: Boolean): Seq[Try[A]] =
+      work.map(w => pool.submit(new Callable[A] {
+        def call(): A = {
+          if (abandon && failure.get != null) throw Abandoned
+          try w() catch { case e: Throwable => failure.compareAndSet(null, e); throw e }
+        }
+      })).map(f => Try(f.get()))
     def close(): Unit = { unitPool.shutdown(); tablePool.shutdown() }
+  }
+
+  /** What a unit holds when it holds no rows: the audit of a unit whose
+    * read cannot be built. */
+  private val Empty = (0L, "0")
+
+  /** (rows, checksum) of each of `table`'s range units in `units`, read
+    * through `dstRead` and tallied in ONE job ([[RunLedger.tally]]).
+    * Each read is tagged with its LITERAL range number, never a
+    * [[rangeCol]] recomputed from the row, so a row that landed in the
+    * wrong unit is counted where it landed. A unit without rows is
+    * absent from the map. With `missingIsEmpty` a unit whose read
+    * cannot be built (no such unit) is absent too; otherwise that
+    * read's error propagates.
+    */
+  private def tally(
+      spark: SparkSession, dstRead: TableSource, table: String, units: Seq[Int],
+      missingIsEmpty: Boolean): Map[Int, (Long, String)] = {
+    val reads = units.flatMap { r =>
+      val read = Try(dstRead.read(spark, rangeTable(table, r)))
+      if (missingIsEmpty) read.toOption.map(r -> _) else Some(r -> read.get)
+    }
+    if (reads.isEmpty) Map.empty
+    else RunLedger.tally(reads.map { case (r, df) =>
+      df.select(lit(r), RunLedger.rowHash(df.schema)) }.reduce(_ union _), units.max + 1)
   }
 
   /** Run (or resume) a keyspace copy (`trustLedger`), or repair an
@@ -260,89 +311,93 @@ object KeyspaceCopy {
           "under the original schema or start a fresh manifest dir")
 
       val ledger = RunLedger.readManifest(manifestDir)
-      val ranges = lanes.tables(tables.map { table => () =>
+      def record(table: String, r: Int, unit: (Long, String)): Unit =
+        lanes.manifestLock.synchronized {
+          RunLedger.appendManifest(manifestDir, table, r, unit._1, unit._2)
+        }
+      val walked = lanes.tables(tables.map { table => () =>
         val (recorded, pending) = (0 until nRanges)
           .partition(r => trustLedger && ledger.contains((table, r)))
-        val fromLedger = recorded.map { r =>
-          val (n, cs) = ledger((table, r))
-          (RangeResult(table, r, n, cs, skipped = true), false)
-        }
-        val settled = if (pending.isEmpty) Nil else {
-          val base = src.read(spark, table)
-          val withRange = base.withColumn("__graft_range", rangeCol(base.schema, nRanges))
-          // One source scan per table, not one per range: recomputable
-          // MEMORY_AND_DISK lineage (an executor loss recomputes, the
-          // localCheckpoint failure mode ADVICE flagged elsewhere). A
-          // live token-range source reads ring slices instead and skips
-          // this (object scaladoc).
-          val cached = if (pending.size > 1)
-            withRange.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          else withRange
-          try {
-            // Source truth per range in ONE grouped pass (a15's
-            // planning aggregate): count + the a18 sum of
-            // RunLedger.rowHash, the checksum every audit computes.
-            val truth = cached.groupBy(col("__graft_range"))
-              .agg(count(lit(1)), RunLedger.checksum(base.schema))
-              .collect().map(r => r.getInt(0) -> ((r.getLong(1), r.getString(2)))).toMap
-            // `rangeParallelism` units in flight: a live migrator
-            // overlaps units to hide per-job scheduling latency and the
-            // sink's write/ack round-trips (Spark's scheduler accepts
-            // jobs from many threads). Every in-flight unit SETTLES
-            // before the first error propagates, so the manifest
-            // records each unit that truly completed and `cached` is
-            // never unpersisted under a running job. Last-line-wins
-            // makes manifest append ORDER immaterial — interleaved
-            // LINES are what the lock prevents.
-            lanes.units(pending.map { r => () =>
-              val want = truth.getOrElse(r, (0L, "0"))
-              val audit = scala.util.Try(RunLedger.countAndChecksum(
-                dstRead.read(spark, rangeTable(table, r)))).getOrElse((0L, "0"))
-              val wrote = audit != want
-              if (wrote) {
+        val fromLedger = recorded.map(r => r -> ledger((table, r)))
+        // Each pending unit's truth, and whether this run lands it.
+        val (truth, landing, outcomes): (Map[Int, (Long, String)], Seq[Int], Seq[Try[Unit]]) =
+          if (pending.isEmpty) (Map.empty, Nil, Nil) else {
+            val base = src.read(spark, table)
+            val withRange = base.withColumn("__graft_range", rangeCol(base.schema, nRanges))
+            // One source scan per table, not one per range: recomputable
+            // MEMORY_AND_DISK lineage (an executor loss recomputes, the
+            // localCheckpoint failure mode ADVICE flagged elsewhere). A
+            // live token-range source reads ring slices instead and skips
+            // this (object scaladoc).
+            val cached = if (pending.size > 1)
+              withRange.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+            else withRange
+            try {
+              // Source truth per range in ONE job (a15's planning pass,
+              // which also fills `cached`), beside the destination audit
+              // of every pending unit in ONE job: the two reads are
+              // independent. An audit job that fails audits nothing, so
+              // every unit in it lands again (an idempotent overwrite).
+              val (truth, audit) = lanes.pair(
+                () => RunLedger.tally(
+                  cached.select(col("__graft_range"), RunLedger.rowHash(base.schema)), nRanges),
+                () => Try(tally(spark, dstRead, table, pending, missingIsEmpty = true)).toOption)
+              val (landing, agreeing) = pending.partition(r =>
+                audit.forall(_.getOrElse(r, Empty) != truth.getOrElse(r, Empty)))
+              // An audit equal to the truth settles its unit unwritten.
+              agreeing.foreach { r =>
+                val want = truth.getOrElse(r, Empty)
+                if (!ledger.get((table, r)).contains(want)) record(table, r, want)
+              }
+              // `rangeParallelism` writes in flight: a live migrator
+              // overlaps units to hide per-job scheduling latency and the
+              // sink's write/ack round-trips (Spark's scheduler accepts
+              // jobs from many threads). Every write SETTLES before
+              // `cached` is unpersisted, and before any error propagates.
+              (truth, landing, lanes.attempt(landing.map { r => () =>
                 sink.write(cached.where(col("__graft_range") === r).drop("__graft_range"),
                   rangeTable(table, r))
-                val landed = RunLedger.countAndChecksum(dstRead.read(spark, rangeTable(table, r)))
-                require(landed == want,
-                  s"$table range $r landed $landed, source truth is $want — " +
-                    "refusing to mark complete")
-              }
-              val known = !wrote && ledger.get((table, r)).contains(want)
-              if (!known) lanes.manifestLock.synchronized {
-                RunLedger.appendManifest(manifestDir, table, r, want._1, want._2)
-              }
-              (RangeResult(table, r, want._1, want._2, skipped = known), wrote)
-            })
-          } finally { cached.unpersist(); () }
+              }))
+            } finally { cached.unpersist(); () }
+          }
+        def want(r: Int) = truth.getOrElse(r, Empty)
+        val landed = landing.zip(outcomes).collect { case (r, Success(_)) => r }
+        val live = (fromLedger.collect { case (r, (n, _)) if n > 0L => r } ++
+          pending.filter(want(_)._1 > 0L)).sorted
+        // ONE grouped read-back settles every landed unit and, when no
+        // write failed, is also the destination side of the table's
+        // verification: a fresh read of every live unit.
+        val failed = outcomes.exists(_.isFailure)
+        val readBack =
+          if (failed && landed.isEmpty) Map.empty[Int, (Long, String)]
+          else lanes.settling(() => tally(spark, dstRead, table,
+            if (failed) landed else (live ++ landed).distinct.sorted, missingIsEmpty = false))
+        // No line before the unit reads back as exactly its truth;
+        // every unit that did is recorded before any error propagates.
+        def readsBack(r: Int) = readBack.getOrElse(r, Empty) == want(r)
+        landed.filter(readsBack).foreach(r => record(table, r, want(r)))
+        lanes.rethrow(outcomes)
+        landed.foreach(r => require(readsBack(r),
+          s"$table range $r landed ${readBack.getOrElse(r, Empty)}, " +
+            s"source truth is ${want(r)} — refusing to mark complete"))
+        // The source side: an independent re-read once the table settled.
+        val (srcN, srcCs) = lanes.job(() => RunLedger.countAndChecksum(src.read(spark, table)))
+        val dstUnits = live.map(readBack.getOrElse(_, Empty))
+        val verify = TableVerify(table, srcN, dstUnits.map(_._1).sum,
+          srcCs, dstUnits.map(u => BigInt(u._2)).sum.toString)
+        val lands = landing.toSet
+        val settled = pending.map { r =>
+          val wrote = lands(r)
+          val known = !wrote && ledger.get((table, r)).contains(want(r))
+          (RangeResult(table, r, want(r)._1, want(r)._2, skipped = known), wrote)
         }
-        (fromLedger ++ settled).sortBy { case (u, wrote) =>
+        val units = fromLedger.map { case (r, (n, cs)) =>
+          (RangeResult(table, r, n, cs, skipped = true), false) } ++ settled
+        (units.sortBy { case (u, wrote) =>
           (if (u.skipped) 0 else if (wrote) 2 else 1, u.range)
-        }.map(_._1)
-      }).flatten
-
-      Report(ddl, ranges, verifyTables(spark, src, dstRead, tables, ranges, lanes))
+        }.map(_._1), verify)
+      })
+      Report(ddl, walked.flatMap(_._1), walked.map(_._2))
     } finally lanes.close()
-  }
-
-  /** Each table's source and destination (count, checksum), computed
-    * concurrently: tables on the table lanes, the two sides of a table
-    * on the unit lanes. The destination table is the union of its
-    * non-empty range units.
-    */
-  private def verifyTables(
-      spark: SparkSession, src: TableSource, dstRead: TableSource,
-      tables: Seq[String], results: Seq[RangeResult], lanes: Lanes): Seq[TableVerify] = {
-    val byTable = results.groupBy(_.table)
-    lanes.tables(tables.map { table => () =>
-      val live = byTable(table).filter(_.rows > 0L).map(_.range).sorted
-      val Seq((srcN, srcCs), (dstN, dstCs)) = lanes.units(Seq(
-        () => RunLedger.countAndChecksum(src.read(spark, table)),
-        () =>
-          if (live.isEmpty) (0L, "0")
-          else RunLedger.countAndChecksum(
-            live.map(r => dstRead.read(spark, rangeTable(table, r)))
-              .reduce(_ unionByName _))))
-      TableVerify(table, srcN, dstN, srcCs, dstCs)
-    })
   }
 }

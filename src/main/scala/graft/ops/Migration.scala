@@ -954,8 +954,8 @@ object Migration {
 
   /** The composed end-to-end keyspace copy — discover (a2) → DDL
     * (a11) → per-token-range copy through the retry/batch sink seam
-    * (A6/A10) → per-range read-back audit into a durable resume
-    * manifest (a15) → full count+content verification (a7/a18).
+    * (A6/A10) → one grouped read-back audit per table into a durable
+    * resume manifest (a15) → full count+content verification (a7/a18).
     * Resumable: re-invoking with the same `manifestDir` skips
     * completed ranges. See [[KeyspaceCopy]] for the pipeline and the
     * 100 TB posture; MigrationSpec's "composed copyKeyspace" test

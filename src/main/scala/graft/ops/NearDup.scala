@@ -1412,21 +1412,6 @@ object NearDup {
   private[graft] def labelTableCount(spark: SparkSession, sfDir: String): Long =
     labelMemo(spark, sfDir)._2
 
-  /** The reusable CC kernel behind c21: undirected edges (u, v) →
-    * (doc_id, cluster_id = component min). Vertices not on any edge are
-    * absent from the output (singletons are trivially their own
-    * cluster). Unsorted — callers order as needed.
-    *
-    * Each round combines neighbour-min propagation with POINTER
-    * JUMPING (label ← min(label, label-of-label), the path-doubling
-    * step of Shiloach–Vishkin / hash-to-min): propagation reach
-    * roughly doubles per round, so a path graph of diameter d
-    * converges in O(log d) rounds instead of O(d) — the 30-round cap
-    * covers diameters far beyond any physical corpus (2^30). If the
-    * loop still exits unconverged it THROWS rather than returning
-    * silently-wrong labels (round-5 ADVICE: the old 20-round linear
-    * kernel would hand back partial labels on a diameter-20+ chain).
-    */
   /** Eagerly materialize a frame and cut BOTH its lineage and its
     * inherited statistics. `localCheckpoint(true)` cuts lineage but
     * carries the source plan's estimated stats into the new leaf
@@ -1446,14 +1431,48 @@ object NearDup {
     * planning no longer froze first. Returns the frame plus its
     * backing RDD so the caller can unpersist superseded rounds
     * promptly instead of waiting for the context cleaner.
+    *
+    * The one action that fills the checkpoint also returns the frame's
+    * row count and the sum of its non-null `cluster_id`s, the figures
+    * the CC loop sizes and converges on, so no round pays a separate
+    * aggregate for them. The sum raises on overflow (`addExact`), as
+    * Spark's ANSI `sum` would; it never wraps.
     */
-  private def cutLineage(df: DataFrame): (DataFrame, org.apache.spark.rdd.RDD[org.apache.spark.sql.Row]) = {
+  private def cutLineage(df: DataFrame)
+      : (DataFrame, org.apache.spark.rdd.RDD[org.apache.spark.sql.Row], Long, Long) = {
     val rdd = df.rdd
     rdd.localCheckpoint() // persists MEMORY_AND_DISK + truncates lineage
-    rdd.count() // eager: materialize now, under the caller's timing
-    (df.sparkSession.createDataFrame(rdd, df.schema), rdd)
+    val label = df.schema.fieldIndex("cluster_id")
+    // eager: materialize now, under the caller's timing
+    val (rows, labelSum) = rdd.aggregate((0L, 0L))(
+      (acc, row) => (acc._1 + 1L,
+        if (row.isNullAt(label)) acc._2
+        else Math.addExact(acc._2, row.get(label).asInstanceOf[Number].longValue)),
+      (a, b) => (a._1 + b._1, Math.addExact(a._2, b._2)))
+    (df.sparkSession.createDataFrame(rdd, df.schema), rdd, rows, labelSum)
   }
 
+  /** The reusable CC kernel behind c21: undirected edges (u, v) →
+    * (doc_id, cluster_id = component min). Vertices not on any edge are
+    * absent from the output (singletons are trivially their own
+    * cluster). Unsorted — callers order as needed.
+    *
+    * Each round combines neighbour-min propagation with POINTER
+    * JUMPING (label ← min(label, label-of-label), the path-doubling
+    * step of Shiloach–Vishkin / hash-to-min): propagation reach
+    * roughly doubles per round, so a path graph of diameter d
+    * converges in O(log d) rounds instead of O(d) — the 30-round cap
+    * covers diameters far beyond any physical corpus (2^30). If the
+    * loop still exits unconverged it THROWS rather than returning
+    * silently-wrong labels (round-5 ADVICE: the old 20-round linear
+    * kernel would hand back partial labels on a diameter-20+ chain).
+    *
+    * One Spark action per materialization: each round's propagated and
+    * jumped label tables are filled by [[cutLineage]], whose action
+    * also returns the row count and the label sum, so the vertex count
+    * (sizing the loop) and the convergence test (an unchanged label
+    * sum) cost no job of their own.
+    */
   def connectedComponents(undirected: DataFrame): DataFrame = {
     val spark = undirected.sparkSession
     val edges = undirected.select(col("u"), col("v"))
@@ -1490,13 +1509,10 @@ object NearDup {
     // stats O(1) sized. On a real cluster with preemptible executors,
     // persisting the round RDD to reliable storage is the drop-in
     // hardening.
-    var (labels, labelsRdd) = cutLineage(
+    val (initial, initialRdd, nVerts, initialSum) = cutLineage(
       edges.select(col("u").as("doc_id")).distinct()
         .select(col("doc_id"), col("doc_id").as("cluster_id")))
-    // coalesce guards the empty-graph case (sum over 0 rows is NULL)
-    def labelSum(df: DataFrame): Long =
-      df.agg(coalesce(sum("cluster_id"), lit(0L))).head().getLong(0)
-    var lastSum = labelSum(labels)
+    var (labels, labelsRdd, lastSum) = (initial, initialRdd, initialSum)
     var converged = false
     var rounds = 0
     // Round cap SCALES with the vertex count: the doubling kernel is
@@ -1506,8 +1522,7 @@ object NearDup {
     // rounds where log2 says 17 — SCALE.md). A constant cap of 30
     // would spuriously throw at ~10^10 vertices; 2*log2(n)+12 keeps
     // the guard tight at every size (cheap: rounds cost O(|V|) each,
-    // and the count reads the already-materialized label RDD).
-    val nVerts = labels.count()
+    // and the vertex count came with the label table's materialization).
     val measuredRows = math.max(nVerts, edgeRows)
     val loopWidth = math.max(spark.sparkContext.defaultParallelism,
       math.min(Sessions.initialPartitions(spark.sparkContext.defaultParallelism).toLong,
@@ -1524,7 +1539,7 @@ object NearDup {
       val nbrMin = edges.join(labels, edges("v") === labels("doc_id"))
         .groupBy(col("u")).agg(min(col("cluster_id")).as("nbr_min"))
         .withColumnRenamed("u", "nm_u")
-      val (prop, propRdd) = cutLineage(
+      val (prop, propRdd, _, _) = cutLineage(
         labels.join(nbrMin, col("doc_id") === col("nm_u"), "left")
           .select(col("doc_id"),
             least(col("cluster_id"), coalesce(col("nbr_min"), col("cluster_id")))
@@ -1535,12 +1550,11 @@ object NearDup {
       // monotone non-increasing and stay inside the component, so this
       // is safe and doubles how far the component min has spread.
       val parents = prop.select(col("doc_id").as("p_id"), col("cluster_id").as("p_cluster"))
-      val (next, nextRdd) = cutLineage(
+      val (next, nextRdd, _, nextSum) = cutLineage(
         prop.join(parents, col("cluster_id") === col("p_id"), "left")
           .select(col("doc_id"),
             least(col("cluster_id"), coalesce(col("p_cluster"), col("cluster_id")))
               .as("cluster_id")))
-      val nextSum = labelSum(next)
       // Superseded rounds released NOW, not at context cleanup: the
       // loop's peak footprint is two label tables, independent of
       // round count.

@@ -43,28 +43,52 @@ object RunLedger {
     concat_ws("|", frags.toIndexedSeq: _*)
   }
 
-  /** A row's a18 hash: the 32-bit md5 prefix of [[rowRender]], as
-    * DECIMAL(38,0) so a SUM over 1e12 rows cannot wrap (SUM(BIGINT)
-    * would at 1e12 × 2^32).
+  /** A row's a18 hash: the 32-bit md5 prefix of [[rowRender]]. A
+    * frame's content checksum is the exact sum of its rows' hashes
+    * ([[tally]]), so it cannot overflow at 1e12 rows.
     */
   private[graft] def rowHash(schema: StructType): Column =
-    graft.Canon.md5Prefix(rowRender(schema), 1, 8)
-      .cast("bigint").cast(DecimalType(38, 0))
+    graft.Canon.md5Prefix(rowRender(schema), 1, 8).cast("bigint")
 
-  /** The order-free content checksum aggregate over `schema`'s rows:
-    * the exact sum of [[rowHash]], rendered as a decimal string ("0"
-    * over no rows). Associative, so partitioning cannot change it.
+  /** (row count, content checksum) of a frame — one Spark job, see
+    * [[tally]]; (0, "0") over no rows.
     */
-  private[graft] def checksum(schema: StructType): Column =
-    coalesce(sum(rowHash(schema)), lit(0).cast(DecimalType(38, 0)))
-      .cast(DecimalType(38, 0)).cast("string")
+  private[graft] def countAndChecksum(df: DataFrame): (Long, String) =
+    tally(df.select(lit(0), rowHash(df.schema)), 1).getOrElse(0, (0L, "0"))
 
-  /** (row count, content checksum) of a frame — one scan, map-side
-    * combined to a single row.
+  /** (row count, content checksum) per tag of `hashes`, a frame of
+    * (tag in [0, nTags), [[rowHash]]) rows: the checksum is the exact
+    * sum of the tag's hashes, printed as plain digits ("0" over no
+    * rows, like a DECIMAL(38,0) sum). ONE Spark job with no shuffle
+    * stage of its own: each partition sums into per-tag arrays and the
+    * partitions merge in a tree, so the driver gets one array pair
+    * however many partitions or tags there are. A tag without rows is
+    * absent.
     */
-  private[graft] def countAndChecksum(df: DataFrame): (Long, String) = {
-    val row = df.agg(count(lit(1)).as("n"), checksum(df.schema).as("cs")).head()
-    (row.getLong(0), row.getString(1))
+  private[graft] def tally(hashes: DataFrame, nTags: Int): Map[Int, (Long, String)] = {
+    val t = hashes.queryExecution.toRdd.treeAggregate(new Tally(nTags))(
+      (t, row) => t.add(row.getInt(0), row.getLong(1)), (a, b) => a.merge(b))
+    (0 until nTags).filter(t.rows(_) > 0L).map(i => i -> ((t.rows(i), t.sum(i).toString))).toMap
+  }
+
+  /** Per-tag row counts and exact sums of non-negative 32-bit hashes:
+    * a long per tag, carried into a BigInt before it could wrap.
+    */
+  private final class Tally(n: Int) extends Serializable {
+    val rows = new Array[Long](n)
+    private val lo = new Array[Long](n)
+    private val hi = Array.fill(n)(BigInt(0))
+    def add(tag: Int, hash: Long): Tally = {
+      rows(tag) += 1L
+      lo(tag) += hash
+      if (lo(tag) >= (1L << 62)) { hi(tag) += lo(tag); lo(tag) = 0L }
+      this
+    }
+    def merge(o: Tally): Tally = {
+      for (i <- 0 until n if o.rows(i) > 0L) { rows(i) += o.rows(i); hi(i) += o.sum(i) }
+      this
+    }
+    def sum(i: Int): BigInt = hi(i) + lo(i)
   }
 
   private def manifestFile(dir: String) = new File(dir, "manifest.tsv")

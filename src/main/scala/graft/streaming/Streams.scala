@@ -302,7 +302,9 @@ object Streams {
     * count — carried in the checkpoint, sized to STATE not CPUs — never
     * mutates the caller's session-global `spark.sql.shuffle.partitions`
     * (round-7 ADVICE; the old try/finally restore still exposed the
-    * mutated value to anything concurrent on the session).
+    * mutated value to anything concurrent on the session). It inherits
+    * the posture, artifact isolation off included, so its queries share
+    * the JVM's codegen cache instead of compiling their classes again.
     */
   private def stateSession(spark: SparkSession, statePartitions: Int): SparkSession = {
     val s = spark.newSession()

@@ -24,4 +24,15 @@ class CCRoundGrowthSpec extends AnyFunSuite {
         s"component min must win on the $n-path")
     }
   }
+
+  test("the CC kernel runs a pinned number of Spark jobs on a fixed graph") {
+    // Each materialized label table is one action that also returns its
+    // row count and label sum; a per-round count or aggregate added
+    // back raises this count.
+    val edges = (1 until 64).map(i => (i.toLong, (i + 1).toLong)).toDF("u", "v")
+    var labels: org.apache.spark.sql.DataFrame = null
+    val jobs = TestSpark.jobsLaunched { labels = ops.NearDup.connectedComponents(edges) }
+    assert(labels.count() == 64L)
+    assert(jobs == 68, s"CC jobs on a 64-vertex path: $jobs")
+  }
 }

@@ -1405,4 +1405,110 @@ class MigrationSpec extends AnyFunSuite {
     assert(rec.units.isEmpty && RunLedger.readManifest(man) == before,
       "a refused repair must touch neither the destination nor the manifest")
   }
+
+  test("repair: a healthy repair runs as many Spark jobs at nRanges 16 as at 4") {
+    // The audit and the read-back are one grouped job each per table,
+    // so with the units' schemas memoized (the copy read them back in
+    // this JVM) the job count of a repair is flat in nRanges.
+    import graft.sources._
+    val src = new FixtureSubset(Seq("customer", "orders"))
+    val jobs = Seq(4, 16).map { nRanges =>
+      val (dst, man) = freshDirs(s"repair_jobs_$nRanges")
+      assert(Migration.copyKeyspace(spark, src, new ParquetSink(dst), new ParquetSource(dst),
+        WriteConf(), man, nRanges).ok)
+      val rec = new Landed(new ParquetSink(dst))
+      var healthy: graft.ops.KeyspaceCopy.Report = null
+      val n = TestSpark.jobsLaunched {
+        healthy = Migration.repairKeyspace(spark, src, rec, new ParquetSource(dst),
+          WriteConf(), man, nRanges)
+      }
+      assert(healthy.ok && rec.units.isEmpty && healthy.ranges.forall(_.skipped))
+      n
+    }
+    assert(jobs.head == jobs(1), s"healthy repair jobs at nRanges 4 and 16: $jobs")
+  }
+
+  test("copy: a fresh copy's Spark jobs grow by at most 2 per landed unit") {
+    // A landed unit costs its write and its read's schema inference;
+    // its audit and read-back ride the table's grouped jobs.
+    import graft.sources._
+    val names = Seq("customer", "orders")
+    val src = new FixtureSubset(names)
+    names.foreach(t => src.read(spark, t).schema) // the source's schemas, memoized
+    val runs = Seq(4, 16).map { nRanges =>
+      val (dst, man) = freshDirs(s"copy_jobs_$nRanges")
+      var report: graft.ops.KeyspaceCopy.Report = null
+      val n = TestSpark.jobsLaunched {
+        report = Migration.copyKeyspace(spark, src, new ParquetSink(dst),
+          new ParquetSource(dst), WriteConf(), man, nRanges)
+      }
+      assert(report.ok)
+      (n, report.ranges.count(_.rows > 0L))
+    }
+    val Seq((jobs4, landed4), (jobs16, landed16)) = runs
+    assert(landed16 > landed4, s"no more units land at nRanges 16: $runs")
+    assert(jobs16 - jobs4 <= 2 * (landed16 - landed4),
+      s"(jobs, landed units) at nRanges 4 and 16: $runs")
+  }
+
+  test("ledger: the one-job tally equals the decimal checksum aggregate, per tag and in total") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions.{coalesce, col, count, lit, pmod, sum}
+    import org.apache.spark.sql.types.DecimalType
+    // The reference: SQL's exact DECIMAL(38,0) sum of the row hashes.
+    def aggregate(df: DataFrame, by: Seq[String]) = {
+      val cs = coalesce(sum(RunLedger.rowHash(df.drop(by: _*).schema).cast(DecimalType(38, 0))),
+        lit(0).cast(DecimalType(38, 0))).cast(DecimalType(38, 0)).cast("string")
+      df.groupBy(by.map(col): _*).agg(count(lit(1)), cs).collect()
+        .map(r => (if (by.isEmpty) 0 else r.getInt(0)) -> ((r.getLong(by.size), r.getString(by.size + 1))))
+        .toMap
+    }
+    val frames = Tables.names.map(n => Tables.t(spark, TestSpark.sf0001, n))
+    val empty = frames.head.limit(0)
+    assert(aggregate(empty, Nil) == Map(0 -> ((0L, "0"))))
+    assert(RunLedger.countAndChecksum(empty) == ((0L, "0")))
+    frames.foreach(df => assert(RunLedger.countAndChecksum(df) == aggregate(df, Nil)(0)))
+    // One frame per tag, as the keyspace walk's unit reads are...
+    val parts = (frames :+ empty).zipWithIndex
+      .map { case (df, i) => df.select(lit(i), RunLedger.rowHash(df.schema)) }.reduce(_ union _)
+    assert(RunLedger.tally(parts, frames.size + 1) ==
+      frames.indices.map(i => i -> aggregate(frames(i), Nil)(0)).toMap)
+    // ...and tags mixed within every partition, as the source truth's are.
+    val orders = Tables.t(spark, TestSpark.sf0001, "orders")
+    val tagged = orders.withColumn("tag", pmod(col("o_orderkey"), lit(7)).cast("int"))
+    assert(RunLedger.tally(tagged.select(col("tag"), RunLedger.rowHash(orders.schema)), 7) ==
+      aggregate(tagged, Seq("tag")))
+  }
+
+  test("repair: an audit job that fails re-lands every unit it covered, and the repair ends green") {
+    import graft.sources._
+    import org.apache.spark.sql.functions.{lit, raise_error}
+    val names = Seq("nation", "region")
+    val nRanges = 4
+    val src = new FixtureSubset(names)
+    val (dst, man) = freshDirs("repair_audit_fails")
+    assert(Migration.copyKeyspace(spark, src, new ParquetSink(dst), new ParquetSource(dst),
+      WriteConf(), man, nRanges).ok)
+    // The first read of one nation unit builds, then fails when its job runs.
+    val poisoned = graft.ops.KeyspaceCopy.rangeTable("nation", 0)
+    final class FailsOnce(under: TableSource) extends TableSource {
+      private val armed = new java.util.concurrent.atomic.AtomicBoolean(true)
+      def tableNames(spark: org.apache.spark.sql.SparkSession): Seq[String] = under.tableNames(spark)
+      def read(spark: org.apache.spark.sql.SparkSession, t: String) = {
+        val df = under.read(spark, t)
+        if (t == poisoned && armed.getAndSet(false))
+          df.where(raise_error(lit("audit read fails")).isNull)
+        else df
+      }
+    }
+    val rec = new Landed(new ParquetSink(dst))
+    val healed = Migration.repairKeyspace(spark, src, rec, new FailsOnce(new ParquetSource(dst)),
+      WriteConf(), man, nRanges)
+    assert(healed.ok, s"parity after the failed audit: ${healed.verify}")
+    assert(rec.units == (0 until nRanges).map(graft.ops.KeyspaceCopy.rangeTable("nation", _)).toSet,
+      s"re-landed ${rec.units}")
+    assert(healed.ranges.filter(_.table == "region").forall(_.skipped))
+    assert(healed.ranges.filter(_.table == "nation").forall(u =>
+      RunLedger.readManifest(man).get((u.table, u.range)).contains((u.rows, u.checksum))))
+  }
 }

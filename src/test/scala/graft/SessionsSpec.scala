@@ -42,6 +42,10 @@ class SessionsSpec extends AnyFunSuite {
     // the 100-entry default recompiled every fragment on repeated
     // runs — measured 319→237 s across the 297-key sf0.1 bench).
     assert(p("spark.sql.codegen.cache.maxEntries") == "10000")
+    // ...and one classloader per JVM, so that cache is shared by every
+    // session: isolation ON gives each session (and each streaming
+    // query's clone) its own loader, and the cache keys on the loader.
+    assert(p("spark.sql.artifact.isolation.enabled") == "false")
   }
 
   test("the live test session carries every posture entry") {

@@ -1015,4 +1015,23 @@ class StreamingSpec extends AnyFunSuite {
         s"expected the islandRuns frontier guard in the cause chain: $chain")
     } finally q.stop()
   }
+
+  test("a warm streaming key compiles no class: every session shares the codegen cache") {
+    // c83 runs its stateful fold in a child session (Streams.stateSession),
+    // c162 in the main session; each streaming query runs in a clone of
+    // its session. The codegen cache keys on the classloader, so with a
+    // loader per session the second run recompiles (15 and 22 classes
+    // with artifact isolation on); with one loader per JVM it compiles
+    // nothing.
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val keys = Seq("c83_stream_scd2", "c162_stream_linkage_resolution")
+    def runAll(): Unit = keys.foreach { k =>
+      SparkEntry.queries(k)(spark, TestSpark.sf0001).queryExecution.toRdd.count(); ()
+    }
+    runAll()
+    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    runAll()
+    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    assert(compiled == 0L, s"the second run of ${keys.mkString(", ")} compiled $compiled classes")
+  }
 }

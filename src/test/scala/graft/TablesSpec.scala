@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 import org.scalatest.funsuite.AnyFunSuite
@@ -62,40 +61,12 @@ class TablesSpec extends AnyFunSuite {
     d
   }
 
-  /** Spark jobs `body` launches from this thread, counted by job group.
-    * The listener bus is asynchronous, so a sentinel job in a second
-    * group runs after `body`; its start event arrives after every job
-    * `body` launched, and the count is read once it has arrived.
-    */
-  private def jobsLaunched(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val group = s"tables-spec-${java.util.UUID.randomUUID}"
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-          .foreach(seen.add)
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "counted")
-      try body finally sc.clearJobGroup()
-      sc.setJobGroup(s"$group-sentinel", "flush")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      val deadline = System.nanoTime() + 30L * 1000000000L
-      while (!seen.contains(s"$group-sentinel") && System.nanoTime() < deadline)
-        Thread.sleep(10)
-      assert(seen.contains(s"$group-sentinel"), "listener bus never delivered the sentinel")
-      seen.toArray.count(_ == group)
-    } finally sc.removeSparkListener(listener)
-  }
-
   test("schema memo: a second read of an unchanged table launches no Spark job") {
     val dir = tmpDir("memo")
     spark.range(10).toDF("k").write.parquet(s"$dir/m.parquet")
-    val first = jobsLaunched { Tables.t(spark, dir, "m").schema; () }
+    val first = TestSpark.jobsLaunched { Tables.t(spark, dir, "m").schema; () }
     assert(first >= 1, "the first read infers the schema with a Spark job")
-    val second = jobsLaunched { Tables.t(spark, dir, "m").schema; () }
+    val second = TestSpark.jobsLaunched { Tables.t(spark, dir, "m").schema; () }
     assert(second == 0, s"an unchanged table re-inferred its schema ($second jobs)")
     assert(Tables.t(spark, dir, "m").count() == 10)
   }
