@@ -114,9 +114,7 @@ object Bench {
     val setupVec = setupIf(
       wanted("c38_", "c56_", "c57_", "c173_", "c174_", "c175_", "c176_"),
       "setup_vec_index") {
-      ops.NearDup.writeIvfIndexStore(spark, sfDir)
-      ops.NearDup.writePqCodebookStore(spark, sfDir)
-      ops.NearDup.writePqCodesStore(spark, sfDir)
+      ops.NearDup.writeVecIndexStore(spark, sfDir)
       ()
     }
     // Round 17: the ingest-MAINTAINED vec3 store (base generation +
@@ -125,7 +123,7 @@ object Bench {
     // (gen-2 reads) and c180 (base centroids).
     val setupIngest = setupIf(wanted("c178_", "c179_", "c180_"),
       "setup_ingest_index") {
-      ops.NearDup.writeRebuiltIndexStore(spark, sfDir)
+      ops.NearDup.ingestGen2(spark, sfDir)
       ()
     }
     // The distinct-key counts that size the stateful streaming keys'

@@ -489,7 +489,6 @@ object Plans {
             "count aggregate; no state store, no cross-batch window — the " +
             "read-side merge is the c177 ledger join audited above.",
           () => {
-            NearDup.writeIngestBaseStore(spark, sfDir)
             NearDup.kmAssign(
               Tables.t(spark, sfDir, "embeddings").where(NearDup.ingestIsNew)
                 .select(col("vec_id"), col("embedding")),

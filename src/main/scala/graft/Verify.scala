@@ -326,7 +326,6 @@ object Verify {
     // exactly where ingest concentrated mass the quantizer never
     // trained on.
     val (g1Hits, g2Hits, driftProbeId) = {
-      ops.NearDup.writeRebuiltIndexStore(spark, sfDir)
       val probeId = emb.where(ops.NearDup.ingestIsNew)
         .agg(min("vec_id")).head.getLong(0)
       val probeVec = emb.where(col("vec_id") === probeId)

@@ -126,37 +126,31 @@ object Llm {
   }
 
   /** On-disk LSH signature store — the durable form of the signature
-    * seam [[lshBands]] models in memory: bands computed ONCE, written
-    * to parquet through the ConfiguredSink knob surface (A8/A10), and
+    * seam [[lshBands]] models in memory: bands computed ONCE and
     * probed by every later job or PROCESS — c51's streaming gate
     * reads this table, so a fresh session probes signatures it never
     * computed (the production ingest shape: one signature job, many
     * probe jobs). It lives under the vector-store root
     * ([[NearDup.vecStoreRoot]]) in a [[graft.Memo.storeDir]] keyed on
-    * the documents fingerprint and the signature constants, published
-    * once through [[graft.Memo.atomicArtifact]]; the write flushes the
-    * memoized table with a 4M-row file bound (band rows are ~50 B —
-    * ~200 MB files, a handful per 100× corpus, not thousands of
-    * batchRows-default shards). Returns the store dir.
+    * the documents fingerprint and the signature constants, and is
+    * published like every flat vector-store artifact
+    * ([[NearDup.publishFlat]]: once, atomically, 4M-row files — band
+    * rows are ~50 B, so ~200 MB files, a handful per 100× corpus).
+    * Returns the store dir.
     */
-  private[graft] def writeBandStore(spark: SparkSession, sfDir: String): String = {
-    val dir = Memo.storeDir(NearDup.vecStoreRoot(spark), "bands",
-      Tables.path(sfDir, "documents"), s"seeds=$MinhashSeeds;bands=$Bands")
-    Memo.atomicArtifact(dir, "bands.parquet") { scratch =>
-      new graft.sources.ConfiguredSink(new graft.sources.ParquetSink(scratch),
-        graft.sources.WriteConf(batchRows = 1 << 22))
-        .write(lshBands(spark, sfDir), "bands")
-    }
-    dir
-  }
+  private[graft] def writeBandStore(spark: SparkSession, sfDir: String): String =
+    NearDup.publishFlat(Memo.storeDir(NearDup.vecStoreRoot(spark), "bands",
+      Tables.path(sfDir, "documents"), s"seeds=$MinhashSeeds;bands=$Bands"), "bands")(
+      lshBands(spark, sfDir))
 
   /** The store as a frame: a parquet SCAN of the persisted signature
-    * table — never the in-memory memo — so every consumer takes the
-    * cross-process read path (pinned by StreamsApiSpec: bit-identical
-    * to [[lshBandsPlan]] after the memos are evicted).
+    * table through [[graft.Tables.t]] — never the in-memory memo — so
+    * every consumer takes the cross-process read path (pinned by
+    * StreamsApiSpec: bit-identical to [[lshBandsPlan]] after the memos
+    * are evicted).
     */
   private[graft] def bandStore(spark: SparkSession, sfDir: String): DataFrame =
-    spark.read.parquet(s"${writeBandStore(spark, sfDir)}/bands.parquet")
+    Tables.t(spark, writeBandStore(spark, sfDir), "bands")
 
   /** The LSH candidate-pair plan: docs sharing at least one band
     * bucket. The join is per-bucket (equi on band_idx+band_val), so

@@ -86,52 +86,54 @@ object NearDup {
 
   /** c10 — SimHash fingerprint per document: each token votes ±1 on
     * each of 32 bits (high bit of its md5 hex nibbles); the sign of
-    * the per-bit sum is the fingerprint bit.
-    *
-    * The 32 bits are extracted with integer math, not string ops: the
-    * digest's first 32 hex chars parse into four 32-bit words (4×
-    * substring+conv per TOKEN), then each bit is one shiftright+AND on
-    * a long (bit j = high bit of nibble j = bit 31−4·(j mod 8) of word
-    * j/8). The previous shape did 32× (substring + isin-of-8 string
-    * compares) per token — ~8× the string work; this was the heaviest
-    * query in the round-4 judge run (7.4 s → target <½).
+    * the per-bit sum is the fingerprint bit. The string is the
+    * [[simhashPrints]] value at 32 planes, MSB first.
     */
   def simhashFingerprint(spark: SparkSession, sfDir: String): DataFrame =
-    simhashBitSums(Tables.t(spark, sfDir, "documents"))
-      .select(col("doc_id"),
-        concat((0 until SimhashBits).map(j =>
-          when(col(s"s$j") > 0, "1").otherwise("0")): _*).as("simhash"))
+    simhashValues(spark, sfDir)
+      .select(col("doc_id"), lpad(bin(col("v")), SimhashBits, "0").as("simhash"))
       .orderBy("doc_id")
 
-  /** The per-(doc, bit) ±1 vote sums behind the SimHash fingerprint —
-    * shared by c10 (string form) and c59 (integer form).
+  /** The SimHash print over `bits` planes as ONE long `v` (plane j =
+    * bit bits−1−j) — integer-exact in both engines, shared by c10,
+    * c59 and c73. Plane j is the high bit of hex nibble j mod 32 of
+    * digest j / 32: digest 0 is md5(w), digest 1 md5("w2:" ∥ w) — a
+    * second independent hyperplane batch from a salted hash, the
+    * standard way to widen a SimHash beyond one digest's supply of
+    * bits. So the 60-plane print's top 32 bits ARE the 32-plane print.
+    *
+    * The bits are extracted with integer math, not string ops: each
+    * digest's 32 hex chars parse into four 32-bit words (4×
+    * substring+conv per token and digest), then each bit is one
+    * shiftright+AND on a long (bit j = bit 31−4·(j mod 8) of word
+    * j/8) — ~8× less string work than a substring per bit and token.
     */
-  private def simhashBitSums(docs: DataFrame): DataFrame = {
+  private def simhashPrints(docs: DataFrame, bits: Int): DataFrame = {
+    val digests = Seq(md5(col("w")), md5(concat(lit("w2:"), col("w"))))
+      .take((bits + 31) / 32).zipWithIndex.map { case (h, d) => h.as(s"h$d") }
     val words = docs
       .select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
-      .select(col("doc_id"), md5(col("w")).as("h"))
-    val toks = words.select(col("doc_id") +: (0 until SimhashBits / 8).map(q =>
-      conv(substring(col("h"), 8 * q + 1, 8), 16, 10).cast("long").as(s"v$q")): _*)
-    // One ±1-sum aggregate per bit, not a 32× row explosion: the
-    // shuffle carries one 32-column row per (partition, doc) thanks to
-    // map-side partial aggregation — the shape that survives 100 TB.
-    val bitSums = (0 until SimhashBits).map { j =>
-      val (q, n) = (j / 8, j % 8)
-      sum(when(expr(s"(shiftright(v$q, ${31 - 4 * n}) & 1) = 1"), 1).otherwise(-1))
+      .select(col("doc_id") +: digests: _*)
+    val toks = words.select(col("doc_id") +: digests.indices.flatMap(d => (0 until 4).map(q =>
+      conv(substring(col(s"h$d"), 8 * q + 1, 8), 16, 10).cast("long").as(s"v${4 * d + q}"))): _*)
+    // One ±1-sum aggregate per bit, not a bits× row explosion: the
+    // shuffle carries one row per (partition, doc) thanks to map-side
+    // partial aggregation — the shape that survives 100 TB.
+    val bitSums = (0 until bits).map { j =>
+      sum(when(expr(s"(shiftright(v${j / 8}, ${31 - 4 * (j % 8)}) & 1) = 1"), 1).otherwise(-1))
         .as(s"s$j")
     }
     toks.groupBy(col("doc_id")).agg(bitSums.head, bitSums.tail: _*)
+      .select(col("doc_id"),
+        (0 until bits).map(j =>
+          when(col(s"s$j") > 0, lit(1L << (bits - 1 - j))).otherwise(lit(0L))).reduce(_ + _).as("v"))
   }
 
-  /** The fingerprint as ONE long (bit j of c10's string = bit
-    * SimhashBits−1−j of the value) — integer-exact in both engines.
+  /** The 32-bit fingerprint as ONE long (bit j of c10's string = bit
+    * SimhashBits−1−j of the value).
     */
   private[graft] def simhashValues(spark: SparkSession, sfDir: String): DataFrame =
-    simhashBitSums(Tables.t(spark, sfDir, "documents"))
-      .select(col("doc_id"),
-        (0 until SimhashBits).map(j =>
-          when(col(s"s$j") > 0, lit(1L << (SimhashBits - 1 - j)))
-            .otherwise(lit(0L))).reduce(_ + _).as("v"))
+    simhashPrints(Tables.t(spark, sfDir, "documents"), SimhashBits)
 
   // c59 knobs — the Manku/Jarvelin pigeonhole: a Hamming budget of
   // k bit flips can touch at most k of k+1 disjoint blocks, so every
@@ -247,35 +249,9 @@ object NearDup {
   // positive long in both engines).
   private[graft] val SimhashWideBits = 60
 
-  /** The 60-bit fingerprint: positions 0–31 take the high bit of
-    * md5(w)'s first 32 nibbles (exactly c10's grid), positions 32–59
-    * the high bit of md5("w2:" ∥ w)'s first 28 — a second independent
-    * hyperplane batch from a salted hash, the standard way to widen a
-    * SimHash beyond one digest's supply of bits.
-    */
-  private[graft] def simhashValuesWide(spark: SparkSession, sfDir: String): DataFrame = {
-    val words = graft.Tables.t(spark, sfDir, "documents")
-      .select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
-      .select(col("doc_id"), md5(col("w")).as("h1"),
-        md5(concat(lit("w2:"), col("w"))).as("h2"))
-    // 8 hex-quads: v0..v3 from h1, v4..v7 from h2 — 4 convs per word
-    // per hash instead of 60 per-nibble substrings.
-    val toks = words.select(col("doc_id") +:
-      ((0 until 4).map(q =>
-        conv(substring(col("h1"), 8 * q + 1, 8), 16, 10).cast("long").as(s"v$q")) ++
-       (0 until 4).map(q =>
-        conv(substring(col("h2"), 8 * q + 1, 8), 16, 10).cast("long").as(s"v${q + 4}"))): _*)
-    val bitSums = (0 until SimhashWideBits).map { j =>
-      val (q, n) = (j / 8, j % 8)
-      sum(when(expr(s"(shiftright(v$q, ${31 - 4 * n}) & 1) = 1"), 1).otherwise(-1))
-        .as(s"s$j")
-    }
-    toks.groupBy(col("doc_id")).agg(bitSums.head, bitSums.tail: _*)
-      .select(col("doc_id"),
-        (0 until SimhashWideBits).map(j =>
-          when(col(s"s$j") > 0, lit(1L << (SimhashWideBits - 1 - j)))
-            .otherwise(lit(0L))).reduce(_ + _).as("v"))
-  }
+  /** The 60-bit fingerprint ([[simhashPrints]] at 60 planes). */
+  private[graft] def simhashValuesWide(spark: SparkSession, sfDir: String): DataFrame =
+    simhashPrints(Tables.t(spark, sfDir, "documents"), SimhashWideBits)
 
   /** The 60-bit fingerprint table, one per corpus ([[graft.Memo]]) —
     * the sixth one-time pass of the dedup family (bands → pairs →
@@ -913,11 +889,9 @@ object NearDup {
   def semanticDedup(spark: SparkSession, sfDir: String): DataFrame = {
     val dot = graft.functions.ArrayDot.adot _
     val emb = Tables.t(spark, sfDir, "embeddings")
-    val seeds = emb.where(col("vec_id") % kmSeedStride(embCount(spark, sfDir)) === 0)
-      .select(col("vec_id").as("centroid_id"), col("embedding").as("cent"))
     // (vec_id, cluster, cos) with cos ROUND(4) — membership and the
     // keep-rule both read the rounded value, so every engine agrees.
-    val m = kmAssign(emb, seeds)
+    val m = kmAssign(emb, kmSeeds(spark, sfDir, emb))
       .join(emb.select(col("vec_id"),
         col("embedding"), sqrt(dot(col("embedding"), col("embedding"))).as("norm")), "vec_id")
     val a = m.select(col("vec_id").as("va"), col("cluster"),
@@ -939,15 +913,9 @@ object NearDup {
   /** c13 — IVF-style two-stage ANN: rank cells (label centroids) by
     * cosine to the probe, then brute-force only the nearest
     * `IvfProbeCells` cells. The centroid table is tiny (n_cells rows)
-    * and broadcast; the candidate scan touches only probed cells.
-    *
-    * Cell ranking is a single global aggregate (collect the n_cells
-    * scored rows into one array, sort, slice, posexplode back with
-    * 0-based rank) — NOT a `Window.orderBy` without partitionBy, which
-    * emits Spark's "moving all data to a single partition" hazard even
-    * on this bounded metadata-sized input. Sort key struct(-cos, label)
-    * gives (cos DESC, label ASC), matching the oracle's row_number
-    * ordering; the negation is sort-only and not emitted.
+    * and broadcast; the candidate scan touches only probed cells. The
+    * label is the cell id here, so [[topCells]] ranks the label
+    * centroids as `centroid_id`.
     */
   def annIvf(spark: SparkSession, sfDir: String): DataFrame = {
     val e = Tables.t(spark, sfDir, "embeddings")
@@ -957,15 +925,10 @@ object NearDup {
       .groupBy(col("label"), col("idx"))
       .agg((sum(col("x").cast("double").cast(org.apache.spark.sql.types.DecimalType(38, 18)))
         .cast("double") / count(lit(1))).as("c"))
-      .groupBy(col("label"))
-      .agg(expr("transform(sort_array(collect_list(struct(idx, c))), s -> s.c)").as("carr"))
-    val topCells = cents.crossJoin(broadcast(probe))
-      .select(col("label"), round(cosine(col("carr"), col("probe")), 4).as("cell_cos"))
-      .agg(expr(s"slice(array_sort(collect_list(struct(-cell_cos AS nc, label))), 1, $IvfProbeCells)")
-        .as("top"))
-      .select(posexplode(col("top")).as(Seq("r0", "s")))
-      .select(col("s.label").as("label"), (col("r0") + 1).cast("long").as("cell_rank"))
-    e.join(broadcast(topCells), "label")
+      .groupBy(col("label").as("centroid_id"))
+      .agg(expr("transform(sort_array(collect_list(struct(idx, c))), s -> s.c)").as("cent"))
+    val cells = topCells(cents, probe, IvfProbeCells).withColumnRenamed("cluster", "label")
+    e.join(broadcast(cells), "label")
       .crossJoin(broadcast(probe))
       .select(col("vec_id"), col("label"), col("cell_rank"),
         round(cosine(col("embedding"), col("probe")), 4).as("cos"))
@@ -973,35 +936,48 @@ object NearDup {
       .limit(5)
   }
 
-  /** c38 — DATA-ADAPTIVE IVF: c13's two-stage ANN with cells learned
-    * from the data instead of taken from the label column. One Lloyd
-    * refinement round (kmAssign → kmUpdate over the c34 strided seeds)
-    * produces the cell centroids; the probe then ranks those refined
-    * cells, and only the vectors ASSIGNED to the top-2 cells are
-    * brute-forced — the real IVF build+search loop (train coarse
-    * quantizer → assign corpus → probe nearest cells). Same scale
-    * posture as c13: centroids and probed-cell list broadcast, the
-    * corpus shuffles once on vec_id for the assignment join, candidate
-    * scan touches probed cells only. More Lloyd rounds
-    * ([[kmeansConverge]]) sharpen the cells without changing the plan.
-    * Round 16: the refined centroids are a PERSISTED per-corpus
-    * artifact ([[centroidStore]] — the band-store discipline), so the
-    * train pass runs once per corpus and every later probe job or
-    * process reads the index from disk.
+  /** The `k` cells of `cents` (centroid_id, cent) nearest the one-row
+    * `probe` frame, as (cluster, cell_rank) — the cell-ranking canon
+    * of every single-probe IVF search (c13, c38, c173, c174 and the
+    * ingest probe). Cell ranking is a single global aggregate (collect
+    * the scored cells into one array, sort, slice, posexplode back
+    * with 1-based rank) — NOT a `Window.orderBy` without partitionBy,
+    * which emits Spark's "moving all data to a single partition"
+    * hazard even on this bounded metadata-sized input. Sort key
+    * struct(-cos, id) gives (cos DESC, id ASC), matching the oracle's
+    * row_number ordering; the negation is sort-only and not emitted.
     */
+  private def topCells(cents: DataFrame, probe: DataFrame, k: Int): DataFrame =
+    cents.crossJoin(broadcast(probe))
+      .select(col("centroid_id"), round(cosine(col("cent"), col("probe")), 4).as("cell_cos"))
+      .agg(expr(s"slice(array_sort(collect_list(struct(-cell_cos AS nc, centroid_id))), 1, $k)")
+        .as("top"))
+      .select(posexplode(col("top")).as(Seq("r0", "s")))
+      .select(col("s.centroid_id").as("cluster"), (col("r0") + 1).cast("long").as("cell_rank"))
+
+  /** Exact top-5 of `lists` (cluster, vec_id, embedding) by rounded
+    * cosine to `probe`, vec_id tiebreak, over the [[topCells]] `cells`
+    * only: the broadcast cells join prunes a cell-partitioned store to
+    * the probed cells' FILES at runtime (dynamic partition pruning).
+    */
+  private def probeCells(lists: DataFrame, cells: DataFrame, probe: DataFrame): DataFrame =
+    lists.join(broadcast(cells), "cluster")
+      .crossJoin(broadcast(probe))
+      .select(col("vec_id"), col("cluster"), col("cell_rank"),
+        round(cosine(col("embedding"), col("probe")), 4).as("cos"))
+      .orderBy(col("cos").desc, col("vec_id"))
+      .limit(5)
+
   /** On-disk VECTOR-INDEX artifact store — the [[graft.ops.Llm]]
-    * band-store discipline extended to the ANN family (round-15
-    * verdict item 2): c38's Lloyd-refined centroids and c56/c57's PQ
-    * sub-codebook are TRAINED artifacts (one assign+update pass /
-    * one seed slice over the corpus) that every later probe job —
-    * or PROCESS — should read, not recompute (the production
-    * posture: one index-build job, many probe jobs; c50/c165 already
-    * run their dedup stores this way). Root: [[vecStoreRoot]]; the
+    * band-store discipline extended to the ANN family: c38's
+    * Lloyd-refined centroids, c56/c57's PQ sub-codebook, the IVF lists
+    * and the PQ codes are TRAINED artifacts that every later probe job
+    * — or PROCESS — reads, not recomputes (the production posture: one
+    * index-build job, many probe jobs). Root: [[vecStoreRoot]]; the
     * dir is a [[graft.Memo.storeDir]] keyed on the embeddings
     * fingerprint and the kernel constants, so a regenerated corpus can
-    * never silently serve a stale index. Each artifact is published
-    * once through [[graft.Memo.atomicArtifact]], written through the
-    * ConfiguredSink knob surface (A8/A10). Determinism: centroids are
+    * never silently serve a stale index. Every artifact is one
+    * [[flatStore]] or [[cellStore]] call. Determinism: centroids are
     * the decimal-exact [[kmUpdate]] doubles and the codebook is a slice
     * of corpus floats — parquet round-trips both bit-exactly, so
     * c38/c56/c57 hash identically from the store and from a fresh
@@ -1033,190 +1009,147 @@ object NearDup {
       s"PqM=$PqM;seed=${kmSeedStride(n)};pqseed=${pqSeedStride(n)}")
   }
 
-  /** Ensure the refined-centroid artifact exists for `sfDir` (one
-    * Lloyd assign+update pass iff absent) and return the store dir.
+  /** Publish the FLAT artifact `<dir>/<name>.parquet` once through
+    * [[graft.Memo.atomicArtifact]] (`build` runs only when it is
+    * absent) and return `dir`. The write goes through the
+    * ConfiguredSink knob surface (A8/A10) with a 4M-row file bound.
     */
-  private[graft] def writeCentroidStore(spark: SparkSession, sfDir: String): String = {
-    val dir = vecStorePath(spark, sfDir)
-    Memo.atomicArtifact(dir, "centroids.parquet") { scratch =>
-      val emb = Tables.t(spark, sfDir, "embeddings")
-        .select(col("vec_id"), col("embedding"))
-      val seeds = emb.where(col("vec_id") % kmSeedStride(embCount(spark, sfDir)) === 0)
-        .select(col("vec_id").as("centroid_id"), col("embedding").as("cent"))
+  private[graft] def publishFlat(dir: String, name: String)(build: => DataFrame): String = {
+    Memo.atomicArtifact(dir, s"$name.parquet") { scratch =>
       new graft.sources.ConfiguredSink(new graft.sources.ParquetSink(scratch),
-        graft.sources.WriteConf(batchRows = 1 << 22))
-        .write(kmUpdate(emb, kmAssign(emb, seeds)), "centroids")
+        graft.sources.WriteConf(batchRows = 1 << 22)).write(build, name)
     }
     dir
   }
 
-  /** The refined centroids as a frame: a parquet SCAN of the
-    * persisted artifact — never an in-memory recompute — so every
-    * consumer takes the cross-process read path.
+  /** A flat artifact as a frame: [[publishFlat]], then a parquet SCAN
+    * through [[graft.Tables.t]] — never an in-memory recompute, so
+    * every consumer takes the cross-process read path, and a warm read
+    * reuses the memoized schema and launches no Spark job.
     */
-  private[graft] def centroidStore(spark: SparkSession, sfDir: String): DataFrame =
-    spark.read.parquet(s"${writeCentroidStore(spark, sfDir)}/centroids.parquet")
-
-  /** Ensure the PQ sub-codebook artifact exists (the [[pqSeedStride]]
-    * seed slice split into [[PqM]] sub-vectors) and return the store
-    * dir. KBs at any corpus size — the cost is the seed SCAN, which
-    * at 100 TB is still one corpus read a per-session rebuild would
-    * repeat for every probe job.
-    */
-  private[graft] def writePqCodebookStore(spark: SparkSession, sfDir: String): String = {
-    val dir = vecStorePath(spark, sfDir)
-    Memo.atomicArtifact(dir, "pq_codebook.parquet") { scratch =>
-      val emb = Tables.t(spark, sfDir, "embeddings")
-      val stride = pqSeedStride(embCount(spark, sfDir))
-      val seeds = emb.where(col("vec_id") % stride === 0)
-        .select(expr(s"vec_id div $stride").as("centroid_id"),
-          col("embedding").as("cent"))
-      val csubs = seeds
-        .select(col("centroid_id"), explode(sequence(lit(0), lit(PqM - 1))).as("j"),
-          col("cent"))
-        .select(col("centroid_id"), col("j"),
-          expr(s"slice(cent, j * (size(cent) div $PqM) + 1, size(cent) div $PqM)")
-            .as("csub"))
-      new graft.sources.ConfiguredSink(new graft.sources.ParquetSink(scratch),
-        graft.sources.WriteConf(batchRows = 1 << 22))
-        .write(csubs, "pq_codebook")
-    }
-    dir
-  }
-
-  /** The PQ sub-codebook as a frame (cross-process read path). */
-  private[graft] def pqCodebookStore(spark: SparkSession, sfDir: String): DataFrame =
-    spark.read.parquet(s"${writePqCodebookStore(spark, sfDir)}/pq_codebook.parquet")
+  private def flatStore(spark: SparkSession, dir: String, name: String)
+      (build: => DataFrame): DataFrame =
+    Tables.t(spark, publishFlat(dir, name)(build), name)
 
   /** The one cell-list layout every IVF list, PQ code table and
-    * ingest segment uses: `df` (carrying `cluster`) written
-    * CLUSTER-PARTITIONED, so a cell predicate is a partition filter
-    * (dynamic partition pruning reads only the probed cells' files),
-    * with files capped at 4M rows.
+    * ingest segment uses, published and read like [[flatStore]]:
+    * `build` (carrying `cluster`) is written CLUSTER-PARTITIONED, so a
+    * cell predicate is a partition filter (dynamic partition pruning
+    * reads only the probed cells' files), with files capped at 4M
+    * rows. Partition-column inference narrows long→int; the read pins
+    * the written type so consumers' schemas are store-independent.
     */
-  private[graft] def writeCellLists(df: DataFrame, path: String): Unit =
-    df.write.mode("overwrite")
-      .option("maxRecordsPerFile", (1 << 22).toString)
-      .partitionBy("cluster")
-      .parquet(path)
-
-  /** A [[writeCellLists]] artifact as a frame. Partition-column type
-    * inference narrows long→int; the read pins the written type so
-    * consumers' schemas are store-independent.
-    */
-  private[graft] def readCellLists(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path).withColumn("cluster", col("cluster").cast("long"))
-
-  /** Ensure the IVF INVERTED-LIST artifact exists: the corpus written
-    * CLUSTER-PARTITIONED (`partitionBy(cluster)`) under its refined-
-    * centroid assignment — the actual index layout of every
-    * production IVF (Jégou et al. §III: vectors grouped by coarse
-    * cell), and the piece whose absence made the persisted centroids
-    * only half an index: without it every probe re-ran the O(n·k)
-    * assignment join (measured 7.8-10.1 s/probe at 200k vectors while
-    * the train pass it saved was 17 s). With it a probe reads ONLY
-    * its probed cells' files — the cell filter is a partition filter,
-    * pruned at runtime via the broadcast top-cells join (dynamic
-    * partition pruning), so probe I/O is nprobe/k of the corpus at
-    * any scale. The write is one assignment pass + one shuffled
-    * corpus rewrite per corpus — amortized across every probe; at
-    * 100 TB the same layout is the TABLE's primary sort/partition
-    * scheme rather than a copy (the c88 bucketing discipline), which
-    * this artifact stands in for.
-    */
-  private[graft] def writeIvfIndexStore(spark: SparkSession, sfDir: String): String = {
-    val dir = vecStorePath(spark, sfDir)
-    Memo.atomicArtifact(dir, "ivf.parquet") { scratch =>
-      val emb = Tables.t(spark, sfDir, "embeddings")
-        .select(col("vec_id"), col("embedding"), col("label"))
-      val asg = kmAssign(
-        emb.select(col("vec_id"), col("embedding")),
-        centroidStore(spark, sfDir))
-        .select(col("vec_id"), col("cluster"))
-      // `label` rides the lists as the filterable metadata column —
-      // the Milvus/FAISS-with-metadata posture: filtered search reads
-      // attribute + vector together from the probed cells, never a
-      // corpus join at query time (c174).
-      writeCellLists(
-        emb.join(asg, "vec_id")
-          .select(col("cluster"), col("vec_id"), col("embedding"), col("label")),
-        s"$scratch/ivf.parquet")
+  private def cellStore(spark: SparkSession, dir: String, name: String)
+      (build: => DataFrame): DataFrame = {
+    Memo.atomicArtifact(dir, s"$name.parquet") { scratch =>
+      build.write.mode("overwrite")
+        .option("maxRecordsPerFile", (1 << 22).toString)
+        .partitionBy("cluster")
+        .parquet(s"$scratch/$name.parquet")
     }
-    dir
+    Tables.t(spark, dir, name).withColumn("cluster", col("cluster").cast("long"))
   }
 
-  /** The inverted lists as a frame (cross-process read path; the
-    * `cluster` column is the parquet PARTITION column, so a cell
-    * predicate prunes files, not rows).
+  /** The inverted-list rows of `vecs` (vec_id, embedding, label) under
+    * `cents`: each vector with the cell [[kmAssign]] gives it. `label`
+    * rides the lists as the filterable metadata column — the
+    * Milvus/FAISS-with-metadata posture: filtered search reads
+    * attribute + vector together from the probed cells, never a
+    * corpus join at query time (c174).
+    */
+  private def cellLists(vecs: DataFrame, cents: DataFrame): DataFrame =
+    vecs.join(kmAssign(vecs.select(col("vec_id"), col("embedding")), cents)
+        .select(col("vec_id"), col("cluster")), "vec_id")
+      .select(col("cluster"), col("vec_id"), col("embedding"), col("label"))
+
+  /** The refined centroids: one Lloyd assign+update pass over the c34
+    * strided seeds, trained once per corpus.
+    */
+  private[graft] def centroidStore(spark: SparkSession, sfDir: String): DataFrame =
+    flatStore(spark, vecStorePath(spark, sfDir), "centroids") {
+      val emb = Tables.t(spark, sfDir, "embeddings").select(col("vec_id"), col("embedding"))
+      kmUpdate(emb, kmAssign(emb, kmSeeds(spark, sfDir, emb)))
+    }
+
+  /** The PQ sub-codebook: the [[pqSeedStride]] seed slice split into
+    * [[PqM]] sub-vectors. KBs at any corpus size — the cost is the
+    * seed SCAN, which at 100 TB is still one corpus read a per-session
+    * rebuild would repeat for every probe job.
+    */
+  private[graft] def pqCodebookStore(spark: SparkSession, sfDir: String): DataFrame =
+    flatStore(spark, vecStorePath(spark, sfDir), "pq_codebook") {
+      val stride = pqSeedStride(embCount(spark, sfDir))
+      pqSlices(Tables.t(spark, sfDir, "embeddings").where(col("vec_id") % stride === 0)
+        .select(expr(s"vec_id div $stride").as("centroid_id"), col("embedding").as("cent")),
+        "centroid_id", "cent", "csub")
+    }
+
+  /** The IVF INVERTED LISTS: the corpus in [[cellStore]] layout under
+    * its refined-centroid assignment — the actual index layout of
+    * every production IVF (Jégou et al. §III: vectors grouped by
+    * coarse cell), and the piece whose absence made the persisted
+    * centroids only half an index: without it every probe re-ran the
+    * O(n·k) assignment join (measured 7.8-10.1 s/probe at 200k vectors
+    * while the train pass it saved was 17 s). With it a probe reads
+    * ONLY its probed cells' files, so probe I/O is nprobe/k of the
+    * corpus at any scale. The write is one assignment pass + one
+    * shuffled corpus rewrite per corpus — amortized across every
+    * probe; at 100 TB the same layout is the TABLE's primary
+    * sort/partition scheme rather than a copy (the c88 bucketing
+    * discipline), which this artifact stands in for.
     */
   private[graft] def ivfIndexStore(spark: SparkSession, sfDir: String): DataFrame =
-    readCellLists(spark, s"${writeIvfIndexStore(spark, sfDir)}/ivf.parquet")
+    cellStore(spark, vecStorePath(spark, sfDir), "ivf")(
+      cellLists(Tables.t(spark, sfDir, "embeddings"), centroidStore(spark, sfDir)))
 
-  /** Ensure the PQ CODE table exists: every vector's [[PqM]]
-    * sub-codebook ids (the c56 encode, same [[pqCodes]] kernel),
-    * written cluster-partitioned like the lists — the final piece of
-    * Jégou's IVFADC index: at search time the ADC stage reads CODES
-    * from the probed cells' files (M small ints per vector), never
-    * raw embeddings, which is the entire memory story of PQ. One
-    * encode pass per corpus, amortized across every probe (c173's
-    * probe-time re-encode measured 1.8 s of its 3.2 s at 200k
-    * vectors before this store existed).
-    */
-  private[graft] def writePqCodesStore(spark: SparkSession, sfDir: String): String = {
-    val dir = vecStorePath(spark, sfDir)
-    Memo.atomicArtifact(dir, "pq_codes.parquet") { scratch =>
-      val emb = Tables.t(spark, sfDir, "embeddings")
-      val subs = emb
-        .select(col("vec_id"), explode(sequence(lit(0), lit(PqM - 1))).as("j"),
-          col("embedding"))
-        .select(col("vec_id"), col("j"),
-          expr(s"slice(embedding, j * (size(embedding) div $PqM) + 1, size(embedding) div $PqM)")
-            .as("sub"))
-      // r18 optimization: the (vec_id, cluster) assignment is already
-      // persisted in the inverted-list artifact this store is keyed
-      // next to — read it back instead of re-running the O(n·k)
-      // kmAssign pass a second time per corpus (writeIvfIndexStore
-      // runs it once; same centroids, same assignment, identical
-      // codes artifact).
-      val asg = ivfIndexStore(spark, sfDir)
-        .select(col("vec_id"), col("cluster"))
-      writeCellLists(
-        pqCodes((subs, pqCodebookStore(spark, sfDir)))
-          .join(asg, "vec_id")
-          .select(col("cluster"), col("vec_id"), col("j"), col("code")),
-        s"$scratch/pq_codes.parquet")
-    }
-    dir
-  }
-
-  /** The code table as a frame (cross-process read path; cell
-    * predicates prune files).
+  /** The PQ CODE table: every vector's [[PqM]] sub-codebook ids (the
+    * c56 encode, same [[pqCodes]] kernel) in [[cellStore]] layout — the
+    * final piece of Jégou's IVFADC index: at search time the ADC stage
+    * reads CODES from the probed cells' files (M small ints per
+    * vector), never raw embeddings, which is the entire memory story
+    * of PQ. One encode pass per corpus, amortized across every probe
+    * (c173's probe-time re-encode measured 1.8 s of its 3.2 s at 200k
+    * vectors before this store existed). The (vec_id, cluster)
+    * assignment is read back from the inverted lists, not re-run.
     */
   private[graft] def pqCodesStore(spark: SparkSession, sfDir: String): DataFrame =
-    readCellLists(spark, s"${writePqCodesStore(spark, sfDir)}/pq_codes.parquet")
+    cellStore(spark, vecStorePath(spark, sfDir), "pq_codes")(
+      pqCodes(pqParts(spark, sfDir))
+        .join(ivfIndexStore(spark, sfDir).select(col("vec_id"), col("cluster")), "vec_id")
+        .select(col("cluster"), col("vec_id"), col("j"), col("code")))
 
-  def annIvfAdaptive(spark: SparkSession, sfDir: String): DataFrame = {
-    val emb = Tables.t(spark, sfDir, "embeddings").select(col("vec_id"), col("embedding"))
-    val cents = centroidStore(spark, sfDir)
-    val probe = emb.where(col("vec_id") === 0).select(col("embedding").as("probe"))
-    val topCells = cents.crossJoin(broadcast(probe))
-      .select(col("centroid_id"), round(cosine(col("cent"), col("probe")), 4).as("cell_cos"))
-      .agg(expr(s"slice(array_sort(collect_list(struct(-cell_cos AS nc, centroid_id))), 1, $IvfProbeCells)")
-        .as("top"))
-      .select(posexplode(col("top")).as(Seq("r0", "s")))
-      .select(col("s.centroid_id").as("cluster"), (col("r0") + 1).cast("long").as("cell_rank"))
-    // The candidate scan reads the cluster-partitioned inverted lists;
-    // the broadcast top-cells join prunes it to the probed cells'
-    // FILES at runtime (dynamic partition pruning), so probe I/O is
-    // nprobe/k of the corpus — the assignment join no longer runs at
-    // probe time.
+  /** Build every vec2 artifact that is absent (centroids, lists,
+    * codebook, codes) and return the store dir — the index build a
+    * deployment runs once before its probe jobs.
+    */
+  private[graft] def writeVecIndexStore(spark: SparkSession, sfDir: String): String = {
     ivfIndexStore(spark, sfDir)
-      .join(broadcast(topCells), "cluster")
-      .crossJoin(broadcast(probe))
-      .select(col("vec_id"), col("cluster"), col("cell_rank"),
-        round(cosine(col("embedding"), col("probe")), 4).as("cos"))
-      .orderBy(col("cos").desc, col("vec_id"))
-      .limit(5)
+    pqCodesStore(spark, sfDir)
+    vecStorePath(spark, sfDir)
+  }
+
+  /** c38 — DATA-ADAPTIVE IVF: c13's two-stage ANN with cells learned
+    * from the data instead of taken from the label column. One Lloyd
+    * refinement round (kmAssign → kmUpdate over the c34 strided seeds)
+    * produces the cell centroids; the probe then ranks those refined
+    * cells, and only the vectors ASSIGNED to the top cells are
+    * brute-forced — the real IVF build+search loop (train coarse
+    * quantizer → assign corpus → probe nearest cells). Same scale
+    * posture as c13: centroids and probed-cell list broadcast, and the
+    * candidate scan reads the cluster-partitioned inverted lists pruned
+    * to the probed cells' FILES, so probe I/O is nprobe/k of the
+    * corpus and the assignment join never runs at probe time. The
+    * centroids and lists are PERSISTED per-corpus artifacts
+    * ([[centroidStore]], [[ivfIndexStore]]), so the train pass runs
+    * once per corpus and every later probe job or process reads the
+    * index from disk. More Lloyd rounds ([[kmeansConverge]]) sharpen
+    * the cells without changing the plan.
+    */
+  def annIvfAdaptive(spark: SparkSession, sfDir: String): DataFrame = {
+    val probe = Tables.t(spark, sfDir, "embeddings")
+      .where(col("vec_id") === 0).select(col("embedding").as("probe"))
+    probeCells(ivfIndexStore(spark, sfDir),
+      topCells(centroidStore(spark, sfDir), probe, IvfProbeCells), probe)
   }
 
   /** c19 — batched similarity search: a 10-vector probe set against
@@ -1656,6 +1589,14 @@ object NearDup {
   private[ops] val oSeedStride: String =
     "(SELECT 1 << CAST(ceil(length(bin(COUNT(*))) / 2.0) AS INT) FROM embeddings)"
 
+  /** The c34 deterministic seeds of `emb` (vec_id, embedding): every
+    * vec_id ≡ 0 mod the corpus's [[kmSeedStride]], as
+    * (centroid_id, cent).
+    */
+  private[graft] def kmSeeds(spark: SparkSession, sfDir: String, emb: DataFrame): DataFrame =
+    emb.where(col("vec_id") % kmSeedStride(embCount(spark, sfDir)) === 0)
+      .select(col("vec_id").as("centroid_id"), col("embedding").as("cent"))
+
   private[graft] val KmIters = 2
 
   /** Lloyd ASSIGNMENT step (shared by c34/c35): each vector's nearest
@@ -1704,9 +1645,7 @@ object NearDup {
     */
   def kmeansAssign(spark: SparkSession, sfDir: String): DataFrame = {
     val emb = Tables.t(spark, sfDir, "embeddings")
-    val seeds = emb.where(col("vec_id") % kmSeedStride(embCount(spark, sfDir)) === 0)
-      .select(col("vec_id").as("centroid_id"), col("embedding").as("cent"))
-    kmAssign(emb, seeds)
+    kmAssign(emb, kmSeeds(spark, sfDir, emb))
       .groupBy(col("cluster"))
       .agg(count(lit(1)).as("n_assigned"), Canon.davgFloor6(col("cos"), count(lit(1))).as("avg_cos"))
       .orderBy("cluster")
@@ -1731,8 +1670,7 @@ object NearDup {
     val emb = Tables.t(spark, sfDir, "embeddings")
       .select(col("vec_id"), col("embedding"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    var cents = emb.where(col("vec_id") % kmSeedStride(embCount(spark, sfDir)) === 0)
-      .select(col("vec_id").as("centroid_id"), col("embedding").as("cent"))
+    var cents = kmSeeds(spark, sfDir, emb)
     for (_ <- 1 to KmIters)
       cents = kmUpdate(emb, kmAssign(emb, cents)).localCheckpoint(true)
     // The Lloyd rounds above ran eagerly (each localCheckpoint is an
@@ -1797,17 +1735,17 @@ object NearDup {
     * The codebook is M×k sub-vectors — KBs at any corpus size — and
     * always broadcast.
     */
-  private def pqParts(spark: SparkSession, sfDir: String): (DataFrame, DataFrame) = {
-    val emb = Tables.t(spark, sfDir, "embeddings")
-    val subs = emb
-      .select(col("vec_id"), explode(sequence(lit(0), lit(PqM - 1))).as("j"), col("embedding"))
-      .select(col("vec_id"), col("j"),
-        expr(s"slice(embedding, j * (size(embedding) div $PqM) + 1, size(embedding) div $PqM)")
-          .as("sub"))
-    // The sub-codebook reads the persisted per-corpus artifact (the
-    // one-build-many-probes posture), never a per-session recompute.
-    (subs, pqCodebookStore(spark, sfDir))
-  }
+  private def pqParts(spark: SparkSession, sfDir: String): (DataFrame, DataFrame) =
+    (pqSlices(Tables.t(spark, sfDir, "embeddings"), "vec_id", "embedding", "sub"),
+      pqCodebookStore(spark, sfDir))
+
+  /** The [[PqM]] contiguous sub-vectors of each row's array column
+    * `vec`, as (`id`, j, `out`) — one row per (row, subspace).
+    */
+  private def pqSlices(df: DataFrame, id: String, vec: String, out: String): DataFrame =
+    df.select(col(id), explode(sequence(lit(0), lit(PqM - 1))).as("j"), col(vec))
+      .select(col(id), col("j"),
+        expr(s"slice($vec, j * (size($vec) div $PqM) + 1, size($vec) div $PqM)").as(out))
 
   /** PQ codebook stride: the smallest power of two that caps the
     * codebook at ~256 entries (`2^(bits(n)−8)`, floor 1) — the
@@ -1942,32 +1880,37 @@ object NearDup {
     val dot = graft.functions.ArrayDot.adot _
     val emb = Tables.t(spark, sfDir, "embeddings")
     val parts = pqParts(spark, sfDir) // ONE build shared by codes + LUT
-    val csubs = parts._2
     val probe = emb.where(col("vec_id") === 0).select(col("embedding").as("probe"))
-    val psubs = emb.where(col("vec_id") === 0)
-      .select(explode(sequence(lit(0), lit(PqM - 1))).as("j"), col("embedding"))
-      .select(col("j"),
-        expr(s"slice(embedding, j * (size(embedding) div $PqM) + 1, size(embedding) div $PqM)")
-          .as("psub"))
-    val lut = psubs.join(csubs, "j")
-      .select(col("j").as("lj"), col("centroid_id").as("lcode"),
-        dot(col("psub"), col("csub")).as("pdot"))
-    // adc_score via Canon.dsum: a raw double sum's merge order is
-    // nondeterministic and an ulp flip at the ROUND(4) boundary would
-    // change shortlist membership (determinism canon, Canon.scala).
-    val shortlist = pqCodes(parts)
-      .join(broadcast(lut), col("j") === col("lj") && col("code") === col("lcode"))
-      .groupBy(col("vec_id"))
-      .agg(Canon.rsum6(Canon.dsum(col("pdot"))).as("adc_score"))
-      .where(col("vec_id") =!= 0)
-      .orderBy(col("adc_score").desc, col("vec_id").asc)
-      .limit(PqShortlist)
+    val shortlist = adcShortlist(pqCodes(parts), emb, parts._2)
     emb.join(broadcast(shortlist.select(col("vec_id"), col("adc_score"))), "vec_id")
       .crossJoin(broadcast(probe))
       .select(col("vec_id"), col("adc_score"),
         round(dot(col("embedding"), col("probe")), 4).as("ip"))
       .orderBy(col("ip").desc, col("vec_id").asc)
       .limit(PqTopK)
+  }
+
+  /** The ADC stage of c57/c173: the probe (vec_id 0) builds a lookup
+    * table dot(probe_sub_j, centroid_sub_j) per (subspace, code) from
+    * the codebook `csubs` — M×k doubles, broadcast — and each vector of
+    * `codes` (vec_id, j, code) other than the probe scores the sum of
+    * its M table lookups; the top-[[PqShortlist]] by that score (id
+    * tiebreak) form the shortlist (vec_id, adc_score). The score sums
+    * through Canon.dsum: a raw double sum's merge order is
+    * nondeterministic and an ulp flip at the ROUND(4) boundary would
+    * change shortlist membership (determinism canon, Canon.scala).
+    */
+  private def adcShortlist(codes: DataFrame, emb: DataFrame, csubs: DataFrame): DataFrame = {
+    val lut = pqSlices(emb.where(col("vec_id") === 0), "vec_id", "embedding", "psub")
+      .join(csubs, "j")
+      .select(col("j").as("lj"), col("centroid_id").as("lcode"),
+        graft.functions.ArrayDot.adot(col("psub"), col("csub")).as("pdot"))
+    codes.where(col("vec_id") =!= 0)
+      .join(broadcast(lut), col("j") === col("lj") && col("code") === col("lcode"))
+      .groupBy(col("vec_id"))
+      .agg(Canon.rsum6(Canon.dsum(col("pdot"))).as("adc_score"))
+      .orderBy(col("adc_score").desc, col("vec_id").asc)
+      .limit(PqShortlist)
   }
 
   /** c173 — composed IVF-ADC search (Jégou et al. 2011 §IV.A "IVFADC"
@@ -2001,39 +1944,18 @@ object NearDup {
     val dot = graft.functions.ArrayDot.adot _
     val emb = Tables.t(spark, sfDir, "embeddings")
     val probe = emb.where(col("vec_id") === 0).select(col("embedding").as("probe"))
-    val cents = centroidStore(spark, sfDir)
-    val topCells = cents.crossJoin(broadcast(probe))
-      .select(col("centroid_id"), round(cosine(col("cent"), col("probe")), 4).as("cell_cos"))
-      .agg(expr(s"slice(array_sort(collect_list(struct(-cell_cos AS nc, centroid_id))), 1, $IvfProbeCells)")
-        .as("top"))
-      .select(posexplode(col("top")).as(Seq("r0", "s")))
-      .select(col("s.centroid_id").as("cluster"), (col("r0") + 1).cast("long").as("cell_rank"))
+    val cells = topCells(centroidStore(spark, sfDir), probe, IvfProbeCells)
     val cands = ivfIndexStore(spark, sfDir)
-      .join(broadcast(topCells), "cluster")
+      .join(broadcast(cells), "cluster")
       .where(col("vec_id") =!= 0)
     // The ADC stage reads persisted CODES from the probed cells'
     // files — M small ints per candidate, never a raw embedding
     // (Jégou's memory story; the probe-time re-encode this replaces
     // measured 1.8 s of c173's 3.2 s at 200k vectors).
     val candCodes = pqCodesStore(spark, sfDir)
-      .join(broadcast(topCells), "cluster")
-      .where(col("vec_id") =!= 0)
+      .join(broadcast(cells), "cluster")
       .select(col("vec_id"), col("j"), col("code"))
-    val csubs = pqCodebookStore(spark, sfDir)
-    val psubs = emb.where(col("vec_id") === 0)
-      .select(explode(sequence(lit(0), lit(PqM - 1))).as("j"), col("embedding"))
-      .select(col("j"),
-        expr(s"slice(embedding, j * (size(embedding) div $PqM) + 1, size(embedding) div $PqM)")
-          .as("psub"))
-    val lut = psubs.join(csubs, "j")
-      .select(col("j").as("lj"), col("centroid_id").as("lcode"),
-        dot(col("psub"), col("csub")).as("pdot"))
-    val shortlist = candCodes
-      .join(broadcast(lut), col("j") === col("lj") && col("code") === col("lcode"))
-      .groupBy(col("vec_id"))
-      .agg(Canon.rsum6(Canon.dsum(col("pdot"))).as("adc_score"))
-      .orderBy(col("adc_score").desc, col("vec_id").asc)
-      .limit(PqShortlist)
+    val shortlist = adcShortlist(candCodes, emb, pqCodebookStore(spark, sfDir))
     // Exact re-rank fetches raw vectors from the SAME pruned cell
     // scan (never the full corpus), carrying the cell rank for the
     // analyst.
@@ -2128,15 +2050,9 @@ object NearDup {
     val emb = Tables.t(spark, sfDir, "embeddings")
     val probeRow = emb.where(col("vec_id") === 0)
       .select(col("embedding").as("probe"), col("label").as("plabel"))
-    val topCells = centroidStore(spark, sfDir)
-      .crossJoin(broadcast(probeRow.select(col("probe"))))
-      .select(col("centroid_id"), round(cosine(col("cent"), col("probe")), 4).as("cell_cos"))
-      .agg(expr(s"slice(array_sort(collect_list(struct(-cell_cos AS nc, centroid_id))), 1, $budget)")
-        .as("top"))
-      .select(posexplode(col("top")).as(Seq("r0", "s")))
-      .select(col("s.centroid_id").as("cluster"), (col("r0") + 1).cast("long").as("cell_rank"))
+    val cells = topCells(centroidStore(spark, sfDir), probeRow.select(col("probe")), budget)
     ivfIndexStore(spark, sfDir)
-      .join(broadcast(topCells), "cluster")
+      .join(broadcast(cells), "cluster")
       .crossJoin(broadcast(probeRow))
       .where(col("vec_id") =!= 0 && col("label") === col("plabel"))
       .select(col("vec_id"), col("label"), col("cell_rank"),
@@ -2394,9 +2310,7 @@ object NearDup {
       .select(col("vec_id"), col("embedding"))
     val base = emb.where(!ingestIsNew)
     val fresh = emb.where(ingestIsNew)
-    val seeds = base.where(col("vec_id") % kmSeedStride(embCount(spark, sfDir)) === 0)
-      .select(col("vec_id").as("centroid_id"), col("embedding").as("cent"))
-    val cents = kmUpdate(base, kmAssign(base, seeds)).localCheckpoint(true)
+    val cents = kmUpdate(base, kmAssign(base, kmSeeds(spark, sfDir, base))).localCheckpoint(true)
     val nBase = kmAssign(base, cents).groupBy(col("cluster"))
       .agg(count(lit(1)).as("n_base"))
     val nNew = kmAssign(fresh, cents).groupBy(col("cluster"))
@@ -2440,73 +2354,41 @@ object NearDup {
     * segment (`seg0`), each ingest APPENDS a new immutable segment of
     * arrivals assigned to the FIXED base-trained centroids (`seg1` —
     * never a rewrite of seg0), and a reader serves the union of
-    * complete segments. Torn-write safety is structural: a segment is
-    * visible iff its own `_SUCCESS` exists and publication is the
+    * complete segments. Every artifact is one [[flatStore]] or
+    * [[cellStore]] call, so torn-write safety is structural: a segment
+    * is visible iff its own `_SUCCESS` exists and publication is the
     * [[graft.Memo.atomicArtifact]] rename, so a crashed or concurrent
-    * ingest can never serve half a segment. At 100 TB the append costs ONE pass
-    * over the ARRIVALS (assign + cell-partitioned write, increment-
-    * sized) vs the full-corpus rewrite it replaces — priced in
-    * SCALE.md round 17.
+    * ingest can never serve half a segment. At 100 TB the append costs
+    * ONE pass over the ARRIVALS (assign + cell-partitioned write,
+    * increment-sized) vs the full-corpus rewrite it replaces — priced
+    * in SCALE.md round 17.
     */
   private[graft] def ingestStoreDir(spark: SparkSession, sfDir: String): String =
     vecStorePath(spark, sfDir, layout = "vec3")
 
-  /** The base-trained centroids of the vec3 store as a frame (the
-    * quantizer c177's ledger is exact about: trained on the BASE
-    * slice only). Callers must have ensured the store exists.
+  /** The base-trained centroids of the vec3 store (the quantizer
+    * c177's ledger is exact about: one Lloyd round over the BASE slice
+    * only, from its strided seeds).
     */
   private[graft] def ingestCentroids(spark: SparkSession, sfDir: String): DataFrame =
-    spark.read.parquet(s"${ingestStoreDir(spark, sfDir)}/centroids.parquet")
-
-  /** Ensure the vec3 BASE generation exists: base-trained centroids
-    * (the c177 quantizer — one Lloyd round over the base slice) and
-    * the base inverted-list segment, cluster-partitioned like vec2's
-    * lists. Both publish atomically.
-    */
-  private[graft] def writeIngestBaseStore(spark: SparkSession, sfDir: String): String = {
-    val dir = ingestStoreDir(spark, sfDir)
-    Memo.atomicArtifact(dir, "centroids.parquet") { scratch =>
+    flatStore(spark, ingestStoreDir(spark, sfDir), "centroids") {
       val base = Tables.t(spark, sfDir, "embeddings")
         .select(col("vec_id"), col("embedding")).where(!ingestIsNew)
-      val seeds = base.where(col("vec_id") % kmSeedStride(embCount(spark, sfDir)) === 0)
-        .select(col("vec_id").as("centroid_id"), col("embedding").as("cent"))
-      new graft.sources.ConfiguredSink(new graft.sources.ParquetSink(scratch),
-        graft.sources.WriteConf(batchRows = 1 << 22))
-        .write(kmUpdate(base, kmAssign(base, seeds)), "centroids")
+      kmUpdate(base, kmAssign(base, kmSeeds(spark, sfDir, base)))
     }
-    Memo.atomicArtifact(dir, "seg0.parquet") { scratch =>
-      val base = Tables.t(spark, sfDir, "embeddings")
-        .select(col("vec_id"), col("embedding"), col("label")).where(!ingestIsNew)
-      val asg = kmAssign(base.select(col("vec_id"), col("embedding")),
-        ingestCentroids(spark, sfDir)).select(col("vec_id"), col("cluster"))
-      writeCellLists(
-        base.join(asg, "vec_id")
-          .select(col("cluster"), col("vec_id"), col("embedding"), col("label")),
-        s"$scratch/seg0.parquet")
-    }
-    dir
-  }
 
-  /** APPLY the ingest (the FAISS `add` write path c177's scaladoc
-    * promised): assign the arrivals to the FIXED base centroids and
-    * publish them as a NEW immutable cell-partitioned segment —
-    * increment-sized work, the base segment untouched. Idempotent
-    * (write-once per store key) and torn-write-safe (atomic publish).
+  /** One immutable segment of the vec3 store: the base slice (`seg0`)
+    * or the arrivals (`seg1`, the FAISS `add` write path c177's
+    * scaladoc promised), assigned to the FIXED base centroids —
+    * increment-sized work, the base segment untouched. Write-once per
+    * store key.
     */
-  private[graft] def writeIngestSegment(spark: SparkSession, sfDir: String): String = {
-    val dir = writeIngestBaseStore(spark, sfDir)
-    Memo.atomicArtifact(dir, "seg1.parquet") { scratch =>
-      val fresh = Tables.t(spark, sfDir, "embeddings")
-        .select(col("vec_id"), col("embedding"), col("label")).where(ingestIsNew)
-      val asg = kmAssign(fresh.select(col("vec_id"), col("embedding")),
-        ingestCentroids(spark, sfDir)).select(col("vec_id"), col("cluster"))
-      writeCellLists(
-        fresh.join(asg, "vec_id")
-          .select(col("cluster"), col("vec_id"), col("embedding"), col("label")),
-        s"$scratch/seg1.parquet")
-    }
-    dir
-  }
+  private[graft] def ingestSegment(spark: SparkSession, sfDir: String,
+      arrivals: Boolean): DataFrame =
+    cellStore(spark, ingestStoreDir(spark, sfDir), if (arrivals) "seg1" else "seg0")(
+      cellLists(
+        Tables.t(spark, sfDir, "embeddings").where(if (arrivals) ingestIsNew else !ingestIsNew),
+        ingestCentroids(spark, sfDir)))
 
   /** The post-ingest generation-1 index as a frame: the union of the
     * `_SUCCESS`-complete segments with their segment id (`cluster`
@@ -2514,13 +2396,9 @@ object NearDup {
     * still prune FILES in both segments — a probe's I/O is nprobe/k
     * of base PLUS nprobe/k of the increment).
     */
-  private[graft] def ingestSegStore(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir = writeIngestSegment(spark, sfDir)
-    def seg(name: String, id: Int) =
-      readCellLists(spark, s"$dir/$name.parquet")
-        .withColumn("segment", lit(id))
-    seg("seg0", 0).unionByName(seg("seg1", 1))
-  }
+  private[graft] def ingestSegStore(spark: SparkSession, sfDir: String): DataFrame =
+    ingestSegment(spark, sfDir, arrivals = false).withColumn("segment", lit(0))
+      .unionByName(ingestSegment(spark, sfDir, arrivals = true).withColumn("segment", lit(1)))
 
   /** c178 — INDEX APPLY-INGEST: the write path that makes c177's
     * ledger consequential. The query reads the per-cell occupancy
@@ -2547,33 +2425,16 @@ object NearDup {
     * by the c178/c179 specs and the ACCURACY drift measurement:
     * generation 1 serves the SEGMENT UNION under base-trained
     * centroids; generation 2 serves the rebuilt lists under retrained
-    * centroids. Same canon as [[annIvfAdaptive]] (rounded cell-cos
-    * ranking, nprobe = [[IvfProbeCells]], rounded cosine + id
-    * tiebreak).
+    * centroids. Same kernels as [[annIvfAdaptive]] ([[topCells]] at
+    * nprobe = [[IvfProbeCells]], then [[probeCells]]).
     */
   private[graft] def ingestProbe(spark: SparkSession, sfDir: String,
       probeVec: DataFrame, gen: Int): DataFrame = {
-    val dir = writeIngestSegment(spark, sfDir)
     val (cents, lists) =
-      if (gen == 2)
-        (spark.read.parquet(s"$dir/centroids_g2.parquet"),
-          readCellLists(spark, s"$dir/lists_g2.parquet"))
-      else
-        (ingestCentroids(spark, sfDir),
-          ingestSegStore(spark, sfDir).drop("segment"))
+      if (gen == 2) ingestGen2(spark, sfDir)
+      else (ingestCentroids(spark, sfDir), ingestSegStore(spark, sfDir).drop("segment"))
     val probe = probeVec.select(col("embedding").as("probe"))
-    val topCells = cents.crossJoin(broadcast(probe))
-      .select(col("centroid_id"), round(cosine(col("cent"), col("probe")), 4).as("cell_cos"))
-      .agg(expr(s"slice(array_sort(collect_list(struct(-cell_cos AS nc, centroid_id))), 1, $IvfProbeCells)")
-        .as("top"))
-      .select(posexplode(col("top")).as(Seq("r0", "s")))
-      .select(col("s.centroid_id").as("cluster"), (col("r0") + 1).cast("long").as("cell_rank"))
-    lists.join(broadcast(topCells), "cluster")
-      .crossJoin(broadcast(probe))
-      .select(col("vec_id"), col("cluster"), col("cell_rank"),
-        round(cosine(col("embedding"), col("probe")), 4).as("cos"))
-      .orderBy(col("cos").desc, col("vec_id"))
-      .limit(5)
+    probeCells(lists, topCells(cents, probe, IvfProbeCells), probe)
   }
 
   /** Which generation the vec3 store currently SERVES: 2 iff BOTH
@@ -2585,52 +2446,41 @@ object NearDup {
     if (new java.io.File(s"$dir/centroids_g2.parquet/_SUCCESS").exists() &&
         new java.io.File(s"$dir/lists_g2.parquet/_SUCCESS").exists()) 2 else 1
 
-  /** CONSUME the retrain flag (round-16 verdict item 2): when any
-    * cell's ingest crosses the [[IngestRetrainDen]] threshold —
-    * decided from the PERSISTED segments, a cells-sized aggregate the
-    * driver reads as one boolean, exactly the scheduling decision a
-    * production index maintainer makes — retrain the coarse quantizer
-    * with ONE more Lloyd round over base+arrivals STARTING from the
-    * stored base centroids (the c35 kernel: warm-start refinement,
-    * not a from-scratch re-seed), rewrite the lists under the new
-    * assignment as generation-2 artifacts, and publish both
-    * atomically. Readers swap generations only when both artifacts
-    * are complete ([[ingestStoreGeneration]]); generation 1 stays
-    * on disk and serviceable throughout — the blue/green swap.
+  /** Generation 2 of the vec3 store as (centroids, lists), built when
+    * the store does not serve it yet. CONSUMES the retrain flag
+    * (round-16 verdict item 2): when any cell's ingest crosses the
+    * [[IngestRetrainDen]] threshold — decided from the PERSISTED
+    * segments, a cells-sized aggregate the driver reads as one
+    * boolean, exactly the scheduling decision a production index
+    * maintainer makes — retrain the coarse quantizer with ONE more
+    * Lloyd round over base+arrivals STARTING from the stored base
+    * centroids (the c35 kernel: warm-start refinement, not a
+    * from-scratch re-seed), rewrite the lists under the new assignment
+    * as generation-2 artifacts, and publish both atomically. Readers
+    * swap generations only when both artifacts are complete
+    * ([[ingestStoreGeneration]]); generation 1 stays on disk and
+    * serviceable throughout — the blue/green swap.
     */
-  private[graft] def writeRebuiltIndexStore(spark: SparkSession, sfDir: String): String = {
-    val dir = writeIngestSegment(spark, sfDir)
-    if (ingestStoreGeneration(dir) == 2) return dir
-    val flagged = !ingestSegStore(spark, sfDir)
-      .groupBy(col("cluster"))
-      .agg(sum(when(col("segment") === 0, 1L).otherwise(0L)).as("n_base"),
-        sum(when(col("segment") === 1, 1L).otherwise(0L)).as("n_new"))
-      .where(col("n_new") * IngestRetrainDen > col("n_base"))
-      .isEmpty
-    require(flagged,
-      s"indexRebuildSwap: no cell crossed the 1/$IngestRetrainDen ingest " +
-        "threshold — nothing schedules a rebuild on this corpus (the c177 " +
-        "fixture is drifted by construction, so this indicates a broken store)")
-    Memo.atomicArtifact(dir, "centroids_g2.parquet") { scratch =>
-      val all = Tables.t(spark, sfDir, "embeddings")
-        .select(col("vec_id"), col("embedding"))
-      new graft.sources.ConfiguredSink(new graft.sources.ParquetSink(scratch),
-        graft.sources.WriteConf(batchRows = 1 << 22))
-        .write(kmUpdate(all, kmAssign(all, ingestCentroids(spark, sfDir))),
-          "centroids_g2")
+  private[graft] def ingestGen2(spark: SparkSession, sfDir: String): (DataFrame, DataFrame) = {
+    val dir = ingestStoreDir(spark, sfDir)
+    if (ingestStoreGeneration(dir) != 2) {
+      val flagged = !ingestSegStore(spark, sfDir)
+        .groupBy(col("cluster"))
+        .agg(sum(when(col("segment") === 0, 1L).otherwise(0L)).as("n_base"),
+          sum(when(col("segment") === 1, 1L).otherwise(0L)).as("n_new"))
+        .where(col("n_new") * IngestRetrainDen > col("n_base"))
+        .isEmpty
+      require(flagged,
+        s"indexRebuildSwap: no cell crossed the 1/$IngestRetrainDen ingest " +
+          "threshold — nothing schedules a rebuild on this corpus (the c177 " +
+          "fixture is drifted by construction, so this indicates a broken store)")
     }
-    Memo.atomicArtifact(dir, "lists_g2.parquet") { scratch =>
-      val emb = Tables.t(spark, sfDir, "embeddings")
-        .select(col("vec_id"), col("embedding"), col("label"))
-      val cents2 = spark.read.parquet(s"$dir/centroids_g2.parquet")
-      val asg = kmAssign(emb.select(col("vec_id"), col("embedding")), cents2)
-        .select(col("vec_id"), col("cluster"))
-      writeCellLists(
-        emb.join(asg, "vec_id")
-          .select(col("cluster"), col("vec_id"), col("embedding"), col("label")),
-        s"$scratch/lists_g2.parquet")
+    val emb = Tables.t(spark, sfDir, "embeddings")
+    val cents = flatStore(spark, dir, "centroids_g2") {
+      val all = emb.select(col("vec_id"), col("embedding"))
+      kmUpdate(all, kmAssign(all, ingestCentroids(spark, sfDir)))
     }
-    dir
+    (cents, cellStore(spark, dir, "lists_g2")(cellLists(emb, cents)))
   }
 
   /** c179 — INDEX REBUILD-AND-SWAP: the scheduled maintenance c177's
@@ -2644,11 +2494,11 @@ object NearDup {
     * ACCURACY.json by Verify.
     */
   def indexRebuildSwap(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir = writeRebuiltIndexStore(spark, sfDir)
+    val lists = ingestGen2(spark, sfDir)._2
+    val dir = ingestStoreDir(spark, sfDir)
     require(ingestStoreGeneration(dir) == 2,
       s"indexRebuildSwap: generation-2 artifacts incomplete under $dir")
-    readCellLists(spark, s"$dir/lists_g2.parquet")
-      .groupBy(col("cluster")).agg(count(lit(1)).as("n_vecs"))
+    lists.groupBy(col("cluster")).agg(count(lit(1)).as("n_vecs"))
       .orderBy("cluster")
   }
 

@@ -763,7 +763,10 @@ object Streams {
     */
   def streamIndexIngest(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.ops.NearDup
-    NearDup.writeIngestBaseStore(spark, sfDir)
+    // Reading the base segment first publishes it and the base
+    // centroids every micro-batch reads.
+    val nBase = NearDup.ingestSegment(spark, sfDir, arrivals = false)
+      .groupBy(col("cluster")).agg(count(lit(1)).as("n_base"))
     val stream = streamTable(spark, sfDir, "embeddings")
       .where(NearDup.ingestIsNew)
       .select(col("vec_id"), col("embedding"))
@@ -772,9 +775,6 @@ object Streams {
           NearDup.ingestCentroids(batch.sparkSession, sfDir))
         .groupBy(col("cluster")).agg(count(lit(1)).as("n_new"))
     }.groupBy(col("cluster")).agg(sum(col("n_new")).as("n_new"))
-    val nBase = NearDup.readCellLists(spark,
-        s"${NearDup.ingestStoreDir(spark, sfDir)}/seg0.parquet")
-      .groupBy(col("cluster")).agg(count(lit(1)).as("n_base"))
     NearDup.ingestLedgerFrom(nBase, nNew)
   }
 

@@ -788,7 +788,7 @@ class StreamingSpec extends AnyFunSuite {
     import org.apache.spark.sql.{Dataset, Row}
     import graft.ops.NearDup
     val sfDir = TestSpark.sf0001
-    NearDup.writeIngestBaseStore(spark, sfDir)
+    NearDup.ingestCentroids(spark, sfDir)
     val emb = Tables.t(spark, sfDir, "embeddings")
     val base = java.nio.file.Files.createTempDirectory("graft_c180_mb").toFile
     graft.streaming.Streams.trackTmpDir(base.toString)
@@ -814,9 +814,7 @@ class StreamingSpec extends AnyFunSuite {
       s"expected >=3 micro-batches: ${q.recentProgress.length}")
     val nNew = spark.read.parquet(out).drop("batch_id")
       .groupBy(col("cluster")).agg(sum(col("n_new")).as("n_new"))
-    val nBase = spark.read
-      .parquet(s"${NearDup.ingestStoreDir(spark, sfDir)}/seg0.parquet")
-      .withColumn("cluster", col("cluster").cast("long"))
+    val nBase = NearDup.ingestSegment(spark, sfDir, arrivals = false)
       .groupBy(col("cluster")).agg(count(lit(1)).as("n_base"))
     val streamed = NearDup.ingestLedgerFrom(nBase, nNew)
     val batch = NearDup.incrementalIndexIngest(spark, sfDir)

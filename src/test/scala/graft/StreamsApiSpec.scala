@@ -137,11 +137,11 @@ class StreamsApiSpec extends AnyFunSuite {
   test("the vector-index store is a cross-process artifact: disk read, corpus never scanned, bit-identical to a fresh train pass") {
     import graft.ops.NearDup
     val sfd = TestSpark.sf0001
-    val dir = NearDup.writeCentroidStore(spark, sfd)
+    val dir = NearDup.writeVecIndexStore(spark, sfd)
     assert(new java.io.File(s"$dir/centroids.parquet/_SUCCESS").exists())
-    assert(NearDup.writePqCodebookStore(spark, sfd) == dir)
+    assert(NearDup.writeVecIndexStore(spark, sfd) == dir)
     assert(new java.io.File(s"$dir/pq_codebook.parquet/_SUCCESS").exists())
-    assert(NearDup.writeIvfIndexStore(spark, sfd) == dir)
+    assert(NearDup.writeVecIndexStore(spark, sfd) == dir)
     assert(new java.io.File(s"$dir/ivf.parquet/_SUCCESS").exists())
     // The inverted lists are a LOSSLESS cluster-partitioned copy of
     // the corpus under the persisted centroids' assignment.
@@ -158,7 +158,7 @@ class StreamsApiSpec extends AnyFunSuite {
       && expectedIvf.exceptAll(storedIvf).isEmpty,
       "IVF inverted lists drifted from the assignment kernel")
     // And the persisted code table is the c56 encode verbatim.
-    assert(NearDup.writePqCodesStore(spark, sfd) == dir)
+    assert(NearDup.writeVecIndexStore(spark, sfd) == dir)
     val storedCodes = NearDup.pqCodesStore(spark, sfd)
       .select(col("vec_id"), col("j"), col("code"))
     val freshSubs = emb2
@@ -213,6 +213,55 @@ class StreamsApiSpec extends AnyFunSuite {
     assert(storedCsubs.exceptAll(freshCsubs).isEmpty
       && freshCsubs.exceptAll(storedCsubs).isEmpty,
       "PQ codebook store drifted from the seed slice")
+    // The vec3 (ingest-segmented) store against the same kernels: the
+    // base centroids are one Lloyd round from the base slice's strided
+    // seeds, the segment union is every vector (base in seg0, arrivals
+    // in seg1) assigned under them, and generation 2 is one
+    // warm-started round over the whole corpus with its lists assigned
+    // under the retrained centroids.
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions.when
+    def same(stored: DataFrame, fresh: DataFrame, what: String): Unit =
+      assert(stored.exceptAll(fresh).isEmpty && fresh.exceptAll(stored).isEmpty,
+        s"vec3 $what drifted from its kernel")
+    val base = emb.where(!NearDup.ingestIsNew)
+    val baseSeeds = base
+      .where(col("vec_id") % NearDup.kmSeedStride(NearDup.embCount(spark, sfd)) === 0)
+      .select(col("vec_id").as("centroid_id"), col("embedding").as("cent"))
+    val baseCents = NearDup.ingestCentroids(spark, sfd)
+    same(baseCents, NearDup.kmUpdate(base, NearDup.kmAssign(base, baseSeeds)),
+      "base centroids")
+    def assigned(cents: DataFrame): DataFrame = Tables.t(spark, sfd, "embeddings")
+      .join(NearDup.kmAssign(emb, cents).select(col("vec_id"), col("cluster")), "vec_id")
+      .select(col("vec_id"), col("embedding"), col("label"), col("cluster"))
+    same(NearDup.ingestSegStore(spark, sfd)
+        .select(col("vec_id"), col("embedding"), col("label"), col("cluster"), col("segment")),
+      assigned(baseCents).withColumn("segment", when(NearDup.ingestIsNew, 1).otherwise(0)),
+      "segment union")
+    val (g2Cents, g2Lists) = NearDup.ingestGen2(spark, sfd)
+    same(g2Cents, NearDup.kmUpdate(emb, NearDup.kmAssign(emb, baseCents)),
+      "generation-2 centroids")
+    same(g2Lists.select(col("vec_id"), col("embedding"), col("label"), col("cluster")),
+      assigned(g2Cents), "generation-2 lists")
+  }
+
+  test("a warm vector-store or band-store read launches no Spark job") {
+    import graft.ops.{Llm, NearDup}
+    val sfd = TestSpark.sf0001
+    val reads = Seq[(String, () => org.apache.spark.sql.DataFrame)](
+      "centroids" -> (() => NearDup.centroidStore(spark, sfd)),
+      "PQ codebook" -> (() => NearDup.pqCodebookStore(spark, sfd)),
+      "IVF lists" -> (() => NearDup.ivfIndexStore(spark, sfd)),
+      "PQ codes" -> (() => NearDup.pqCodesStore(spark, sfd)),
+      "segment union" -> (() => NearDup.ingestSegStore(spark, sfd)),
+      "vec3 base centroids" -> (() => NearDup.ingestCentroids(spark, sfd)),
+      "bands" -> (() => Llm.bandStore(spark, sfd)))
+    // The first call builds the store if absent and reads it once.
+    reads.foreach { case (_, read) => read() }
+    reads.foreach { case (what, read) =>
+      val jobs = TestSpark.jobsLaunched { read(); () }
+      assert(jobs == 0, s"a warm $what read launched $jobs Spark jobs")
+    }
   }
 
   test("c36/c37 leave no session-conf drift, no cached RDDs, and reap their temp dirs") {
